@@ -201,15 +201,28 @@ object Extensions {
         root
       })
 
+  /** The steady-state layout every segment-ledger probe entry serves
+    * from: `corpus` folds into a fresh root as three waves playing
+    * successive ingests (doc_id % 3 == 1, then == 2), a COMPACTION, then
+    * the third wave (doc_id % 3 == 0) past the compact segment — one
+    * compact segment + a fresh batch dir, what a long-lived maintenance
+    * job actually has. Returns the root.
+    */
+  private def threeWaves(s: SparkSession, ledger: graft.streaming.SegmentLedger,
+                         corpus: DataFrame): String = {
+    val root = java.nio.file.Files.createTempDirectory("graft-ledger").toString + "/st"
+    ledger.maintain(corpus.filter(col("doc_id") % 3 === 1), 0L, root)
+    ledger.maintain(corpus.filter(col("doc_id") % 3 === 2), 1L, root)
+    ledger.compact(s, root)
+    ledger.maintain(corpus.filter(col("doc_id") % 3 === 0), 2L, root)
+    root
+  }
+
   /** MinHash signature ledger per corpus
-    * (graft.streaming.MinHashLedgerStream): the corpus (doc_id % 10 != 0)
-    * folds in as three waves playing successive ingests, with a
-    * COMPACTION after the second — the probe entry then serves from the
-    * steady-state layout a long-lived maintenance job actually has (one
-    * compact segment + a fresh batch dir, round-12 verdict item 5) and
-    * pays exactly what a NEW batch's fuzzy dedup costs (batch sketch +
-    * one band join against stored signatures; the corpus is never
-    * re-sketched).
+    * (graft.streaming.MinHashLedgerStream) over doc_id % 10 != 0, in
+    * [[threeWaves]]: the probe entry pays exactly what a NEW batch's fuzzy
+    * dedup costs (batch sketch + one band join against stored signatures;
+    * the corpus is never re-sketched).
     */
   private val minhashLedgerCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
@@ -217,17 +230,8 @@ object Extensions {
   private def minhashLedgerFor(s: SparkSession, dir: String): String =
     minhashLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
       graft.BuildTimes.timed("minhash_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-mh-ledger").toString + "/st"
-        val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
-        graft.streaming.MinHashLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 1), 0L, root)
-        graft.streaming.MinHashLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 2), 1L, root)
-        graft.streaming.MinHashLedgerStream.compact(s, root)
-        graft.streaming.MinHashLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 0), 2L, root)
-        root
+        threeWaves(s, graft.streaming.MinHashLedgerStream.ledger(),
+          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
       })
 
   /** SimHash fingerprint ledger per corpus
@@ -244,17 +248,8 @@ object Extensions {
   private def simhashLedgerFor(s: SparkSession, dir: String): String =
     simhashLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
       graft.BuildTimes.timed("simhash_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-sh-ledger").toString + "/st"
-        val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
-        graft.streaming.SimHashLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 1), 0L, root)
-        graft.streaming.SimHashLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 2), 1L, root)
-        graft.streaming.SimHashLedgerStream.compact(s, root)
-        graft.streaming.SimHashLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 0), 2L, root)
-        root
+        threeWaves(s, graft.streaming.SimHashLedgerStream,
+          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
       })
 
   /** Persisted md5 signature frames (batch + corpus splits) for the two
@@ -312,17 +307,8 @@ object Extensions {
   private def exactLedgerFor(s: SparkSession, dir: String): String =
     exactLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
       graft.BuildTimes.timed("exact_dedup_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-xd-ledger").toString + "/st"
-        val corpus = Tables.documents(s, dir).filter(col("source") =!= "src0")
-        graft.streaming.ExactDedupLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 1), 0L, root)
-        graft.streaming.ExactDedupLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 2), 1L, root)
-        graft.streaming.ExactDedupLedgerStream.compact(s, root)
-        graft.streaming.ExactDedupLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 0), 2L, root)
-        root
+        threeWaves(s, graft.streaming.ExactDedupLedgerStream,
+          Tables.documents(s, dir).filter(col("source") =!= "src0"))
       })
 
   /** Vocabulary-count ledger per corpus (graft.streaming
@@ -338,17 +324,8 @@ object Extensions {
   private def vocabLedgerFor(s: SparkSession, dir: String): String =
     vocabLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
       graft.BuildTimes.timed("vocab_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-voc-ledger").toString + "/st"
-        val corpus = editAugDocs(s, dir)
-        graft.streaming.VocabLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 1), 0L, root)
-        graft.streaming.VocabLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 2), 1L, root)
-        graft.streaming.VocabLedgerStream.compact(s, root): Unit
-        graft.streaming.VocabLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 0), 2L, root)
-        root
+        threeWaves(s, graft.streaming.VocabLedgerStream,
+          editAugDocs(s, dir))
       })
 
   /** CDC chunk-store ledger per corpus (graft.streaming.CdcLedgerStream):
@@ -363,17 +340,8 @@ object Extensions {
   private def cdcLedgerFor(s: SparkSession, dir: String): String =
     cdcLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
       graft.BuildTimes.timed("cdc_chunk_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-cdc-ledger").toString + "/st"
-        val corpus = Tables.documents(s, dir).filter(col("source") =!= "src0")
-        graft.streaming.CdcLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 1), 0L, root)
-        graft.streaming.CdcLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 2), 1L, root)
-        graft.streaming.CdcLedgerStream.compact(s, root)
-        graft.streaming.CdcLedgerStream.maintain(
-          corpus.filter(col("doc_id") % 3 === 0), 2L, root)
-        root
+        threeWaves(s, graft.streaming.CdcLedgerStream,
+          Tables.documents(s, dir).filter(col("source") =!= "src0"))
       })
 
   /** Boilerplate span-df ledger per corpus
@@ -388,17 +356,8 @@ object Extensions {
   private def boilerLedgerFor(s: SparkSession, dir: String): String =
     boilerLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
       graft.BuildTimes.timed("boiler_df_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-boiler-ledger").toString + "/st"
-        val docs = Tables.documents(s, dir)
-        graft.streaming.BoilerLedgerStream.maintain(
-          docs.filter(col("doc_id") % 3 === 1), 0L, root, n = 3)
-        graft.streaming.BoilerLedgerStream.maintain(
-          docs.filter(col("doc_id") % 3 === 2), 1L, root, n = 3)
-        graft.streaming.BoilerLedgerStream.compact(s, root)
-        graft.streaming.BoilerLedgerStream.maintain(
-          docs.filter(col("doc_id") % 3 === 0), 2L, root, n = 3)
-        root
+        threeWaves(s, graft.streaming.BoilerLedgerStream.ledger(n = 3),
+          Tables.documents(s, dir))
       })
 
   /** JSONL export per corpus (graft.io.Jsonl): the documents table

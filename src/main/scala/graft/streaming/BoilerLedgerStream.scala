@@ -1,152 +1,94 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Streaming maintenance of the BOILERPLATE SPAN-FREQUENCY state — the
-  * maintained twin of [[graft.ext.Boilerplate]]: span document-frequency
-  * is doc-distinct within a document and ingest batches carry DISJOINT
-  * documents, so per-span df is ADDITIVE across batches — each ingest
-  * folds its own batch's doc-distinct span counts as one [[SegmentStore]]
-  * segment and the corpus-wide df is the sum over live segments. A new
-  * batch's boilerplate coverage then costs the batch's own span explode
-  * plus one join against the served HOT sliver (df ≥ minDf — boilerplate-
-  * cardinality, broadcastable); the corpus is never re-scanned.
+/** The BOILERPLATE SPAN-FREQUENCY state, maintained twin of
+  * [[graft.ext.Boilerplate]]: span document-frequency is doc-distinct and
+  * batches carry DISJOINT documents, so df is ADDITIVE across segments. A
+  * batch's coverage then costs its own span explode plus one join against
+  * the served HOT sliver (df ≥ minDf); the corpus is never re-scanned.
   *
-  * State rows are `(xxhash64(span), span, df)` per batch — the span TEXT
+  * State rows are `(xxhash64(span), span, df)` per batch. The span TEXT
   * rides in state so the serve-side threshold groups by the string itself
-  * and an 8-byte collision can never promote a rare span (the batch
-  * operator's pass-2 rule); a deployment bounds state width with the
-  * md5-surrogate trade, as the other content ledgers document. ALL spans
-  * are folded, not only batch-hot ones: a span rare in every batch can
-  * still be hot corpus-wide, and the threshold is a SERVE-time parameter,
-  * not ingest-time (so one ledger serves any minDf). The n-gram order IS
-  * pinned (`_params`) — counts under a different n are not comparable.
-  *
-  * Replay safety — by IDEMPOTENCE: a batch's span counts are a pure
-  * function of the batch; a replayed id overwrites its own directory.
+  * and an 8-byte collision can never promote a rare span (a deployment
+  * bounds width with the md5-surrogate trade). ALL spans are folded, not
+  * only batch-hot ones — a span rare in every batch can be hot
+  * corpus-wide — so the threshold is a serve-time parameter. The n-gram
+  * order IS pinned: counts under a different n are not comparable.
   */
 object BoilerLedgerStream {
 
-  private val StateSchema = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("h", LongType, nullable = false),
     StructField("t", StringType),
     StructField("df", LongType, nullable = false)))
 
-  private def params(n: Int) = Seq("n" -> n.toLong)
-
   /** (id, gl) — each doc's DISTINCT n-gram spans (the batch operator's
-    * docSpans, mirrored here because it is private there by design —
-    * probe and coverage must explode identically).
+    * private docSpans: probe and fold must explode identically).
     */
-  private def docSpans(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
-      array_distinct(graft.ext.Decontaminate.ngrams(textCol, n)).as("gl"))
+  private def docSpans(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id").as("id"),
+      array_distinct(graft.ext.Decontaminate.ngrams("text", n)).as("gl"))
 
-  /** Fold one batch: its doc-distinct span counts as one `batch=<id>`
-    * segment. Empty batches (no spans) are a no-op.
-    */
-  def maintain(docs: DataFrame, batchId: Long, root: String,
-               idCol: String = "doc_id", textCol: String = "text",
-               n: Int = 3): Unit = {
-    val spark = docs.sparkSession
-    SegmentStore.validateParams(spark, root, params(n))
-    val counts = docSpans(docs, idCol, textCol, n)
-      .select(explode(col("gl")).as("t"))
-      .groupBy(col("t"))
-      .agg(count(lit(1)).as("df"))
-      .select(xxhash64(col("t")).as("h"), col("t"), col("df"))
-      .persist()
-    try {
-      if (!counts.isEmpty) {
-        counts.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-        SegmentStore.pinParams(spark, root, params(n))
-      }
-    } finally { counts.unpersist(); () }
-  }
+  /** The ledger at n-gram order `n`. */
+  def ledger(n: Int = 3): SegmentLedger = new SegmentLedger(Schema,
+    docSpans(_, n).select(explode(col("gl")).as("t"))
+      .groupBy(col("t")).agg(count(lit(1)).as("df"))
+      .select(xxhash64(col("t")).as("h"), col("t"), col("df")),
+    merge = SegmentLedger.sumBy("df", "h", "t"),
+    params = Seq("n" -> n.toLong))
 
-  /** Wire a streaming document source to this ledger (foreachBatch —
-    * checkpointed batch ids make crash replays hit [[maintain]]'s
-    * idempotent overwrite; the n pin rejects a stream attached with a
-    * different n-gram order).
-    */
+  def maintain(docs: DataFrame, batchId: Long, root: String, n: Int = 3): Unit =
+    ledger(n).maintain(docs, batchId, root)
+
   def attach(docs: DataFrame, root: String, checkpoint: String,
-             idCol: String = "doc_id", textCol: String = "text",
-             n: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, idCol, textCol, n))
+             n: Int = 3): DataStreamWriter[Row] = ledger(n).attach(docs, root, checkpoint)
 
   /** Corpus-wide span df summed across live segments (unthresholded). */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StateSchema))
-      .groupBy(col("h"), col("t")).agg(sum(col("df")).as("df"))
+  def serve(spark: SparkSession, root: String): DataFrame = {
+    val l = ledger()
+    l.merge(l.serve(spark, root))
+  }
+
+  def compact(spark: SparkSession, root: String): Option[Long] = ledger().compact(spark, root)
 
   /** The hot sliver: spans with corpus-wide df ≥ `minDf`, thresholded at
-    * the span STRING so an 8-byte collision can never promote a rare span.
-    * TWO-PHASE (round-13 verdict — the batch operator's own ExactDedup
-    * idiom, restored on the serve path): phase 1 sums df by the 8-byte
-    * hash alone — the span TEXT column is pruned at the parquet scan, so
-    * the corpus-vocabulary shuffle carries 16 B rows; phase 2 re-reads
-    * only rows whose hash passed the prescreen (a semi join against the
-    * candidate hashes — boilerplate cardinality) and applies the EXACT
-    * string-level threshold by grouping those on `(h, t)`. Sound because
-    * a collision only ever MERGES counts: the h-sum is ≥ every constituent
-    * string's true df, so phase 1's survivor set is a superset of the true
-    * hot set, and phase 2's per-string re-sum decides exactly.
+    * the span STRING. TWO-PHASE: phase 1 sums df by the 8-byte hash alone
+    * (the text column is pruned at the scan, so the vocabulary shuffle
+    * carries 16 B rows); phase 2 re-sums by `(h, t)` only the rows whose
+    * hash passed. Sound because a collision only MERGES counts: phase 1's
+    * survivors are a superset of the true hot set, and phase 2 decides
+    * exactly.
     */
   def hotSpans(spark: SparkSession, root: String, minDf: Long): DataFrame = {
-    val hot = SegmentStore.read(spark, root,
-        spark.read.parquet(_).select(col("h"), col("df")),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType(StateSchema.filter(_.name != "t"))))
-      .groupBy(col("h")).agg(sum(col("df")).as("df"))
+    val raw = ledger().serve(spark, root)
+    val hot = raw.groupBy(col("h")).agg(sum(col("df")).as("df"))
       .filter(col("df") >= minDf)
       .select(col("h"))
-    SegmentStore.read(spark, root, readSegment(spark, _),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StateSchema))
-      .join(hot, Seq("h"), "left_semi")
+    raw.join(hot, Seq("h"), "left_semi")
       .groupBy(col("h"), col("t")).agg(sum(col("df")).as("df"))
       .filter(col("df") >= minDf)
       .select(col("t").as("gram"), col("df"))
   }
 
-  /** Pre-sum each segment range into one compacted segment. */
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      (df, path) => df.groupBy(col("h"), col("t"))
-        .agg(sum(col("df")).as("df"))
-        .write.mode("overwrite").parquet(path))
-
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("h"), col("t"), col("df"))
-
-  /** Per-document boilerplate coverage of a batch against the MAINTAINED
-    * df state — [[graft.ext.Boilerplate.coverage]]'s exact output shape
-    * and join semantics (span-string semi join against the hot sliver,
-    * exact-integer hit counts, the same ratio division), the corpus never
-    * re-scanned.
+  /** Per-document boilerplate coverage of a batch against the maintained
+    * df — [[graft.ext.Boilerplate.coverage]]'s exact output shape and join
+    * semantics, the corpus never re-scanned.
     */
   def probe(spark: SparkSession, root: String, batch: DataFrame,
-            idCol: String = "doc_id", textCol: String = "text",
             n: Int = 3, minDf: Long = 5L): DataFrame = {
-    SegmentStore.validateParams(spark, root, params(n))
-    val ds = docSpans(batch, idCol, textCol, n).filter(size(col("gl")) >= 1)
+    ledger(n).validate(spark, root)
+    val ds = docSpans(batch, n).filter(size(col("gl")) >= 1)
     val exploded = ds.select(col("id"), explode(col("gl")).as("gram"))
     val hits = exploded
       .join(hotSpans(spark, root, minDf).select(col("gram")), Seq("gram"), "left_semi")
       .groupBy(col("id")).agg(count(lit(1)).as("__nb"))
     ds.select(col("id"), size(col("gl")).as("n_spans"))
       .join(hits, Seq("id"), "left")
-      .select(col("id").as(idCol), col("n_spans"),
+      .select(col("id").as("doc_id"), col("n_spans"),
         coalesce(col("__nb"), lit(0L)).cast("int").as("n_boiler"),
         (coalesce(col("__nb"), lit(0L)).cast("double") / col("n_spans"))
           .as("boiler_ratio"))

@@ -4,111 +4,48 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Streaming maintenance of the CDC CHUNK STORE — the incremental form of
-  * [[graft.ext.Cdc]]'s storage dedup: a content-addressed chunk store
-  * ingests a batch by writing only the chunks it has never seen, so the
-  * per-ingest question is "which of this batch's chunks are novel, and
-  * how many bytes do they add?" — answered here against maintained state,
-  * the corpus never re-chunked ([[ExactDedupLedgerStream]]'s contract at
-  * CHUNK granularity, where dedup bites across DISTINCT documents that
-  * share boilerplate).
-  *
-  * State is distinct `(xxhash64(chunk), chunk)` rows on the append-shaped
-  * [[SegmentStore]] layout (`batch=<id>` dirs, `_SUCCESS`-gated,
-  * compaction re-distincts); the exact-text verify column makes the probe
-  * bit-identical to the batch recompute — a deployment bounds state width
-  * with the md5-surrogate trade exactly as [[ExactDedupLedgerStream]]
-  * documents. The chunking parameters are pinned via `_params`: state
-  * chunked under a different window/base/divisor would silently misreport
-  * novelty for every later batch.
-  *
-  * Replay safety — by IDEMPOTENCE: a batch's distinct chunk set is a pure
-  * function of the batch; a replayed id overwrites its own directory.
+/** The CDC CHUNK STORE: the incremental form of [[graft.ext.Cdc]]'s
+  * storage dedup — [[ExactDedupLedgerStream]]'s contract at CHUNK
+  * granularity, where dedup bites across DISTINCT documents that share
+  * boilerplate. State is the distinct `(xxhash64(chunk), chunk)` rows of a
+  * batch; the chunk text makes the probe bit-identical to the batch
+  * recompute (a deployment bounds state width with the md5-surrogate
+  * trade). The chunking window/base/divisor are pinned: state chunked
+  * under other parameters would misreport novelty for every later batch.
   */
-object CdcLedgerStream {
+object CdcLedgerStream extends SegmentLedger(
+  StructType(Seq(StructField("h", LongType, nullable = false), StructField("t", StringType))),
+  graft.ext.Cdc.chunks(_)
+    .select(xxhash64(col("chunk_text")).as("h"), col("chunk_text").as("t")).distinct(),
+  merge = _.distinct(),
+  params = Seq("window" -> graft.ext.Cdc.Window.toLong,
+    "base" -> graft.ext.Cdc.Base, "divisor" -> graft.ext.Cdc.Divisor)) {
 
-  private val StateSchema = StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("t", StringType)))
-
-  private val Params = Seq("window" -> graft.ext.Cdc.Window.toLong,
-    "base" -> graft.ext.Cdc.Base, "divisor" -> graft.ext.Cdc.Divisor)
-
-  /** Fold one batch of documents: its distinct chunk contents as one
-    * `batch=<id>` segment. Empty batches (no chunks) are a no-op.
+  /** Per-document ingest report against the maintained store: total
+    * chunks, chunks whose content the store lacks, and the characters of
+    * those novel OCCURRENCES. Novelty is per occurrence relative to the
+    * PRE-BATCH state: an absent chunk counts once per appearance, so each
+    * document's numbers do not depend on which other batch members share
+    * its chunks (the batch-deduped store delta is a follow-up aggregate,
+    * deliberately not this report). Cost: chunk the batch + one 8-byte-keyed
+    * anti/semi join pair, collision candidates re-verified by chunk text.
+    * Documents with no chunks are absent, as in the batch operator.
     */
-  def maintain(docs: DataFrame, batchId: Long, root: String,
-               idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    SegmentStore.validateParams(spark, root, Params)
-    val content = graft.ext.Cdc.chunks(docs, idCol, textCol)
-      .select(xxhash64(col("chunk_text")).as("h"), col("chunk_text").as("t"))
-      .distinct().persist()
-    try {
-      if (!content.isEmpty) {
-        content.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-        SegmentStore.pinParams(spark, root, Params)
-      }
-    } finally { content.unpersist(); () }
-  }
-
-  /** Wire a streaming document source to this chunk store (foreachBatch —
-    * checkpointed batch ids make crash replays hit [[maintain]]'s
-    * idempotent overwrite).
-    */
-  def attach(docs: DataFrame, root: String, checkpoint: String,
-             idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, idCol, textCol))
-
-  /** The chunk-content table `(h, t)` across the committed live segments. */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StateSchema))
-
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      (df, path) => df.distinct().write.mode("overwrite").parquet(path))
-
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("h"), col("t"))
-
-  /** Per-document ingest report against the MAINTAINED store: total
-    * chunks, chunks whose content the store lacks, and the characters
-    * (code points) of those novel OCCURRENCES. Novelty is PER-OCCURRENCE
-    * relative to the PRE-BATCH state (round-13 ADVICE): a chunk absent
-    * from the store counts once per appearance — repeated within a
-    * document or across documents of the same probe batch — because the
-    * report is per-document and each document's numbers must not depend
-    * on which OTHER batch members happen to share its chunks. The
-    * store-delta (bytes a dedup store would actually write for the batch:
-    * novel chunks deduped batch-wide, counted once) is the one-line
-    * follow-up `probe(...).agg(...)` over a batch-distinct variant —
-    * deliberately NOT what this per-document report returns. Probe cost:
-    * chunk the batch + one 8-byte-keyed anti/semi join pair against state
-    * (collision candidates re-verified by chunk text — the
-    * novelAgainstHashes shape). Documents with no chunks (empty text)
-    * are absent, as in the batch operator.
-    */
-  def probe(spark: SparkSession, root: String, batch: DataFrame,
-            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    SegmentStore.validateParams(spark, root, Params)
-    val ch = graft.ext.Cdc.chunks(batch, idCol, textCol)
-      .select(col(idCol), col("chunk_len"),
+  def probe(spark: SparkSession, root: String, batch: DataFrame): DataFrame = {
+    validate(spark, root)
+    val ch = graft.ext.Cdc.chunks(batch)
+      .select(col("doc_id"), col("chunk_len"),
         col("chunk_text").as("t"), xxhash64(col("chunk_text")).as("h"))
     val state = serve(spark, root)
     val noHash = ch.join(state.select(col("h")), Seq("h"), "left_anti")
     val collisionOnly = ch.join(state.select(col("h")), Seq("h"), "left_semi")
       .join(state, Seq("h", "t"), "left_anti")
     val novel = noHash.unionByName(collisionOnly)
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("nn"), sum(col("chunk_len")).as("nc"))
-    ch.groupBy(col(idCol)).agg(count(lit(1)).as("n_chunks"))
-      .join(novel, Seq(idCol), "left")
-      .select(col(idCol), col("n_chunks"),
+    ch.groupBy(col("doc_id")).agg(count(lit(1)).as("n_chunks"))
+      .join(novel, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_chunks"),
         coalesce(col("nn"), lit(0L)).as("n_novel_chunks"),
         coalesce(col("nc"), lit(0L)).cast("long").as("novel_chars"))
   }

@@ -55,19 +55,16 @@ object DecontamLedgerStream {
     */
   def maintain(docs: DataFrame, batchId: Long, root: String, n: Int = 3,
                idCol: String = "doc_id", textCol: String = "text"): Unit = {
+    val spark = docs.sparkSession
+    // the SegmentStore pin discipline: validate before any work, pin after
+    // the first successful commit
+    SegmentStore.validateParams(spark, root, Seq("n" -> n.toLong))
     // pinned so the batch's upstream plan runs once across the emptiness
     // gate and the merge job (the PageRankLedgerStream.maintain pattern);
     // micro-batch-sized, dropped before return
     val pinned = docs.select(col(idCol), col(textCol)).persist()
     try {
       if (!pinned.isEmpty) {
-        val spark = pinned.sparkSession
-        // n-gram order validated BEFORE the commit (a mismatched fold
-        // must not merge an incomparable term universe), pinned AFTER the
-        // first successful commit (a failed first fold must not pin an
-        // empty store) — the MinHashLedgerStream discipline + the
-        // round-13 ordering fix
-        SegmentStore.validateParams(spark, root, Seq("n" -> n.toLong))
         val state = VersionedState.current(spark, root, StateSchema)
         VersionedState.commit(
           IndexLedgerStream.merge(state, partial(pinned, n, idCol, textCol)),
@@ -87,12 +84,7 @@ object DecontamLedgerStream {
     */
   def probe(spark: SparkSession, root: String, evalSet: DataFrame, n: Int = 3,
             textCol: String = "text"): DataFrame = {
-    SegmentStore.readParams(spark, root).foreach { pinned =>
-      require(pinned == Map("n" -> n.toLong),
-        s"decontamination ledger at $root stores ${pinned.getOrElse("n", -1L)}-gram " +
-          s"postings — refusing to probe with n=$n (disjoint term " +
-          "universes would silently report zero contamination)")
-    }
+    SegmentStore.validateParams(spark, root, Seq("n" -> n.toLong))
     val eg = evalSet
       .select(explode(array_distinct(
         graft.ext.Decontaminate.ngrams(textCol, n))).as("term"))

@@ -1,101 +1,31 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Streaming maintenance of the EXACT-CONTENT LEDGER — the "precomputed
-  * 8-byte content-hash table" [[graft.ext.ExactDedup.newAgainstCorpus]]
-  * promises as its steady state: per-ingest exact dedup against a 100 TB
-  * corpus cannot re-hash the corpus per batch, so each ingest folds its
-  * own `(xxhash64(text), text)` rows into persisted state once, and every
-  * later batch probes that state with the batch operator's exact join
-  * shape ([[graft.ext.ExactDedup.novelAgainstHashes]]): novel-by-hash via
-  * a left_anti on the 8-byte key, text verify only for hash-matched
-  * candidates.
+/** The EXACT-CONTENT LEDGER: the precomputed 8-byte content-hash table
+  * [[graft.ext.ExactDedup.newAgainstCorpus]] promises as its steady state.
+  * State is one `(xxhash64(text), text)` row per distinct content of a
+  * batch; cross-segment repeats are harmless (the probe's semi/anti joins
+  * are multiplicity-blind) and compaction squeezes them out. NULL text is
+  * content too, as in the batch operator.
   *
-  * Content state is corpus-sized, so the layout is the append-shaped
-  * [[SegmentStore]] discipline (per-batch `batch=<id>` dirs,
-  * `_SUCCESS`-gated, [[compact]] available) — never a full rewrite per
-  * ingest. Each segment stores each distinct (h, t) ONCE (within-batch
-  * multiplicity carries no novelty information); cross-segment repeats of
-  * the same content are harmless — the probe's semi/anti joins are
-  * multiplicity-blind — and compaction squeezes them out.
-  *
-  * Replay safety — by IDEMPOTENCE: the distinct content set is a pure
-  * function of the batch, and a replayed batch id overwrites its own
-  * directory with identical content. Documents are facts, never
-  * retractions.
-  *
-  * State width at 100 TB: this fixture form stores the verify TEXT in the
-  * ledger (a content-addressed table — what makes the probe bit-identical
-  * to the batch operator, the checkable contract). A deployment bounds
-  * state width by storing `(xxhash64, md5(text))` and verifying on the
-  * hash pair — the md5-surrogate discipline — trading the exact-text
-  * verify for 2^-192 collision odds; layout and probe shape unchanged.
+  * State width at 100 TB: the verify TEXT rides in state so the probe is
+  * bit-identical to the batch operator; a deployment stores
+  * `(xxhash64, md5(text))` instead and verifies on the hash pair, with
+  * layout and probe shape unchanged.
   */
-object ExactDedupLedgerStream {
-
-  private val StateSchema = StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("t", StringType)))
-
-  /** Fold one batch of documents into the ledger (the foreachBatch body):
-    * distinct (hash, text) rows, one self-contained `batch=<id>` append.
-    * Empty batches are a no-op. NULL-text rows are kept — the batch
-    * operator treats them as content too (they verify against corpus
-    * NULLs by the same join semantics either way).
-    */
-  def maintain(docs: DataFrame, batchId: Long, root: String,
-               textCol: String = "text"): Unit = {
-    // pinned so the batch's upstream plan runs once across the emptiness
-    // gate and the write (the round-11 PageRankLedgerStream.maintain lesson)
-    val content = docs
-      .select(xxhash64(col(textCol)).as("h"), col(textCol).as("t"))
-      .distinct().persist()
-    try {
-      if (!content.isEmpty)
-        content.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-    } finally { content.unpersist(); () }
-  }
-
-  /** The content table `(h, t)` across the committed live segments
-    * (crash leftovers skipped, compacted batches read once).
-    */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StateSchema))
-
-  /** Merge all batches past the newest compact segment into one
-    * `compact=<maxBatchId>` segment, re-distincting so content folded by
-    * several ingests is stored once again.
-    */
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      (df, path) => df.distinct().write.mode("overwrite").parquet(path))
-
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("h"), col("t"))
+object ExactDedupLedgerStream extends SegmentLedger(
+  StructType(Seq(StructField("h", LongType, nullable = false), StructField("t", StringType))),
+  _.select(xxhash64(col("text")).as("h"), col("text").as("t")).distinct(),
+  merge = _.distinct()) {
 
   /** Which docs of a NEW batch are absent (by content) from everything
-    * ever folded into the ledger — bit-identical to
-    * [[graft.ext.ExactDedup.newAgainstCorpus]] over every document ever
-    * maintained (the maintained == recompute contract, checked by the
-    * registry oracle).
+    * ever folded: [[graft.ext.ExactDedup.novelAgainstHashes]] against the
+    * served state — a left_anti on the 8-byte key, text verify only for
+    * hash-matched candidates.
     */
-  def probe(spark: SparkSession, root: String, batch: DataFrame,
-            idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.ext.ExactDedup.novelAgainstHashes(
-      batch, serve(spark, root), idCol, textCol)
-
-  /** Attach the maintainer to a document stream. Caller starts/stops the
-    * query; the layout lives under `root`.
-    */
-  def attach(docs: DataFrame, root: String, checkpoint: String,
-             textCol: String = "text"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, textCol))
+  def probe(spark: SparkSession, root: String, batch: DataFrame): DataFrame =
+    graft.ext.ExactDedup.novelAgainstHashes(batch, serve(spark, root))
 }

@@ -1,121 +1,82 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Streaming maintenance of the CORPUS LM COUNT TABLES — the maintained
-  * twin of [[graft.ext.NgramLm.scoreDocs]]: CCNet-style LM quality
-  * scoring needs the corpus bigram/unigram counts, and at 100 TB those
-  * cannot be re-aggregated per ingest. N-gram counts are ADDITIVE, so
-  * each ingest folds its OWN batch's counts as one [[SegmentStore]]
-  * segment (`batch=<id>`, `_SUCCESS`-gated) and serving sums across the
-  * live segments — the same per-ingest-cost-∝-batch contract as the
-  * dedup ledgers, on the quality pillar. Compaction pre-sums old
-  * segments so the serve-side aggregation stays bounded by the DISTINCT
-  * gram vocabulary, not the ingest count.
+/** The CORPUS LM COUNT TABLES, maintained twin of
+  * [[graft.ext.NgramLm.scoreDocs]]: n-gram counts are ADDITIVE, so each
+  * batch folds its own counts and serving sums the live segments. Two
+  * sub-stores under one root: `root/bi` holds `(th2, c2)` bigram totals,
+  * `root/uni` holds `(th1, c1)` unigram totals. Keys are the 8-byte
+  * xxhash64 gram surrogates of [[graft.ext.NgramLm]] — the probe's own
+  * parse supplies the th2→th1 structure, so state carries no gram strings
+  * (16 B per distinct gram). The n-gram order is pinned at `root` (n=2).
   *
-  * Two sub-stores under one root: `root/bi` holds `(th2, c2)` bigram
-  * totals, `root/uni` holds `(th1, c1)` unigram totals (gram keys are
-  * the 8-byte xxhash64 surrogates of [[graft.ext.NgramLm]] — the probe's
-  * own parse supplies the th2→th1 structure, so state needs no gram
-  * strings at all: 16 B/distinct-gram, the SimHash-ledger width class).
+  * Probe contract: after folding the corpus, [[probe]] ==
+  * [[graft.ext.NgramLm.scoreDocs]] on the full corpus restricted to the
+  * probe docs, bit for bit — both run [[graft.ext.NgramLm.scoreAgainst]].
+  * Precondition inherited from the batch operator: probe docs were folded.
   *
-  * The checked contract (the ledger-family rule): after folding the
-  * corpus, [[probe]] == [[graft.ext.NgramLm.scoreDocs]] on the full
-  * corpus restricted to the probe docs, bit for bit — both sides run the
-  * SAME scoring join ([[graft.ext.NgramLm.scoreAgainst]]), only the
-  * count tables' provenance differs. Precondition inherited from the
-  * batch operator: probe docs were folded (no unseen grams; scoring a
-  * foreign batch would need a smoothing rule, a deliberate non-goal).
-  *
-  * Replay safety — by IDEMPOTENCE: a batch's counts are a pure function
-  * of the batch, and a replayed batch id overwrites its own directory.
-  * The n-gram order is pinned via `_params` (n=2) — folding counts
-  * produced under a different tokenization into the same store would
-  * silently corrupt every later score.
-  *
-  * TWO-SUB-STORE TORN-COMMIT DEFENSE (round-13 verdict): unlike every
-  * other ledger, this state spans two segment directories per batch, and
-  * the two writes cannot be made one atomic commit on a filesystem — a
-  * crash between them leaves a bigram segment with no unigram twin
-  * (numerators without denominators), which a naive reader would consume
-  * silently. So every read path ([[serve]], and [[compact]] before it
-  * merges anything) runs [[checkParity]]: each sub-store's live batch ids
-  * must be COVERED by the other (present as a live batch, or at-or-below
-  * the other side's newest compact id — compaction is content-preserving,
-  * so a compacted id is covered by construction). A torn id fails loudly
-  * BY NAME until its batch is replayed; compaction refuses to fold a torn
-  * id into a compact segment where the per-batch evidence would be lost.
+  * TORN-COMMIT DEFENSE: one batch writes two segment directories, which
+  * no filesystem commits atomically — a crash between them leaves
+  * numerators without denominators. So [[serve]] and [[compact]] first run
+  * [[checkParity]], which fails loudly, naming the torn batch ids, until
+  * the batch is replayed; compaction never folds a torn id away.
   */
 object LmLedgerStream {
 
-  private val BiSchema = StructType(Seq(
-    StructField("th2", LongType, nullable = false),
-    StructField("c2", LongType, nullable = false)))
-  private val UniSchema = StructType(Seq(
-    StructField("th1", LongType, nullable = false),
-    StructField("c1", LongType, nullable = false)))
-
   private val Params = Seq("n" -> 2L)
 
-  /** Fold one batch of documents into the count ledger (the foreachBatch
-    * body): the batch's bigram totals into `root/bi/batch=<id>` and its
-    * unigram totals into `root/uni/batch=<id>`. Empty batches are a
-    * no-op. Validate-before-commit / pin-after-commit ordering (the
-    * SegmentStore round-13 rule).
+  private val bi = new SegmentLedger(
+    StructType(Seq(StructField("th2", LongType, nullable = false),
+      StructField("c2", LongType, nullable = false))),
+    graft.ext.NgramLm.docBigrams(_, "doc_id", "text")
+      .groupBy(col("th2")).agg(sum(col("n")).as("c2")),
+    merge = SegmentLedger.sumBy("c2", "th2"))
+
+  private val uni = new SegmentLedger(
+    StructType(Seq(StructField("th1", LongType, nullable = false),
+      StructField("c1", LongType, nullable = false))),
+    graft.ext.NgramLm.uniCounts(_, "text"),
+    merge = SegmentLedger.sumBy("c1", "th1"))
+
+  /** Fold one batch: its bigram totals into `root/bi/batch=<id>` and its
+    * unigram totals into `root/uni/batch=<id>`. The gate is the UNIGRAM
+    * side: one-word documents have no bigrams but still owe their word
+    * counts to every later denominator.
     *
-    * Storage note (round-14 ADVICE): `docs` — the CALLER's frame — is
-    * persisted for the duration of this call and unpersisted on return.
-    * A caller that passes an already-cached frame will find its own cache
-    * entry released afterwards; foreachBatch micro-batches (the intended
-    * caller, see [[attach]]) are fresh per invocation, so the shared-plan
-    * case does not arise on the streaming path.
+    * `docs` — the caller's frame — is persisted for the call and
+    * unpersisted on return; foreachBatch micro-batches are fresh per call.
     */
-  def maintain(docs: DataFrame, batchId: Long, root: String,
-               idCol: String = "doc_id", textCol: String = "text"): Unit = {
+  def maintain(docs: DataFrame, batchId: Long, root: String): Unit = {
     val spark = docs.sparkSession
     SegmentStore.validateParams(spark, root, Params)
-    // BOTH the source batch and the unigram aggregate are pinned: the
-    // batch so the bigram write below re-reads cached rows instead of
-    // re-scanning the upstream source, the aggregate so the emptiness
-    // gate and the unigram write share one computed frame (the
-    // PageRankLedgerStream.maintain lesson, round-13 ADVICE).
-    // The gate is the UNIGRAM side: a batch of one-word documents has no
-    // bigrams but still owes its word counts to every later score's
-    // denominator — the bigram segment is then simply empty.
+    // the batch is pinned so the bigram write re-reads cached rows, the
+    // unigram aggregate so the gate and its write share one computation
     val src = docs.persist()
-    val u = graft.ext.NgramLm.uniCounts(src, textCol).persist()
+    val u = uni.rows(src).persist()
     try {
       if (!u.isEmpty) {
-        graft.ext.NgramLm.docBigrams(src, idCol, textCol)
-          .groupBy(col("th2")).agg(sum(col("n")).as("c2"))
-          .write.mode("overwrite").parquet(s"$root/bi/batch=$batchId")
-        u.write.mode("overwrite").parquet(s"$root/uni/batch=$batchId")
+        bi.write(bi.rows(src), s"$root/bi/batch=$batchId")
+        uni.write(u, s"$root/uni/batch=$batchId")
         SegmentStore.pinParams(spark, root, Params)
       }
     } finally { u.unpersist(); src.unpersist(); () }
   }
 
-  /** Wire a streaming document source to this count ledger (foreachBatch —
-    * checkpointed batch ids make crash replays hit [[maintain]]'s
-    * idempotent overwrite, which is also what heals a torn bi/uni commit:
-    * the stream's restart re-delivers the un-checkpointed batch).
+  /** Attach [[maintain]] to a stream; its restart re-delivers an
+    * un-checkpointed batch, which is also what heals a torn commit.
     */
-  def attach(docs: DataFrame, root: String, checkpoint: String,
-             idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, idCol, textCol))
+  def attach(docs: DataFrame, root: String, checkpoint: String): DataStreamWriter[Row] =
+    docs.writeStream.option("checkpointLocation", checkpoint)
+      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root))
 
-  /** Live-set cross-parity: fails loudly (naming the torn batch ids) when
-    * either sub-store has a live `batch=<id>` the other does not cover —
-    * the observable signature of a crash between the bigram and unigram
-    * writes of one [[maintain]] call. An id is covered when it is live on
-    * the other side too, or at-or-below the other side's newest compact id
-    * (compaction merges exactly the ids it supersedes, so coverage through
-    * the compact id is content-exact). Replaying the named batch heals the
-    * store (idempotent overwrite of both directories).
+  /** Fails loudly, naming the torn batch ids, when either sub-store has a
+    * live `batch=<id>` the other does not cover. An id is covered when it
+    * is live on the other side too, or at-or-below the other side's newest
+    * compact id (compaction merges exactly the ids it supersedes).
     */
   private[streaming] def checkParity(spark: SparkSession, root: String): Unit = {
     def view(sub: String): (Long, Set[Long]) = (
@@ -126,60 +87,33 @@ object LmLedgerStream {
     val (uniCompact, uniIds) = view("uni")
     val torn = biIds.filter(id => id > uniCompact && !uniIds(id)) ++
       uniIds.filter(id => id > biCompact && !biIds(id))
-    require(torn.isEmpty,
-      s"lm count ledger at $root is TORN: batch ids ${torn.toSeq.sorted.mkString(",")} " +
-        "are committed in one of bi/uni but not covered by the other — a crash " +
-        "between the two segment writes; replay the named batch(es) to heal " +
-        "before serving (scoring from torn state would silently drop " +
-        "numerators or denominators)")
+    require(torn.isEmpty, s"lm count ledger at $root is TORN: batch ids " +
+      s"${torn.toSeq.sorted.mkString(",")} are committed in one of bi/uni but not " +
+      "covered by the other (a crash between the two writes); replay them to heal")
   }
 
   /** The corpus count tables summed across live segments: (bigram
-    * `(th2, c2)`, unigram `(th1, c1)`). Fails loudly on a torn store
-    * ([[checkParity]]) instead of serving half-committed counts.
+    * `(th2, c2)`, unigram `(th1, c1)`).
     */
   def serve(spark: SparkSession, root: String): (DataFrame, DataFrame) = {
     checkParity(spark, root)
-    val bi = SegmentStore.read(spark, s"$root/bi",
-        spark.read.parquet(_).select(col("th2"), col("c2")),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), BiSchema))
-      .groupBy(col("th2")).agg(sum(col("c2")).as("c2"))
-    val uni = SegmentStore.read(spark, s"$root/uni",
-        spark.read.parquet(_).select(col("th1"), col("c1")),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), UniSchema))
-      .groupBy(col("th1")).agg(sum(col("c1")).as("c1"))
-    (bi, uni)
+    (bi.merge(bi.serve(spark, s"$root/bi")), uni.merge(uni.serve(spark, s"$root/uni")))
   }
 
-  /** Merge each sub-store's segments past its newest compact into one
-    * pre-summed segment (counts re-aggregate by key — the additive-state
-    * compaction). Parity-checked FIRST: compacting a torn batch id would
-    * destroy the per-batch evidence that makes the tear detectable.
-    */
+  /** Pre-sum each sub-store's segments past its newest compact one. */
   def compact(spark: SparkSession, root: String): Unit = {
     checkParity(spark, root)
-    SegmentStore.compact(spark, s"$root/bi",
-      spark.read.parquet(_).select(col("th2"), col("c2")),
-      (df, path) => df.groupBy(col("th2")).agg(sum(col("c2")).as("c2"))
-        .write.mode("overwrite").parquet(path)): Unit
-    SegmentStore.compact(spark, s"$root/uni",
-      spark.read.parquet(_).select(col("th1"), col("c1")),
-      (df, path) => df.groupBy(col("th1")).agg(sum(col("c1")).as("c1"))
-        .write.mode("overwrite").parquet(path)): Unit
+    bi.compact(spark, s"$root/bi")
+    uni.compact(spark, s"$root/uni"): Unit
   }
 
-  /** Score a probe batch against the MAINTAINED counts — the batch
-    * operator's scoring join verbatim, corpus never re-read: the probe
-    * pays its own parse (batch-sized) plus two gram-keyed joins against
-    * the served count tables.
+  /** Score a probe batch against the maintained counts: its own parse plus
+    * two gram-keyed joins against the served tables.
     */
-  def probe(spark: SparkSession, root: String, probeDocs: DataFrame,
-            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def probe(spark: SparkSession, root: String, probeDocs: DataFrame): DataFrame = {
     SegmentStore.validateParams(spark, root, Params)
     val (c2, c1) = serve(spark, root)
     graft.ext.NgramLm.scoreAgainst(
-      graft.ext.NgramLm.docBigrams(probeDocs, idCol, textCol), c2, c1)
+      graft.ext.NgramLm.docBigrams(probeDocs, "doc_id", "text"), c2, c1)
   }
 }

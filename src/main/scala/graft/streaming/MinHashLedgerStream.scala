@@ -1,142 +1,64 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
-/** Streaming maintenance of the MINHASH SIGNATURE LEDGER — the steady
-  * state [[graft.ext.MinHashDedup.newAgainstCorpus]] promises but
-  * recomputes: per-ingest fuzzy dedup against a 100 TB corpus cannot
-  * re-sketch the corpus per batch, so each ingest folds its OWN signatures
-  * into persisted state once, and every later batch probes that state with
-  * one keyed band join. Costs at steady state:
+/** The MINHASH SIGNATURE LEDGER: the steady state
+  * [[graft.ext.MinHashDedup.newAgainstCorpus]] promises but recomputes.
+  * State is one `(doc_id, shingles, sigs)` row per document ever folded,
+  * under the `h`/`k` pinned by the first fold. Docs too short to shingle
+  * have no signature, so an all-short batch commits nothing.
   *
-  *  - ingest: sketch the batch (narrow, fused with its scan) + one
-  *    batch-sized parquet append — the corpus is never touched;
-  *  - probe: batch sketch + ONE `(band_key, id)` shuffle against the
-  *    ledger's derived band keys + the exact-Jaccard verify on band-collided
-  *    candidates only ([[graft.ext.MinHashDedup.novelAgainstSigsMd5]]).
-  *
-  * Signature state is corpus-sized (one row per document ever folded), so
-  * the layout is the append-shaped [[SegmentStore]] discipline — per-batch
-  * `batch=<id>` dirs, `_SUCCESS`-gated, [[compact]] for the long-lived
-  * maintenance pass — NOT [[VersionedState]]'s full rewrite (right for
-  * rollup-sized ledgers, corpus-sized-write-per-ingest here).
-  *
-  * Replay safety — by IDEMPOTENCE (the [[VectorIndexStream]] argument):
-  * sketching is a pure function of the batch, and a replayed batch id
-  * overwrites its own `batch=<id>` directory with identical content.
-  * Documents are facts (doc d has signature s), never retractions.
-  *
-  * The stored sketch is the md5 twin ([[graft.ext.MinHashDedup
-  * .signaturesMd5]]) so the whole maintained flow is DuckDB-oracle-checkable
-  * end to end (maintained probe == batch recompute == brute-force SQL — one
-  * oracle pins all three); a production deployment stores the native
-  * [[graft.ext.MinHashDedup.signatures]] output with this file's layout and
-  * probe shape unchanged. Recall stays the banding curve (b=4, r=4 at the
-  * twin's h=16) — that is the operator's contract, not a defect; a banding
-  * miss returns "novel".
+  * The stored sketch is the md5 twin
+  * ([[graft.ext.MinHashDedup.signaturesMd5]]) so maintained probe == batch
+  * recompute == brute-force SQL under one oracle; a deployment stores the
+  * native [[graft.ext.MinHashDedup.signatures]] output with layout and
+  * probe shape unchanged. Recall stays the banding curve (b=4, r=4 at
+  * h=16): a banding miss returns "novel".
   */
 object MinHashLedgerStream {
 
-  private val StateSchema = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("shingles", ArrayType(StringType, containsNull = true)),
     StructField("sigs", ArrayType(LongType, containsNull = true))))
 
-  /** Fold one batch of documents into the ledger (the foreachBatch body):
-    * sketch, then one self-contained `batch=<id>` append. Empty batches
-    * and batches with no shingleable doc are a no-op (no segment churn —
-    * an all-short batch would otherwise commit an empty dir per replay).
-    */
+  /** The ledger at sketch parameters `h`, `k`. */
+  def ledger(h: Int = 16, k: Int = 3): SegmentLedger = new SegmentLedger(Schema,
+    graft.ext.MinHashDedup.signaturesMd5(_, h = h, k = k),
+    params = Seq("h" -> h.toLong, "k" -> k.toLong))
+
   def maintain(docs: DataFrame, batchId: Long, root: String,
-               h: Int = 16, k: Int = 3,
-               idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // pinned so the batch's upstream plan runs once across the emptiness
-    // gate and the write (the round-11 PageRankLedgerStream.maintain
-    // lesson); the gate is on the SKETCH, so empty and all-short batches
-    // alike commit no segment
-    val sigs = graft.ext.MinHashDedup
-      .signaturesMd5(docs, idCol, textCol, h, k)
-      .select(col(idCol).as("doc_id"), col("shingles"), col("sigs"))
-      .persist()
-    try {
-      if (!sigs.isEmpty) {
-        // validate BEFORE the write (a mismatched fold must not commit a
-        // misaligned segment), pin AFTER it (a failed first fold must not
-        // pin parameters on an empty store) — round-12 ADVICE + round-13
-        // ordering fix
-        val params = Seq("h" -> h.toLong, "k" -> k.toLong)
-        SegmentStore.validateParams(docs.sparkSession, root, params)
-        sigs.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-        SegmentStore.pinParams(docs.sparkSession, root, params)
-      }
-    } finally { sigs.unpersist(); () }
-  }
+               h: Int = 16, k: Int = 3): Unit = ledger(h, k).maintain(docs, batchId, root)
 
-  /** Every signature ever folded, across the committed live segments
-    * (crash leftovers skipped, compacted batches read once —
-    * [[SegmentStore.live]]); empty-before-first-commit.
-    */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StateSchema))
+  def serve(spark: SparkSession, root: String): DataFrame = ledger().serve(spark, root)
 
-  /** Merge all batches past the newest compact segment into one
-    * `compact=<maxBatchId>` segment ([[SegmentStore.compact]] discipline).
-    */
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      (df, path) => df.write.mode("overwrite").parquet(path))
+  def compact(spark: SparkSession, root: String): Option[Long] = ledger().compact(spark, root)
 
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("doc_id"), col("shingles"), col("sigs"))
+  def attach(docs: DataFrame, root: String, checkpoint: String,
+             h: Int = 16, k: Int = 3): DataStreamWriter[Row] =
+    ledger(h, k).attach(docs, root, checkpoint)
 
-  /** Which docs of a NEW batch near-duplicate nothing ever folded into the
-    * ledger? Sketch the batch, band-join against the served state, verify
-    * exact Jaccard on candidates — bit-identical to
+  /** Which docs of a NEW batch near-duplicate nothing ever folded? Sketch
+    * the batch, ONE `(band_key, id)` join against the served signatures,
+    * exact Jaccard on band-collided candidates only
+    * ([[graft.ext.MinHashDedup.novelAgainstSigsMd5]]) — bit-identical to
     * [[graft.ext.MinHashDedup.newAgainstCorpusMd5]] over every document
-    * ever maintained (the maintained == recompute contract, checked by the
-    * registry oracle). Batch docs too short to shingle come back novel.
+    * folded. Batch docs too short to shingle come back novel. A probe whose
+    * `h`/`k` differ from the pin fails loudly: banding a 16-slot signature
+    * at h=32 would silently mis-answer.
     *
-    * A probe whose `h`/`k` differ from the parameters the store was built
-    * with fails loudly ([[SegmentStore.pinParams]]) — banding a 16-slot
-    * stored signature with a probe-side h=32 would slice past the array
-    * end and silently mis-answer (round-12 ADVICE).
-    *
-    * Storage: the returned novel-id frame comes back persisted + counted
-    * and the probe's own sig frames are already released
-    * ([[graft.ext.MinHashDedup.novelAgainstSigsMd5]]'s materialize
-    * contract) — the caller owns the batch-id-sized result storage; a
-    * per-micro-batch loop never accumulates corpus-sized blocks.
+    * The novel-id frame comes back persisted and counted, with the probe's
+    * own sig frames already released; the caller owns it.
     */
   def probe(spark: SparkSession, root: String, batch: DataFrame,
             minJaccard: Double = 0.5, h: Int = 16, bands: Int = 4,
-            k: Int = 3, idCol: String = "doc_id",
-            textCol: String = "text"): DataFrame = {
-    SegmentStore.readParams(spark, root).foreach { pinned =>
-      require(pinned == Map("h" -> h.toLong, "k" -> k.toLong),
-        s"minhash ledger at $root stores h=${pinned.getOrElse("h", -1L)}, " +
-          s"k=${pinned.getOrElse("k", -1L)} sketches — refusing to probe " +
-          s"with h=$h, k=$k (misaligned band slices would silently return " +
-          "wrong novelty)")
-    }
-    graft.ext.MinHashDedup.novelAgainstSigsMd5(
-      batch.select(col(idCol)),
-      graft.ext.MinHashDedup.signaturesMd5(batch, idCol, textCol, h, k)
-        .select(col(idCol), col("shingles"), col("sigs")),
-      serve(spark, root).withColumnRenamed("doc_id", idCol),
-      minJaccard, h, bands, idCol)
+            k: Int = 3): DataFrame = {
+    ledger(h, k).validate(spark, root)
+    graft.ext.MinHashDedup.novelAgainstSigsMd5(batch.select(col("doc_id")),
+      graft.ext.MinHashDedup.signaturesMd5(batch, h = h, k = k),
+      serve(spark, root), minJaccard, h, bands)
   }
-
-  /** Attach the maintainer to a document stream. Caller starts/stops the
-    * query; the layout lives under `root`.
-    */
-  def attach(docs: DataFrame, root: String, checkpoint: String,
-             h: Int = 16, k: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, h, k))
 }

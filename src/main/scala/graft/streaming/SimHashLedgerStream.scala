@@ -4,101 +4,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Streaming maintenance of the SIMHASH FINGERPRINT LEDGER — the hamming
-  * member of the maintained-dedup family ([[ExactDedupLedgerStream]] for
-  * content equality, [[MinHashLedgerStream]] for shingle Jaccard): each
-  * ingest folds its own 64-bit fingerprints into persisted state once,
-  * and a new batch's near-dup probe is its own sketch + ONE
-  * (chunk_id, chunk_val)-keyed pigeonhole join
-  * ([[graft.ext.SimHash.novelAgainstSigs]], exact for hamming ≤ 3).
-  *
-  * State is 16 bytes per document — (doc_id, simhash) — the narrowest of
-  * the family: at 100 TB corpus scale the whole ledger is ~GBs, yet the
-  * layout still rides the append-shaped [[SegmentStore]] discipline
-  * (per-batch `batch=<id>` dirs, `_SUCCESS`-gated, [[compact]]) so ingest
-  * cost stays batch-sized and crash/replay semantics are the family's.
-  *
-  * Replay safety — by IDEMPOTENCE: the fingerprint set is a pure function
-  * of the batch; a replayed batch id overwrites its own directory with
-  * identical content. Documents are facts, never retractions.
+/** The SIMHASH FINGERPRINT LEDGER: the hamming member of the
+  * maintained-dedup family. State is `(doc_id, simhash)`, 16 bytes per
+  * document — ~GBs at 100 TB corpus scale. NULL-text docs have no
+  * fingerprint, so an all-NULL batch commits nothing. No parameter pin:
+  * the fingerprint is always one 64-bit word and `maxDist` is a
+  * probe-side question.
   *
   * The stored sketch is the md5 twin ([[graft.ext.SimHash.signaturesMd5]])
-  * so the maintained flow is DuckDB-oracle-checkable end to end
-  * (maintained probe == batch recompute == brute-force hamming SQL); a
-  * production deployment stores the native one-pass
-  * [[graft.ext.SimHash.signatures]] kernel's output with layout and probe
-  * unchanged.
+  * so maintained probe == batch recompute == brute-force hamming SQL; a
+  * deployment stores the native [[graft.ext.SimHash.signatures]] output
+  * with layout and probe unchanged.
   */
-object SimHashLedgerStream {
-
-  private val StateSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("simhash", LongType)))
-
-  /** Fold one batch of documents into the ledger (the foreachBatch body):
-    * sketch, one self-contained `batch=<id>` append. Empty and
-    * all-NULL-text batches commit no segment.
-    */
-  def maintain(docs: DataFrame, batchId: Long, root: String,
-               idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // pinned so the batch's upstream plan runs once across the emptiness
-    // gate and the write (the round-11 PageRankLedgerStream.maintain lesson)
-    val sigs = graft.ext.SimHash.signaturesMd5(docs, idCol, textCol)
-      .select(col(idCol).as("doc_id"), col("simhash"))
-      .persist()
-    try {
-      if (!sigs.isEmpty)
-        sigs.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-    } finally { sigs.unpersist(); () }
-  }
-
-  /** Every fingerprint ever folded, across the committed live segments. */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StateSchema))
-
-  /** Merge all batches past the newest compact segment into one
-    * `compact=<maxBatchId>` segment ([[SegmentStore.compact]] discipline).
-    */
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      (df, path) => df.write.mode("overwrite").parquet(path))
-
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("doc_id"), col("simhash"))
+object SimHashLedgerStream extends SegmentLedger(
+  StructType(Seq(StructField("doc_id", LongType), StructField("simhash", LongType))),
+  graft.ext.SimHash.signaturesMd5(_)) {
 
   /** Which docs of a NEW batch are within hamming ≤ `maxDist` of NOTHING
-    * ever folded — bit-identical to
-    * [[graft.ext.SimHash.newAgainstCorpusMd5]] over every document ever
-    * maintained (maintained == recompute, checked by the registry oracle).
-    * NULL-text batch docs come back novel. No parameter pin is needed:
-    * the fingerprint is always one 64-bit word and `maxDist` is a
-    * probe-side question, hard-bounded ≤ 3 by the pigeonhole require in
-    * [[graft.ext.SimHash.novelAgainstSigs]].
-    *
-    * Storage: the returned novel-id frame comes back persisted + counted
-    * with the probe's sig frames already released (novelAgainstSigs'
-    * materialize contract) — caller owns the batch-id-sized result; a
-    * per-micro-batch loop never accumulates corpus-sized blocks
-    * (round-12 ADVICE).
+    * ever folded: the batch sketch + ONE (chunk_id, chunk_val)-keyed
+    * pigeonhole join ([[graft.ext.SimHash.novelAgainstSigs]], exact for
+    * `maxDist` ≤ 3) — bit-identical to
+    * [[graft.ext.SimHash.newAgainstCorpusMd5]]. NULL-text batch docs come
+    * back novel. The novel-id frame comes back persisted and counted; the
+    * caller owns it.
     */
   def probe(spark: SparkSession, root: String, batch: DataFrame,
-            maxDist: Int = 3, idCol: String = "doc_id",
-            textCol: String = "text"): DataFrame =
-    graft.ext.SimHash.novelAgainstSigs(
-      batch.select(col(idCol)),
-      graft.ext.SimHash.signaturesMd5(batch, idCol, textCol),
-      serve(spark, root).withColumnRenamed("doc_id", idCol),
-      maxDist, idCol)
-
-  /** Attach the maintainer to a document stream. Caller starts/stops the
-    * query; the layout lives under `root`.
-    */
-  def attach(docs: DataFrame, root: String,
-             checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root))
+            maxDist: Int = 3): DataFrame =
+    graft.ext.SimHash.novelAgainstSigs(batch.select(col("doc_id")),
+      graft.ext.SimHash.signaturesMd5(batch), serve(spark, root), maxDist)
 }

@@ -1,44 +1,32 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** Streaming maintenance of the IVF ANN INDEX — the vector-side member of
-  * the incremental-maintainer family ([[IndexLedgerStream]] for the
-  * inverted text index, [[DedupLedgerStream]] for components): a stream of
-  * newly ingested embeddings is assigned to the FROZEN trained centroids
-  * ([[graft.ext.Similarity.ivfAssign]] — the model is train-once state,
-  * exactly the serving trust model of the batch layout) and appended to a
-  * cid-partitioned parquet layout one micro-batch at a time, at batch
-  * cost. A 100 TB vector index cannot re-assign its whole corpus per
-  * ingest, and it equally cannot REWRITE a corpus-sized state file per
-  * batch — so unlike the rollup ledgers this maintainer is append-shaped:
-  *
-  * Layout: `root/batch=<id>/cid=<c>/` parquet files. Each batch writes a
-  * complete, self-contained partition directory (Spark's own `_SUCCESS`
-  * marker gates it); `cid` remains a partition column UNDER the batch
-  * level, so a probe's cid filter still prunes to nprobe/nlist of the
-  * files before any IO — the serving property of the batch layout,
-  * preserved across ingests.
-  *
-  * Replay safety — by IDEMPOTENCE (the [[IndexLedgerStream]] argument):
-  * assignment against frozen centroids is a pure function of the batch,
-  * and a replayed batch id OVERWRITES its own `batch=<id>` directory with
-  * identical content instead of appending a duplicate. A crash mid-write
-  * leaves a directory without `_SUCCESS`, which [[serve]] refuses to
-  * read. Embeddings are facts (vector v exists), never retractions.
+/** The IVF ANN INDEX: newly ingested embeddings are assigned to the
+  * FROZEN trained centroids ([[graft.ext.Similarity.ivfAssign]] — the
+  * model is train-once state) and each batch's `(cid, n_id, n_vec)` rows
+  * land as one segment. `cid` stays a partition column UNDER each segment
+  * (`batch=<id>/cid=<c>/`), so a probe's cid filter still prunes to
+  * nprobe/nlist of the files before any IO, exactly as with the batch
+  * layout.
   *
   * DRIFT GATE: frozen centroids go stale when the embedding distribution
-  * moves (new model version, new modality, new domain mix) — the index
-  * keeps "working" while recall silently decays, because vectors land in
-  * lists whose centroid no longer describes them. The observable signal
-  * is quantization error: mean(1 − cos(v, centroid(v))). [[maintain]]
-  * compares each batch's error against the TRAINING-TIME baseline
-  * ([[quantizationError]] over the training assignment) and FAILS LOUDLY
-  * past `maxDriftRatio` — refusing the batch beats silently serving a
-  * degraded index, and the stream's failure is the retrain signal.
+  * moves, and recall then decays silently. The observable signal is the
+  * quantization error mean(1 − cos(v, centroid(v))): [[maintain]] compares
+  * each batch's error against the training-time baseline
+  * ([[quantizationError]]) and FAILS LOUDLY past `maxDriftRatio` — the
+  * stream's failure is the retrain signal.
   */
 object VectorIndexStream {
+
+  // rows arrive already assigned: maintain owns the assignment and the gate
+  private val Ledger = new SegmentLedger(
+    StructType(Seq(StructField("cid", IntegerType), StructField("n_id", LongType),
+      StructField("n_vec", ArrayType(DoubleType)))),
+    identity, partitionBy = Some("cid"))
 
   /** Mean quantization error of an assignment relation (cid, n_id, n_vec)
     * against its model: mean over vectors of (1 − cosine(v, centroid)).
@@ -55,20 +43,17 @@ object VectorIndexStream {
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 
-  /** Fold one batch of embeddings into the served layout (the
-    * foreachBatch body). Empty batches are a no-op. Throws
-    * IllegalStateException when the batch's quantization error exceeds
-    * `maxDriftRatio` × `baselineError` — see the drift-gate contract
-    * above. `idCol`/`vecCol` name the batch's columns (the
-    * [[graft.ext.Similarity.ivfAssign]] convention).
+  /** Fold one batch of `(vec_id, embedding)` rows (the foreachBatch body).
+    * Empty batches are a no-op. Throws IllegalStateException when the
+    * batch's quantization error exceeds `maxDriftRatio` × `baselineError`;
+    * a refused batch commits nothing.
     */
   def maintain(batch: DataFrame, batchId: Long, root: String,
                model: graft.ext.Similarity.IvfModel,
-               baselineError: Double, maxDriftRatio: Double = 2.0,
-               idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+               baselineError: Double, maxDriftRatio: Double = 2.0): Unit = {
     require(maxDriftRatio > 0, s"maxDriftRatio must be > 0, got $maxDriftRatio")
     if (!batch.isEmpty) {
-      val assigned = graft.ext.Similarity.ivfAssign(batch, model, idCol, vecCol)
+      val assigned = graft.ext.Similarity.ivfAssign(batch, model)
         .persist() // two consumers: the gate and the write — assign once
       try {
         val err = quantizationError(assigned, model)
@@ -76,78 +61,33 @@ object VectorIndexStream {
         // floor it at 1e-9 so the ratio stays meaningful
         val bound = maxDriftRatio * math.max(baselineError, 1e-9)
         if (err > bound)
-          throw new IllegalStateException(
-            f"VectorIndexStream: batch $batchId quantization error $err%.6f " +
-              f"exceeds $maxDriftRatio%.1fx the training baseline " +
-              f"$baselineError%.6f — the frozen centroids no longer describe " +
-              "the incoming distribution. Refusing to index a batch the " +
-              "lists can't serve: retrain the model (and re-assign) before " +
-              "resuming this stream.")
-        // cluster by cid before the partitioned write (§6 file sizing):
-        // unclustered, every task opens a file per cid it touches — T
-        // tasks × nlist slivers per batch (measured 1111 files / 2000
-        // rows at sf0.1, the dominant cost of the whole 3-wave fold);
-        // clustered, each list is ≤ 1 file per batch and a probe opens
-        // nprobe/nlist × O(batches) files, not × T fragments
-        assigned.repartition(col("cid")).write.mode("overwrite").partitionBy("cid")
-          .parquet(s"$root/batch=$batchId")
+          throw new IllegalStateException(f"VectorIndexStream: batch $batchId " +
+            f"quantization error $err%.6f exceeds $maxDriftRatio%.1fx the training " +
+            f"baseline $baselineError%.6f — the frozen centroids no longer describe the " +
+            "incoming distribution; retrain (and re-assign) before resuming this stream.")
+        // clustered by cid, each list is ≤ 1 file per segment (unclustered:
+        // tasks × nlist slivers — 1111 files for 2000 rows at sf0.1)
+        Ledger.write(assigned, s"$root/batch=$batchId")
       } finally { assigned.unpersist(); () }
     }
   }
 
-  /** COMPACTION — all batches past the newest compact segment merge into
-    * ONE `compact=<maxBatchId>` segment (still cid-partitioned — probe
-    * pruning is unchanged). Layout + crash discipline are
-    * [[SegmentStore.compact]]'s: merged segment committed first, inputs
-    * best-effort deleted after, [[serve]]'s newest-compact rule correct at
-    * every crash point. Returns the compacted segment's id, if written.
+  /** Merge the batches past the newest compact segment into one,
+    * still cid-partitioned and clustered.
     */
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      // per-segment reads and a cid-partitioned rewrite (mixing
-      // batch=/compact= names under one basePath would make Spark infer
-      // CONFLICTING partition columns); clustered by cid like [[maintain]]
-      // — compaction exists to REDUCE file count, so the merged segment
-      // must land as one file per list, not re-fragmented by reader tasks
-      (df, path) => df.repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(path))
+  def compact(spark: SparkSession, root: String): Option[Long] = Ledger.compact(spark, root)
 
-  /** The served assignment relation (cid, n_id, n_vec) across every
-    * COMMITTED segment — directories without Spark's `_SUCCESS` marker are
-    * crash leftovers and are skipped, and batches already folded into a
-    * compact segment are read from the segment only
-    * ([[SegmentStore.live]]). `cid` stays a partition column, so
-    * probe-side cid filters prune at the file level exactly as with the
-    * batch layout.
+  /** The served assignment relation (cid, n_id, n_vec); cid filters prune
+    * at the file level.
     */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cid",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("n_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_vec",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType))))))
+  def serve(spark: SparkSession, root: String): DataFrame = Ledger.serve(spark, root)
 
-  /** One segment dir read as (cid, n_id, n_vec) — the segment is its own
-    * partition-discovery root, so `cid=` stays the (only) inferred
-    * partition column regardless of the segment's batch/compact name.
-    */
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .select(col("cid").cast("int").as("cid"), col("n_id"), col("n_vec"))
-
-  /** Attach the maintainer to an embedding stream. Caller starts/stops
-    * the query; the layout lives under `root`, the frozen model and its
-    * training-time baseline ride the closure (bounded model state).
+  /** Attach [[maintain]] to an embedding stream; the frozen model and its
+    * baseline ride the closure.
     */
   def attach(embeddings: DataFrame, root: String, checkpoint: String,
              model: graft.ext.Similarity.IvfModel, baselineError: Double,
-             maxDriftRatio: Double = 2.0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+             maxDriftRatio: Double = 2.0): DataStreamWriter[Row] =
     embeddings.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch((df: DataFrame, id: Long) =>

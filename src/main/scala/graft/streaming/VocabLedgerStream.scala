@@ -1,89 +1,32 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Streaming maintenance of the CORPUS VOCABULARY counts — the maintained
-  * substrate of the word-frequency family ([[graft.ext.EditDist]]'s typo
-  * canonicalization, vocabulary builds, coverage stats): word counts are
-  * ADDITIVE over disjoint-doc ingest batches, so each ingest folds its own
-  * batch's `(word, cnt)` aggregate as one [[SegmentStore]] segment
-  * (`batch=<id>`, `_SUCCESS`-gated) and the corpus vocabulary is the sum
-  * over live segments. State is VOCABULARY-sized — strictly smaller than
-  * every content ledger here (no per-doc rows at all) — and a consumer
-  * like [[probeTypoCanonical]] then runs entirely against served state:
-  * the corpus is never re-tokenized.
+/** The CORPUS VOCABULARY counts: a batch's `(word, cnt)` aggregate per
+  * segment, ADDITIVE over disjoint-doc batches, so the corpus vocabulary
+  * is the sum over live segments. State is vocabulary-sized (no per-doc
+  * rows), and [[probeTypoCanonical]] runs entirely against it — the
+  * corpus is never re-tokenized. No parameter pin: the tokenization
+  * (single-space split, empty tokens dropped) has no knobs.
   *
-  * The checked contract (the ledger-family rule): after folding the
-  * corpus, [[probeTypoCanonical]] == [[graft.ext.EditDist.typoCanonical]]
-  * over the batch-recomputed vocabulary, bit for bit — both sides run the
-  * SAME operator, only the count table's provenance differs. This matters
-  * specifically for the ARGMAX semantics: a typo's canonical form is
-  * decided by SUMMED corpus counts, so a per-wave decision can flip once
-  * later waves arrive (pinned in the spec) — exactly why the counts must
-  * be maintained rather than sampled per batch.
-  *
-  * Replay safety — by IDEMPOTENCE: a batch's counts are a pure function
-  * of the batch; a replayed batch id overwrites its own directory. No
-  * parameter pin: the tokenization (single-space split, empty tokens
-  * dropped) carries no knobs.
+  * Why maintained rather than sampled per batch: a typo's canonical form
+  * is an ARGMAX over SUMMED corpus counts, so a per-wave decision can flip
+  * once later waves arrive (pinned in the spec).
   */
-object VocabLedgerStream {
-
-  private val StateSchema = StructType(Seq(
-    StructField("word", StringType),
-    StructField("cnt", LongType, nullable = false)))
-
-  /** Fold one batch of documents: its word counts as one `batch=<id>`
-    * segment. Empty batches (no words) are a no-op.
-    */
-  def maintain(docs: DataFrame, batchId: Long, root: String,
-               textCol: String = "text"): Unit = {
-    val counts = graft.ext.EditDist.vocab(docs, textCol).persist()
-    try {
-      if (!counts.isEmpty)
-        counts.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-    } finally { counts.unpersist(); () }
-  }
+object VocabLedgerStream extends SegmentLedger(
+  StructType(Seq(StructField("word", StringType), StructField("cnt", LongType, nullable = false))),
+  graft.ext.EditDist.vocab(_, "text"),
+  merge = SegmentLedger.sumBy("cnt", "word")) {
 
   /** The corpus vocabulary `(word, cnt)` summed across live segments. */
-  def serve(spark: SparkSession, root: String): DataFrame =
-    SegmentStore.read(spark, root, readSegment(spark, _),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StateSchema))
-      .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
+  override def serve(spark: SparkSession, root: String): DataFrame =
+    merge(super.serve(spark, root))
 
-  /** Pre-sum each segment range into one compacted segment (additive-state
-    * compaction — the serve-side aggregation stays bounded by the DISTINCT
-    * vocabulary, not the ingest count).
-    */
-  def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _),
-      (df, path) => df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-        .write.mode("overwrite").parquet(path))
-
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("word"), col("cnt"))
-
-  /** Wire a streaming document source to this ledger (foreachBatch —
-    * batch ids come from the stream's checkpoint, so replays after a
-    * crash hit [[maintain]]'s idempotent overwrite).
-    */
-  def attach(docs: DataFrame, root: String, checkpoint: String,
-             textCol: String = "text"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, textCol))
-
-  /** The SymSpell canonicalization map over the MAINTAINED vocabulary —
-    * [[graft.ext.EditDist.typoCanonical]] verbatim at the caller's
-    * correction radius (`maxDist = 2` is production SymSpell's), the
-    * corpus never re-tokenized: the whole probe is vocabulary-sized
-    * (deletion-variant join + argmax over served counts). The result
-    * comes back materialized + persisted (the EditDist storage contract —
-    * caller owns it).
+  /** [[graft.ext.EditDist.typoCanonical]] over the maintained vocabulary
+    * at the caller's correction radius: == the batch recompute over the
+    * folded corpus, bit for bit. The result comes back persisted (the
+    * EditDist storage contract — the caller owns it).
     */
   def probeTypoCanonical(spark: SparkSession, root: String,
                          maxDist: Int = 1): DataFrame =

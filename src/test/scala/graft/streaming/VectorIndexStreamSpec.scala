@@ -5,9 +5,10 @@ import graft.ext.Similarity
 import org.apache.spark.sql.functions._
 
 /** Pins [[VectorIndexStream]]'s contracts: maintained-over-waves equals
-  * the batch assignment, replay/crash behavior, cid partition pruning of
-  * the served layout, and the drift gate tripping on a shifted
-  * distribution while passing in-distribution batches.
+  * the batch assignment, cid partition pruning of the served layout, and
+  * the drift gate tripping on a shifted distribution while passing
+  * in-distribution batches. Replay and crash behavior is the shared
+  * segment-ledger property's ([[graft.props.SegmentLedgerProps]]).
   */
 class VectorIndexStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -41,35 +42,6 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dims = VectorIndexStream.serve(spark, root)
       .select(size(col("n_vec"))).distinct().collect().map(_.getInt(0)).toSeq
     assert(dims === Seq(3))
-  }
-
-  test("replayed batch overwrites itself (idempotent); empty batch no-op") {
-    val m = model
-    val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger-rp").toString + "/l"
-    val b0 = corpus.filter(col("vec_id") < 10)
-    val b1 = corpus.filter(col("vec_id") >= 10)
-    VectorIndexStream.maintain(b0, 0L, root, m, base)
-    VectorIndexStream.maintain(b1, 1L, root, m, base)
-    val want = servedPairs(root)
-    assert(want === batchPairs(m))
-    VectorIndexStream.maintain(b1, 1L, root, m, base) // at-least-once redelivery
-    assert(servedPairs(root) === want)
-    VectorIndexStream.maintain(b1.limit(0), 2L, root, m, base)
-    assert(servedPairs(root) === want)
-  }
-
-  test("uncommitted batch dir (no _SUCCESS) is never served") {
-    val m = model
-    val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger-cr").toString + "/l"
-    VectorIndexStream.maintain(corpus.filter(col("vec_id") < 10), 0L, root, m, base)
-    // simulate a crash mid-write of batch 1: a partial dir without _SUCCESS
-    VectorIndexStream.maintain(corpus.filter(col("vec_id") >= 10), 1L, root, m, base)
-    val p = new java.io.File(s"$root/batch=1/_SUCCESS")
-    assert(p.exists()); assert(p.delete())
-    val served = servedPairs(root)
-    assert(served === batchPairs(m).filter(_._1 < 10))
   }
 
   test("drift gate trips on a shifted distribution, passes in-distribution") {
@@ -130,30 +102,6 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(VectorIndexStream.compact(spark, root) === Some(7L))
     assert(servedPairs(root) === want2)
     assert(new java.io.File(root).listFiles().map(_.getName).toSet === Set("compact=7"))
-  }
-
-  test("compaction crash windows never double-count or lose data") {
-    val m = model
-    val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger-cw").toString + "/l"
-    val b0 = corpus.filter(col("vec_id") < 10)
-    val b1 = corpus.filter(col("vec_id") >= 10)
-    VectorIndexStream.maintain(b0, 0L, root, m, base)
-    VectorIndexStream.maintain(b1, 1L, root, m, base)
-    val want = servedPairs(root)
-    assert(VectorIndexStream.compact(spark, root) === Some(1L))
-    // window A: merged batch dirs survive the crash (deletion never ran) —
-    // recreate one; serve must ignore it (id <= newest compact id)
-    VectorIndexStream.maintain(b0, 0L, root, m, base)
-    assert(servedPairs(root) === want)
-    // window B: a compaction that died mid-write (no _SUCCESS) is ignored
-    // and the stale batch dir + old segment still serve the full content
-    val marker = new java.io.File(s"$root/compact=1/_SUCCESS")
-    assert(marker.renameTo(new java.io.File(s"$root/compact=1/_NOPE")))
-    // with compact=1 uncommitted, live = batch=0 (recreated) ... but batch=1
-    // was deleted by the earlier compaction — restore it first
-    VectorIndexStream.maintain(b1, 1L, root, m, base)
-    assert(servedPairs(root) === want)
   }
 
   test("streamed embedding batches converge to the batch assignment") {
