@@ -32,18 +32,18 @@ object Bench {
     // that would report an engine regression as a bench improvement.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // One-time-per-corpus builds (IVF train, CC ledger, incremental
-    // staging) run inside whichever query touches them first; BuildTimes
+    // staging) run inside whichever query touches them first; Build.times
     // records them, and subtracting the delta here keeps each query's
     // number a QUERY cost — builds are itemized in their own JSON field.
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val b0 = BuildTimes.total
+      val b0 = Build.total
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name: $e")
         failed += name
       }
-      math.max(0.0, (System.nanoTime() - t0) / 1e9 - (BuildTimes.total - b0))
+      math.max(0.0, (System.nanoTime() - t0) / 1e9 - (Build.total - b0))
     }
 
     // per query: one cold run (includes this query's planning/codegen) plus
@@ -62,7 +62,7 @@ object Bench {
     val total = results.values.map(_._1).sum
     val warmTotal = results.values.map(_._2).sum
     // evaluated here, BEFORE the isolated blocks below can touch builds
-    val builds = BuildTimes.times.toSeq.sortBy(_._1)
+    val builds = Build.times.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     // Isolated re-measure of the 10 most expensive queries (by warm
     // median): more reps, run back-to-back after the sweep with nothing
@@ -103,11 +103,12 @@ object Bench {
     // touch inside whichever query hits them — so they had no contention
     // defense (BENCH_r09: cc_pair_graph 74.0 s with zero code change vs
     // 22.8 s in r08). For every build whose first-touch cost exceeds the
-    // threshold, evict its cache via BuildRebuild and rebuild N times
-    // back-to-back, nothing else in flight; the median is the number to
-    // read. Snapshot the itemization FIRST — the reps accumulate into
-    // BuildTimes and must not inflate the reported `builds`.
-    val buildItem = BuildTimes.times.toMap
+    // threshold, `Build.rebuild` it N times back-to-back (its own entry
+    // evicted, dependencies cached), nothing else in flight; the median is
+    // the number to read. Snapshot the itemization FIRST — the reps
+    // accumulate into Build.times and must not inflate the reported
+    // `builds`.
+    val buildItem = Build.times
     val buildsTotal = buildItem.values.sum
     val buildIsoSec = sys.env.getOrElse("SPARK_GRAFT_BUILD_ISO_SEC", "8.0").toDouble
     val buildIsoRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BUILD_ISO_RUNS", "3").toInt)
@@ -116,11 +117,11 @@ object Bench {
     // build would read as a 0.01 s "speedup") — the build drops from the
     // block and lands in `errors` as build:<name>
     val buildsIso = buildItem.toSeq.filter(_._2 >= buildIsoSec).map(_._1).sorted.flatMap { name =>
-      BuildRebuild.get(name).flatMap { hook =>
+      Build.get(name).flatMap { build =>
         var ok = true
         val reps = Seq.fill(buildIsoRuns) {
           val t0 = System.nanoTime()
-          try hook(spark, sfDir)
+          try build.rebuild(spark, sfDir)
           catch { case e: Throwable =>
             ok = false
             System.err.println(s"[bench] rebuild $name: $e")

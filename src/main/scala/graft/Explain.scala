@@ -40,8 +40,8 @@ object Explain {
     // one-time-per-corpus builds triggered by this query (they run at
     // DataFrame-construction time, before the timed reps — itemize them
     // here the way Bench does, or a cached-ledger query looks free)
-    if (BuildTimes.times.nonEmpty)
-      println("[explain] builds: " + BuildTimes.times.toSeq.sortBy(_._1)
+    if (Build.times.nonEmpty)
+      println("[explain] builds: " + Build.times.toSeq.sortBy(_._1)
         .map { case (k, v) => f"$k=$v%.2f s" }.mkString(", "))
     spark.stop()
   }

@@ -106,8 +106,8 @@ object MinHashDedup {
     * (MEMORY_AND_DISK) and fully counted — the shingle-set cache it was
     * built from is already dropped — and the CALLER OWNS the storage: call
     * `.unpersist()` when done, or the pairs stay pinned until GC-driven
-    * cleanup (every registry consumer routes through a ledger cache whose
-    * rebuild hook unpins). Pass `materialize = false` to get the LAZY plan
+    * cleanup (every registry consumer routes through a `graft.Build`,
+    * which releases it on rebuild). Pass `materialize = false` to get the LAZY plan
     * with no storage side effects at all — right when only sampling the
     * result or feeding it straight into one downstream aggregation; each
     * evaluation then recomputes the shingle sets (4 scans of `docs`).

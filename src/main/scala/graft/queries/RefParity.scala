@@ -39,26 +39,21 @@ object RefParity {
     * table equals the batch distinct over all rows. That equality is what
     * the shared ref_silver_clean oracle SQL checks.
     */
-  private val incrCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def incrementalSilverFor(s: SparkSession, dir: String): String =
-    incrCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("incremental_silver_staging") {
-      val root = java.nio.file.Files.createTempDirectory("graft-incr").toString
-      val landing = s"$root/landing"; val out = s"$root/silver"
-      val orders = graft.Tables.orders(s, dir)
-      // wave 1: even order keys land, run; wave 2: odd keys land, run again
-      orders.filter(col("o_orderkey") % 2 === 0)
-        .write.mode("append").parquet(landing)
-      graft.pipeline.IncrementalMedallion.runLayer(
-        s, landing, orders.schema, silverChain, out, s"$root/ckpt")
-      orders.filter(col("o_orderkey") % 2 === 1)
-        .write.mode("append").parquet(landing)
-      graft.pipeline.IncrementalMedallion.runLayer(
-        s, landing, orders.schema, silverChain, out, s"$root/ckpt")
-      out
-    })
+  private val incrementalSilverFor = graft.Build[String]("incremental_silver_staging") { (s, dir) =>
+    val root = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val landing = s"$root/landing"; val out = s"$root/silver"
+    val orders = graft.Tables.orders(s, dir)
+    // wave 1: even order keys land, run; wave 2: odd keys land, run again
+    orders.filter(col("o_orderkey") % 2 === 0)
+      .write.mode("append").parquet(landing)
+    graft.pipeline.IncrementalMedallion.runLayer(
+      s, landing, orders.schema, silverChain, out, s"$root/ckpt")
+    orders.filter(col("o_orderkey") % 2 === 1)
+      .write.mode("append").parquet(landing)
+    graft.pipeline.IncrementalMedallion.runLayer(
+      s, landing, orders.schema, silverChain, out, s"$root/ckpt")
+    out
+  }
 
   val queries: Map[String, Q] = Map(
     // P1+F7+F2+F3 — bronze normalize: dd/MM/yyyy coerce-parse + trim + truncate
@@ -169,11 +164,4 @@ object RefParity {
     "ref_dedup_distinct" ->
       "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"
   )
-
-  // bench rebuild hook (see graft.BuildRebuild; registered last so the
-  // cache val above is initialized)
-  graft.BuildRebuild.register("incremental_silver_staging") { (s, dir) =>
-    incrCache.remove((s.sparkContext.applicationId, dir)): Unit
-    incrementalSilverFor(s, dir): Unit
-  }
 }

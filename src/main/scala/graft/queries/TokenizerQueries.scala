@@ -38,16 +38,11 @@ object TokenizerQueries {
   /** Trained model per corpus — train-once state like the BPE merge list
     * (bounded: ≤ seedSize + alphabet pieces per round).
     */
-  private val unigramCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), UnigramLm.UnigramModel]
-
-  private def unigramFor(s: SparkSession, dir: String): UnigramLm.UnigramModel =
-    unigramCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("unigram_train") {
-        UnigramLm.train(Tables.documents(s, dir), "text",
-          emRounds = EmRounds, maxPieceLen = MaxPieceLen, seedSize = SeedSize,
-          maxWordLen = DpUnroll)
-      })
+  private val unigramFor = graft.Build[UnigramLm.UnigramModel]("unigram_train") { (s, dir) =>
+    UnigramLm.train(Tables.documents(s, dir), "text",
+      emRounds = EmRounds, maxPieceLen = MaxPieceLen, seedSize = SeedSize,
+      maxWordLen = DpUnroll)
+  }
 
   // WordPiece merge rounds — small like the BPE entries' 10 (the oracle
   // unrolls one CTE block per round); the tokenizer-family fourth member
@@ -57,17 +52,12 @@ object TokenizerQueries {
     * — merges are numMerges driver rows, the vocab adds the corpus
     * alphabet (both bounded model state).
     */
-  private val wpCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Seq[(String, String, Long, Long, Long)], Seq[String])]
-
-  private def wpFor(s: SparkSession,
-                    dir: String): (Seq[(String, String, Long, Long, Long)], Seq[String]) =
-    wpCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("wordpiece_train") {
-        val docs = Tables.documents(s, dir)
-        val m = WordPiece.train(docs, "text", numMerges = WpMerges)
-        (m, WordPiece.vocabulary(docs, "text", m))
-      })
+  private val wpFor =
+    graft.Build[(Seq[(String, String, Long, Long, Long)], Seq[String])]("wordpiece_train") { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val m = WordPiece.train(docs, "text", numMerges = WpMerges)
+      (m, WordPiece.vocabulary(docs, "text", m))
+    }
 
   val queries: Map[String, Q] = Map(
 
@@ -451,22 +441,11 @@ object TokenizerQueries {
       "x_wordpiece_merges" -> wpMergesOracle(WpMerges),
       "x_wordpiece_tokenize" -> wpTokenizeOracle(WpMerges),
       "x_wordpiece_drift" -> wpOovDriftOracle(WpMerges))
-    unigramCache.toMap match {
-      case one if one.size == 1 =>
-        val m = one.head._2
+    unigramFor.sole match {
+      case Some(m) =>
         base + ("x_unigram_train" -> trainOracle(m),
           "x_unigram_tokenize" -> tokenizeOracle(m))
       case _ => base
     }
-  }
-
-  // bench rebuild hooks (see graft.BuildRebuild)
-  graft.BuildRebuild.register("unigram_train") { (s, dir) =>
-    unigramCache.remove((s.sparkContext.applicationId, dir)): Unit
-    unigramFor(s, dir): Unit
-  }
-  graft.BuildRebuild.register("wordpiece_train") { (s, dir) =>
-    wpCache.remove((s.sparkContext.applicationId, dir)): Unit
-    wpFor(s, dir): Unit
   }
 }

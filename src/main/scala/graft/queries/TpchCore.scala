@@ -27,34 +27,23 @@ object TpchCore {
     * q25_bucketed_join reads THESE, paying zero join shuffle; the write
     * itself is itemized as `bucketed_layout` in the bench.
     */
-  private val bucketedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
-
-  private def bucketedFor(s: SparkSession, dir: String): (String, String) =
-    bucketedCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("bucketed_layout") {
-        // catalog names must be unique per corpus dir within the session —
-        // collision-resistant token (full 128-bit md5 of the path), not
-        // 32-bit hashCode: two dirs colliding would silently share/overwrite
-        // each other's graft_*_bkt tables while the dir-keyed cache treats
-        // them as distinct (round-10 ADVICE)
-        val tok = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-bucketed").toString
-        val oT = s"graft_orders_bkt_$tok"
-        val lT = s"graft_lineitem_bkt_$tok"
-        graft.io.Sinks.writeBucketed(Tables.orders(s, dir), oT,
-          s"$root/orders", "o_orderkey", nBuckets = 8, sortCols = Seq("o_orderkey"))
-        graft.io.Sinks.writeBucketed(Tables.lineitem(s, dir), lT,
-          s"$root/lineitem", "l_orderkey", nBuckets = 8, sortCols = Seq("l_orderkey"))
-        (oT, lT)
-      })
-
-  // bench rebuild hook (see graft.BuildRebuild)
-  graft.BuildRebuild.register("bucketed_layout") { (s, dir) =>
-    bucketedCache.remove((s.sparkContext.applicationId, dir)): Unit
-    bucketedFor(s, dir): Unit
+  private val bucketedFor = graft.Build[(String, String)]("bucketed_layout") { (s, dir) =>
+    // catalog names must be unique per corpus dir within the session —
+    // collision-resistant token (full 128-bit md5 of the path), not
+    // 32-bit hashCode: two dirs colliding would silently share/overwrite
+    // each other's graft_*_bkt tables while the dir-keyed cache treats
+    // them as distinct (round-10 ADVICE)
+    val tok = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bucketed").toString
+    val oT = s"graft_orders_bkt_$tok"
+    val lT = s"graft_lineitem_bkt_$tok"
+    graft.io.Sinks.writeBucketed(Tables.orders(s, dir), oT,
+      s"$root/orders", "o_orderkey", nBuckets = 8, sortCols = Seq("o_orderkey"))
+    graft.io.Sinks.writeBucketed(Tables.lineitem(s, dir), lT,
+      s"$root/lineitem", "l_orderkey", nBuckets = 8, sortCols = Seq("l_orderkey"))
+    (oT, lT)
   }
 
   val queries: Map[String, Q] = Map(

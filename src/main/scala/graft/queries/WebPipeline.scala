@@ -98,77 +98,61 @@ object WebPipeline {
   private final case class PrState(fullE: DataFrame, oldE: DataFrame,
                                    newE: DataFrame, ledgerOld: DataFrame)
 
-  private val prPreCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), PrState]
-
-  private def prPreFor(s: SparkSession, dir: String): PrState =
-    prPreCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("pr_incr_prestate") {
-        // ONE orders⋈lineitem pass tags every distinct co-purchase pair
-        // with whether any PRE-batch order produced it (max over the batch
-        // predicate). The three edge views are then cheap reads of the
-        // persisted pair table: full = all keys, old = has_old, new =
-        // ¬has_old — the identical sets the previous per-view derivation
-        // (two join+distinct passes for full, two more for old, plus a
-        // directed anti-join for new: 13.3 s of the 16 s build at sf0.1,
-        // r16 decomposition) computed with FIVE passes over the
-        // fact-table join. A pair is old iff SOME old order produced it,
-        // so max(old) per key ≡ membership in the old distinct-pair set;
-        // directions expand within-row (bothDirections), so new-directed =
-        // both directions of the new pairs, exactly the anti-join's rows.
-        val tagged = Tables.orders(s, dir)
-          .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-          .select(concat(lit("c:"), col("o_custkey").cast("string")).as("c"),
-            concat(lit("s:"), col("l_suppkey").cast("string")).as("s"),
-            (col("o_orderkey") % 7 =!= 0).as("old"))
-          .groupBy(col("c"), col("s")).agg(max(col("old")).as("has_old"))
-          .persist()
-        val fullE = bothDirections(tagged).persist()
-        fullE.count() // materialize: consumers must not re-run the pair join
-        val oldE = bothDirections(tagged.filter(col("has_old"))).persist()
-        oldE.count()
-        val newE = bothDirections(tagged.filter(!col("has_old"))).persist()
-        newE.count()
-        tagged.unpersist() // the three views are materialized; drop the base
-        val ledgerOld = PageRank.pagerankRounds(oldE, iters = 10).persist()
-        ledgerOld.count()
-        PrState(fullE, oldE, newE, ledgerOld)
-      })
+  private val prPreFor = graft.Build[PrState]("pr_incr_prestate",
+      v => Seq(v.fullE, v.oldE, v.newE, v.ledgerOld)) { (s, dir) =>
+    // ONE orders⋈lineitem pass tags every distinct co-purchase pair
+    // with whether any PRE-batch order produced it (max over the batch
+    // predicate). The three edge views are then cheap reads of the
+    // persisted pair table: full = all keys, old = has_old, new =
+    // ¬has_old — the identical sets the previous per-view derivation
+    // (two join+distinct passes for full, two more for old, plus a
+    // directed anti-join for new: 13.3 s of the 16 s build at sf0.1,
+    // r16 decomposition) computed with FIVE passes over the
+    // fact-table join. A pair is old iff SOME old order produced it,
+    // so max(old) per key ≡ membership in the old distinct-pair set;
+    // directions expand within-row (bothDirections), so new-directed =
+    // both directions of the new pairs, exactly the anti-join's rows.
+    val tagged = Tables.orders(s, dir)
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .select(concat(lit("c:"), col("o_custkey").cast("string")).as("c"),
+        concat(lit("s:"), col("l_suppkey").cast("string")).as("s"),
+        (col("o_orderkey") % 7 =!= 0).as("old"))
+      .groupBy(col("c"), col("s")).agg(max(col("old")).as("has_old"))
+      .persist()
+    val fullE = bothDirections(tagged).persist()
+    fullE.count() // materialize: consumers must not re-run the pair join
+    val oldE = bothDirections(tagged.filter(col("has_old"))).persist()
+    oldE.count()
+    val newE = bothDirections(tagged.filter(!col("has_old"))).persist()
+    newE.count()
+    tagged.unpersist() // the three views are materialized; drop the base
+    val ledgerOld = PageRank.pagerankRounds(oldE, iters = 10).persist()
+    ledgerOld.count()
+    PrState(fullE, oldE, newE, ledgerOld)
+  }
 
   /** The POST-batch round ledger — the incremental update's output,
     * computed once and served by every pagerank entry (see [[prPreFor]]).
     */
-  private val prUpdCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private val prUpdFor = graft.Build[DataFrame]("pr_incr_update", Seq(_)) { (s, dir) =>
+    val st = prPreFor(s, dir)
+    val lf = PageRank.incrementalLedger(
+      st.ledgerOld, st.fullE, st.newE, iters = 10).persist()
+    lf.count()
+    lf
+  }
 
-  private def prUpdFor(s: SparkSession, dir: String): DataFrame =
-    prUpdCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val st = prPreFor(s, dir)
-      graft.BuildTimes.timed("pr_incr_update") {
-        val lf = PageRank.incrementalLedger(
-          st.ledgerOld, st.fullE, st.newE, iters = 10).persist()
-        lf.count()
-        lf
-      }
-    })
-
-  private val prStreamCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def prStreamFor(s: SparkSession, dir: String): String =
-    prStreamCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val st = prPreFor(s, dir)
-      val updated = prUpdFor(s, dir)
-      graft.BuildTimes.timed("pagerank_stream_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-pr-stream").toString + "/st"
-        graft.streaming.PageRankLedgerStream
-          .commitPrecomputed(st.oldE, 0L, root, st.ledgerOld)
-        graft.streaming.PageRankLedgerStream
-          .commitPrecomputed(st.newE, 1L, root, updated)
-        root
-      }
-    })
+  private val prStreamFor = graft.Build[String]("pagerank_stream_ledger") { (s, dir) =>
+    val st = prPreFor(s, dir)
+    val updated = prUpdFor(s, dir)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-pr-stream").toString + "/st"
+    graft.streaming.PageRankLedgerStream
+      .commitPrecomputed(st.oldE, 0L, root, st.ledgerOld)
+    graft.streaming.PageRankLedgerStream
+      .commitPrecomputed(st.newE, 1L, root, updated)
+    root
+  }
 
   /** Maintained LM count ledger per corpus
     * (graft.streaming.LmLedgerStream): the FULL documents table folds in
@@ -178,24 +162,19 @@ object WebPipeline {
     * is never re-aggregated. Counts cover ALL docs because the batch twin
     * (`x_text_lm_score`) trains on the scored corpus itself.
     */
-  private val lmLedgerCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def lmLedgerFor(s: SparkSession, dir: String): String =
-    lmLedgerCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("lm_count_ledger") {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-lm-ledger").toString + "/st"
-        val docs = Tables.documents(s, dir)
-        graft.streaming.LmLedgerStream.maintain(
-          docs.filter(col("doc_id") % 3 === 1), 0L, root)
-        graft.streaming.LmLedgerStream.maintain(
-          docs.filter(col("doc_id") % 3 === 2), 1L, root)
-        graft.streaming.LmLedgerStream.compact(s, root)
-        graft.streaming.LmLedgerStream.maintain(
-          docs.filter(col("doc_id") % 3 === 0), 2L, root)
-        root
-      })
+  private val lmLedgerFor = graft.Build[String]("lm_count_ledger") { (s, dir) =>
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-lm-ledger").toString + "/st"
+    val docs = Tables.documents(s, dir)
+    graft.streaming.LmLedgerStream.maintain(
+      docs.filter(col("doc_id") % 3 === 1), 0L, root)
+    graft.streaming.LmLedgerStream.maintain(
+      docs.filter(col("doc_id") % 3 === 2), 1L, root)
+    graft.streaming.LmLedgerStream.compact(s, root)
+    graft.streaming.LmLedgerStream.maintain(
+      docs.filter(col("doc_id") % 3 === 0), 2L, root)
+    root
+  }
 
   val queries: Map[String, Q] = Map(
 
@@ -368,19 +347,14 @@ object WebPipeline {
     * (the crawler-shard layout: one archive per task via the Hadoop FS
     * API), then every read goes through the real binaryFile + parser path.
     */
-  private val warcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def warcDirFor(s: SparkSession, dir: String): String =
-    warcCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.BuildTimes.timed("warc_archives") {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-warc-crawl").toString + "/archives"
-        graft.io.Warc.writeArchives(
-          Tables.documents(s, dir).select(col("doc_id"), plantedHtml.as("text")),
-          out)
-        out
-      })
+  private val warcDirFor = graft.Build[String]("warc_archives") { (s, dir) =>
+    val out = java.nio.file.Files
+      .createTempDirectory("graft-warc-crawl").toString + "/archives"
+    graft.io.Warc.writeArchives(
+      Tables.documents(s, dir).select(col("doc_id"), plantedHtml.as("text")),
+      out)
+    out
+  }
 
   /** Planted host-bearing URL for the blocklist fixture: every 11th row a
     * non-URL (host `''`, never blockable), every 4th host carries an
@@ -599,33 +573,4 @@ object WebPipeline {
         |       ELSE 'middle' END AS bucket
         |FROM sl JOIN thr USING (lang)""".stripMargin
   )
-
-  // bench rebuild hooks (see graft.BuildRebuild; registered last so the
-  // cache vals above are initialized)
-  graft.BuildRebuild.register("warc_archives") { (s, dir) =>
-    warcCache.remove((s.sparkContext.applicationId, dir)): Unit
-    warcDirFor(s, dir): Unit
-  }
-  graft.BuildRebuild.register("pagerank_stream_ledger") { (s, dir) =>
-    prStreamCache.remove((s.sparkContext.applicationId, dir)): Unit
-    prStreamFor(s, dir): Unit
-  }
-  graft.BuildRebuild.register("pr_incr_prestate") { (s, dir) =>
-    prPreCache.remove((s.sparkContext.applicationId, dir)).foreach { v =>
-      try { v.fullE.unpersist(blocking = true); v.oldE.unpersist(blocking = true)
-        v.newE.unpersist(blocking = true); v.ledgerOld.unpersist(blocking = true)
-      } catch { case _: Throwable => }
-    }
-    prPreFor(s, dir): Unit
-  }
-  graft.BuildRebuild.register("lm_count_ledger") { (s, dir) =>
-    lmLedgerCache.remove((s.sparkContext.applicationId, dir)): Unit
-    lmLedgerFor(s, dir): Unit
-  }
-  graft.BuildRebuild.register("pr_incr_update") { (s, dir) =>
-    prUpdCache.remove((s.sparkContext.applicationId, dir)).foreach { v =>
-      try v.unpersist(blocking = true) catch { case _: Throwable => }
-    }
-    prUpdFor(s, dir): Unit
-  }
 }

@@ -32,7 +32,7 @@ object PrIncrProbe {
       graft.SparkEntry.queries("x_graph_pagerank")(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
     }
-    println("[probe] builds: " + graft.BuildTimes.times.toSeq.sortBy(_._1)
+    println("[probe] builds: " + graft.Build.times.toSeq.sortBy(_._1)
       .map { case (k, v) => f"$k=$v%.2f s" }.mkString(", "))
     spark.stop()
   }

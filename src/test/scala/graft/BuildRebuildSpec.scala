@@ -2,38 +2,43 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guard for the bench's isolated build re-measure (round 10): a
-  * build registered in BuildTimes but missing a BuildRebuild hook would
-  * silently drop out of Bench's `builds_isolated` block — the exact
-  * single-shot blind spot the block exists to close. Scans the source
-  * tree for `BuildTimes.timed("name")` literals and requires a hook per
-  * name, so adding a build without a hook fails HERE with instructions
-  * instead of degrading the bench.
+/** Drift guard for the bench's isolated build re-measure: a build whose
+  * owning object `SparkEntry.queries` never initializes is never
+  * registered, so it would silently drop out of Bench's `builds_isolated`
+  * block — the exact single-shot blind spot the block exists to close.
+  * Scans the main source tree for `Build("name")` / `Build[V]("name", …)`
+  * declaration literals and requires each name to be registered once the
+  * query objects initialize.
   */
 class BuildRebuildSpec extends AnyFunSuite {
 
-  test("every BuildTimes.timed build name has a BuildRebuild hook") {
-    SparkEntry.queries: Unit // initialize query objects → hooks register
-    val srcRoot = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(srcRoot), s"run from repo root: $srcRoot")
-    val pat = """BuildTimes\.timed\("([a-z0-9_]+)"\)""".r
-    val it = java.nio.file.Files.walk(srcRoot)
-    val timedNames = try {
+  private val declaration = """Build(?:\[.*\])?\("([a-z0-9_]+)"""".r
+
+  private def declared(tree: String): Set[String] = {
+    val root = java.nio.file.Paths.get(tree)
+    assert(java.nio.file.Files.isDirectory(root), s"run from repo root: $root")
+    val it = java.nio.file.Files.walk(root)
+    try {
       import scala.jdk.CollectionConverters._
       it.iterator().asScala
         .filter(p => p.toString.endsWith(".scala"))
-        .flatMap(p => pat.findAllMatchIn(java.nio.file.Files.readString(p))
+        .flatMap(p => declaration.findAllMatchIn(java.nio.file.Files.readString(p))
           .map(_.group(1)))
         .toSet
     } finally it.close()
-    assert(timedNames.nonEmpty, "source scan found no BuildTimes.timed sites")
-    val missing = timedNames -- BuildRebuild.names
+  }
+
+  test("every graft.Build declaration registers when SparkEntry.queries initializes") {
+    SparkEntry.queries: Unit // initialize query objects → builds register
+    val main = declared("src/main/scala")
+    assert(main.nonEmpty, "source scan found no graft.Build declarations")
+    val missing = main -- Build.names
     assert(missing.isEmpty,
-      s"builds without a rebuild hook (register in the owning object, " +
-        s"see graft.BuildRebuild): ${missing.toSeq.sorted.mkString(", ")}")
-    // and no orphan hooks for builds that no longer exist
-    val orphans = BuildRebuild.names -- timedNames
-    assert(orphans.isEmpty,
-      s"hooks with no matching BuildTimes.timed site: ${orphans.toSeq.sorted.mkString(", ")}")
+      s"builds never registered (declare them in an object SparkEntry.queries " +
+        s"initializes): ${missing.toSeq.sorted.mkString(", ")}")
+    // and the scan sees every registered build (test builds included)
+    val unseen = Build.names -- main -- declared("src/test/scala")
+    assert(unseen.isEmpty,
+      s"registered builds the declaration scan missed: ${unseen.toSeq.sorted.mkString(", ")}")
   }
 }

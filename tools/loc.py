@@ -112,7 +112,14 @@ def per_file(args):
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1:
-        per_file(sys.argv[1:])
+    args = sys.argv[1:]
+    bad = [a for a in args if not os.path.exists(a)]
+    if bad:
+        # an option such as --help, or a missing path: print the usage
+        print(f"not a file or directory: {' '.join(bad)}", file=sys.stderr)
+        print(__doc__, file=sys.stderr, end="")
+        sys.exit(2)
+    if args:
+        per_file(args)
     else:
         per_package()
