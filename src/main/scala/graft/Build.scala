@@ -26,11 +26,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    cached, so a rebuild measures the same exclusive cost the time
   *    accounting records; Bench's `builds_isolated` block and
   *    [[graft.tools.BuildBench]] re-measure builds this way.
-  *  - Release is BLOCKING: Spark's CacheManager keys cached data on the
-  *    analyzed plan, so a lazily dropped entry would let the rebuilt plan
-  *    re-attach to the old blocks and the rep would time a cache read.
-  *    Each frame is released on its own; a failure on one cannot leave
-  *    the others pinned.
+  *  - Storage: a value owns exactly the frames `pinned` names, pinned or
+  *    checkpointed, under the [[Materialize]] rule. A rebuild frees each
+  *    through [[Materialize.release]], so a checkpoint's blocks go too,
+  *    not only a cache entry. Release is BLOCKING: Spark's CacheManager
+  *    keys cached data on the analyzed plan, so a lazily dropped entry
+  *    would let the rebuilt plan re-attach to the old blocks and the rep
+  *    would time a cache read. Each frame is released on its own; a
+  *    failure on one cannot leave the others pinned.
+  *  - Files: a build that writes takes its directory from [[scratch]],
+  *    under one root per JVM that a shutdown hook deletes — unless the
+  *    entry point named a root to keep ([[keepScratchIn]]).
   *  - Registry: declaring a build registers its name; a second build
   *    with the same name throws (it would share a time row and shadow the
   *    first one's rebuild). Registration happens when the owning object
@@ -46,7 +52,10 @@ final class Build[V] private (val name: String, pinned: V => Seq[DataFrame],
     cache.getOrElseUpdate(Build.key(s, dir), Build.timed(name)(compute(s, dir)))
 
   def rebuild(s: SparkSession, dir: String): Unit = {
-    cache.remove(Build.key(s, dir)).foreach(v => pinned(v).foreach(Build.unpin))
+    cache.remove(Build.key(s, dir)).foreach(v => pinned(v).foreach { df =>
+      try Materialize.release(df, blocking = true)
+      catch { case NonFatal(_) => () }
+    })
     apply(s, dir): Unit
   }
 
@@ -99,7 +108,34 @@ object Build {
     }
   }
 
-  private def unpin(df: DataFrame): Unit =
-    try { df.unpersist(blocking = true); () }
-    catch { case NonFatal(_) => () }
+  @volatile private var keptRoot: Option[java.nio.file.Path] = None
+
+  private lazy val tempRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-builds")
+    sys.addShutdownHook(deleteTree(root.toFile)): Unit
+    root
+  }
+
+  /** A fresh directory for a build's written state, named `prefix…`,
+    * under one per-JVM root that is deleted when the JVM exits (or under
+    * the root [[keepScratchIn]] named).
+    */
+  def scratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(keptRoot.getOrElse(tempRoot), prefix).toString
+
+  /** Put every later [[scratch]] directory under `dir`, emptied first and
+    * kept after exit: for a run whose outputs are read once the JVM is
+    * gone ([[Verify]]'s oracle reads the IVF layout files).
+    */
+  def keepScratchIn(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    deleteTree(root.toFile)
+    keptRoot = Some(java.nio.file.Files.createDirectories(root))
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles).foreach(_.foreach(deleteTree))
+    f.delete(): Unit
+  }
 }

@@ -14,6 +14,9 @@ object Verify {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // build directories live next to the dump, not in the temp root
+    // deleted at exit: the x_sim_ivf_layout oracle reads the written layout
+    Build.keepScratchIn(Paths.get(outDir).toAbsolutePath.normalize.toString + ".builds")
     // Per-query watchdog: one pathological query must not wedge the whole
     // correctness run (the driver flags a stall after 1h). On timeout the
     // query's job group is cancelled and the loop moves on.

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 import graft.ext.Multimodal.MediaRecord
 
@@ -476,35 +477,32 @@ object Audio {
     * ≥ 2 members or its rep matched another fingerprint within maxDist.
     */
   def audioDedupGroups(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
-    val sigs = fingerprints(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = audioDedupGroupsFromSigs(sigs, maxDist)
-    sigs.unpersist()
-    out
+    Materialize.using(fingerprints(media))(audioDedupGroupsFromSigs(_, maxDist))
   }
 
   /** [[audioDedupGroups]] from an already-fingerprinted `(media_id, afp)`
-    * table — the decode-once boundary; caller owns the input's storage,
-    * the result is materialized + persisted before return.
+    * table — the decode-once boundary; caller owns the input's storage.
+    * Returns a checkpoint, as [[Multimodal.imageDedupGroupsFromSigs]].
     */
   def audioDedupGroupsFromSigs(sigs: DataFrame, maxDist: Int = 3): DataFrame = {
     val grp = sigs.groupBy(col("afp"))
       .agg(min(col("media_id")).as("rep"), count(lit(1)).as("grp_n"))
-    val repPairs = SimHash.nearDuplicatesFromSigs(
-      grp.select(col("rep").as("media_id"), col("afp").as("simhash")),
-      maxDist, idCol = "media_id")
-      .select(col("doc_a"), col("doc_b"))
     // star CC, not propagation: an audio near-dup graph can chain through
     // long paths (clips A~B~C… at hamming ≤ 3 each), and star converges in
     // O(log n) rounds on ANY diameter where propagation's round bound
     // assumes compact clusters
-    val repComp = Components.connectedComponentsStar(repPairs)
-      .select(col("doc_id").as("rep"), col("component"))
+    val cc = Materialize.using(
+        grp.select(col("rep").as("media_id"), col("afp").as("simhash"))) { reps =>
+      Components.connectedComponentsStar(
+        SimHash.nearDuplicatesFromSigs(reps, maxDist, idCol = "media_id")
+          .select(col("doc_a"), col("doc_b")))
+    }
     val out = sigs.join(grp, Seq("afp"))
-      .join(repComp, Seq("rep"), "left")
+      .join(cc.select(col("doc_id").as("rep"), col("component")), Seq("rep"), "left")
       .filter(col("grp_n") >= 2 || col("component").isNotNull)
       .select(col("media_id"), coalesce(col("component"), col("rep")).as("component"))
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+      .localCheckpoint(true)
+    Materialize.release(cc)
     out
   }
 }

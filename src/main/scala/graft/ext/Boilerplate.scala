@@ -42,7 +42,7 @@ object Boilerplate {
     val pairs = docSpans(docs, idCol, textCol, n)
       .select(explode(col("gl")).as("gram"))
       .select(col("gram"), xxhash64(col("gram")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // pass 1: df per 8-byte span hash (doc-distinct by construction)
     val hot = pairs.select(col("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -136,7 +136,7 @@ object Boilerplate {
       .filter(size(col("gl")) >= 1)
       .select(col("id"), explode(col("gl")).as("gram"))
       .select(col("id"), col("gram"), xxhash64(col("gram")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // pass 1 of the hash-first idiom ([[spans]]), now over the shared scan
     val hot = g.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)

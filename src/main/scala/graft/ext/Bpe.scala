@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Byte-pair-encoding tokenizer TRAINING and encoding on Spark — the
   * "train a tokenizer on the corpus you just cleaned" step of an LLM data
@@ -116,14 +117,13 @@ object Bpe {
         val prev = vocab
         vocab = vocab.map { case (syms, f) => (mergeWord(syms, a, b), f) }
           .localCheckpoint(true)
-        // plain unpersist() would be a no-op on a localCheckpoint's blocks
-        // (see Components.freeCheckpoint) — without this, every round's
-        // vocab snapshot stays pinned in executor storage for the job
-        Components.freeCheckpoint(prev)
+        // without this, every round's vocab snapshot stays pinned in
+        // executor storage for the job
+        Materialize.release(prev)
       }
       round += 1
     }
-    Components.freeCheckpoint(vocab)
+    Materialize.release(vocab)
     merges.toSeq
   }
 
@@ -176,10 +176,10 @@ object Bpe {
         vocab = vocab.map { case (syms, f) =>
           (ps.foldLeft(syms) { case (s, (a, b)) => mergeWord(s, a, b) }, f)
         }.localCheckpoint(true)
-        Components.freeCheckpoint(prev)
+        Materialize.release(prev)
       }
     }
-    Components.freeCheckpoint(vocab)
+    Materialize.release(vocab)
     merges.toSeq
   }
 

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Connected components over a near-duplicate pair graph — the step that
   * turns PAIRS into DEDUP DECISIONS. Pairwise output (JaccardDedup,
@@ -95,12 +96,12 @@ object Components {
       // drop the superseded round's checkpoint blocks NOW — waiting for the
       // ContextCleaner would pin up to maxIter copies of the label table in
       // executor storage
-      freeCheckpoint(labels)
+      Materialize.release(labels)
       labels = next.select(col("node"), col("label"))
       converged = changed == 0
       iter += 1
     }
-    freeCheckpoint(sym)
+    Materialize.release(sym)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds — " +
@@ -118,19 +119,6 @@ object Components {
         s"$caller: $c must be an integral id column, got $dt " +
           "(hash non-numeric ids to 64-bit first, e.g. xxhash64)")
     }
-
-  /** Eagerly drop a superseded `localCheckpoint(true)` round's storage.
-    * `Dataset.unpersist()` is a CacheManager lookup and does NOT free a
-    * checkpoint's blocks (the materialized RDD sits under a `LogicalRDD`
-    * leaf the CacheManager never registered) — they would otherwise pin
-    * executor storage until driver GC + ContextCleaner get around to the
-    * unreferenced RDD. NEVER call this on a frame that still has consumers:
-    * a truncated lineage cannot recompute.
-    */
-  private[graft] def freeCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
-    df.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond") — same output
@@ -208,13 +196,13 @@ object Components {
         .union(next.select(col("u"), col("v"), lit(-1).as("tag")))
         .groupBy(col("u"), col("v")).agg(sum(col("tag")).as("d"))
         .filter(col("d") =!= 0).isEmpty
-      freeCheckpoint(e) // superseded round: no consumers remain
+      Materialize.release(e) // superseded round: no consumers remain
       e = next
       iter += 1
     }
     if (!converged) {
-      freeCheckpoint(e)
-      freeCheckpoint(originalNodes)
+      Materialize.release(e)
+      Materialize.release(originalNodes)
       throw new IllegalStateException(
         s"connectedComponentsStar: no fixpoint after $maxIter rounds — " +
           "raise maxIter (rounds grow O(log n), so this indicates a bug or " +
@@ -229,8 +217,8 @@ object Components {
       .select(col("node").as("doc_id"),
         coalesce(col("v"), col("node")).as("component"))
       .localCheckpoint(true)
-    freeCheckpoint(e)
-    freeCheckpoint(originalNodes)
+    Materialize.release(e)
+    Materialize.release(originalNodes)
     out
   }
 
@@ -313,7 +301,7 @@ object Components {
     // either path has materialized everything it read from the contracted
     // blocks (UF collected them; the loop's labels are checkpointed), so
     // the checkpoint can be dropped before the lazy remap below is consumed
-    freeCheckpoint(contracted)
+    Materialize.release(contracted)
     // old components whose root was pulled into a bigger merge
     val rootMap = merged.select(col("doc_id").as("label"), col("component").as("newlab"))
     val updatedOld = lab.join(rootMap, Seq("label"), "left")

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** All-pairs COSINE similarity self-join over term-frequency vectors — the
   * weighted member of the similarity-join family ([[JaccardDedup]] covers
@@ -49,6 +50,8 @@ object CosineJoin {
     * cosine over rare-term (df ≤ maxDf) tf sub-vectors of word `ngram`
     * multisets (ngram ≥ 2 is the phrase-level form — on small-vocabulary
     * corpora unigram tf degenerates, exactly as for the jaccard family).
+    * Returns the pairs pinned; the weighted corpus, norms and prefix it
+    * cached are released before return.
     */
   def similarPairs(docs: DataFrame, threshold: Double, maxDf: Long = 100L,
                    ngram: Int = 1, idCol: String = "doc_id",
@@ -65,10 +68,8 @@ object CosineJoin {
     // persist it, [[JaccardDedup]]'s measured discipline (round 15: the
     // unpersisted form re-ran the explode chain per consumer and made this
     // the bench's single largest build)
-    val w = tf.join(dfreq, Seq("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nsq = w.groupBy(col("doc_id")).agg(sum(col("tf") * col("tf")).as("nsq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val w = tf.join(dfreq, Seq("tok")).persist()
+    val nsq = w.groupBy(col("doc_id")).agg(sum(col("tf") * col("tf")).as("nsq")).persist()
     // suffix Σtf² per doc in global rarity order — an exact integer window
     // sum, partitioned per document (bounded by one doc's token count)
     val win = Window.partitionBy(col("doc_id"))
@@ -86,7 +87,7 @@ object CosineJoin {
       // carried into candidate generation for the positional bound below
       .select(col("tok"), col("doc_id"),
         (col("sufsq").cast("double") / col("nsq").cast("double")).as("ssq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // ppjoin positional upper bound (the cosine form of the bound the
     // jaccard sibling carries): for any shared token, cos(x,y) ≤
     // s_x(i)·s_y(j) (Cauchy–Schwarz on the suffixes from the shared token
@@ -105,7 +106,9 @@ object CosineJoin {
       .agg(max(col("sa") * col("sb")).as("bound"))
       .filter(col("bound") >= lit(cut * cut))
       .select(col("doc_a"), col("doc_b"))
-    verify(cand, w, nsq, threshold)
+    val out = Materialize.pin(verify(cand, w, nsq, threshold))
+    Seq(w, nsq, prefix).foreach(Materialize.release(_))
+    out
   }
 
   /** Exact verify of candidate pairs: integer dot over shared tokens, one

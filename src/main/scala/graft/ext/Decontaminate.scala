@@ -87,8 +87,11 @@ object Decontaminate {
                 else ngrams(textCol, n)
     // persist the eval n-gram set: it is read twice (sketch build — an
     // immediate action — then the exact-verify join) and it is benchmark-
-    // sized by assumption, so caching it is what a serving deployment does
-    // too; without it every downstream action re-explodes the eval docs
+    // sized by assumption; without it every downstream action re-explodes
+    // the eval docs. Kept on purpose as a SESSION cache: it lives until
+    // `Materialize.release` or `clearCache`, and calls with the same eval
+    // plan share the one entry (an ingest loop probes every batch against
+    // the same eval set)
     val eg = evalSet.select(explode(array_distinct(grams)).as("ng"))
       .distinct().persist()
     graft.ops.BloomJoin.prefilter(tg, col("ng"), eg, col("ng"),

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Edit-distance vocabulary clustering — the SymSpell / deletion-
   * neighborhood scheme (Garbe's symmetric-delete algorithm; the
@@ -33,13 +34,10 @@ import org.apache.spark.sql.functions._
   * count code points, so the whole operator family agrees symbol for
   * symbol — EditDistSpec pins the astral-plane cases).
   *
-  * Storage contract (the MinHashDedup sigs discipline, round-14 ADVICE):
-  * [[nearPairs]] and [[typoCanonical]] persist their inputs (the caller's
-  * `vocabDf` plan included) for the duration of the call, MATERIALIZE the
-  * result (persist + count), and release every intermediate before
-  * returning — nothing vocabulary-shaped is computed twice, and nothing
-  * but the (pair-sized / vocabulary-sized) result stays pinned. The
-  * CALLER owns the returned frame's storage: `.unpersist()` when done.
+  * Storage: [[nearPairs]] and [[typoCanonical]] cache their inputs (the
+  * caller's `vocabDf` plan included) for the duration of the call and
+  * return the pair-sized / vocabulary-sized result pinned
+  * ([[graft.Materialize]]) — nothing vocabulary-shaped is computed twice.
   * Callers passing an already-persisted `vocabDf` should know the call
   * unpersists that exact plan on return.
   */
@@ -187,8 +185,8 @@ object EditDist {
   /** Vocabulary pairs at Levenshtein distance ≤ `maxDist` (distinct
     * words ≤ [[MaxWordLen]] code points), `word_a < word_b` — candidates
     * from the deletion-neighborhood equi-join, then exact-distance
-    * verified in codegen. Output `(word_a, word_b, dist)`, MATERIALIZED
-    * and persisted (caller owns the storage). `maxDist = 2` is production
+    * verified in codegen. Output `(word_a, word_b, dist)`, pinned.
+    * `maxDist = 2` is production
     * SymSpell's standard radius; neighborhood size — and so candidate
     * volume — grows ~C(len, maxDist), which is why the radius is a knob
     * and not unbounded.
@@ -202,13 +200,9 @@ object EditDist {
     // relied on to dedupe them — without the persist the corpus-fed vocab
     // aggregation AND the C(len,k) variant flatMap execute per reference
     // (round-14 ADVICE)
-    val keys = neighborhoodKeys(vocabDf, maxDist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = nearPairsOn(keys, maxDist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    keys.unpersist(blocking = false)
-    out
+    Materialize.using(neighborhoodKeys(vocabDf, maxDist)) { keys =>
+      Materialize.pin(nearPairsOn(keys, maxDist))
+    }
   }
 
   /** SymSpell's correction rule as a canonicalization map: every word's
@@ -224,37 +218,33 @@ object EditDist {
     * radius 1 leaves separate (a k=1/k=2 canonical flip is pinned in the
     * spec). Cost: the [[nearPairs]] core + two vocabulary-keyed joins +
     * one argmax aggregation — still vocabulary-sized end to end. Result
-    * materialized + persisted; caller owns the storage.
+    * pinned.
     */
   def typoCanonical(vocabDf: DataFrame, maxDist: Int = 1): DataFrame = {
     // vocabDf is referenced three times (neighborhood keys, the self
     // union, the count join) and is typically a corpus aggregation —
     // persist it for the call (NOTE: the caller's plan is unpersisted on
     // return; see the object scaladoc)
-    val v = vocabDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = neighborhoodKeys(v, maxDist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = nearPairsOn(keys, maxDist).select(col("word_a"), col("word_b"))
-    // neighbor relation, symmetric closure + self. The closure EXPLODES
-    // each pair into both directions instead of unioning two references
-    // to the pairs plan — referencing it twice would run the per-candidate
-    // exact-Levenshtein verify (the scheme's hottest step) twice per action
-    val nbrs = pairs.select(explode(array(
-        struct(col("word_a").as("word"), col("word_b").as("nbr")),
-        struct(col("word_b").as("word"), col("word_a").as("nbr")))).as("e"))
-      .select(col("e.word").as("word"), col("e.nbr").as("nbr"))
-      .unionByName(v.select(col("word"), col("word").as("nbr")))
-    val out = nbrs
-      .join(v.select(col("word").as("nbr"), col("cnt").as("nbr_cnt")), Seq("nbr"))
-      // argmax by (cnt desc, word asc): min of (-cnt, word) — one hash agg
-      .groupBy(col("word"))
-      .agg(min(struct((-col("nbr_cnt")).as("neg"), col("nbr").as("w"))).as("best"))
-      .select(col("word"), col("best.w").as("canonical"),
-        (-col("best.neg")).as("canonical_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    keys.unpersist(blocking = false)
-    v.unpersist(blocking = false)
-    out
+    Materialize.using(vocabDf) { v =>
+      Materialize.using(neighborhoodKeys(v, maxDist)) { keys =>
+        val pairs = nearPairsOn(keys, maxDist).select(col("word_a"), col("word_b"))
+        // neighbor relation, symmetric closure + self. The closure EXPLODES
+        // each pair into both directions instead of unioning two references
+        // to the pairs plan — referencing it twice would run the per-candidate
+        // exact-Levenshtein verify (the scheme's hottest step) twice per action
+        val nbrs = pairs.select(explode(array(
+            struct(col("word_a").as("word"), col("word_b").as("nbr")),
+            struct(col("word_b").as("word"), col("word_a").as("nbr")))).as("e"))
+          .select(col("e.word").as("word"), col("e.nbr").as("nbr"))
+          .unionByName(v.select(col("word"), col("word").as("nbr")))
+        Materialize.pin(nbrs
+          .join(v.select(col("word").as("nbr"), col("cnt").as("nbr_cnt")), Seq("nbr"))
+          // argmax by (cnt desc, word asc): min of (-cnt, word) — one hash agg
+          .groupBy(col("word"))
+          .agg(min(struct((-col("nbr_cnt")).as("neg"), col("nbr").as("w"))).as("best"))
+          .select(col("word"), col("best.w").as("canonical"),
+            (-col("best.neg")).as("canonical_cnt")))
+      }
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Unigram-set Jaccard similarity self-join with LOSSLESS prefix filtering
   * (the ppjoin/AllPairs candidate rule).
@@ -102,6 +103,8 @@ object JaccardDedup {
     * trigrams whose df ≈ the copy-family size, far under any sane cap.
     * Pass `maxDf = Long.MaxValue` to recover the exhaustive (superlinear)
     * round-5 behavior when the corpus is known-small.
+    *
+    * Returns the pairs pinned ([[graft.Materialize]]).
     */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.5,
                        ngram: Int = 3, maxDf: Long = 100L): DataFrame = {
@@ -143,7 +146,7 @@ object JaccardDedup {
     // projection is persisted because it feeds BOTH sides of the candidate
     // join: without it the explode→freq-join→rank-window lineage (the
     // corpus-sized part of this plan) executes twice. 20 B/row, no token
-    // strings; released by the ContextCleaner with the other caches here.
+    // strings; released with `t` once the result is pinned.
     val slim = ranked.filter(col("df") <= maxDf)
       .select(col("th"), col("doc_id"), col("rn"), col("sz"))
       .persist()
@@ -158,27 +161,31 @@ object JaccardDedup {
       .select(col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
     val sets = t.select(col("doc_id"), col("hs"))
-    cand
+    val out = Materialize.pin(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("ha")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (size(array_intersect(col("ha"), col("hb"))).cast("double") /
           size(col("ha"))).as("containment"))
-      .filter(col("containment") >= threshold)
+      .filter(col("containment") >= threshold))
+    Materialize.release(slim)
+    Materialize.release(t)
+    out
   }
 
   /** Pairs (doc_a < doc_b, same source) with Jaccard(n-gram sets) ≥
     * `threshold`, restricted to |Δn_chars|·5 ≤ n_chars sum (the ≤1.5×
     * length-ratio prefilter that is part of this operator's round-1 spec,
-    * mirrored in the oracle).
+    * mirrored in the oracle). Returns the pairs pinned
+    * ([[graft.Materialize]]).
     */
   def similarPairs(docs: DataFrame, threshold: Double = 0.5,
                    ngram: Int = 1): DataFrame = {
     // the tokenized corpus is consumed three times (token explode + both
     // sides of the verification join); persist beats recomputing the
     // split/distinct scan each time — same measured trade as
-    // MinHashDedup.nearDuplicates (cache released by the ContextCleaner
-    // once the result plan is unreferenced)
+    // MinHashDedup.nearDuplicates — and is released once the result is
+    // pinned
     val t = docs.select(col("doc_id"), col("source"), col("n_chars"),
       ngramSet("text", ngram).as("ws"))
       .persist()
@@ -241,12 +248,14 @@ object JaccardDedup {
     // exact verification: fetch the two token sets by id (candidate set ≪
     // corpus) and compute true Jaccard
     val sets = t.select(col("doc_id"), col("ws"))
-    cand
+    val out = Materialize.pin(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("ws").as("wa")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("ws").as("wb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (size(array_intersect(col("wa"), col("wb"))).cast("double") /
           size(array_union(col("wa"), col("wb")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= threshold))
+    Materialize.release(t)
+    out
   }
 }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** k-core decomposition over an undirected pair graph — the graph-shape
   * curation signal the dedup family doesn't give: a document that survives
@@ -59,16 +60,15 @@ object KCore {
         .select(col("src"), col("dst"))
         .localCheckpoint(true)
       val n = next.count() // the round's ONE job: count + materialize
-      // drop the superseded round's checkpoint blocks NOW (the CC-loop
-      // discipline — Components.freeCheckpoint doc): waiting for the
+      // drop the superseded round's checkpoint blocks NOW: waiting for the
       // ContextCleaner pins up to maxIter copies of the edge table in
       // executor storage, squeezing the session's shared persisted state
-      Components.freeCheckpoint(sym)
+      Materialize.release(sym)
       done = n == prev || n == 0L
       prev = n
       sym = next
     }
-    sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+    degrees(sym)
   }
 
   /** Peel exactly `rounds` rounds (no convergence test) — the bounded twin
@@ -93,9 +93,19 @@ object KCore {
         .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
         .localCheckpoint(true) // eager — materialized here, so the input
-      Components.freeCheckpoint(sym) // round's blocks have no consumers left
+      Materialize.release(sym) // round's blocks have no consumers left
       sym = next
     }
-    sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+    degrees(sym)
+  }
+
+  /** The node-sized `(node, degree)` result, checkpointed so the last
+    * round's edge checkpoint can be freed here (the Triangles shape).
+    */
+  private def degrees(sym: DataFrame): DataFrame = {
+    val out = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+      .localCheckpoint(true)
+    Materialize.release(sym)
+    out
   }
 }

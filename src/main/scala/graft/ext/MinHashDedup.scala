@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** MinHash + LSH near-duplicate detection, the scale path for fuzzy dedup
   * (SURVEY.md §7.3 M3; standard shingle→minhash→band→bucket-join design).
@@ -101,48 +102,28 @@ object MinHashDedup {
     * fan-out — but every operation is keyed, so it runs at corpus scale
     * when an eval slice needs ground truth.
     *
-    * Persistence contract (round-11 ADVICE): with `materialize = true`
-    * (the default) the returned frame comes back PERSISTED
-    * (MEMORY_AND_DISK) and fully counted — the shingle-set cache it was
-    * built from is already dropped — and the CALLER OWNS the storage: call
-    * `.unpersist()` when done, or the pairs stay pinned until GC-driven
-    * cleanup (every registry consumer routes through a `graft.Build`,
-    * which releases it on rebuild). Pass `materialize = false` to get the LAZY plan
-    * with no storage side effects at all — right when only sampling the
-    * result or feeding it straight into one downstream aggregation; each
-    * evaluation then recomputes the shingle sets (4 scans of `docs`).
+    * Returns the pairs pinned ([[graft.Materialize]]); the shingle sets,
+    * read four times, are cached only for the call.
     */
   def exactPairsMd5(docs: DataFrame, minJaccard: Double = 0.5,
                     idCol: String = "doc_id", textCol: String = "text",
-                    k: Int = 3, materialize: Boolean = true): DataFrame = {
-    val sets = shingleSetsMd5(docs, idCol, textCol, k)
-    if (materialize)
-      sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Unit
-    val sh = sets.select(col(idCol), explode(col("shingles")).as("s"))
-    val inter = sh.toDF("doc_a", "s")
-      .join(sh.toDF("doc_b", "s"), Seq("s"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    val sizes = sets.select(col(idCol), size(col("shingles")).as("n"))
-    val pairs = inter
-      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
-      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    if (!materialize) pairs
-    else {
-      pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize BEFORE dropping the shingle cache: the result frame is
-      // what callers own; leaving `sets` pinned would stack executor storage
-      // on every rebuild rep (round-10 ADVICE)
-      pairs.count()
-      sets.unpersist(blocking = false)
-      pairs
+                    k: Int = 3): DataFrame =
+    Materialize.using(shingleSetsMd5(docs, idCol, textCol, k)) { sets =>
+      val sh = sets.select(col(idCol), explode(col("shingles")).as("s"))
+      val inter = sh.toDF("doc_a", "s")
+        .join(sh.toDF("doc_b", "s"), Seq("s"))
+        .filter(col("doc_a") < col("doc_b"))
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(count(lit(1)).as("inter"))
+      val sizes = sets.select(col(idCol), size(col("shingles")).as("n"))
+      Materialize.pin(inter
+        .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
+        .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
+        .withColumn("jaccard",
+          col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+        .filter(col("jaccard") >= minJaccard)
+        .select(col("doc_a"), col("doc_b"), col("jaccard")))
     }
-  }
 
   /** LSH banding + exact-Jaccard verify over [[signaturesMd5]] output —
     * the twin's pair search. Same scale shape as [[nearDuplicates]]: ONE
@@ -178,8 +159,7 @@ object MinHashDedup {
   def nearDuplicatesMd5(docs: DataFrame, minJaccard: Double = 0.5,
                         idCol: String = "doc_id", textCol: String = "text",
                         h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame = {
-    val sigs = signaturesMd5(docs, idCol, textCol, h, k)
-    sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = signaturesMd5(docs, idCol, textCol, h, k).persist()
     bandedCandidatesMd5(sigs, idCol, h, bands)
       .join(sigs.select(col(idCol).as("doc_a"), col("shingles").as("sh_a")), "doc_a")
       .join(sigs.select(col(idCol).as("doc_b"), col("shingles").as("sh_b")), "doc_b")
@@ -204,33 +184,25 @@ object MinHashDedup {
     * [[nearDuplicatesMd5]] (the SAME [[bandedCandidatesMd5]] population):
     * one band-key shuffle, arrays join in for candidates only.
     *
-    * Persistence contract (the [[exactPairsMd5]] rule): the signature
-    * frame is persisted only for the duration of this call — the result
-    * comes back PERSISTED (MEMORY_AND_DISK, candidate-pair-sized) and
-    * counted, signature storage already released; the CALLER OWNS the
-    * result's storage (`.unpersist()` when done).
+    * Returns the candidate-pair-sized result pinned; the signature frame
+    * is cached only for the call.
     */
   def estimateVsExactMd5(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text",
-                         h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame = {
-    val sigs = signaturesMd5(docs, idCol, textCol, h, k)
-    sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = bandedCandidatesMd5(sigs, idCol, h, bands)
-      .join(sigs.select(col(idCol).as("doc_a"),
-        col("shingles").as("sh_a"), col("sigs").as("sg_a")), "doc_a")
-      .join(sigs.select(col(idCol).as("doc_b"),
-        col("shingles").as("sh_b"), col("sigs").as("sg_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (expr("""aggregate(zip_with(sg_a, sg_b,
-             (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, v) -> acc + v)""")
-          .cast("double") / lit(h.toDouble)).as("est"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sigs.unpersist(blocking = false)
-    out
-  }
+                         h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame =
+    Materialize.using(signaturesMd5(docs, idCol, textCol, h, k)) { sigs =>
+      Materialize.pin(bandedCandidatesMd5(sigs, idCol, h, bands)
+        .join(sigs.select(col(idCol).as("doc_a"),
+          col("shingles").as("sh_a"), col("sigs").as("sg_a")), "doc_a")
+        .join(sigs.select(col(idCol).as("doc_b"),
+          col("shingles").as("sh_b"), col("sigs").as("sg_b")), "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          (expr("""aggregate(zip_with(sg_a, sg_b,
+               (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, v) -> acc + v)""")
+            .cast("double") / lit(h.toDouble)).as("est"),
+          (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+            size(array_union(col("sh_a"), col("sh_b")))).as("jaccard")))
+    }
 
   /** The incremental md5-twin core, over two [[signaturesMd5]]-shaped
     * frames (`idCol`, shingles, sigs): batch ids near-duplicating NOTHING
@@ -247,16 +219,12 @@ object MinHashDedup {
     * `(band_key, id)` rows cross the LSH shuffle, shingle arrays join in
     * for candidates only.
     *
-    * Persistence contract (round-12 ADVICE — the [[exactPairsMd5]]
-    * contract, shared with [[SimHash.novelAgainstSigs]]): with
-    * `materialize = true` (the default) both sig frames are persisted only
-    * for the duration of this call — the novel-id result comes back
-    * PERSISTED (MEMORY_AND_DISK) and counted, sig storage already
-    * released, and the CALLER OWNS the result's (batch-id-sized) storage:
-    * `.unpersist()` when done. A per-micro-batch probe loop never
-    * accumulates corpus-sized blocks. Pass `materialize = false` for a
-    * fully LAZY plan with zero storage side effects — right when the
-    * caller passes sig frames it already persists and owns.
+    * With `materialize = true` (the default) both sig frames are cached
+    * only for the call and the batch-id-sized result comes back pinned,
+    * so a per-micro-batch probe loop never accumulates corpus-sized
+    * blocks. `materialize = false` returns the lazy plan, for a caller
+    * that passes sig frames it already caches and owns; shared with
+    * [[SimHash.novelAgainstSigs]].
     */
   def novelAgainstSigsMd5(batchIds: DataFrame, batchSigs: DataFrame,
                           corpusSigs: DataFrame, minJaccard: Double = 0.5,
@@ -267,16 +235,11 @@ object MinHashDedup {
       s"minhash: h must be divisible by bands (h=$h, bands=$bands) — a " +
         "ragged band slice would band on short/empty sub-signatures")
     val r = h / bands
-    // each side feeds banding AND verify — persist, the same
-    // lifetime-scoped reasoning as nearDuplicates/newAgainstCorpus (and
-    // measured: the unpersisted form re-ran the md5 sketch per consumer,
+    // each side feeds banding AND verify — persist for the call
+    // (measured: the unpersisted form re-ran the md5 sketch per consumer,
     // 14.3 s warm vs 0.5 s for the persisted pairs twin at sf0.1)
-    val bs = if (materialize)
-      batchSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else batchSigs
-    val cs = if (materialize)
-      corpusSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else corpusSigs
+    val bs = if (materialize) batchSigs.persist() else batchSigs
+    val cs = if (materialize) corpusSigs.persist() else corpusSigs
     def banded(sigs: DataFrame, as: String) = sigs
       .select(col(idCol).as(as),
         explode(expr(s"""transform(sequence(0, ${bands - 1}),
@@ -295,11 +258,10 @@ object MinHashDedup {
     val novel = batchIds.select(col(idCol)).join(matched, Seq(idCol), "left_anti")
     if (!materialize) novel
     else {
-      novel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // count BEFORE releasing the sig frames (the exactPairsMd5 ordering)
-      novel.count()
-      bs.unpersist(blocking = false)
-      cs.unpersist(blocking = false)
+      // pin BEFORE releasing the sig frames: the result is computed from them
+      Materialize.pin(novel)
+      Materialize.release(bs)
+      Materialize.release(cs)
       novel
     }
   }
@@ -329,12 +291,10 @@ object MinHashDedup {
     // shingle sets are used three times (banding + both sides of the
     // verification join) — persist beats recomputation even with the cheap
     // native sketch expressions (measured: 1.2s warm cached vs 7.5s
-    // recomputed at sf0.1). The cache is scoped to the returned plan's
-    // lifetime: once callers drop the result, the ContextCleaner reclaims
-    // the blocks (repeat callers pin at most one live copy per in-flight
-    // result, not one per call retained forever).
-    val sigs = signatures(docs, idCol, textCol, h)
-    sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // recomputed at sf0.1). Kept on purpose as a SESSION cache: it lives
+    // until `Materialize.release` or `clearCache`, and calls with the same
+    // plan share the one entry, so repeat callers never stack copies.
+    val sigs = signatures(docs, idCol, textCol, h).persist()
 
     // band key: hash of the band's sub-signature (+ band index so buckets
     // of different bands never collide). CRITICAL scale property: only
@@ -395,12 +355,10 @@ object MinHashDedup {
       .select(col(idCol).as(as),
         explode(expr(s"""transform(sequence(0, ${bands - 1}),
           b -> hash(b, slice(sig, b * $r + 1, $r)))""")).as("band_key"))
-    // each side's sketch feeds banding AND verify — persist, same
-    // lifetime-scoped reasoning as nearDuplicates
-    val bs = signatures(batch, idCol, textCol, h)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cs = signatures(corpus, idCol, textCol, h)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // each side's sketch feeds banding AND verify — persist, the same
+    // session cache as nearDuplicates
+    val bs = signatures(batch, idCol, textCol, h).persist()
+    val cs = signatures(corpus, idCol, textCol, h).persist()
     val candidates = banded(bs, "batch_id")
       .join(banded(cs, "corpus_id"), Seq("band_key"))
       .select("batch_id", "corpus_id")

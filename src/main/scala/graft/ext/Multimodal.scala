@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, processed per-partition in batches.
@@ -618,11 +619,8 @@ object Multimodal {
     * (oracle-checked against the all-pairs hamming scan).
     */
   def imageNearDuplicates(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
-    val sigs = perceptualHashes(media).select(col("media_id"), col("dhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = imageNearDuplicatesFromSigs(sigs, maxDist)
-    sigs.unpersist(blocking = false)
-    out
+    Materialize.using(perceptualHashes(media).select(col("media_id"), col("dhash")))(
+      imageNearDuplicatesFromSigs(_, maxDist))
   }
 
   /** [[imageNearDuplicates]] from an ALREADY-HASHED signature table
@@ -655,13 +653,9 @@ object Multimodal {
       .select(least(col("m_a"), col("m_b")).as("media_a"),
         greatest(col("m_a"), col("m_b")).as("media_b"),
         col("hamming").cast("int").as("hamming"))
-    // persist-lifetime discipline: materialize the output before
-    // returning (caller owns the result's storage; no lazy plan escapes
-    // that would re-read the signature input after the caller releases it)
-    val out = same.unionByName(cross)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
+    // pinned before return: no lazy plan escapes that would re-read the
+    // signature input after the caller releases it
+    Materialize.pin(same.unionByName(cross))
   }
 
   /** Image dedup GROUPS — (media_id, component), component = min reachable
@@ -683,31 +677,32 @@ object Multimodal {
     * hash within maxDist.
     */
   def imageDedupGroups(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
-    val sigs = perceptualHashes(media).select(col("media_id"), col("dhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = imageDedupGroupsFromSigs(sigs, maxDist)
-    sigs.unpersist()
-    out
+    Materialize.using(perceptualHashes(media).select(col("media_id"), col("dhash")))(
+      imageDedupGroupsFromSigs(_, maxDist))
   }
 
   /** [[imageDedupGroups]] from an already-hashed `(media_id, dhash)`
-    * table — the decode-once boundary, as [[imageNearDuplicatesFromSigs]]
-    * (caller owns the input's storage; result materialized + persisted).
+    * table — the decode-once boundary, as [[imageNearDuplicatesFromSigs]].
+    * The caller owns the input's storage. Returns a checkpoint: the
+    * representatives' component labels it reads are freed before return.
     */
   def imageDedupGroupsFromSigs(sigs: DataFrame, maxDist: Int = 3): DataFrame = {
     val grp = sigs.groupBy(col("dhash"))
       .agg(min(col("media_id")).as("rep"), count(lit(1)).as("grp_n"))
-    val repPairs = SimHash.nearDuplicatesFromSigs(
-      grp.select(col("rep").as("media_id"), col("dhash").as("simhash")),
-      maxDist, idCol = "media_id")
-      .select(col("doc_a"), col("doc_b"))
-    val repComp = Components.connectedComponents(repPairs)
-      .select(col("doc_id").as("rep"), col("component"))
+    // cached here for the CC loop: nearDuplicatesFromSigs leaves an input
+    // that is already cached to its caller, so this call frees it
+    val cc = Materialize.using(
+        grp.select(col("rep").as("media_id"), col("dhash").as("simhash"))) { reps =>
+      Components.connectedComponents(
+        SimHash.nearDuplicatesFromSigs(reps, maxDist, idCol = "media_id")
+          .select(col("doc_a"), col("doc_b")))
+    }
     val out = sigs.join(grp, Seq("dhash"))
-      .join(repComp, Seq("rep"), "left")
+      .join(cc.select(col("doc_id").as("rep"), col("component")), Seq("rep"), "left")
       .filter(col("grp_n") >= 2 || col("component").isNotNull)
       .select(col("media_id"), coalesce(col("component"), col("rep")).as("component"))
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+      .localCheckpoint(true)
+    Materialize.release(cc)
     out
   }
 

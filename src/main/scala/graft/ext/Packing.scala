@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Sequence packing — the training-data step after cleaning/dedup: assign
   * documents (in a fixed, deterministic order) to consecutive
@@ -49,7 +50,14 @@ object Packing {
     * `cum` a property of the data rather than of partition boundaries.
     */
   def runningTotalBy(df: DataFrame, orderBy: Seq[Column], valCol: String,
-                     numPartitions: Int = 0): DataFrame = {
+                     numPartitions: Int = 0): DataFrame =
+    runningTotalLayout(df, orderBy, valCol, numPartitions)._2
+
+  /** [[runningTotalBy]]'s plan together with the checkpointed layout it
+    * reads, for a caller that materializes the plan and frees the layout.
+    */
+  private[graft] def runningTotalLayout(df: DataFrame, orderBy: Seq[Column], valCol: String,
+                                        numPartitions: Int): (DataFrame, DataFrame) = {
     val p = if (numPartitions > 0) numPartitions
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // localCheckpoint is CORRECTNESS, not tuning: `local` is referenced
@@ -76,9 +84,9 @@ object Packing {
           Window.orderBy(col("__pid"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__pid"), col("__off"))
-    local.join(broadcast(offsets), "__pid")
+    (local, local.join(broadcast(offsets), "__pid")
       .withColumn("cum", (col("__cum") + col("__off")).cast("long"))
-      .drop("__pid", "__cum", "__off")
+      .drop("__pid", "__cum", "__off"))
   }
 
   /** Per-GROUP running total — the grouped variant of [[runningTotalBy]]:
@@ -92,7 +100,15 @@ object Packing {
     * with their own per-group prefix sum.
     */
   def runningTotalByGroup(df: DataFrame, groupCol: String, orderBy: Seq[Column],
-                          valCol: String, numPartitions: Int = 0): DataFrame = {
+                          valCol: String, numPartitions: Int = 0): DataFrame =
+    runningTotalByGroupLayout(df, groupCol, orderBy, valCol, numPartitions)._2
+
+  /** [[runningTotalByGroup]]'s plan with its checkpointed layout, as
+    * [[runningTotalLayout]].
+    */
+  private[graft] def runningTotalByGroupLayout(df: DataFrame, groupCol: String,
+                                               orderBy: Seq[Column], valCol: String,
+                                               numPartitions: Int): (DataFrame, DataFrame) = {
     val p = if (numPartitions > 0) numPartitions
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // same divergent-re-evaluation hazard as runningTotalBy (see the
@@ -111,10 +127,10 @@ object Packing {
       .select(col("__pid").as("__opid"), col(groupCol).as("__grp"), col("__off"))
     // null-safe on the group: a NULL group value is a real group here,
     // same contract as languageQualityGate
-    local.join(broadcast(offsets),
+    (local, local.join(broadcast(offsets),
         col("__pid") === col("__opid") && (col(groupCol) <=> col("__grp")))
       .withColumn("cum", (col("__cum") + col("__off")).cast("long"))
-      .drop("__pid", "__opid", "__grp", "__cum", "__off")
+      .drop("__pid", "__opid", "__grp", "__cum", "__off"))
   }
 
   /** Deterministic EPOCH SHUFFLE — the training-order permutation that
@@ -230,13 +246,18 @@ object Packing {
     * [[graft.ops.Sampling.interleaveSchedule]]): training sequences fill
     * in the order batches will consume them, which is what makes a shard
     * a contiguous slice of the training stream (see [[graft.io.Shards]]).
+    * Returns a checkpoint; the range layout it was computed from is freed.
     */
   def packBinsBy(df: DataFrame, orderBy: Seq[Column], tokenCol: String,
                  budget: Long, numPartitions: Int = 0): DataFrame = {
     require(budget >= 1, s"packBins: budget must be >= 1, got $budget")
-    runningTotalBy(df, orderBy, tokenCol, numPartitions)
+    val (layout, cum) = runningTotalLayout(df, orderBy, tokenCol, numPartitions)
+    val out = cum
       .withColumnRenamed("cum", "cum_tokens")
       .withColumn("seq_id",
         expr(s"(cum_tokens - $tokenCol) div CAST($budget AS BIGINT)"))
+      .localCheckpoint(true)
+    Materialize.release(layout)
+    out
   }
 }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** PageRank in exact integer arithmetic — the link-graph centrality signal
   * web-corpus pipelines use for document-level quality weighting (OPT/
@@ -112,20 +113,20 @@ object PageRank {
       // slice does).
       val next = roundNext(ed, nodes, scores, base, dampNum, dampDen)
         .localCheckpoint(true)
-      Components.freeCheckpoint(scores)
+      Materialize.release(scores)
       scores = next
       round += 1
     }
-    Components.freeCheckpoint(e)
-    Components.freeCheckpoint(ed)
-    Components.freeCheckpoint(nodes)
+    Materialize.release(e)
+    Materialize.release(ed)
+    Materialize.release(nodes)
     scores
   }
 
   /** The ROUND LEDGER: `(round, node, score)` for every round 0..`iters` —
     * the state [[incrementalInt]] maintains. Same arithmetic and plan shape
-    * per round as [[pagerankInt]]; the extra cost is only RETENTION (all
-    * rounds stay checkpointed instead of being freed), which is
+    * per round as [[pagerankInt]]; the extra cost is only RETENTION (every
+    * round's scores stay, in the one returned checkpoint), which is
     * iters × |V| 16-byte rows — node-table-sized state, the same class as
     * the CC label ledger, nowhere near corpus-sized.
     *
@@ -142,20 +143,21 @@ object PageRank {
                      dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
     val base = checkParams(iters, scale, dampNum, dampDen)
     val (e, ed, nodes) = loopInputs(edges)
-    var scores = nodes.withColumn("score", lit(scale)).localCheckpoint(true)
     val rounds = scala.collection.mutable.ArrayBuffer[DataFrame](
-      scores.withColumn("round", lit(0)))
-    var round = 0
-    while (round < iters) {
-      scores = roundNext(ed, nodes, scores, base, dampNum, dampDen)
+      nodes.withColumn("score", lit(scale)).localCheckpoint(true))
+    (1 to iters).foreach { _ =>
+      rounds += roundNext(ed, nodes, rounds.last, base, dampNum, dampDen)
         .localCheckpoint(true)
-      round += 1
-      rounds += scores.withColumn("round", lit(round))
     }
-    Components.freeCheckpoint(e)
-    Components.freeCheckpoint(ed)
-    Components.freeCheckpoint(nodes)
-    rounds.reduce(_.unionByName(_)).select(col("round"), col("node"), col("score"))
+    // the ledger is checkpointed ONCE as a whole, so the per-round
+    // checkpoints it was built from can be freed with the loop inputs
+    val ledger = rounds.zipWithIndex
+      .map { case (scores, r) => scores.withColumn("round", lit(r)) }
+      .reduce(_.unionByName(_))
+      .select(col("round"), col("node"), col("score"))
+      .localCheckpoint(true)
+    (rounds ++ Seq(e, ed, nodes)).foreach(Materialize.release(_))
+    ledger
   }
 
   /** EXACT incremental PageRank maintenance — the operational form at
@@ -310,7 +312,7 @@ object PageRank {
         .unionByName(affected.select(col("node"), lit(0L).as("c")))
         .groupBy(col("node")).agg((lit(base) + sum(col("c"))).as("score"))
         .localCheckpoint(true)
-      if (newScores != null && !wantLedger) Components.freeCheckpoint(newScores)
+      if (newScores != null && !wantLedger) Materialize.release(newScores)
       newScores = nextScores
       if (wantLedger) roundScores += newScores
       if (round < iters) {
@@ -320,7 +322,7 @@ object PageRank {
             .withColumnRenamed("node", "src"), Seq("src"), "left_semi")
           .select(col("dst").as("node")).distinct()
           .union(n).distinct().localCheckpoint(true)
-        Components.freeCheckpoint(affected)
+        Materialize.release(affected)
         affected = nextAffected
       }
       round += 1
@@ -344,12 +346,9 @@ object PageRank {
           .select(col("round"), col("node"), col("score"))
           .localCheckpoint(true)
       }
-    if (wantLedger) roundScores.foreach(Components.freeCheckpoint)
-    else Components.freeCheckpoint(newScores)
-    Components.freeCheckpoint(affected)
-    Components.freeCheckpoint(d)
-    Components.freeCheckpoint(n)
-    e.unpersist(); deg.unpersist()
+    if (wantLedger) roundScores.foreach(Materialize.release(_))
+    else Materialize.release(newScores)
+    Seq(affected, d, n, e, deg).foreach(Materialize.release(_))
     out
   }
 }

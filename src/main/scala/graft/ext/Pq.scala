@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Product quantization (Jégou, Douze & Schmid, "Product Quantization for
   * Nearest Neighbor Search", IEEE TPAMI 33(1), 2011) — the compressed-vector
@@ -90,34 +91,32 @@ object Pq {
     require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
     require(ksub >= 1 && iters >= 0, s"pqTrain: ksub=$ksub iters=$iters")
     val dsub = dim / m
-    val subs = subvectors(c, m, dsub)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // deterministic init: the ksub lowest-id vectors seed every subspace
     val seed = c.orderBy("n_id").limit(ksub).collect()
     // codes are flat LUT indices (s*ksub + code) downstream — a corpus
     // smaller than ksub would silently mis-index lookups, so fail loudly
     require(seed.length == ksub,
       s"pqTrain: corpus has ${seed.length} vectors, need >= ksub=$ksub to seed a dense codebook")
-    var model = PqModel(m, dsub, ksub,
+    val init = PqModel(m, dsub, ksub,
       (for { (r, code) <- seed.zipWithIndex; sub <- 0 until m } yield
         (sub, code, r.getSeq[Double](1).slice(sub * dsub, (sub + 1) * dsub))).toArray)
-    (1 to iters).foreach { _ =>
-      val means = assignCodes(subs, model.codebookDf(spark))
-        .select(col("sub"), col("code"), posexplode(col("x")).as(Seq("pos", "v")))
-        .groupBy("sub", "code", "pos")
-        // exact-decimal mean — raw double avg() merges partials in task
-        // order and would make centroids differ run to run (see ivfTrain)
-        .agg((sum(col("v").cast("decimal(28,14)")) / count(lit(1)))
-          .cast("double").as("mval"))
-        .groupBy("sub", "code")
-        .agg(array_sort(collect_list(struct(col("pos"), col("mval")))).as("dims"))
-        .select(col("sub"), col("code"), expr("transform(dims, d -> d.mval)").as("cv"))
-        .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
-      model = model.copy(codebook = model.codebook.map { case (s, k, old) =>
-        (s, k, means.getOrElse((s, k), old)) })
+    Materialize.using(subvectors(c, m, dsub)) { subs =>
+      (1 to iters).foldLeft(init) { (model, _) =>
+        val means = assignCodes(subs, model.codebookDf(spark))
+          .select(col("sub"), col("code"), posexplode(col("x")).as(Seq("pos", "v")))
+          .groupBy("sub", "code", "pos")
+          // exact-decimal mean — raw double avg() merges partials in task
+          // order and would make centroids differ run to run (see ivfTrain)
+          .agg((sum(col("v").cast("decimal(28,14)")) / count(lit(1)))
+            .cast("double").as("mval"))
+          .groupBy("sub", "code")
+          .agg(array_sort(collect_list(struct(col("pos"), col("mval")))).as("dims"))
+          .select(col("sub"), col("code"), expr("transform(dims, d -> d.mval)").as("cv"))
+          .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
+        model.copy(codebook = model.codebook.map { case (s, k, old) =>
+          (s, k, means.getOrElse((s, k), old)) })
+      }
     }
-    subs.unpersist()
-    model
   }
 
   /** ENCODE: one narrow pass tags each vector with its m codes →

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** SimHash near-duplicate fingerprinting (64-bit).
   *
@@ -83,17 +84,10 @@ object SimHash {
     * operator whose contract is NOVELTY that is a wrong answer, not a
     * recall trade, so it fails loudly (round-12 ADVICE).
     *
-    * Persistence contract (round-12 ADVICE — the exactPairsMd5 contract):
-    * with `materialize = true` (the default) both sig frames are persisted
-    * only for the duration of this call — the novel-id result comes back
-    * PERSISTED (MEMORY_AND_DISK) and fully counted, the sig storage is
-    * already released, and the CALLER OWNS the result's storage (it is
-    * batch-id-sized; `.unpersist()` when done). A per-micro-batch probe
-    * loop therefore never accumulates corpus-sized blocks. Pass
-    * `materialize = false` for a fully LAZY plan with zero storage side
-    * effects — right when the caller passes sig frames it already persists
-    * and owns (the registry's build-cached twins); each consumer of the
-    * result then re-evaluates the sig plans.
+    * `materialize` as in [[MinHashDedup.novelAgainstSigsMd5]]: `true`
+    * caches both sig frames for the call and returns the batch-id-sized
+    * result pinned; `false` returns the lazy plan over sig frames the
+    * caller already caches and owns.
     */
   def novelAgainstSigs(batchIds: DataFrame, batchSigs: DataFrame,
                        corpusSigs: DataFrame, maxDist: Int = 3,
@@ -107,12 +101,8 @@ object SimHash {
     // [[nearDuplicatesFromSigs]] lesson: without it the md5 twin's O(64·T)
     // sig lambda re-evaluates per consumer (measured 31.6 s warm at sf0.1
     // unpersisted vs sub-second persisted, identical bits)
-    val bs = if (materialize)
-      batchSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else batchSigs
-    val cs = if (materialize)
-      corpusSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else corpusSigs
+    val bs = if (materialize) batchSigs.persist() else batchSigs
+    val cs = if (materialize) corpusSigs.persist() else corpusSigs
     def chunked(sigs: DataFrame, as: String, sh: String) = sigs
       .select(col(idCol).as(as), col("simhash").as(sh),
         explode(expr("""transform(sequence(0, 3),
@@ -125,12 +115,10 @@ object SimHash {
     val novel = batchIds.select(col(idCol)).join(matched, Seq(idCol), "left_anti")
     if (!materialize) novel
     else {
-      novel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // count BEFORE releasing the sig frames: materializing the result is
-      // what lets the corpus-sized storage go (the exactPairsMd5 ordering)
-      novel.count()
-      bs.unpersist(blocking = false)
-      cs.unpersist(blocking = false)
+      // pin BEFORE releasing the sig frames: the result is computed from them
+      Materialize.pin(novel)
+      Materialize.release(bs)
+      Materialize.release(cs)
       novel
     }
   }
@@ -157,8 +145,7 @@ object SimHash {
     // the caller owns that storage — this function must not be the one
     // that later evicts it.
     val sigs =
-      if (sigs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (sigs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE) sigs0.persist()
       else sigs0
     val chunked = sigs.select(col(idCol), col("simhash"),
       explode(expr("""transform(sequence(0, 3),

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Exact-substring duplication — the character-level dedup family of
   * Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -62,14 +63,10 @@ object SubstrDedup {
     * (collision-safe; see the object doc).
     *
     * This is the once-per-corpus scan, and the returned ledger comes back
-    * EAGER and PERSISTED: the candidate sliver (which feeds both the
-    * verify aggregation and the final occurrence join) is cached only for
-    * the duration of this call — the occurrence frame is materialized
-    * through it, then the candidates (17 B + a k-char gram per row) are
-    * released and only the 17 B/row ledger stays pinned. The returned
-    * frame IS the storage handle: callers own its lifecycle and
-    * `unpersist()` it when done serving (the query registry holds it per
-    * (app, dir) for the app's life, by design). Ledger size is bounded by
+    * pinned ([[graft.Materialize]]): the candidate sliver (17 B + a k-char
+    * gram per row, feeding both the verify aggregation and the final
+    * occurrence join) is cached only for the call, and only the 17 B/row
+    * ledger stays. Ledger size is bounded by
     * the corpus's actual duplicated content (+ hash collisions), never
     * the corpus — the same bounded-ledger discipline as the CC pair
     * graph.
@@ -87,23 +84,19 @@ object SubstrDedup {
     // (sliver-sized side broadcasts under AQE, so corpus text is scanned,
     // not shuffled)
     val slim = wh.join(hot, Seq("h"), "left_semi").select(col("id"), col("pos"))
-    val cand = slim
-      .join(docs.select(col(idCol).as("id"), col(textCol).as("__t")), Seq("id"))
-      .select(col("id"), col("pos"),
-        col("__t").substr(col("pos").cast("int") + 1, lit(k)).as("gram"))
-      .persist()
-    val dup = cand.groupBy(col("gram"))
-      .agg(count(lit(1)).as("cnt"),
-        min(struct(col("id"), col("pos"))).as("first"))
-      .filter(col("cnt") >= 2)
-    val occ = cand.join(dup, Seq("gram"))
-      .select(col("id"), col("pos"),
-        (col("first.id") === col("id") && col("first.pos") === col("pos"))
-          .as("is_first"))
-      .persist()
-    occ.count()
-    cand.unpersist()
-    occ
+    Materialize.using(slim
+        .join(docs.select(col(idCol).as("id"), col(textCol).as("__t")), Seq("id"))
+        .select(col("id"), col("pos"),
+          col("__t").substr(col("pos").cast("int") + 1, lit(k)).as("gram"))) { cand =>
+      val dup = cand.groupBy(col("gram"))
+        .agg(count(lit(1)).as("cnt"),
+          min(struct(col("id"), col("pos"))).as("first"))
+        .filter(col("cnt") >= 2)
+      Materialize.pin(cand.join(dup, Seq("gram"))
+        .select(col("id"), col("pos"),
+          (col("first.id") === col("id") && col("first.pos") === col("pos"))
+            .as("is_first")))
+    }
   }
 
   /** Duplicated positions → maximal DISJOINT spans

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Triangle counting over an undirected pair graph — the local-clustering
   * primitive (a dedup pair graph's triangle density distinguishes tight
@@ -71,8 +72,8 @@ object Triangles {
       // connectedComponents return contract: callers get a checkpointed
       // frame they can serve without recompute)
       .localCheckpoint(true)
-    Components.freeCheckpoint(e)
-    Components.freeCheckpoint(oriented)
+    Materialize.release(e)
+    Materialize.release(oriented)
     counts
   }
 

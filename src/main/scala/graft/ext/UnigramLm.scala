@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Unigram-LM (SentencePiece-style) tokenizer TRAINING and encoding on
   * Spark — the other half of the tokenizer family beside [[Bpe]]
@@ -148,8 +149,7 @@ object UnigramLm {
       s"unigram: maxWordLen must be in [1, $MaxWordLen], got $maxWordLen")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wf = Bpe.wordFreq(docs, textCol).as[(String, Long)].persist()
-    try {
+    Materialize.using(Bpe.wordFreq(docs, textCol).as[(String, Long)]) { wf =>
       // max(length) over an EMPTY vocab is NULL — fail with a clear message
       // instead of an opaque NPE (round-11 ADVICE)
       val maxLenRow = wf.toDF("word", "freq")
@@ -185,7 +185,7 @@ object UnigramLm {
         r += 1
       }
       UnigramModel(singles, rounds.toSeq)
-    } finally { wf.unpersist(); () }
+    }
   }
 
   /** [[seedPieces]] over an already-built (word, freq) table — train()

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** WordPiece tokenizer TRAINING and encoding on Spark — the BERT-class
   * member of the tokenizer family beside [[Bpe]] (char merges),
@@ -144,10 +145,10 @@ object WordPiece {
         val prev = vocab
         vocab = vocab.map { case (syms, f) => (mergeWord(syms, a, b), f) }
           .localCheckpoint(true)
-        Components.freeCheckpoint(prev)
+        Materialize.release(prev)
       }
     }
-    Components.freeCheckpoint(vocab)
+    Materialize.release(vocab)
     merges.toSeq
   }
 
@@ -210,10 +211,10 @@ object WordPiece {
         vocab = vocab.map { case (syms, f) =>
           (ps.foldLeft(syms) { case (s, (a, b)) => mergeWord(s, a, b) }, f)
         }.localCheckpoint(true)
-        Components.freeCheckpoint(prev)
+        Materialize.release(prev)
       }
     }
-    Components.freeCheckpoint(vocab)
+    Materialize.release(vocab)
     merges.toSeq
   }
 

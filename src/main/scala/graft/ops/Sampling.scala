@@ -169,7 +169,12 @@ object Sampling {
     * `(keyCol, quota)` with `Σ quota = total` (when `Σ weight > 0`).
     */
   def allocateQuotas(counts: DataFrame, keyCol: String, weightCol: String,
-                     total: Long): DataFrame = {
+                     total: Long): DataFrame =
+    quotasWithLayout(counts, keyCol, weightCol, total)._2
+
+  /** [[allocateQuotas]]'s plan with the checkpointed rank layout it reads. */
+  private def quotasWithLayout(counts: DataFrame, keyCol: String, weightCol: String,
+                               total: Long): (DataFrame, DataFrame) = {
     require(total >= 0, s"allocateQuotas: total must be >= 0, got $total")
     val w = counts.select(col(keyCol), col(weightCol).cast("long").as("__w"))
     val sw = w.agg(sum(col("__w")).as("__sw"))
@@ -177,14 +182,14 @@ object Sampling {
       .withColumn("__q", expr(s"CAST($total AS BIGINT) * __w div __sw"))
       .withColumn("__rem", expr(s"CAST($total AS BIGINT) * __w % __sw"))
     val left = base.agg((lit(total) - sum(col("__q"))).as("__left"))
-    val ranked = graft.ext.Packing.runningTotalBy(
+    val (layout, ranked) = graft.ext.Packing.runningTotalLayout(
       base.withColumn("__one", lit(1L)),
-      Seq(col("__rem").desc, col(keyCol)), "__one")
-      .withColumnRenamed("cum", "__rk")
-    ranked.crossJoin(broadcast(left))
+      Seq(col("__rem").desc, col(keyCol)), "__one", numPartitions = 0)
+    (layout, ranked.withColumnRenamed("cum", "__rk")
+      .crossJoin(broadcast(left))
       .select(col(keyCol),
         (col("__q") + when(col("__rk") <= col("__left"), 1L).otherwise(0L))
-          .as("quota"))
+          .as("quota")))
   }
 
   /** Deterministic INTERLEAVED mixture schedule — the order a data loader
@@ -204,27 +209,30 @@ object Sampling {
     * ([[graft.ext.Packing.runningTotalByGroup]]) — no global or per-domain
     * sort window ever touches data.
     *
-    * Output: `(input columns…, mix_rank, pos)` for the selected docs.
+    * Output: `(input columns…, mix_rank, pos)` for the selected docs, as a
+    * checkpoint: the two rank layouts it was computed from are freed.
     */
   def interleaveSchedule(df: DataFrame, domainCol: String, total: Long,
                          idCol: String = "doc_id", salt: String = "mix"): DataFrame = {
     require(total >= 1, s"interleaveSchedule: total must be >= 1, got $total")
     val counts = df.groupBy(col(domainCol)).agg(count(lit(1)).as("__c"))
-    val quotas = allocateQuotas(counts, domainCol, "__c", total)
-      .filter(col("quota") > 0)
-      .withColumnRenamed(domainCol, "__qd")
-    val ranked = graft.ext.Packing.runningTotalByGroup(
+    val (quotaLayout, quotas) = quotasWithLayout(counts, domainCol, "__c", total)
+    val (rankLayout, ranked) = graft.ext.Packing.runningTotalByGroupLayout(
       df.withColumn("__skey",
           md5(concat(lit(s"$salt:"), col(idCol).cast("string"))))
         .withColumn("__one", lit(1L)),
-      domainCol, Seq(col("__skey"), col(idCol)), "__one")
-      .withColumnRenamed("cum", "mix_rank")
+      domainCol, Seq(col("__skey"), col(idCol)), "__one", numPartitions = 0)
+    val out = ranked.withColumnRenamed("cum", "mix_rank")
       .drop("__skey", "__one")
-    ranked.join(broadcast(quotas), col(domainCol) <=> col("__qd"))
+      .join(broadcast(quotas.filter(col("quota") > 0)
+        .withColumnRenamed(domainCol, "__qd")), col(domainCol) <=> col("__qd"))
       .filter(col("mix_rank") <= col("quota"))
       .withColumn("pos",
         expr(s"(mix_rank - 1) * CAST($total AS BIGINT) div quota"))
       .drop("__qd", "quota")
+      .localCheckpoint(true)
+    Seq(quotaLayout, rankLayout).foreach(graft.Materialize.release(_))
+    out
   }
 
   /** Stratified modulo sampling: per-stratum 1-in-k rates (corpus

@@ -73,10 +73,11 @@ object IncrementalMedallion {
     val in = spark.readStream.schema(schema).parquet(inDir)
     val q = in.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val prepared = prepare(batch).persist()
-        try sinks.foreach { case (f, out) =>
-          f(prepared).write.mode("overwrite").parquet(s"$out/batch=$id")
-        } finally prepared.unpersist(): Unit
+        graft.Materialize.using(prepare(batch)) { prepared =>
+          sinks.foreach { case (f, out) =>
+            f(prepared).write.mode("overwrite").parquet(s"$out/batch=$id")
+          }
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

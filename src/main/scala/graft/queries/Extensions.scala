@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Build, Tables}
+import graft.{Build, Materialize, Tables}
 import graft.ext.{Audio, Components, CorpusDiff, Curation, ExactDedup, JaccardDedup, MinHashDedup, MinHashMergeAgg, Multimodal, Pq, SimHash, Similarity, TextOps}
 
 /** Training-data pipeline extensions (SURVEY.md §7.3 M3): dedup family,
@@ -27,9 +27,8 @@ object Extensions {
     Build[(Similarity.IvfModel, DataFrame)]("ivf_train_assign", v => Seq(v._2)) { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val model = Similarity.ivfTrain(emb, nlist = 16, iters = 2)
-      val assigned = Similarity.ivfAssign(emb, model).persist()
-      assigned.count() // materialize eagerly: the probe below must not pay assignment
-      (model, assigned)
+      // pinned: the probe below must not pay assignment
+      (model, Materialize.pin(Similarity.ivfAssign(emb, model)))
     }
 
   /** The AUTO-NLIST twin of [[ivfFor]] (round-13 verdict item 1): the
@@ -54,9 +53,7 @@ object Extensions {
       val k = Similarity.autoNlist(emb.count(), targetClusterSize = 128L,
         maxNlist = Similarity.centroidCap(dim))
       val model = Similarity.ivfTrain(emb, nlist = k, iters = 2)
-      val assigned = Similarity.ivfAssign(emb, model).persist()
-      assigned.count()
-      (model, assigned)
+      (model, Materialize.pin(Similarity.ivfAssign(emb, model)))
     }
 
   /** Typo-augmented documents for the edit-distance entries: docs with
@@ -67,9 +64,9 @@ object Extensions {
     * operator on.
     */
   /** Per-(session, corpus, entry) OWNERSHIP SLOT for library calls whose
-    * results (or internally-persisted inputs) come back under the
-    * caller-owns-storage contract (`estimateVsExactMd5`, the `*FromSigs`
-    * entry points, the EditDist family): each registry invocation parks
+    * results (or internally-persisted inputs) the caller owns under the
+    * [[Materialize]] rule (`estimateVsExactMd5`, the pair joins, the
+    * `*FromSigs` entry points, the EditDist family): each registry invocation parks
     * the new frame here, and the PREVIOUS one is released IF its plan
     * genuinely differs, so warm bench repetitions hold at most ONE
     * persisted frame per entry (round-14 ADVICE).
@@ -94,7 +91,7 @@ object Extensions {
       .foreach { prev =>
         if ((prev ne df) &&
             !prev.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))
-          prev.unpersist(blocking = false)
+          Materialize.release(prev)
       }
     df
   }
@@ -115,9 +112,7 @@ object Extensions {
     Build[(Pq.PqModel, DataFrame)]("pq_train_encode", v => Seq(v._2)) { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val model = Pq.pqTrain(emb, m = 8, ksub = 16, iters = 2)
-      val codes = Pq.pqEncode(emb, model).persist()
-      codes.count() // materialize: probes must not pay encoding
-      (model, codes)
+      (model, Materialize.pin(Pq.pqEncode(emb, model))) // probes must not pay encoding
     }
 
   /** Scalar quantization: same train-once shape (model state = 2·d range
@@ -128,9 +123,7 @@ object Extensions {
     Build[(graft.ext.Sq.SqModel, DataFrame)]("sq_train_encode", v => Seq(v._2)) { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val model = graft.ext.Sq.sqTrain(emb)
-      val codes = graft.ext.Sq.sqEncode(emb, model).persist()
-      codes.count() // materialize: probes must not pay encoding
-      (model, codes)
+      (model, Materialize.pin(graft.ext.Sq.sqEncode(emb, model))) // probes must not pay encoding
     }
 
   /** Linear probe: train-once model state like IVF/PQ — the ridge solve
@@ -158,8 +151,7 @@ object Extensions {
     * measures exactly what an eval-set change pays.
     */
   private val decontamLedgerFor = Build[String]("decontam_ledger") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-decontam").toString + "/st"
+    val root = Build.scratch("graft-decontam") + "/st"
     val train = Tables.documents(s, dir).filter(col("source") =!= "src0")
     graft.streaming.DecontamLedgerStream.maintain(
       train.filter(col("doc_id") % 7 =!= 0), 0L, root, n = 3)
@@ -177,7 +169,7 @@ object Extensions {
     */
   private def threeWaves(s: SparkSession, ledger: graft.streaming.SegmentLedger,
                          corpus: DataFrame): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft-ledger").toString + "/st"
+    val root = Build.scratch("graft-ledger") + "/st"
     ledger.maintain(corpus.filter(col("doc_id") % 3 === 1), 0L, root)
     ledger.maintain(corpus.filter(col("doc_id") % 3 === 2), 1L, root)
     ledger.compact(s, root)
@@ -223,23 +215,15 @@ object Extensions {
   private val minhashIncrSigsFor =
     Build[(DataFrame, DataFrame)]("minhash_incr_sigs", v => Seq(v._1, v._2)) { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val bs = MinHashDedup.signaturesMd5(docs.filter(col("doc_id") % 10 === 0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cs = MinHashDedup.signaturesMd5(docs.filter(col("doc_id") % 10 =!= 0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bs.count(); cs.count()
-      (bs, cs)
+      (Materialize.pin(MinHashDedup.signaturesMd5(docs.filter(col("doc_id") % 10 === 0))),
+        Materialize.pin(MinHashDedup.signaturesMd5(docs.filter(col("doc_id") % 10 =!= 0))))
     }
 
   private val simhashIncrSigsFor =
     Build[(DataFrame, DataFrame)]("simhash_incr_sigs", v => Seq(v._1, v._2)) { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val bs = SimHash.signaturesMd5(docs.filter(col("doc_id") % 10 === 0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cs = SimHash.signaturesMd5(docs.filter(col("doc_id") % 10 =!= 0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bs.count(); cs.count()
-      (bs, cs)
+      (Materialize.pin(SimHash.signaturesMd5(docs.filter(col("doc_id") % 10 === 0))),
+        Materialize.pin(SimHash.signaturesMd5(docs.filter(col("doc_id") % 10 =!= 0))))
     }
 
   /** Exact-content ledger per corpus
@@ -294,8 +278,7 @@ object Extensions {
     * re-ingests them schema-pinned.
     */
   private val jsonlExportFor = Build[String]("jsonl_export") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-jsonl").toString + "/export"
+    val root = Build.scratch("graft-jsonl") + "/export"
     graft.io.Jsonl.write(Tables.documents(s, dir), root)
     root
   }
@@ -304,11 +287,11 @@ object Extensions {
     * schedule (total 300, the x_mix_schedule fixture) → 512-token
     * sequences packed in consumption order → 8 sequences per shard →
     * written once (data + manifest, dual-_SUCCESS). The entry serves the
-    * written manifest.
+    * written manifest; the schedule and packed checkpoints it was written
+    * from are freed, so the build holds no storage.
     */
   private val shardExportFor = Build[String]("pack_shards_write") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-shards").toString + "/export"
+    val root = Build.scratch("graft-shards") + "/export"
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"),
       TextOps.nWords(col("text")).cast("long").as("n_tokens"))
     val sched = graft.ops.Sampling.interleaveSchedule(docs, "source", total = 300L)
@@ -317,6 +300,7 @@ object Extensions {
       .packBinsBy(sched, order, "n_tokens", budget = 512L)
       .withColumn("shard_id", expr("seq_id div 8"))
     graft.io.Shards.write(packed, root, order)
+    Seq(sched, packed).foreach(Materialize.release(_))
     root
   }
 
@@ -336,7 +320,7 @@ object Extensions {
     * it forever after; here it lands in a temp dir per application run).
     */
   private val ivfLayoutFor = Build[String]("ivf_layout_write") { (s, dir) =>
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-layout").toString + "/assigned"
+    val path = Build.scratch("graft-ivf-layout") + "/assigned"
     Similarity.ivfWriteAssignment(ivfFor(s, dir)._2, path)
     path
   }
@@ -349,8 +333,7 @@ object Extensions {
     * centroid nearest-assignment SQL over the full table.
     */
   private val annLedgerFor = Build[String]("ann_index_ledger") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ann-ledger").toString + "/layout"
+    val root = Build.scratch("graft-ann-ledger") + "/layout"
     val (model, assigned) = ivfFor(s, dir)
     val baseline = graft.streaming.VectorIndexStream
       .quantizationError(assigned, model)
@@ -369,8 +352,7 @@ object Extensions {
     * oracle is the DIRECT aggregate over the full table.
     */
   private val aggLedgerFor = Build[String]("agg_ledger") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-agg-ledger").toString + "/state"
+    val root = Build.scratch("graft-agg-ledger") + "/state"
     val ev = Tables.events(s, dir)
       .withColumn("hr", expr("unix_timestamp(ts) div 3600 % 24"))
     (0 until 3).foreach { w =>
@@ -390,8 +372,7 @@ object Extensions {
     * x_text_inverted_index SQL verbatim).
     */
   private val indexLedgerFor = Build[String]("index_ledger") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-index-ledger").toString + "/state"
+    val root = Build.scratch("graft-index-ledger") + "/state"
     val docs = Tables.documents(s, dir)
     (0 until 3).foreach { w =>
       graft.streaming.IndexLedgerStream.maintain(
@@ -402,12 +383,10 @@ object Extensions {
 
   /** Per-node triangle counts over the cached pair graph — computed once
     * per corpus (the CC-ledger discipline): both graph entries serve from
-    * this persisted result instead of re-running the wedge joins.
+    * this checkpointed result instead of re-running the wedge joins.
     */
   private val triFor = Build[DataFrame]("tri_counts", Seq(_)) { (s, dir) =>
-    val t = graft.ext.Triangles.triangleCounts(ccPairsFor(s, dir)).persist()
-    t.count() // materialize: consumers must not re-run the wedge joins
-    t
+    graft.ext.Triangles.triangleCounts(ccPairsFor(s, dir))
   }
 
   /** The near-dup pair graph is the expensive half of the ledger (jaccard
@@ -415,9 +394,7 @@ object Extensions {
     * propagation and star-contraction component entries.
     */
   private val ccPairsFor = Build[DataFrame]("cc_pair_graph", Seq(_)) { (s, dir) =>
-    val p = JaccardDedup.similarPairs(Tables.documents(s, dir), threshold = 0.5).persist()
-    p.count() // materialize: consumers must not re-run the pair join
-    p
+    JaccardDedup.similarPairs(Tables.documents(s, dir), threshold = 0.5)
   }
 
   /** Cosine pair graph, same once-per-corpus ledger treatment as
@@ -426,10 +403,8 @@ object Extensions {
     * while its jaccard sibling served from a persisted build.
     */
   private val cosinePairsFor = Build[DataFrame]("cosine_pair_graph", Seq(_)) { (s, dir) =>
-    val p = graft.ext.CosineJoin.similarPairs(Tables.documents(s, dir),
-      threshold = 0.4, maxDf = 100L, ngram = 3).persist()
-    p.count() // materialize: consumers must not re-run the pair join
-    p
+    graft.ext.CosineJoin.similarPairs(Tables.documents(s, dir),
+      threshold = 0.4, maxDf = 100L, ngram = 3)
   }
 
   /** Exact-Jaccard truth pair set — x_dedup_minhash_recall's eval
@@ -438,10 +413,6 @@ object Extensions {
     * the other pair graphs: built once per corpus, persisted, itemized.
     */
   private val minhashTruthFor = Build[DataFrame]("minhash_truth_pairs", Seq(_)) { (s, dir) =>
-    // exactPairsMd5's default already returns the pairs persisted and
-    // counted; this build takes OWNERSHIP of that storage — a rebuild
-    // releases it (the method's documented caller-must-unpersist
-    // contract, round-11 ADVICE)
     MinHashDedup.exactPairsMd5(Tables.documents(s, dir), minJaccard = 0.5)
   }
 
@@ -450,21 +421,16 @@ object Extensions {
     * quadratic by spec, so one build serves every consumer.
     */
   private val embedTruthFor = Build[DataFrame]("embed_truth_pairs", Seq(_)) { (s, dir) =>
-    val p = Similarity.embedPairsExact(Tables.embeddings(s, dir),
-      threshold = 0.4).persist()
-    p.count() // materialize: serves must not re-run the pair join
-    p
+    // pinned: serves must not re-run the pair join
+    Materialize.pin(Similarity.embedPairsExact(Tables.embeddings(s, dir), threshold = 0.4))
   }
 
   /** k-core membership, ledger treatment: the 6-round peel (one degree
     * agg + two semi-joins per round) runs once per corpus; serves read
-    * the persisted result.
+    * the checkpointed result.
     */
   private val kcoreFor = Build[DataFrame]("kcore_ledger", Seq(_)) { (s, dir) =>
-    val k = graft.ext.KCore.kCoreRounds(ccPairsFor(s, dir), k = 2, rounds = 6)
-      .persist()
-    k.count() // materialize: serves must not re-run the peel
-    k
+    graft.ext.KCore.kCoreRounds(ccPairsFor(s, dir), k = 2, rounds = 6)
   }
 
   /** Component labels per corpus — the "dedup ledger": computed once (the
@@ -495,12 +461,9 @@ object Extensions {
       val pairs = ccPairsFor(s, dir)
       val inBatch = (c: org.apache.spark.sql.Column) => c % 7 === 0
       val oldEdges = pairs.filter(!inBatch(col("doc_a")) && !inBatch(col("doc_b")))
-      val newEdges = pairs.filter(inBatch(col("doc_a")) || inBatch(col("doc_b")))
-        .persist()
-      newEdges.count()
-      val ledger = Components.connectedComponents(oldEdges).persist()
-      ledger.count()
-      (ledger, newEdges)
+      val newEdges = Materialize.pin(
+        pairs.filter(inBatch(col("doc_a")) || inBatch(col("doc_b"))))
+      (Components.connectedComponents(oldEdges), newEdges)
     }
 
   /** Trained BPE merge list per corpus — train-once model state like the
@@ -538,9 +501,6 @@ object Extensions {
     * entries all serve from it.
     */
   private val substrOccFor = Build[DataFrame]("substr_dup_scan", Seq(_)) { (s, dir) =>
-    // dupOccurrences returns the ledger eager + persisted (and has
-    // already released its internal candidate cache); this build holds
-    // the only pin, for the app's life by design
     graft.ext.SubstrDedup.dupOccurrences(Tables.documents(s, dir), k = 40)
   }
 
@@ -690,7 +650,8 @@ object Extensions {
     // Length-ratio prefilter (|Δchars|·5 ≤ sum ⟺ ratio ≤ 1.5) is part of
     // the operator's spec, mirrored in the oracle.
     "x_dedup_jaccard" -> ((s: SparkSession, dir: String) => {
-      JaccardDedup.similarPairs(Tables.documents(s, dir), threshold = 0.5)
+      owned(s, dir, "x_dedup_jaccard")(
+        JaccardDedup.similarPairs(Tables.documents(s, dir), threshold = 0.5))
     }),
 
     // pair graph → dedup decisions: connected components over the jaccard
@@ -900,7 +861,8 @@ object Extensions {
     // only genuine phrase-level near-dups (the hashed-shingle scale form
     // is MinHashDedup; this one is oracle-mirrorable)
     "x_dedup_jaccard_3gram" -> ((s: SparkSession, dir: String) => {
-      JaccardDedup.similarPairs(Tables.documents(s, dir), threshold = 0.2, ngram = 3)
+      owned(s, dir, "x_dedup_jaccard_3gram")(
+        JaccardDedup.similarPairs(Tables.documents(s, dir), threshold = 0.2, ngram = 3))
     }),
 
     // asymmetric containment |A∩B|/|A| on trigram sets, corpus-wide: the
@@ -910,7 +872,8 @@ object Extensions {
     // sharing ≥1 trigram with df ≤ 100 — is mirrored in the oracle, and
     // at this fixture's df ceiling (25 at sf0.1) the cap changes nothing.
     "x_dedup_containment" -> ((s: SparkSession, dir: String) => {
-      JaccardDedup.containmentPairs(Tables.documents(s, dir), threshold = 0.4, ngram = 3)
+      owned(s, dir, "x_dedup_containment")(
+        JaccardDedup.containmentPairs(Tables.documents(s, dir), threshold = 0.4, ngram = 3))
     }),
 
     // MinHash signatures (deterministic; the LSH pair search is asserted in
@@ -2705,10 +2668,9 @@ object Extensions {
     * LIVE — its point is to measure and oracle the fingerprinting itself.
     */
   private val audioFpFor = Build[DataFrame]("audio_fp_ledger", Seq(_)) { (s, dir) =>
-    val sigs = Audio.fingerprints(
-      Audio.dedupWavFromDocuments(s, Tables.documents(s, dir))).persist()
-    sigs.count() // materialize: probes must not pay the WAV parse
-    sigs
+    // pinned: probes must not pay the WAV parse
+    Materialize.pin(Audio.fingerprints(
+      Audio.dedupWavFromDocuments(s, Tables.documents(s, dir))))
   }
 
   /** Audio-dedup component ledger per corpus — built once like [[mmCcFor]]. */
@@ -2725,11 +2687,10 @@ object Extensions {
     * LIVE: its point is to measure and oracle the hashing itself.
     */
   private val mmSigsFor = Build[DataFrame]("mm_sig_ledger", Seq(_)) { (s, dir) =>
-    val sigs = Multimodal.perceptualHashes(
+    // pinned: probes must not pay the PNG decode
+    Materialize.pin(Multimodal.perceptualHashes(
       Multimodal.dedupMediaFromDocuments(s, Tables.documents(s, dir)))
-      .select(col("media_id"), col("dhash")).persist()
-    sigs.count() // materialize: probes must not pay the PNG decode
-    sigs
+      .select(col("media_id"), col("dhash")))
   }
 
   /** Image-dedup component ledger per corpus — built once like [[ccFor]]

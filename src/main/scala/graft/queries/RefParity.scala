@@ -40,7 +40,7 @@ object RefParity {
     * the shared ref_silver_clean oracle SQL checks.
     */
   private val incrementalSilverFor = graft.Build[String]("incremental_silver_staging") { (s, dir) =>
-    val root = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val root = graft.Build.scratch("graft-incr")
     val landing = s"$root/landing"; val out = s"$root/silver"
     val orders = graft.Tables.orders(s, dir)
     // wave 1: even order keys land, run; wave 2: odd keys land, run again

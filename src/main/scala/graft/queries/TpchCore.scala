@@ -35,8 +35,7 @@ object TpchCore {
     // them as distinct (round-10 ADVICE)
     val tok = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bucketed").toString
+    val root = graft.Build.scratch("graft-bucketed")
     val oT = s"graft_orders_bkt_$tok"
     val lT = s"graft_lineitem_bkt_$tok"
     graft.io.Sinks.writeBucketed(Tables.orders(s, dir), oT,

@@ -118,17 +118,14 @@ object WebPipeline {
         concat(lit("s:"), col("l_suppkey").cast("string")).as("s"),
         (col("o_orderkey") % 7 =!= 0).as("old"))
       .groupBy(col("c"), col("s")).agg(max(col("old")).as("has_old"))
-      .persist()
-    val fullE = bothDirections(tagged).persist()
-    fullE.count() // materialize: consumers must not re-run the pair join
-    val oldE = bothDirections(tagged.filter(col("has_old"))).persist()
-    oldE.count()
-    val newE = bothDirections(tagged.filter(!col("has_old"))).persist()
-    newE.count()
-    tagged.unpersist() // the three views are materialized; drop the base
-    val ledgerOld = PageRank.pagerankRounds(oldE, iters = 10).persist()
-    ledgerOld.count()
-    PrState(fullE, oldE, newE, ledgerOld)
+    // the three views are pinned (consumers must not re-run the pair
+    // join), then the base is dropped
+    val (fullE, oldE, newE) = graft.Materialize.using(tagged) { t =>
+      (graft.Materialize.pin(bothDirections(t)),
+        graft.Materialize.pin(bothDirections(t.filter(col("has_old")))),
+        graft.Materialize.pin(bothDirections(t.filter(!col("has_old")))))
+    }
+    PrState(fullE, oldE, newE, PageRank.pagerankRounds(oldE, iters = 10))
   }
 
   /** The POST-batch round ledger — the incremental update's output,
@@ -136,17 +133,13 @@ object WebPipeline {
     */
   private val prUpdFor = graft.Build[DataFrame]("pr_incr_update", Seq(_)) { (s, dir) =>
     val st = prPreFor(s, dir)
-    val lf = PageRank.incrementalLedger(
-      st.ledgerOld, st.fullE, st.newE, iters = 10).persist()
-    lf.count()
-    lf
+    PageRank.incrementalLedger(st.ledgerOld, st.fullE, st.newE, iters = 10)
   }
 
   private val prStreamFor = graft.Build[String]("pagerank_stream_ledger") { (s, dir) =>
     val st = prPreFor(s, dir)
     val updated = prUpdFor(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pr-stream").toString + "/st"
+    val root = graft.Build.scratch("graft-pr-stream") + "/st"
     graft.streaming.PageRankLedgerStream
       .commitPrecomputed(st.oldE, 0L, root, st.ledgerOld)
     graft.streaming.PageRankLedgerStream
@@ -163,8 +156,7 @@ object WebPipeline {
     * (`x_text_lm_score`) trains on the scored corpus itself.
     */
   private val lmLedgerFor = graft.Build[String]("lm_count_ledger") { (s, dir) =>
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-lm-ledger").toString + "/st"
+    val root = graft.Build.scratch("graft-lm-ledger") + "/st"
     val docs = Tables.documents(s, dir)
     graft.streaming.LmLedgerStream.maintain(
       docs.filter(col("doc_id") % 3 === 1), 0L, root)
@@ -348,8 +340,7 @@ object WebPipeline {
     * API), then every read goes through the real binaryFile + parser path.
     */
   private val warcDirFor = graft.Build[String]("warc_archives") { (s, dir) =>
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-warc-crawl").toString + "/archives"
+    val out = graft.Build.scratch("graft-warc-crawl") + "/archives"
     graft.io.Warc.writeArchives(
       Tables.documents(s, dir).select(col("doc_id"), plantedHtml.as("text")),
       out)

@@ -62,8 +62,7 @@ object DecontamLedgerStream {
     // pinned so the batch's upstream plan runs once across the emptiness
     // gate and the merge job (the PageRankLedgerStream.maintain pattern);
     // micro-batch-sized, dropped before return
-    val pinned = docs.select(col(idCol), col(textCol)).persist()
-    try {
+    graft.Materialize.using(docs.select(col(idCol), col(textCol))) { pinned =>
       if (!pinned.isEmpty) {
         val state = VersionedState.current(spark, root, StateSchema)
         VersionedState.commit(
@@ -71,7 +70,7 @@ object DecontamLedgerStream {
           batchId, root)
         SegmentStore.pinParams(spark, root, Seq("n" -> n.toLong))
       }
-    } finally { pinned.unpersist(blocking = false): Unit }
+    }
   }
 
   /** The eval-side probe: (doc_id, n_overlap) for every maintained

@@ -47,23 +47,23 @@ object LmLedgerStream {
     * side: one-word documents have no bigrams but still owe their word
     * counts to every later denominator.
     *
-    * `docs` — the caller's frame — is persisted for the call and
-    * unpersisted on return; foreachBatch micro-batches are fresh per call.
+    * `docs` — the caller's frame — is cached for the call only;
+    * foreachBatch micro-batches are fresh per call.
     */
   def maintain(docs: DataFrame, batchId: Long, root: String): Unit = {
     val spark = docs.sparkSession
     SegmentStore.validateParams(spark, root, Params)
     // the batch is pinned so the bigram write re-reads cached rows, the
     // unigram aggregate so the gate and its write share one computation
-    val src = docs.persist()
-    val u = uni.rows(src).persist()
-    try {
-      if (!u.isEmpty) {
-        bi.write(bi.rows(src), s"$root/bi/batch=$batchId")
-        uni.write(u, s"$root/uni/batch=$batchId")
-        SegmentStore.pinParams(spark, root, Params)
+    graft.Materialize.using(docs) { src =>
+      graft.Materialize.using(uni.rows(src)) { u =>
+        if (!u.isEmpty) {
+          bi.write(bi.rows(src), s"$root/bi/batch=$batchId")
+          uni.write(u, s"$root/uni/batch=$batchId")
+          SegmentStore.pinParams(spark, root, Params)
+        }
       }
-    } finally { u.unpersist(); src.unpersist(); () }
+    }
   }
 
   /** Attach [[maintain]] to a stream; its restart re-delivers an

@@ -74,21 +74,20 @@ object PageRankLedgerStream {
     // pin the batch so its upstream plan runs ONCE — the emptiness gate
     // previously re-ran it before the parquet write (round-11 ADVICE);
     // micro-batch-sized state, dropped before the rounds job starts
-    val pinned = newEdges.select(col("src"), col("dst")).persist()
-    try {
+    graft.Materialize.using(newEdges.select(col("src"), col("dst"))) { pinned =>
       if (!pinned.isEmpty) {
         val spark = pinned.sparkSession
         pinned.write.mode("overwrite").parquet(s"$root/edges/batch=$batchId")
         // read the batch back from its own committed dir so replay folds
         // byte-identical content
         val batch = spark.read.parquet(s"$root/edges/batch=$batchId")
-        pinned.unpersist(blocking = false)
+        graft.Materialize.release(pinned)
         val prior = VersionedState.current(spark, s"$root/rounds", LedgerSchema)
         val updated = graft.ext.PageRank.incrementalLedger(
           prior, edges(spark, root), batch, iters, scale, dampNum, dampDen)
         VersionedState.commit(updated, batchId, s"$root/rounds")
       }
-    } finally { pinned.unpersist(blocking = false): Unit }
+    }
   }
 
   /** WARM-START commit — the batch-engine → stream handoff (round-11

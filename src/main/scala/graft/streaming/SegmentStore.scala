@@ -188,13 +188,12 @@ class SegmentLedger(val schema: StructType,
     validate(docs.sparkSession, root)
     // pinned so the batch's upstream plan runs once across the emptiness
     // gate and the write
-    val state = rows(docs).persist()
-    try {
+    graft.Materialize.using(rows(docs)) { state =>
       if (!state.isEmpty) {
         write(state, s"$root/batch=$batchId")
         if (params.nonEmpty) SegmentStore.pinParams(docs.sparkSession, root, params)
       }
-    } finally { state.unpersist(); () }
+    }
   }
 
   /** Overwrite one segment directory with `state`. */

@@ -53,9 +53,8 @@ object VectorIndexStream {
                baselineError: Double, maxDriftRatio: Double = 2.0): Unit = {
     require(maxDriftRatio > 0, s"maxDriftRatio must be > 0, got $maxDriftRatio")
     if (!batch.isEmpty) {
-      val assigned = graft.ext.Similarity.ivfAssign(batch, model)
-        .persist() // two consumers: the gate and the write — assign once
-      try {
+      // two consumers: the gate and the write — assign once
+      graft.Materialize.using(graft.ext.Similarity.ivfAssign(batch, model)) { assigned =>
         val err = quantizationError(assigned, model)
         // a near-zero training baseline would make any real batch "drift";
         // floor it at 1e-9 so the ratio stays meaningful
@@ -68,7 +67,7 @@ object VectorIndexStream {
         // clustered by cid, each list is ≤ 1 file per segment (unclustered:
         // tasks × nlist slivers — 1111 files for 2000 rows at sf0.1)
         Ledger.write(assigned, s"$root/batch=$batchId")
-      } finally { assigned.unpersist(); () }
+      }
     }
   }
 

@@ -133,7 +133,7 @@ object VersionedState {
     val willOverwrite = f.exists(new org.apache.hadoop.fs.Path(root, version))
     val snap = if (willOverwrite) updated.localCheckpoint(true) else updated
     try snap.write.mode("overwrite").parquet(s"$root/$version")
-    finally if (willOverwrite) graft.ext.Components.freeCheckpoint(snap)
+    finally if (willOverwrite) graft.Materialize.release(snap)
     txnId.foreach { t =>
       val marker = new org.apache.hadoop.fs.Path(s"$root/$version", "_TXN")
       val mo = f.create(marker, true)

@@ -9,7 +9,10 @@ package graft.tools
   * Per name: one cold first-touch (dependencies may build inside it — the
   * nested costs land in their own `graft.Build.times` rows, printed at
   * the end), then N `rebuild` reps with dependencies cached; the rep
-  * median is the contention-robust exclusive cost.
+  * median is the contention-robust exclusive cost. After a build's last
+  * rep it also prints what the session then holds in cached storage
+  * (`getRDDStorageInfo`: RDD count, memory + disk bytes), so listing
+  * every build shows how much each one leaves pinned.
   */
 object BuildBench {
   def main(args: Array[String]): Unit = {
@@ -33,8 +36,11 @@ object BuildBench {
       }
       val cold = run()
       val rs = Seq.fill(reps)(run()).sorted
-      System.err.println(f"[buildbench] $name cold=$cold%.2f reps=${rs.map(r => f"$r%.2f").mkString(",")}")
-      s""""$name":{"cold":$cold,"reps":[${rs.mkString(",")}],"median":${rs(rs.size / 2)}}"""
+      val held = spark.sparkContext.getRDDStorageInfo
+      val bytes = held.map(i => i.memSize + i.diskSize).sum
+      System.err.println(f"[buildbench] $name cold=$cold%.2f reps=${rs.map(r => f"$r%.2f").mkString(",")} " +
+        s"cached_rdds=${held.length} cached_bytes=$bytes")
+      s""""$name":{"cold":$cold,"reps":[${rs.mkString(",")}],"median":${rs(rs.size / 2)},"cached_rdds":${held.length},"cached_bytes":$bytes}"""
     }
     val buildRows = graft.Build.times.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")

@@ -48,6 +48,24 @@ class BuildSpec extends SparkSpec {
     Seq(second, dep(spark, "d")).foreach(_.unpersist(blocking = true))
   }
 
+  test("rebuild frees a checkpoint value's blocks; a dependency's blocks stay") {
+    val dep = Build[DataFrame]("spec_ck_dep", Seq(_)) { (s, _) =>
+      Materialize.pin(s.range(10).toDF("id"))
+    }
+    val ck = Build[DataFrame]("spec_ck", Seq(_)) { (s, dir) =>
+      dep(s, dir).selectExpr("id * 3 AS v").localCheckpoint(true)
+    }
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    val old = ck(spark, "c").queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    assert(cached.contains(old))
+    ck.rebuild(spark, "c")
+    assert(!cached.contains(old))
+    assert(dep(spark, "c").storageLevel != StorageLevel.NONE)
+    assert(ck(spark, "c").count() == 10)
+    Seq(ck(spark, "c"), dep(spark, "c")).foreach(Materialize.release(_, blocking = true))
+  }
+
   test("sole is the value for exactly one entry, None for zero or two") {
     val b = Build("spec_sole") { (_, dir) => dir }
     assert(b.sole.isEmpty)
