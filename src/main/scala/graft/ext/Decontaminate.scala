@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * always many orders below the corpus), so its distinct n-gram set is
   * sketchable. The corpus side explodes to (doc_id, ngram) once, passes a
   * broadcast bloom prescreen ([[graft.ops.BloomJoin]] — the same
-  * expression pair AQE injects for runtime filters), and only the
+  * expression pair AQE injects for runtime filters, sized to the eval
+  * set's distinct n-gram count at 3% false positives), and only the
   * surviving sliver reaches the exact-match shuffle. False positives die
   * in the exact join, so the output is EXACT — the bloom only cuts the
   * exchange volume, which is what matters when the left side is 100 TB of
-  * text n-grams. No driver-side data state beyond the sketch bytes.
+  * text n-grams. No driver-side data state beyond the sketch bytes
+  * (about 0.9 B per eval n-gram).
   */
 object Decontaminate {
 
@@ -64,38 +66,21 @@ object Decontaminate {
     */
   def contaminated(train: DataFrame, evalSet: DataFrame, n: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text",
-                   normalize: Boolean = false,
-                   expectedEvalNgrams: Long = 1000000L,
-                   bloomBits: Long = 8L * 1024 * 1024): DataFrame = {
+                   normalize: Boolean = false): DataFrame = {
     def grams = if (normalize) ngramsOf(normTokens(col(textCol)), n)
                 else ngrams(textCol, n)
     val tg = train.select(col(idCol), explode(array_distinct(grams)).as("ng"))
-    contaminatedFromGrams(tg, evalSet, n, idCol, textCol, normalize,
-      expectedEvalNgrams, bloomBits)
-  }
-
-  /** [[contaminated]]'s core over a PRE-EXPLODED (id, ng) training-gram
-    * frame — lets [[contaminationFraction]] share one corpus scan between
-    * numerator and denominator.
-    */
-  private def contaminatedFromGrams(tg: DataFrame, evalSet: DataFrame, n: Int,
-                                    idCol: String, textCol: String,
-                                    normalize: Boolean,
-                                    expectedEvalNgrams: Long,
-                                    bloomBits: Long): DataFrame = {
-    def grams = if (normalize) ngramsOf(normTokens(col(textCol)), n)
-                else ngrams(textCol, n)
-    // persist the eval n-gram set: it is read twice (sketch build — an
-    // immediate action — then the exact-verify join) and it is benchmark-
-    // sized by assumption; without it every downstream action re-explodes
-    // the eval docs. Kept on purpose as a SESSION cache: it lives until
-    // `Materialize.release` or `clearCache`, and calls with the same eval
-    // plan share the one entry (an ingest loop probes every batch against
-    // the same eval set)
+    // persist the eval n-gram set: it is read three times (the count that
+    // sizes the sketch and the sketch build — immediate actions — then the
+    // exact-verify join) and it is benchmark-sized by assumption; without
+    // it every downstream action re-explodes the eval docs. Kept on purpose
+    // as a SESSION cache: it lives until `Materialize.release` or
+    // `clearCache`, and calls with the same eval plan share the one entry
+    // (an ingest loop probes every batch against the same eval set, so only
+    // the first call pays for the explode)
     val eg = evalSet.select(explode(array_distinct(grams)).as("ng"))
       .distinct().persist()
-    graft.ops.BloomJoin.prefilter(tg, col("ng"), eg, col("ng"),
-        expectedEvalNgrams, bloomBits)
+    graft.ops.BloomJoin.prefilter(tg, col("ng"), eg, col("ng"))
       .join(eg, Seq("ng")) // exact verify: bloom false positives die here
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_overlap"))

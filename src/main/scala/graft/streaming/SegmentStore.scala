@@ -159,9 +159,10 @@ object SegmentStore {
   * extends SegmentLedger(...)`); one whose rows depend on sketch
   * parameters builds one per call (`MinHashLedgerStream.ledger(h, k)`).
   *
-  * @param schema      the state columns, in order — the per-segment read
-  *                    selects (and casts to) them, and an empty store
-  *                    serves an empty frame of this schema
+  * @param schema      the state columns, in order, as [[rows]] produces
+  *                    them — every segment is read with this declared
+  *                    schema (no footer-inference job per segment), and an
+  *                    empty store serves an empty frame of it
   * @param rows        a batch's state rows; must be a pure function of the
   *                    batch (the replay argument)
   * @param merge       the compaction rewrite — identity, `distinct`, or a
@@ -218,9 +219,10 @@ class SegmentLedger(val schema: StructType,
       .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root))
 
   // each segment is its own read root, so partition discovery never mixes
-  // the batch=/compact= level into the schema
+  // the batch=/compact= level into the schema; the select keeps the
+  // declared column order (a read puts partition columns last)
   private def readSegment(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    spark.read.schema(schema).parquet(dir).select(schema.map(f => col(f.name)): _*)
 }
 
 object SegmentLedger {

@@ -164,6 +164,61 @@ class DataPrepOpsSpec extends SparkSpec {
     assert(norm === Map(10L -> 2L))
   }
 
+  /** Byte sizes of every literal in a physical plan, including adaptive
+    * stages, subqueries and the plans of cached relations it scans.
+    */
+  private def literalBytes(p: org.apache.spark.sql.catalyst.plans.QueryPlan[_]): Seq[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val own = p.expressions.flatMap(_.collect { case l: Literal => l.value match {
+      case b: Array[Byte] => b.length
+      case s: org.apache.spark.unsafe.types.UTF8String => s.numBytes
+      case _ => l.dataType.defaultSize
+    } })
+    val stage = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => Nil
+    }
+    own ++ (p.children ++ p.innerChildren ++ p.subqueries ++ stage).flatMap {
+      case q: QueryPlan[_] => literalBytes(q)
+      case _ => Nil
+    }
+  }
+
+  test("contaminated: the bloom is sized to the eval set, not to a constant") {
+    // 300 eval docs of 12 distinct words (3,000 distinct 3-grams); every
+    // 10th training doc quotes one eval passage
+    val eval = (0 until 300).map(i => (1000L + i, (0 until 12).map(j => s"e${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val train = (0 until 100).map { i =>
+      val quote = if (i % 10 == 0) s" e${i}w3 e${i}w4 e${i}w5 e${i}w6" else ""
+      (i.toLong, s"train doc $i says nothing$quote")
+    }.toDF("doc_id", "text")
+    val dirty = Decontaminate.contaminated(train, eval, n = 3)
+    assert(dirty.as[(Long, Long)].collect().toMap ===
+      (0 until 100 by 10).map(i => i.toLong -> 2L).toMap)
+    val limit = 64 * 1024
+    val inPlan = literalBytes(dirty.queryExecution.executedPlan)
+    assert(inPlan.nonEmpty && inPlan.max <= limit, s"largest plan literal ${inPlan.max} B")
+    // a query over the persisted result renders the cached plan too
+    val pinned = graft.Materialize.pin(dirty.select("doc_id"))
+    try {
+      val flags = train.select("doc_id").join(pinned.withColumn("dirty", lit(1)), Seq("doc_id"), "left")
+      assert(flags.filter(col("dirty") === 1).count() === 10L)
+      val overCache = literalBytes(flags.queryExecution.executedPlan)
+      assert(overCache.max <= limit, s"largest plan literal ${overCache.max} B")
+    } finally graft.Materialize.release(pinned)
+  }
+
+  test("contaminated: an empty eval set flags nothing") {
+    val train = Seq((10L, "the quick brown fox jumps")).toDF("doc_id", "text")
+    val eval = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(Decontaminate.contaminated(train, eval, n = 3).isEmpty)
+    assert(Decontaminate.removeContaminated(train, eval, n = 3).count() === 1L)
+  }
+
   test("stopwordCount: quote-bearing stopwords count (no SQL-splice parse break)") {
     val df = Seq((1L, "don't stop l'eau don't flow")).toDF("doc_id", "text")
     val n = df.select(TextOps.stopwordCount("text", Seq("don't", "l'eau")))

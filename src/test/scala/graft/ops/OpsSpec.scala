@@ -110,8 +110,8 @@ class OpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val large = spark.range(0, 50000).toDF("k")
     val small = spark.range(0, 50000).filter(col("id") % 100 === 0).toDF("k") // 1% match
-    val filtered = graft.ops.BloomJoin.prefilter(large, col("k"), small, col("k"),
-      expectedItems = 1000, numBits = 65536)
+    // sized from small's 500 keys at 3%: ~500 matches + ~1,500 false positives
+    val filtered = graft.ops.BloomJoin.prefilter(large, col("k"), small, col("k"))
     val survivors = filtered.count()
     assert(survivors >= 500 && survivors < 5000, // all matches kept, ~fpp extra
       s"bloom kept $survivors of 50000")
