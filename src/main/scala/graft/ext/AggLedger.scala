@@ -21,10 +21,10 @@ import org.apache.spark.sql.types._
   * [[finalizeLedger]] — never stored, so merging stays trivially
   * associative.
   *
-  * Durable form: [[maintain]] persists state through
-  * [[graft.streaming.VersionedState]] (atomic pointer flip, replay-
-  * idempotent by batch id — the DedupLedgerStream discipline), so the
-  * ledger survives restarts and serves readers between ingests.
+  * Durable form: [[ledger]] is a [[graft.streaming.VersionedLedger]]
+  * (atomic pointer flip, `_SUCCESS`-gated versions), so the ledger
+  * survives restarts and serves readers between ingests; [[maintain]]
+  * adds the replay guard a non-idempotent fold needs.
   */
 object AggLedger {
 
@@ -69,28 +69,37 @@ object AggLedger {
         col("vmax"),
         (round(col("sum_dec"), 6).cast("double") / col("cnt")).as("vavg")): _*)
 
-  /** Fold one batch into the persisted ledger (the foreachBatch body —
-    * attach to a stream exactly like DedupLedgerStream.attach). Empty
-    * batches are a no-op.
+  /** The versioned ledger of per-key partials: a batch of partials
+    * ([[partial]]) merges into the state, and the served form is
+    * [[finalizeLedger]].
+    */
+  def ledger(keys: Seq[String], keyTypes: Seq[DataType]): graft.streaming.VersionedLedger =
+    new graft.streaming.VersionedLedger(stateSchema(keys, keyTypes),
+      (state, delta) => merge(state, delta, keys), finalizeLedger)
+
+  /** Fold one batch into the persisted ledger (the foreachBatch body).
+    * Empty batches are a no-op.
     *
     * Replay safety: Structured Streaming's foreachBatch is at-least-once —
     * a crash after [[graft.streaming.VersionedState.commit]] flips
     * `_LATEST` to v<batchId> but BEFORE the streaming checkpoint records
     * the batch makes the engine re-deliver the SAME (batchId, content).
-    * Unlike DedupLedgerStream (whose component-merge is idempotent), sums
-    * and counts are NOT — merging the replayed partials into state that
-    * already contains them would double-count. So maintain() is guarded by
-    * the transaction-log rule: if a committed version id ≥ batchId exists,
-    * this batch's effects are already in state and the replay is a no-op.
+    * Unlike the idempotent versioned ledgers (component merge, postings
+    * union), sums and counts are NOT — merging the replayed partials into
+    * state that already contains them would double-count. So maintain() is
+    * guarded by the transaction-log rule, checked before the shared
+    * [[graft.streaming.VersionedLedger.maintain]]: if a committed version
+    * id ≥ batchId exists, this batch's effects are already in state and
+    * the replay is a no-op.
     *
     * Batch ids are only monotone WITHIN one logical stream — a new/reset
     * streaming checkpoint restarts them at 0, and a version-only `≥` guard
     * would then SILENTLY SKIP every new batch until ids climbed past the
     * old applied version (round-9 ADVICE: silent data loss). So replay
     * detection is keyed on (streamId, batchId), Delta-`txnAppId`-style:
-    * `streamId` names the logical stream ([[attach]] passes its checkpoint
-    * path — same checkpoint = same id across restarts; a reset checkpoint
-    * = a new id) and is committed atomically with each version
+    * `streamId` names the logical stream ([[attach]] passes its checkpoint's
+    * query id — same checkpoint = same id across restarts; a reset
+    * checkpoint = a new id) and is committed atomically with each version
     * ([[graft.streaming.VersionedState.commit]]'s `txnId`). A maintain()
     * whose streamId MISMATCHES the recorded one fails loudly: neither
     * skipping (loses the new stream's batches) nor merging (double-counts
@@ -104,40 +113,31 @@ object AggLedger {
                keys: Seq[String], valueCol: String,
                streamId: Option[String] = None,
                keepVersions: Int = 1): Unit = {
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      val applied = graft.streaming.VersionedState.appliedState(spark, root)
-      (applied.flatMap(_._2), streamId) match {
-        case (Some(recorded), Some(sid)) if recorded != sid =>
-          throw new IllegalStateException(
-            s"AggLedger state at $root was committed by stream " +
-              s"'$recorded' but maintain() arrived from stream '$sid' " +
-              s"(batch $batchId). Refusing to guess between skip (data " +
-              "loss) and merge (double count): point the new checkpoint " +
-              "at a fresh state root, or delete this state to rebuild.")
-        case _ => ()
-      }
-      if (!applied.exists(_._1 >= batchId)) {
-        val keyTypes = keys.map(k => batch.schema(k).dataType)
-        val state = graft.streaming.VersionedState.current(
-          spark, root, stateSchema(keys, keyTypes))
-        // a txn-LESS caller on txn-guarded state must not erase the
-        // recorded stream id (the commit rewrites the pointer and prunes
-        // the _TXN-carrying version dir — the guard would be permanently
-        // disarmed; round-10 review): carry the recorded id forward
-        val effectiveTxn = streamId.orElse(applied.flatMap(_._2))
-        graft.streaming.VersionedState.commit(
-          merge(state, partial(batch, keys, valueCol), keys), batchId, root,
-          keepVersions = keepVersions, txnId = effectiveTxn)
-      }
+    val applied = graft.streaming.VersionedState.appliedState(batch.sparkSession, root)
+    (applied.flatMap(_._2), streamId) match {
+      case (Some(recorded), Some(sid)) if recorded != sid =>
+        throw new IllegalStateException(
+          s"AggLedger state at $root was committed by stream " +
+            s"'$recorded' but maintain() arrived from stream '$sid' " +
+            s"(batch $batchId). Refusing to guess between skip (data " +
+            "loss) and merge (double count): point the new checkpoint " +
+            "at a fresh state root, or delete this state to rebuild.")
+      case _ => ()
     }
+    if (!applied.exists(_._1 >= batchId))
+      // a txn-LESS caller on txn-guarded state must not erase the
+      // recorded stream id (the commit rewrites the pointer and prunes
+      // the _TXN-carrying version dir — the guard would be permanently
+      // disarmed; round-10 review): carry the recorded id forward
+      ledger(keys, keys.map(k => batch.schema(k).dataType)).maintain(
+        partial(batch, keys, valueCol), batchId, root,
+        keepVersions, streamId.orElse(applied.flatMap(_._2)))
   }
 
   /** The served rollup from the persisted state. */
   def serve(spark: SparkSession, root: String, keys: Seq[String],
             keyTypes: Seq[DataType]): DataFrame =
-    finalizeLedger(graft.streaming.VersionedState.current(
-      spark, root, stateSchema(keys, keyTypes)))
+    ledger(keys, keyTypes).serve(spark, root)
 
   /** The checkpoint's UNIQUE query id: Structured Streaming writes
     * `<checkpoint>/metadata` = `{"id": "<uuid>"}` when the query starts,
@@ -167,7 +167,7 @@ object AggLedger {
   }
 
   /** Attach the maintainer to a fact stream: each micro-batch folds into
-    * the persisted rollup (the DedupLedgerStream shape). Caller starts/
+    * the persisted rollup. Caller starts/
     * stops the query; state lives under `root`. The stream identity for
     * replay detection (see [[maintain]]) is the checkpoint's QUERY ID,
     * resolved lazily inside foreachBatch (the metadata file exists once

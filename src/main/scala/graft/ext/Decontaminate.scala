@@ -77,7 +77,8 @@ object Decontaminate {
     // as a SESSION cache: it lives until `Materialize.release` or
     // `clearCache`, and calls with the same eval plan share the one entry
     // (an ingest loop probes every batch against the same eval set, so only
-    // the first call pays for the explode)
+    // the first call pays for the explode and the count: later calls size
+    // the sketch from the count the loaded cache recorded)
     val eg = evalSet.select(explode(array_distinct(grams)).as("ng"))
       .distinct().persist()
     graft.ops.BloomJoin.prefilter(tg, col("ng"), eg, col("ng"))

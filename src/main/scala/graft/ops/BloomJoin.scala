@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.util.sketch.BloomFilter
@@ -35,13 +36,19 @@ object BloomJoin {
 
   private val Fpp = 0.03
 
-  /** Drop `large` rows whose key can't be in `small`'s key set. Counts
-    * `small` (an upper bound on its distinct keys) to size the sketch, so
-    * pass a cached or cheap frame; an empty `small` keeps no row.
+  /** Drop `large` rows whose key can't be in `small`'s key set. Sizes the
+    * sketch from `small`'s row count (an upper bound on its distinct
+    * keys): the count a loaded cache of `small` recorded when it was
+    * filled, else a `count()` job, so pass a cached or cheap frame; an
+    * empty `small` keeps no row.
     */
   def prefilter(large: DataFrame, largeKey: Column,
                 small: DataFrame, smallKey: Column): DataFrame = {
-    val items = small.count()
+    val items = small.queryExecution.optimizedPlan match {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.rowCountStats.value.longValue
+      case _ => small.count()
+    }
     if (items == 0) large.filter(lit(false))
     else {
       val agg = GraftColumnBridge.column(

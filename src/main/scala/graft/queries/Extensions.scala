@@ -545,7 +545,7 @@ object Extensions {
     }),
 
     // the index as an INCREMENTALLY MAINTAINED ledger: three ingest waves
-    // folded through streaming.IndexLedgerStream (VersionedState substrate,
+    // folded through streaming.IndexLedgerStream (VersionedLedger substrate,
     // per-batch cost ∝ batch); maintained == recompute EXACT — the oracle
     // is the batch inverted index above, verbatim
     "x_index_incremental" -> ((s: SparkSession, dir: String) => {
@@ -1381,7 +1381,7 @@ object Extensions {
     // INCREMENTAL decontamination: the training corpus folds into the
     // n-gram-postings ledger in two waves (doc_id % 7 plays the arriving
     // ingest); the entry pays only the EVAL-SIDE PROBE — benchmark
-    // explode + one keyed join against VersionedState, no corpus pass —
+    // explode + one keyed join against the versioned ledger, no corpus pass —
     // and must equal the batch operator exactly (x_decontaminate's
     // oracle, verbatim: maintained == recompute is the checked contract)
     "x_decontam_incremental" -> ((s: SparkSession, dir: String) => {
@@ -1679,9 +1679,9 @@ object Extensions {
     // version) — the oracle aggregates the SAME deterministic subset
     // directly, so the past state is hash-pinned, not just readable
     "x_state_time_travel" -> ((s: SparkSession, dir: String) => {
-      val root = aggLedgerFor(s, dir)
-      graft.ext.AggLedger.finalizeLedger(
-        graft.streaming.VersionedState.atVersion(s, root, 1L))
+      import org.apache.spark.sql.types.{LongType, StringType}
+      graft.ext.AggLedger.ledger(Seq("event_type", "hr"), Seq(StringType, LongType))
+        .atVersion(s, aggLedgerFor(s, dir), 1L)
     }),
 
     // exactly-k-per-group deterministic sample ("reservoir" with

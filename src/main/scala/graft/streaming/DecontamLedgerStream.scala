@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** Streaming maintenance of the DECONTAMINATION LEDGER — n-gram postings
   * of the TRAINING corpus, maintained per ingest so that BOTH directions
@@ -17,13 +16,10 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   *    ledger, and only MATCHED postings ever explode. No corpus pass at
   *    all.
   *
-  * The state is exactly the [[IndexLedgerStream]] shape with terms =
-  * word n-grams, so the merge (per-term posting-set union — associative,
-  * commutative, idempotent) and the replay-safety argument are SHARED,
-  * not re-implemented: a re-delivered batch recomputes identical
-  * postings, and documents are facts (doc d contains n-gram g), never
-  * retractions. State rides [[VersionedState]] (atomic pointer flip,
-  * `_SUCCESS`-gated versions).
+  * The state is [[Postings]] over word n-grams of the `(doc_id, text)`
+  * documents, so the merge and its replay-safety argument are
+  * [[IndexLedgerStream]]'s; the n-gram order `n` is pinned on the first
+  * fold ([[VersionedLedger]]'s `params`).
   *
   * State width at 100 TB: n-gram strings are long keys; a deployment
   * keys this ledger on `md5(ng)` (the MinHash-twin discipline — 16
@@ -34,44 +30,17 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   */
 object DecontamLedgerStream {
 
-  private val StateSchema = StructType(Seq(
-    StructField("term", StringType),
-    StructField("postings", ArrayType(LongType, containsNull = false))))
+  private def grams(n: Int) = graft.ext.Decontaminate.ngrams("text", n)
 
-  /** One batch's delta: distinct (n-gram, doc) pairs reduced to sorted
-    * posting arrays — batch-sized, map-side combined.
-    */
-  def partial(docs: DataFrame, n: Int, idCol: String = "doc_id",
-              textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(array_distinct(
-          graft.ext.Decontaminate.ngrams(textCol, n))).as("term"))
-      .groupBy(col("term"))
-      .agg(array_sort(collect_set(col("doc_id"))).as("postings"))
+  /** The ledger of word `n`-gram postings. */
+  def ledger(n: Int = 3): VersionedLedger =
+    new VersionedLedger(Postings.Schema, Postings.fold(grams(n)), params = Seq("n" -> n.toLong))
 
   /** Fold one batch of TRAINING documents into the ledger (the
-    * foreachBatch body); empty batches are a no-op. The merge is
-    * [[IndexLedgerStream.merge]] — one term-keyed aggregation.
+    * foreachBatch body); empty batches are a no-op.
     */
-  def maintain(docs: DataFrame, batchId: Long, root: String, n: Int = 3,
-               idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    // the SegmentStore pin discipline: validate before any work, pin after
-    // the first successful commit
-    SegmentStore.validateParams(spark, root, Seq("n" -> n.toLong))
-    // pinned so the batch's upstream plan runs once across the emptiness
-    // gate and the merge job (the PageRankLedgerStream.maintain pattern);
-    // micro-batch-sized, dropped before return
-    graft.Materialize.using(docs.select(col(idCol), col(textCol))) { pinned =>
-      if (!pinned.isEmpty) {
-        val state = VersionedState.current(spark, root, StateSchema)
-        VersionedState.commit(
-          IndexLedgerStream.merge(state, partial(pinned, n, idCol, textCol)),
-          batchId, root)
-        SegmentStore.pinParams(spark, root, Seq("n" -> n.toLong))
-      }
-    }
-  }
+  def maintain(docs: DataFrame, batchId: Long, root: String, n: Int = 3): Unit =
+    ledger(n).maintain(docs, batchId, root)
 
   /** The eval-side probe: (doc_id, n_overlap) for every maintained
     * training doc sharing ≥ 1 distinct n-gram with `evalSet` —
@@ -81,14 +50,11 @@ object DecontamLedgerStream {
     * explode + ONE keyed join; postings explode only for MATCHED
     * n-grams.
     */
-  def probe(spark: SparkSession, root: String, evalSet: DataFrame, n: Int = 3,
-            textCol: String = "text"): DataFrame = {
-    SegmentStore.validateParams(spark, root, Seq("n" -> n.toLong))
-    val eg = evalSet
-      .select(explode(array_distinct(
-        graft.ext.Decontaminate.ngrams(textCol, n))).as("term"))
-      .distinct()
-    VersionedState.current(spark, root, StateSchema)
+  def probe(spark: SparkSession, root: String, evalSet: DataFrame, n: Int = 3): DataFrame = {
+    val l = ledger(n)
+    l.validate(spark, root)
+    val eg = evalSet.select(explode(array_distinct(grams(n))).as("term")).distinct()
+    l.state(spark, root)
       .join(eg, Seq("term"), "left_semi")
       .select(explode(col("postings")).as("doc_id"))
       .groupBy(col("doc_id"))
@@ -98,7 +64,5 @@ object DecontamLedgerStream {
   /** Attach the maintainer to a training-document stream. */
   def attach(docs: DataFrame, root: String, checkpoint: String,
              n: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, n))
+    ledger(n).attach(docs, root, checkpoint)
 }

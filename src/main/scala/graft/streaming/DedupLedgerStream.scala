@@ -1,25 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming maintenance of the near-dup component ledger — the
   * operational loop [[graft.ext.Components.incrementalComponents]] exists
-  * for: a stream of newly discovered near-dup EDGES (from the incremental
-  * dedup joins over each ingest batch) folds into a persisted
-  * (doc_id, component) ledger, one micro-batch at a time, at batch cost.
+  * for: a stream of newly discovered near-dup EDGES (`doc_a`, `doc_b`,
+  * from the incremental dedup joins over each ingest batch) folds into a
+  * persisted (doc_id, component) ledger, one micro-batch at a time, at
+  * batch cost. State, commit and crash discipline are
+  * [[VersionedLedger]]'s.
   *
-  * State layout (the Sinks commit-point discipline, adapted to a
-  * versioned table): each batch writes a COMPLETE new ledger under
-  * `root/v<batchId>/`, then flips `root/_LATEST` to that version via
-  * write-temp + atomic rename. Readers (and the next batch) resolve
-  * `_LATEST` first, so a kill mid-write leaves the previous version
-  * intact and re-running the batch is idempotent — the version name is
-  * the batch id, so Structured Streaming's replay overwrites the same
-  * dir rather than forking state. Obsolete versions are pruned after the
-  * flip (best-effort; a leftover version dir is unreferenced, never
-  * wrong).
+  * Replay safety — by IDEMPOTENCE, not a guard (contrast
+  * [[graft.ext.AggLedger.maintain]], which needs the (streamId, batchId)
+  * transaction test because sums double-count): the component merge is
+  * a set union followed by connected components, and
+  * `cc(ledger ∪ E ∪ E) = cc(ledger ∪ E)` — re-folding an already-applied
+  * edge batch recomputes the SAME labels and overwrites version
+  * `v<batchId>` with identical content. At-least-once redelivery, a
+  * reset checkpoint replaying old edges, even a different stream
+  * delivering overlapping edges all converge to the same fixpoint, so
+  * no transaction id is needed. The one contract this leans on: edges
+  * are FACTS (doc a ~ doc b), never retractions — this maintainer has
+  * no delete path.
   *
   * At 100 TB the per-batch cost is the incremental contract: CC over the
   * batch-sized contracted graph + one ledger-wide keyed remap — the full
@@ -28,48 +30,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the write for a partitioned upsert keyed by component; the update
   * computation is unchanged).
   */
-object DedupLedgerStream {
-
-  private val LedgerSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("component", LongType)))
-
-  /** The current ledger (pointer-resolved, highest-version recovery,
-    * empty-before-first-commit) — see [[VersionedState.current]].
-    */
-  def currentLedger(spark: SparkSession, root: String): DataFrame =
-    VersionedState.current(spark, root, LedgerSchema)
-
-  /** Fold one batch of edges into the persisted ledger (the foreachBatch
-    * body). Empty batches are a no-op — no version churn.
-    *
-    * Replay safety — by IDEMPOTENCE, not a guard (contrast
-    * [[graft.ext.AggLedger.maintain]], which needs the (streamId, batchId)
-    * transaction test because sums double-count): the component merge is
-    * a set union followed by connected components, and
-    * `cc(ledger ∪ E ∪ E) = cc(ledger ∪ E)` — re-folding an already-applied
-    * edge batch recomputes the SAME labels and overwrites version
-    * `v<batchId>` with identical content. At-least-once redelivery, a
-    * reset checkpoint replaying old edges, even a different stream
-    * delivering overlapping edges all converge to the same fixpoint, so
-    * no transaction id is needed. The one contract this leans on: edges
-    * are FACTS (doc a ~ doc b), never retractions — this maintainer has
-    * no delete path.
-    */
-  def maintain(edges: DataFrame, batchId: Long, root: String): Unit = {
-    if (!edges.isEmpty) {
-      val spark = edges.sparkSession
-      val updated = graft.ext.Components
-        .incrementalComponents(currentLedger(spark, root), edges)
-      VersionedState.commit(updated, batchId, root)
-    }
-  }
-
-  /** Attach the maintainer to an edge stream (`doc_a`, `doc_b` columns).
-    * Caller starts/stops the query; state lives under `root`.
-    */
-  def attach(edges: DataFrame, root: String,
-             checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    edges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root))
-}
+object DedupLedgerStream extends VersionedLedger(
+  StructType(Seq(StructField("doc_id", LongType), StructField("component", LongType))),
+  (ledger, edges) => graft.ext.Components.incrementalComponents(ledger, edges))

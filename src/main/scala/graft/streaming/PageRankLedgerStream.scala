@@ -14,14 +14,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * rounds per ingest.
   *
   * State layout under `root`:
-  *  - `root/edges/batch=<id>/` — the edge set, APPEND-shaped (the
-  *    [[VectorIndexStream]] discipline): each batch owns its directory,
-  *    `_SUCCESS`-gated, replay overwrites in place. Edges are facts and
+  *  - `root/edges/batch=<id>/` — the edge set, a [[SegmentLedger]]
+  *    (APPEND-shaped): each batch owns its directory, `_SUCCESS`-gated,
+  *    replay overwrites in place. Edges are facts and
   *    multi-edges are meaningful ([[graft.ext.PageRank.pagerankInt]]'s
   *    contract), so the full graph is the UNION-ALL of committed dirs —
   *    nothing corpus-sized is ever rewritten.
-  *  - `root/rounds/` — the (round, node, score) ledger via
-  *    [[VersionedState]] (atomic pointer flip, `_SUCCESS`-gated versions):
+  *  - `root/rounds/` — the (round, node, score) ledger, a
+  *    [[VersionedLedger]] whose fold appends the batch's edges first:
   *    node-table-sized state, rewritten per batch like the CC label
   *    ledger.
   *
@@ -41,26 +41,14 @@ object PageRankLedgerStream {
     StructField("node", StringType),
     StructField("score", LongType)))
 
+  private val Edges = new SegmentLedger(
+    StructType(Seq(StructField("src", StringType), StructField("dst", StringType))),
+    _.select(col("src"), col("dst")))
+
   /** The committed edge multi-set (src, dst) across every `_SUCCESS`-gated
     * batch directory.
     */
-  def edges(spark: SparkSession, root: String): DataFrame = {
-    val rp = new org.apache.hadoop.fs.Path(s"$root/edges")
-    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      if (!fs.exists(rp)) Array.empty[String]
-      else fs.listStatus(rp).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("batch=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-          st.getPath.toString
-      }
-    if (committed.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("src", StringType), StructField("dst", StringType))))
-    else spark.read.option("basePath", s"$root/edges").parquet(committed.toIndexedSeq: _*)
-      .select(col("src"), col("dst"))
-  }
+  def edges(spark: SparkSession, root: String): DataFrame = Edges.serve(spark, s"$root/edges")
 
   /** Fold one batch of edges into the persisted ledger (the foreachBatch
     * body). Empty batches are a no-op. The FIRST batch bootstraps through
@@ -68,27 +56,16 @@ object PageRankLedgerStream {
     * the frontier recompute degrades gracefully to the full fixed-round
     * run — one code path, no special case.
     */
-  def maintain(newEdges: DataFrame, batchId: Long, root: String,
-               iters: Int = 10, scale: Long = 1000000000000L,
-               dampNum: Long = 17L, dampDen: Long = 20L): Unit = {
-    // pin the batch so its upstream plan runs ONCE — the emptiness gate
-    // previously re-ran it before the parquet write (round-11 ADVICE);
-    // micro-batch-sized state, dropped before the rounds job starts
-    graft.Materialize.using(newEdges.select(col("src"), col("dst"))) { pinned =>
-      if (!pinned.isEmpty) {
-        val spark = pinned.sparkSession
-        pinned.write.mode("overwrite").parquet(s"$root/edges/batch=$batchId")
-        // read the batch back from its own committed dir so replay folds
-        // byte-identical content
-        val batch = spark.read.parquet(s"$root/edges/batch=$batchId")
-        graft.Materialize.release(pinned)
-        val prior = VersionedState.current(spark, s"$root/rounds", LedgerSchema)
-        val updated = graft.ext.PageRank.incrementalLedger(
-          prior, edges(spark, root), batch, iters, scale, dampNum, dampDen)
-        VersionedState.commit(updated, batchId, s"$root/rounds")
-      }
-    }
-  }
+  def maintain(newEdges: DataFrame, batchId: Long, root: String, iters: Int = 10): Unit =
+    new VersionedLedger(LedgerSchema, (prior, batch) => {
+      val spark = batch.sparkSession
+      val dir = s"$root/edges/batch=$batchId"
+      Edges.write(batch, dir)
+      // read the batch back from its own committed dir so replay folds
+      // byte-identical content
+      graft.ext.PageRank.incrementalLedger(
+        prior, edges(spark, root), Edges.read(spark, dir), iters)
+    }).maintain(newEdges.select(col("src"), col("dst")), batchId, s"$root/rounds")
 
   /** WARM-START commit — the batch-engine → stream handoff (round-11
     * verdict item 1): fold a batch's edge dir AND an externally-computed
@@ -112,8 +89,7 @@ object PageRankLedgerStream {
     */
   def commitPrecomputed(newEdges: DataFrame, batchId: Long, root: String,
                         ledger: DataFrame): Unit = {
-    newEdges.select(col("src"), col("dst"))
-      .write.mode("overwrite").parquet(s"$root/edges/batch=$batchId")
+    Edges.write(newEdges.select(col("src"), col("dst")), s"$root/edges/batch=$batchId")
     VersionedState.commit(
       ledger.select(col("round"), col("node"), col("score")),
       batchId, s"$root/rounds")
@@ -132,7 +108,6 @@ object PageRankLedgerStream {
     */
   def attach(edgeStream: DataFrame, root: String, checkpoint: String,
              iters: Int = 10): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    edgeStream.writeStream
-      .option("checkpointLocation", checkpoint)
+    edgeStream.writeStream.option("checkpointLocation", checkpoint)
       .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root, iters))
 }

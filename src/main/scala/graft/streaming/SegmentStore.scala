@@ -206,22 +206,24 @@ class SegmentLedger(val schema: StructType,
   def serve(spark: SparkSession, root: String): DataFrame = {
     val segs = SegmentStore.live(spark, root)
     if (segs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else segs.map(readSegment(spark, _)).reduce(_.unionByName(_))
+    else segs.map(read(spark, _)).reduce(_.unionByName(_))
   }
 
   /** Merge the segments past the newest compact one ([[SegmentStore.compact]]). */
   def compact(spark: SparkSession, root: String): Option[Long] =
-    SegmentStore.compact(spark, root, readSegment(spark, _), (df, dir) => write(merge(df), dir))
+    SegmentStore.compact(spark, root, read(spark, _), (df, dir) => write(merge(df), dir))
 
   /** Attach [[maintain]] to a stream; the caller starts and stops it. */
   def attach(docs: DataFrame, root: String, checkpoint: String): DataStreamWriter[Row] =
     docs.writeStream.option("checkpointLocation", checkpoint)
       .foreachBatch((df: DataFrame, id: Long) => maintain(df, id, root))
 
-  // each segment is its own read root, so partition discovery never mixes
-  // the batch=/compact= level into the schema; the select keeps the
-  // declared column order (a read puts partition columns last)
-  private def readSegment(spark: SparkSession, dir: String): DataFrame =
+  /** One segment directory, read with the declared schema. Each segment
+    * is its own read root, so partition discovery never mixes the
+    * batch=/compact= level into the schema; the select keeps the declared
+    * column order (a read puts partition columns last).
+    */
+  def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(schema).parquet(dir).select(schema.map(f => col(f.name)): _*)
 }
 

@@ -3,6 +3,11 @@ package graft.ext
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+/** Pins [[AggLedger]]: convergence to the direct aggregate, time travel,
+  * the (streamId, batchId) transaction guard, null handling and merge
+  * associativity. Replay, empty-batch and crash behavior is
+  * [[graft.props.LedgerProps]]'.
+  */
 class AggLedgerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,7 +29,7 @@ class AggLedgerSpec extends SparkSpec {
         r.getDouble(4), r.getDouble(5))).toMap
 
   test("maintained over waves equals a direct aggregate of the history") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger").toString + "/st"
+    val root = scratch("aggledger") + "/st"
     val df = rows(200)
     (0 until 5).foreach { w =>
       AggLedger.maintain(df.filter(pmod(col("id"), lit(5)) === w), w, root,
@@ -33,32 +38,17 @@ class AggLedgerSpec extends SparkSpec {
     assert(served(root) === direct(df))
   }
 
-  test("replaying a batch id overwrites its version (idempotent), empty batch is a no-op") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger").toString + "/st"
-    val df = rows(60)
-    AggLedger.maintain(df, 0L, root, Seq("k"), "v")
-    val first = served(root)
-    // empty batch: no version churn, same state
-    AggLedger.maintain(df.filter(lit(false)), 1L, root, Seq("k"), "v")
-    assert(served(root) === first)
-    // replay batch 0 with the same content on a FRESH root reproduces it
-    val root2 = java.nio.file.Files.createTempDirectory("aggledger").toString + "/st"
-    AggLedger.maintain(df, 0L, root2, Seq("k"), "v")
-    assert(served(root2) === first)
-  }
-
   test("time travel: atVersion reads a retained past version; pruned/partial fail loudly") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger").toString + "/st"
+    val root = scratch("aggledger") + "/st"
     val df = rows(100)
-    // four commits of the cumulative state, retention 2 → v2, v3 survive
+    val ledger = AggLedger.ledger(Seq("k"), Seq(org.apache.spark.sql.types.StringType))
+    // four waves, retention 2 → v2, v3 survive
     (0 to 3).foreach { w =>
-      val st = AggLedger.partial(
-        df.filter(pmod(col("id"), lit(4)) <= w), Seq("k"), "v")
-      graft.streaming.VersionedState.commit(st, w, root, keepVersions = 2)
+      AggLedger.maintain(df.filter(pmod(col("id"), lit(4)) === w), w, root, Seq("k"), "v",
+        keepVersions = 2)
     }
     // v2 is the PAST state (waves 0..2), readable as of its batch id
-    val v2 = graft.streaming.VersionedState.atVersion(spark, root, 2L)
-    val got = AggLedger.finalizeLedger(v2).collect()
+    val got = ledger.atVersion(spark, root, 2L).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = AggLedger.finalizeLedger(AggLedger.partial(
       df.filter(pmod(col("id"), lit(4)) <= 2), Seq("k"), "v")).collect()
@@ -66,64 +56,14 @@ class AggLedgerSpec extends SparkSpec {
     assert(got === want)
     // v0 was pruned (keepVersions = 2): loud failure naming the retained set
     val err = intercept[NoSuchElementException] {
-      graft.streaming.VersionedState.atVersion(spark, root, 0L)
+      ledger.atVersion(spark, root, 0L)
     }
     assert(err.getMessage.contains("v3") && err.getMessage.contains("v2"))
     // a crash-partial version dir (no _SUCCESS) is absent for time travel
     val partial = new java.io.File(s"$root/v9"); partial.mkdirs()
     intercept[NoSuchElementException] {
-      graft.streaming.VersionedState.atVersion(spark, root, 9L)
+      ledger.atVersion(spark, root, 9L)
     }
-  }
-
-  test("at-least-once replay of an applied batch is a no-op (no double count)") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger-rp").toString + "/st"
-    val df = rows(80)
-    val b0 = df.filter(col("id") < 40)
-    val b1 = df.filter(col("id") >= 40)
-    AggLedger.maintain(b0, 0L, root, Seq("k"), "v")
-    AggLedger.maintain(b1, 1L, root, Seq("k"), "v")
-    val want = served(root)
-    assert(want === direct(df))
-    // crash after VersionedState.commit flipped _LATEST to v1 but before
-    // the streaming checkpoint recorded batch 1: the engine re-delivers
-    // the SAME (1, content) — merging it again would double cnt/sum_dec
-    AggLedger.maintain(b1, 1L, root, Seq("k"), "v")
-    assert(served(root) === want)
-    // and replaying an even older applied batch is equally a no-op
-    AggLedger.maintain(b0, 0L, root, Seq("k"), "v")
-    assert(served(root) === want)
-  }
-
-  test("a crashed mid-write version dir (no _SUCCESS) does not mask a replay") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger-cw").toString + "/st"
-    val df = rows(80)
-    val b0 = df.filter(col("id") < 40)
-    val b1 = df.filter(col("id") >= 40)
-    AggLedger.maintain(b0, 0L, root, Seq("k"), "v")
-    // crash DURING batch 1's updated.write: a bare v1 dir exists but the
-    // pointer was never flipped — batch 1's effects are NOT in state, so
-    // the redelivery must APPLY, not be skipped as "already seen"
-    assert(new java.io.File(root, "v1").mkdirs())
-    AggLedger.maintain(b1, 1L, root, Seq("k"), "v")
-    assert(served(root) === direct(df))
-    // same discipline with the pointer ALSO lost (non-atomic-flip store):
-    // appliedVersion/current must ignore a bare dir lacking _SUCCESS
-    assert(new java.io.File(root, "v7").mkdirs())
-    assert(new java.io.File(root, "_LATEST").delete())
-    val want = served(root) // still batch 0+1 state, not empty/corrupt v7
-    assert(want === direct(df))
-    AggLedger.maintain(b1.limit(5), 7L, root, Seq("k"), "v") // genuine batch 7
-    assert(served(root) !== want)
-  }
-
-  test("serve recovers the highest version when the _LATEST pointer is lost") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger-rec").toString + "/st"
-    val df = rows(50)
-    AggLedger.maintain(df, 0L, root, Seq("k"), "v")
-    val want = served(root)
-    assert(new java.io.File(root, "_LATEST").delete())
-    assert(served(root) === want) // VersionedState's highest-version fallback
   }
 
   test("merge is associative across wave orderings (decimal sums)") {
@@ -140,8 +80,8 @@ class AggLedgerSpec extends SparkSpec {
   test("streamed fact batches converge to the direct aggregate; versions pruned") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("aggledger-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("aggledger-ck").toString
+    val root = scratch("aggledger-st") + "/st"
+    val ckpt = scratch("aggledger-ck")
     val input = MemoryStream[(Long, String, Double)]
     val q = AggLedger.attach(input.toDF().toDF("id", "k", "v"),
       root, ckpt, Seq("k"), "v").start()
@@ -160,7 +100,7 @@ class AggLedgerSpec extends SparkSpec {
   }
 
   test("reset checkpoint (mismatched stream id) fails loudly, never skips silently") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger-txn").toString + "/st"
+    val root = scratch("aggledger-txn") + "/st"
     val df = rows(80)
     val b0 = df.filter(col("id") < 40)
     val b1 = df.filter(col("id") >= 40)
@@ -190,7 +130,7 @@ class AggLedgerSpec extends SparkSpec {
   }
 
   test("pre-txn state (no recorded stream id) falls back to the version-only guard") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger-pretxn").toString + "/st"
+    val root = scratch("aggledger-pretxn") + "/st"
     val df = rows(60)
     AggLedger.maintain(df, 0L, root, Seq("k"), "v") // txn-less commit
     val want = served(root)
@@ -203,7 +143,7 @@ class AggLedgerSpec extends SparkSpec {
   }
 
   test("a txn-less maintain on txn-guarded state does not erase the recorded stream id") {
-    val root = java.nio.file.Files.createTempDirectory("aggledger-keep").toString + "/st"
+    val root = scratch("aggledger-keep") + "/st"
     val df = rows(60)
     AggLedger.maintain(df, 0L, root, Seq("k"), "v", streamId = Some("ckpt-A"))
     // a txn-LESS caller applies batch 1: the commit must carry ckpt-A
@@ -220,7 +160,7 @@ class AggLedgerSpec extends SparkSpec {
 
   test("stream identity is the checkpoint QUERY ID, so an in-place wipe is detected") {
     // unit half: the id comes from <checkpoint>/metadata, not the path
-    val ck = java.nio.file.Files.createTempDirectory("aggledger-ck").toString
+    val ck = scratch("aggledger-ck")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(ck, "metadata"), """{"id":"uuid-one"}""")
     assert(AggLedger.checkpointQueryId(spark, ck) === "uuid-one")
@@ -228,7 +168,7 @@ class AggLedgerSpec extends SparkSpec {
       java.nio.file.Paths.get(ck, "metadata"), """{"id" : "uuid-two"}""")
     assert(AggLedger.checkpointQueryId(spark, ck) === "uuid-two")
     // unreadable metadata → path fallback, never a crash
-    val ck2 = java.nio.file.Files.createTempDirectory("aggledger-ck2").toString
+    val ck2 = scratch("aggledger-ck2")
     assert(AggLedger.checkpointQueryId(spark, ck2) === ck2)
 
     // streaming half: run, wipe the checkpoint IN PLACE (same path),
@@ -236,8 +176,8 @@ class AggLedgerSpec extends SparkSpec {
     // reject its restarted batch 0 instead of silently skipping it
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("aggledger-wipe").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("aggledger-wipeck").toString + "/ck"
+    val root = scratch("aggledger-wipe") + "/st"
+    val ckpt = scratch("aggledger-wipeck") + "/ck"
     val in1 = MemoryStream[(Long, String, Double)]
     val q1 = AggLedger.attach(in1.toDF().toDF("id", "k", "v"),
       root, ckpt, Seq("k"), "v").start()

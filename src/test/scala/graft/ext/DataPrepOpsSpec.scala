@@ -219,6 +219,24 @@ class DataPrepOpsSpec extends SparkSpec {
     assert(Decontaminate.removeContaminated(train, eval, n = 3).count() === 1L)
   }
 
+  test("contaminated: a second call over the same eval set sizes the bloom without a count job") {
+    val eval = Seq((100L, "one second call reuses the cached eval grams"),
+      (101L, "lazy dogs sleep all day long")).toDF("doc_id", "text")
+    val train = Seq((10L, "a second call reuses the cached copy"), (11L, "lazy dogs sleep"),
+      (12L, "nothing shared here")).toDF("doc_id", "text")
+    def call() = jobsDuring(Decontaminate.contaminated(train, eval, n = 3).as[(Long, Long)]
+      .collect().toMap, _.startsWith("count at"))
+    try {
+      val (first, firstCounts) = call()
+      assert(first === Map(10L -> 3L, 11L -> 1L))
+      assert(firstCounts > 0, "the first call counts the eval n-grams as it caches them")
+      val (second, secondCounts) = call()
+      assert(secondCounts === 0, s"the second call ran $secondCounts count job(s)")
+      assert(second === first)
+    } finally graft.Materialize.release(
+      eval.select(explode(array_distinct(Decontaminate.ngrams("text", 3))).as("ng")).distinct())
+  }
+
   test("stopwordCount: quote-bearing stopwords count (no SQL-splice parse break)") {
     val df = Seq((1L, "don't stop l'eau don't flow")).toDF("doc_id", "text")
     val n = df.select(TextOps.stopwordCount("text", Seq("don't", "l'eau")))

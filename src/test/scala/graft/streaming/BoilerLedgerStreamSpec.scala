@@ -36,7 +36,7 @@ class BoilerLedgerStreamSpec extends SparkSpec {
       .toMap
 
   test("probe over waves == coverage recompute; threshold crosses only on summed df") {
-    val root = java.nio.file.Files.createTempDirectory("boled").toString + "/st"
+    val root = scratch("boled") + "/st"
     // waves of two docs each: per-wave df for the header 3-grams is 2 < 3
     BoilerLedgerStream.maintain(
       corpus.take(2).toDF("doc_id", "text"), 0L, root, n = 3)
@@ -54,7 +54,7 @@ class BoilerLedgerStreamSpec extends SparkSpec {
   }
 
   test("replay no-op; compaction pre-sums without changing the probe") {
-    val root = java.nio.file.Files.createTempDirectory("boled-rp").toString + "/st"
+    val root = scratch("boled-rp") + "/st"
     BoilerLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root, n = 3)
     BoilerLedgerStream.maintain(batch.toDF("doc_id", "text"), 1L, root, n = 3)
     val dfSum = BoilerLedgerStream.serve(spark, root)
@@ -84,7 +84,7 @@ class BoilerLedgerStreamSpec extends SparkSpec {
     // are not constructible here, so plant one directly in the state
     // layout (serve reads committed segments; the fabricated rows are
     // exactly what a collision would have persisted).
-    val root = java.nio.file.Files.createTempDirectory("boled-col").toString + "/st"
+    val root = scratch("boled-col") + "/st"
     BoilerLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root, n = 3)
     Seq((42L, "rare span one", 3L), (42L, "rare span two", 3L),
       (7L, "hot span", 6L))
@@ -107,8 +107,8 @@ class BoilerLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("boled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("boled-ck").toString
+    val root = scratch("boled-st") + "/st"
+    val ckpt = scratch("boled-ck")
     val input = MemoryStream[(Long, String)]
     val q = BoilerLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()
@@ -122,7 +122,7 @@ class BoilerLedgerStreamSpec extends SparkSpec {
   }
 
   test("the n-gram order is pinned on first fold") {
-    val root = java.nio.file.Files.createTempDirectory("boled-pin").toString + "/st"
+    val root = scratch("boled-pin") + "/st"
     BoilerLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root, n = 3)
     assert(SegmentStore.readParams(spark, root) === Some(Map("n" -> 3L)))
     val e = intercept[IllegalArgumentException] {

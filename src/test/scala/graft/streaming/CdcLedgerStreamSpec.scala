@@ -47,7 +47,7 @@ class CdcLedgerStreamSpec extends SparkSpec {
   }
 
   test("probe over waves == chunk-set recompute after each ingest") {
-    val root = java.nio.file.Files.createTempDirectory("cdcled").toString + "/st"
+    val root = scratch("cdcled") + "/st"
     // empty ledger: every chunk of every batch doc is novel
     val empty = probed(root)
     assert(empty.keySet === Set(10L, 11L, 12L))
@@ -68,7 +68,7 @@ class CdcLedgerStreamSpec extends SparkSpec {
   }
 
   test("replay is a no-op; compaction re-distincts without changing the probe") {
-    val root = java.nio.file.Files.createTempDirectory("cdcled-rp").toString + "/st"
+    val root = scratch("cdcled-rp") + "/st"
     CdcLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
     val n0 = CdcLedgerStream.serve(spark, root).count()
     CdcLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
@@ -93,8 +93,8 @@ class CdcLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("cdcled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("cdcled-ck").toString
+    val root = scratch("cdcled-st") + "/st"
+    val ckpt = scratch("cdcled-ck")
     val input = MemoryStream[(Long, String)]
     val q = CdcLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()
@@ -108,7 +108,7 @@ class CdcLedgerStreamSpec extends SparkSpec {
   }
 
   test("chunking parameters are pinned on first fold") {
-    val root = java.nio.file.Files.createTempDirectory("cdcled-pin").toString + "/st"
+    val root = scratch("cdcled-pin") + "/st"
     CdcLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
     assert(SegmentStore.readParams(spark, root) ===
       Some(Map("window" -> 8L, "base" -> 33L, "divisor" -> 61L)))

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Pins [[DecontamLedgerStream]]: probe-over-waves equals the batch
-  * operator after every ingest, replay/empty-batch idempotence, and the
-  * MemoryStream attach path.
+  * operator after every ingest, the `n` pin, and the MemoryStream attach
+  * path. Replay, empty-batch and crash behavior is
+  * [[graft.props.LedgerProps]]'.
   */
 class DecontamLedgerStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +29,7 @@ class DecontamLedgerStreamSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("probe over waves == batch contaminated after each ingest") {
-    val root = java.nio.file.Files.createTempDirectory("decontam").toString + "/st"
+    val root = scratch("decontam") + "/st"
     val waves = train.grouped(2).toSeq
     var seen = Seq.empty[(Long, String)]
     waves.zipWithIndex.foreach { case (w, i) =>
@@ -39,18 +40,8 @@ class DecontamLedgerStreamSpec extends SparkSpec {
     assert(probed(root).keySet === Set(1L, 3L)) // and the fixture is non-trivial
   }
 
-  test("replayed and empty batches are no-ops") {
-    val root = java.nio.file.Files.createTempDirectory("decontam-rp").toString + "/st"
-    DecontamLedgerStream.maintain(train.toDF("doc_id", "text"), 0L, root, n = 3)
-    val settled = probed(root)
-    DecontamLedgerStream.maintain(train.take(2).toDF("doc_id", "text"), 0L, root, n = 3)
-    assert(probed(root) === settled)
-    DecontamLedgerStream.maintain(train.toDF("doc_id", "text").limit(0), 1L, root, n = 3)
-    assert(probed(root) === settled)
-  }
-
   test("eval-set change is probe-only: a new benchmark hits the same ledger") {
-    val root = java.nio.file.Files.createTempDirectory("decontam-ev").toString + "/st"
+    val root = scratch("decontam-ev") + "/st"
     DecontamLedgerStream.maintain(train.toDF("doc_id", "text"), 0L, root, n = 3)
     val eval2 = Seq((200L, "n o p q hh")).toDF("doc_id", "text")
     val got = DecontamLedgerStream.probe(spark, root, eval2, n = 3)
@@ -64,7 +55,7 @@ class DecontamLedgerStreamSpec extends SparkSpec {
 
   test("n-gram order is pinned: a mismatched fold or probe fails loudly") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("dcled-pin").toString + "/st"
+    val root = scratch("dcled-pin") + "/st"
     val train = Seq((1L, "a b c d e f g")).toDF("doc_id", "text")
     DecontamLedgerStream.maintain(train, 0L, root, n = 3)
     val foldErr = intercept[IllegalArgumentException] {
@@ -81,8 +72,8 @@ class DecontamLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch operator") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("decontam-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("decontam-ck").toString
+    val root = scratch("decontam-st") + "/st"
+    val ckpt = scratch("decontam-ck")
     val input = MemoryStream[(Long, String)]
     val q = DecontamLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt, n = 3).start()

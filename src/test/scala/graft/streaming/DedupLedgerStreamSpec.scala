@@ -4,29 +4,30 @@ import graft.SparkSpec
 import graft.ext.Components
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+/** Pins [[DedupLedgerStream]]'s streamed convergence to the full
+  * recompute. Replay, empty-batch and crash behavior is
+  * [[graft.props.LedgerProps]]'.
+  */
 class DedupLedgerStreamSpec extends SparkSpec {
-
-  private def tmpDir(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-ledger-$tag").toString
 
   test("streamed edge batches converge to the full-recompute ledger; versions pruned") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = tmpDir("state")
+    val root = scratch("state")
     val input = MemoryStream[(Long, Long)]
     val q = DedupLedgerStream.attach(
-      input.toDF().toDF("doc_a", "doc_b"), root, tmpDir("ckpt")).start()
+      input.toDF().toDF("doc_a", "doc_b"), root, scratch("ckpt")).start()
     try {
       input.addData((1L, 2L))
       q.processAllAvailable()
       // mid-stream ledger: one component {1,2}
-      assert(DedupLedgerStream.currentLedger(spark, root)
+      assert(DedupLedgerStream.serve(spark, root)
         .as[(Long, Long)].collect().toMap === Map(1L -> 1L, 2L -> 1L))
       input.addData((2L, 3L), (10L, 11L))
       q.processAllAvailable()
       input.addData((3L, 10L)) // merges the two components
       q.processAllAvailable()
-      val got = DedupLedgerStream.currentLedger(spark, root)
+      val got = DedupLedgerStream.serve(spark, root)
         .as[(Long, Long)].collect().toMap
       val all = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L))
       val want = Components.connectedComponents(all.toDF("doc_a", "doc_b"))
@@ -38,45 +39,5 @@ class DedupLedgerStreamSpec extends SparkSpec {
         .map(_.getName).filter(_.startsWith("v"))
       assert(dirs.length === 1, dirs.mkString(","))
     } finally q.stop()
-  }
-
-  test("empty batch is a no-op; replaying a batch id is idempotent") {
-    import spark.implicits._
-    val root = tmpDir("replay")
-    val edges = Seq((5L, 6L)).toDF("doc_a", "doc_b")
-    DedupLedgerStream.maintain(edges, batchId = 0L, root)
-    val v1 = DedupLedgerStream.currentLedger(spark, root)
-      .as[(Long, Long)].collect().toMap
-    // replay the SAME batch (crash-recovery path): same version dir
-    // overwritten, same pointer, same ledger
-    DedupLedgerStream.maintain(edges, batchId = 0L, root)
-    val v2 = DedupLedgerStream.currentLedger(spark, root)
-      .as[(Long, Long)].collect().toMap
-    assert(v1 === v2 && v1 === Map(5L -> 5L, 6L -> 5L))
-    // empty batch: no new version, ledger unchanged
-    DedupLedgerStream.maintain(edges.limit(0), batchId = 1L, root)
-    assert(DedupLedgerStream.currentLedger(spark, root)
-      .as[(Long, Long)].collect().toMap === v1)
-  }
-
-  test("missing _LATEST pointer recovers from the highest version dir") {
-    import spark.implicits._
-    val root = tmpDir("recover")
-    DedupLedgerStream.maintain(Seq((1L, 2L)).toDF("doc_a", "doc_b"), batchId = 0L, root)
-    DedupLedgerStream.maintain(Seq((2L, 3L)).toDF("doc_a", "doc_b"), batchId = 1L, root)
-    val committed = DedupLedgerStream.currentLedger(spark, root)
-      .as[(Long, Long)].collect().toMap
-    // simulate a crash that lost the pointer on a store without an
-    // overwriting rename: the committed v1 dir must still be served, NOT
-    // an empty ledger (which the next batch would then build on and prune
-    // the good state)
-    assert(new java.io.File(root, "_LATEST").delete())
-    val recovered = DedupLedgerStream.currentLedger(spark, root)
-      .as[(Long, Long)].collect().toMap
-    assert(recovered === committed && recovered === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    // and the next maintain() folds on top of the recovered state
-    DedupLedgerStream.maintain(Seq((3L, 4L)).toDF("doc_a", "doc_b"), batchId = 2L, root)
-    assert(DedupLedgerStream.currentLedger(spark, root)
-      .as[(Long, Long)].collect().toMap === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 }

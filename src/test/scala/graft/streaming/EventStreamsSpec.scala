@@ -269,7 +269,7 @@ class EventStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.functions._
     // the file stream source wants a directory: stage the parquet in one
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-in")
+    val dir = java.nio.file.Paths.get(scratch("stream-in"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       dir.resolve("part-0.parquet"))

@@ -32,7 +32,7 @@ class ExactDedupLedgerStreamSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
 
   test("probe over waves == batch recompute after each ingest") {
-    val root = java.nio.file.Files.createTempDirectory("xdled").toString + "/st"
+    val root = scratch("xdled") + "/st"
     assert(probed(root) === Set(10L, 11L, 12L)) // empty ledger: all novel
     var seen = Seq.empty[(Long, String)]
     corpus.grouped(2).zipWithIndex.foreach { case (w, i) =>
@@ -47,7 +47,7 @@ class ExactDedupLedgerStreamSpec extends SparkSpec {
   }
 
   test("replayed and empty batches are no-ops; segments store distinct content") {
-    val root = java.nio.file.Files.createTempDirectory("xdled-rp").toString + "/st"
+    val root = scratch("xdled-rp") + "/st"
     ExactDedupLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
     // 4 rows, 3 distinct contents ("alpha beta" once, "gamma delta", NULL)
     assert(ExactDedupLedgerStream.serve(spark, root).count() === 3)
@@ -59,7 +59,7 @@ class ExactDedupLedgerStreamSpec extends SparkSpec {
   }
 
   test("compaction re-distincts cross-batch repeats without changing the probe") {
-    val root = java.nio.file.Files.createTempDirectory("xdled-cp").toString + "/st"
+    val root = scratch("xdled-cp") + "/st"
     // both waves contain "alpha beta" -> 2 state rows for one content
     ExactDedupLedgerStream.maintain(corpus.take(2).toDF("doc_id", "text"), 0L, root)
     ExactDedupLedgerStream.maintain(corpus.drop(2).toDF("doc_id", "text"), 1L, root)
@@ -80,8 +80,8 @@ class ExactDedupLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("xdled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("xdled-ck").toString
+    val root = scratch("xdled-st") + "/st"
+    val ckpt = scratch("xdled-ck")
     val input = MemoryStream[(Long, String)]
     val q = ExactDedupLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()

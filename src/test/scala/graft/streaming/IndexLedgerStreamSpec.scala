@@ -3,6 +3,10 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+/** Pins [[IndexLedgerStream]]: maintained over waves equals the batch
+  * index, directly and through a stream. Replay, empty-batch and crash
+  * behavior is [[graft.props.LedgerProps]]'.
+  */
 class IndexLedgerStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,7 +28,7 @@ class IndexLedgerStreamSpec extends SparkSpec {
     "delta" -> ((1L, "13")))
 
   test("maintained over waves equals the batch index; df derived from postings") {
-    val root = java.nio.file.Files.createTempDirectory("idxledger").toString + "/st"
+    val root = scratch("idxledger") + "/st"
     (0 until 3).foreach { w =>
       IndexLedgerStream.maintain(
         docs.filter(pmod(col("doc_id"), lit(3)) === w), w, root)
@@ -32,31 +36,11 @@ class IndexLedgerStreamSpec extends SparkSpec {
     assert(served(root) === want)
   }
 
-  test("at-least-once replay is a no-op (set-union idempotence); empty batch no-op") {
-    val root = java.nio.file.Files.createTempDirectory("idxledger-rp").toString + "/st"
-    val b0 = docs.filter(col("doc_id") < 12)
-    val b1 = docs.filter(col("doc_id") >= 12)
-    IndexLedgerStream.maintain(b0, 0L, root)
-    IndexLedgerStream.maintain(b1, 1L, root)
-    assert(served(root) === want)
-    // crash after commit, before the checkpoint recorded batch 1: the
-    // engine re-delivers (1, content) — postings must not duplicate
-    IndexLedgerStream.maintain(b1, 1L, root)
-    assert(served(root) === want)
-    // even a RESET checkpoint replaying batch 0 as id 0 converges (the
-    // idempotence argument that lets this maintainer skip the AggLedger
-    // txn guard)
-    IndexLedgerStream.maintain(b0, 0L, root)
-    assert(served(root) === want)
-    IndexLedgerStream.maintain(b0.limit(0), 2L, root)
-    assert(served(root) === want)
-  }
-
   test("streamed document batches converge to the batch index; versions pruned") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("idxledger-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("idxledger-ck").toString
+    val root = scratch("idxledger-st") + "/st"
+    val ckpt = scratch("idxledger-ck")
     val input = MemoryStream[(Long, String)]
     val q = IndexLedgerStream.attach(input.toDF().toDF("doc_id", "text"),
       root, ckpt).start()

@@ -23,7 +23,7 @@ class LmLedgerStreamSpec extends SparkSpec {
     f.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   test("probe == batch recompute on the probe slice after folding the corpus") {
-    val root = java.nio.file.Files.createTempDirectory("lmled").toString + "/st"
+    val root = scratch("lmled") + "/st"
     val docs = corpus.toDF("doc_id", "text")
     LmLedgerStream.maintain(docs.filter($"doc_id" <= 2), 0L, root)
     LmLedgerStream.maintain(docs.filter($"doc_id" > 2), 1L, root)
@@ -48,7 +48,7 @@ class LmLedgerStreamSpec extends SparkSpec {
   }
 
   test("replayed batch is a no-op; one-word batches still fold unigram counts") {
-    val root = java.nio.file.Files.createTempDirectory("lmled-rp").toString + "/st"
+    val root = scratch("lmled-rp") + "/st"
     val docs = corpus.toDF("doc_id", "text")
     LmLedgerStream.maintain(docs, 0L, root)
     val (bi0, uni0) = LmLedgerStream.serve(spark, root)
@@ -67,7 +67,7 @@ class LmLedgerStreamSpec extends SparkSpec {
   }
 
   test("parameter pin: a store folded at n=2 is refused nothing, but the pin exists") {
-    val root = java.nio.file.Files.createTempDirectory("lmled-pin").toString + "/st"
+    val root = scratch("lmled-pin") + "/st"
     LmLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
     assert(SegmentStore.readParams(spark, root) === Some(Map("n" -> 2L)))
   }
@@ -75,8 +75,8 @@ class LmLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("lmled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("lmled-ck").toString
+    val root = scratch("lmled-st") + "/st"
+    val ckpt = scratch("lmled-ck")
     val input = MemoryStream[(Long, String)]
     val q = LmLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()
@@ -93,7 +93,7 @@ class LmLedgerStreamSpec extends SparkSpec {
   }
 
   test("torn commit: bi committed without its uni twin fails loudly by id; replay heals") {
-    val root = java.nio.file.Files.createTempDirectory("lmled-torn").toString + "/st"
+    val root = scratch("lmled-torn") + "/st"
     val docs = corpus.toDF("doc_id", "text")
     LmLedgerStream.maintain(docs.filter($"doc_id" <= 2), 0L, root)
     // simulate a crash between the bigram and unigram writes of batch 1:

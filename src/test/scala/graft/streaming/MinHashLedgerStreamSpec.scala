@@ -33,7 +33,7 @@ class MinHashLedgerStreamSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
 
   test("probe over waves == batch recompute after each ingest") {
-    val root = java.nio.file.Files.createTempDirectory("mhled").toString + "/st"
+    val root = scratch("mhled") + "/st"
     assert(probed(root) === Set(10L, 11L, 12L)) // empty ledger: all novel
     var seen = Seq.empty[(Long, String)]
     corpus.grouped(2).zipWithIndex.foreach { case (w, i) =>
@@ -45,7 +45,7 @@ class MinHashLedgerStreamSpec extends SparkSpec {
   }
 
   test("replayed and empty batches are no-ops; short-only batches commit no segment") {
-    val root = java.nio.file.Files.createTempDirectory("mhled-rp").toString + "/st"
+    val root = scratch("mhled-rp") + "/st"
     MinHashLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
     val served = MinHashLedgerStream.serve(spark, root).count()
     MinHashLedgerStream.maintain(corpus.take(2).toDF("doc_id", "text"), 0L, root)
@@ -58,7 +58,7 @@ class MinHashLedgerStreamSpec extends SparkSpec {
   }
 
   test("sketch parameters are pinned: a mismatched fold or probe fails loudly") {
-    val root = java.nio.file.Files.createTempDirectory("mhled-pin").toString + "/st"
+    val root = scratch("mhled-pin") + "/st"
     MinHashLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root) // h=16, k=3
     val foldErr = intercept[IllegalArgumentException] {
       MinHashLedgerStream.maintain(corpus.toDF("doc_id", "text"), 1L, root, h = 32)
@@ -76,7 +76,7 @@ class MinHashLedgerStreamSpec extends SparkSpec {
   }
 
   test("crash leftovers (no _SUCCESS) and non-numeric segment names are ignored") {
-    val root = java.nio.file.Files.createTempDirectory("mhled-cw").toString + "/st"
+    val root = scratch("mhled-cw") + "/st"
     MinHashLedgerStream.maintain(corpus.toDF("doc_id", "text"), 0L, root)
     val served = probed(root)
     // a crashed batch write: copy batch=0 to batch=7, drop its _SUCCESS
@@ -95,7 +95,7 @@ class MinHashLedgerStreamSpec extends SparkSpec {
   }
 
   test("compaction merges batches without changing the probe") {
-    val root = java.nio.file.Files.createTempDirectory("mhled-cp").toString + "/st"
+    val root = scratch("mhled-cp") + "/st"
     MinHashLedgerStream.maintain(corpus.take(2).toDF("doc_id", "text"), 0L, root)
     MinHashLedgerStream.maintain(corpus.drop(2).toDF("doc_id", "text"), 1L, root)
     val before = probed(root)
@@ -113,8 +113,8 @@ class MinHashLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("mhled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("mhled-ck").toString
+    val root = scratch("mhled-st") + "/st"
+    val ckpt = scratch("mhled-ck")
     val input = MemoryStream[(Long, String)]
     val q = MinHashLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()

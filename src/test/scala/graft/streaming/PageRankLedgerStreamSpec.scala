@@ -5,8 +5,10 @@ import graft.ext.PageRank
 import org.apache.spark.sql.functions._
 
 /** Pins [[PageRankLedgerStream]]: maintained-over-waves equals the full
-  * fixed-round recompute over every edge folded, replay idempotence,
-  * crash-dir exclusion, and the MemoryStream attach path.
+  * fixed-round recompute over every edge folded, the warm-start handoff,
+  * and the MemoryStream attach path. Replay, empty-batch and crash
+  * behavior (including an uncommitted edge dir) is
+  * [[graft.props.LedgerProps]]'.
   */
 class PageRankLedgerStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +24,7 @@ class PageRankLedgerStreamSpec extends SparkSpec {
     scores(PageRank.pagerankInt(edges.toDF("src", "dst"), iters))
 
   test("maintained over waves == full recompute after each batch; bootstrap included") {
-    val root = java.nio.file.Files.createTempDirectory("prledger").toString + "/st"
+    val root = scratch("prledger") + "/st"
     val waves = allEdges.grouped(3).toSeq
     var seen = Seq.empty[(String, String)]
     waves.zipWithIndex.foreach { case (w, i) =>
@@ -33,36 +35,8 @@ class PageRankLedgerStreamSpec extends SparkSpec {
     }
   }
 
-  test("replayed batch is a no-op (idempotent recompute); empty batch no-op") {
-    val root = java.nio.file.Files.createTempDirectory("prledger-rp").toString + "/st"
-    val b0 = allEdges.take(5)
-    val b1 = allEdges.drop(5)
-    PageRankLedgerStream.maintain(b0.toDF("src", "dst"), 0L, root, iters = 4)
-    PageRankLedgerStream.maintain(b1.toDF("src", "dst"), 1L, root, iters = 4)
-    val settled = scores(PageRankLedgerStream.serve(spark, root, iters = 4))
-    assert(settled === want(allEdges))
-    // crash after commit, before the checkpoint recorded batch 1: the
-    // engine re-delivers (1, content) — scores and edge multiset unchanged
-    PageRankLedgerStream.maintain(b1.toDF("src", "dst"), 1L, root, iters = 4)
-    assert(scores(PageRankLedgerStream.serve(spark, root, iters = 4)) === settled)
-    assert(PageRankLedgerStream.edges(spark, root).count() === allEdges.size.toLong)
-    PageRankLedgerStream.maintain(b1.toDF("src", "dst").limit(0), 2L, root, iters = 4)
-    assert(scores(PageRankLedgerStream.serve(spark, root, iters = 4)) === settled)
-  }
-
-  test("an uncommitted edge batch dir (no _SUCCESS) is excluded from the graph") {
-    val root = java.nio.file.Files.createTempDirectory("prledger-cr").toString + "/st"
-    PageRankLedgerStream.maintain(allEdges.take(5).toDF("src", "dst"), 0L, root, iters = 4)
-    // simulate a crash mid-write of batch 1's edge dir
-    allEdges.drop(5).toDF("src", "dst")
-      .write.mode("overwrite").parquet(s"$root/edges/batch=1")
-    val marker = new java.io.File(s"$root/edges/batch=1/_SUCCESS")
-    assert(marker.exists()); assert(marker.delete())
-    assert(PageRankLedgerStream.edges(spark, root).count() === 5L)
-  }
-
   test("warm-start handoff: commitPrecomputed seeds state; maintain continues from it") {
-    val root = java.nio.file.Files.createTempDirectory("prledger-ws").toString + "/st"
+    val root = scratch("prledger-ws") + "/st"
     val b0 = allEdges.take(5)
     val b1 = allEdges.drop(5)
     // batch engine hands its ledger over at parquet-write cost...
@@ -78,8 +52,8 @@ class PageRankLedgerStreamSpec extends SparkSpec {
   test("streamed edge batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("prledger-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("prledger-ck").toString
+    val root = scratch("prledger-st") + "/st"
+    val ckpt = scratch("prledger-ck")
     val input = MemoryStream[(String, String)]
     val q = PageRankLedgerStream.attach(
       input.toDF().toDF("src", "dst"), root, ckpt, iters = 4).start()

@@ -1,63 +1,29 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import graft.ext.Similarity
-import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.ext.{AggLedger, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
 
-/** Pins how [[SegmentLedger]] reads its segments: with the declared
+/** Pins how both ledger stores read their state: with the declared
   * schema, so building a served frame over any number of live segments
-  * submits no Spark job (schema inference would run one per segment), and
-  * a `partitionBy` layout serves its rows in the declared column order.
-  * Replay and crash behavior is [[graft.props.SegmentLedgerProps]]'.
+  * ([[SegmentLedger]]) or over the current or a past version
+  * ([[VersionedLedger]]) submits no Spark job (schema inference would run
+  * one per segment or version), and a `partitionBy` layout serves its rows
+  * in the declared column order. Replay and crash behavior is
+  * [[graft.props.LedgerProps]]'.
   */
 class SegmentLedgerSpec extends SparkSpec {
   import spark.implicits._
-
-  private val Tag = "graft.test.segment-read"
-
-  /** Jobs submitted while `body` runs; waits for the listener bus to
-    * deliver them by running one marker job after it.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val inBody = new AtomicInteger
-    val markers = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Tag))) match {
-          case Some("body") => inBody.incrementAndGet()
-          case Some("marker") => markers.incrementAndGet()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(Tag, "body")
-      val r = try body finally sc.setLocalProperty(Tag, "marker")
-      try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (markers.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markers.get > 0, "listener bus did not deliver the marker job")
-      (r, inBody.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def liveKinds(root: String): Seq[String] =
     SegmentStore.live(spark, root).map(_.split('/').last.takeWhile(_ != '=')).sorted
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
-  /** `body` over a fresh store root, deleted afterwards. */
-  private def withRoot(body: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-segread").toFile
-    try body(s"$dir/st") finally FileUtils.deleteQuietly(dir)
-  }
+  /** `body` over a fresh store root. */
+  private def withRoot(body: String => Unit): Unit = body(scratch("segread") + "/st")
 
   test("serve over a compact and two batch segments submits no job")(withRoot { root =>
     val waves = Seq(Seq((1L, "alpha beta"), (2L, "gamma")), Seq((3L, "delta")),
@@ -92,5 +58,33 @@ class SegmentLedgerSpec extends SparkSpec {
     assert(served.schema.map(f => f.name -> f.dataType) ===
       Seq("cid" -> IntegerType, "n_id" -> LongType, "n_vec" -> ArrayType(DoubleType)))
     assert(rows(served) === rows(Similarity.ivfAssign(corpus, m)))
+  })
+
+  test("versioned serve, probe and time-travel reads submit no job")(withRoot { root =>
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "beta gamma delta eps")).toDF("doc_id", "text")
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
+    val facts = Seq((1L, "x", 1.0), (2L, "y", 2.0)).toDF("id", "k", "v")
+    (0 until 2).foreach { b =>
+      DedupLedgerStream.maintain(Seq((1L + b, 2L + b)).toDF("doc_a", "doc_b"), b, s"$root/dedup")
+      IndexLedgerStream.maintain(docs.filter(col("doc_id") === b + 1), b, s"$root/index")
+      DecontamLedgerStream.maintain(docs.filter(col("doc_id") === b + 1), b, s"$root/decontam")
+      AggLedger.maintain(facts.filter(col("id") === b + 1), b, s"$root/agg", Seq("k"), "v",
+        keepVersions = 2)
+    }
+    PageRankLedgerStream.maintain(edges, 0L, s"$root/pr", iters = 3)
+    val agg = AggLedger.ledger(Seq("k"), Seq(StringType))
+    val reads = Seq[(String, () => DataFrame)](
+      "Dedup serve" -> (() => DedupLedgerStream.serve(spark, s"$root/dedup")),
+      "Index serve" -> (() => IndexLedgerStream.serve(spark, s"$root/index")),
+      "Decontam probe" -> (() => DecontamLedgerStream.probe(spark, s"$root/decontam", docs)),
+      "Agg serve" -> (() => agg.serve(spark, s"$root/agg")),
+      "Agg atVersion" -> (() => agg.atVersion(spark, s"$root/agg", 0L)),
+      "PageRank serve" -> (() => PageRankLedgerStream.serve(spark, s"$root/pr", iters = 3)),
+      "PageRank edges" -> (() => PageRankLedgerStream.edges(spark, s"$root/pr")))
+    reads.foreach { case (name, read) =>
+      val (served, jobs) = jobsDuring(read())
+      assert(jobs === 0, s"building the $name frame ran $jobs job(s)")
+      assert(!served.isEmpty, name)
+    }
   })
 }

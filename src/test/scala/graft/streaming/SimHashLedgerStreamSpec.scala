@@ -32,7 +32,7 @@ class SimHashLedgerStreamSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
 
   test("probe over waves == batch recompute after each ingest") {
-    val root = java.nio.file.Files.createTempDirectory("shled").toString + "/st"
+    val root = scratch("shled") + "/st"
     assert(probed(root) === Set(10L, 11L, 12L)) // empty ledger: all novel
     var seen = Seq.empty[(Long, String)]
     corpus.grouped(2).zipWithIndex.foreach { case (w, i) =>
@@ -44,7 +44,7 @@ class SimHashLedgerStreamSpec extends SparkSpec {
   }
 
   test("replayed batches overwrite; compaction does not change the probe") {
-    val root = java.nio.file.Files.createTempDirectory("shled-rp").toString + "/st"
+    val root = scratch("shled-rp") + "/st"
     SimHashLedgerStream.maintain(corpus.take(2).toDF("doc_id", "text"), 0L, root)
     SimHashLedgerStream.maintain(corpus.drop(2).toDF("doc_id", "text"), 1L, root)
     val before = probed(root)
@@ -66,8 +66,8 @@ class SimHashLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("shled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("shled-ck").toString
+    val root = scratch("shled-st") + "/st"
+    val ckpt = scratch("shled-ck")
     val input = MemoryStream[(Long, String)]
     val q = SimHashLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()

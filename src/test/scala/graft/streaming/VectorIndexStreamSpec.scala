@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * the batch assignment, cid partition pruning of the served layout, and
   * the drift gate tripping on a shifted distribution while passing
   * in-distribution batches. Replay and crash behavior is the shared
-  * segment-ledger property's ([[graft.props.SegmentLedgerProps]]).
+  * segment-ledger property's ([[graft.props.LedgerProps]]).
   */
 class VectorIndexStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -33,7 +33,7 @@ class VectorIndexStreamSpec extends SparkSpec {
   test("maintained over waves equals the batch assignment; vectors ride along") {
     val m = model
     val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger").toString + "/l"
+    val root = scratch("annledger") + "/l"
     (0 until 3).foreach { w =>
       VectorIndexStream.maintain(
         corpus.filter(pmod(col("vec_id"), lit(3)) === w), w, root, m, base)
@@ -48,7 +48,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val m = model
     val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
     assert(base > 0 && base < 0.01, s"blob corpus should quantize tightly, got $base")
-    val root = java.nio.file.Files.createTempDirectory("annledger-dr").toString + "/l"
+    val root = scratch("annledger-dr") + "/l"
     VectorIndexStream.maintain(corpus, 0L, root, m, base) // in-distribution: fine
     // a new modality nowhere near either centroid: error ~1 >> 2x baseline
     val shifted = (100 until 110).map(i => (i.toLong, Seq(0.0f, 0.0f, 1.0f)))
@@ -64,7 +64,7 @@ class VectorIndexStreamSpec extends SparkSpec {
   test("cid filter prunes the served layout to matching partition files") {
     val m = model
     val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger-pr").toString + "/l"
+    val root = scratch("annledger-pr") + "/l"
     (0 until 2).foreach { w =>
       VectorIndexStream.maintain(
         corpus.filter(pmod(col("vec_id"), lit(2)) === w), w, root, m, base)
@@ -79,7 +79,7 @@ class VectorIndexStreamSpec extends SparkSpec {
   test("compaction merges batch dirs into one segment; content and pruning unchanged") {
     val m = model
     val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger-cp").toString + "/l"
+    val root = scratch("annledger-cp") + "/l"
     (0 until 3).foreach { w =>
       VectorIndexStream.maintain(
         corpus.filter(pmod(col("vec_id"), lit(3)) === w), w, root, m, base)
@@ -109,8 +109,8 @@ class VectorIndexStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val m = model
     val base = VectorIndexStream.quantizationError(Similarity.ivfAssign(corpus, m), m)
-    val root = java.nio.file.Files.createTempDirectory("annledger-st").toString + "/l"
-    val ckpt = java.nio.file.Files.createTempDirectory("annledger-ck").toString
+    val root = scratch("annledger-st") + "/l"
+    val ckpt = scratch("annledger-ck")
     val input = MemoryStream[(Long, Seq[Float])]
     val q = VectorIndexStream.attach(
       input.toDF().toDF("vec_id", "embedding"), root, ckpt, m, base).start()

@@ -30,7 +30,7 @@ class VocabLedgerStreamSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
 
   test("maintained typo map == recompute; summed counts flip the argmax") {
-    val root = java.nio.file.Files.createTempDirectory("vocled").toString + "/st"
+    val root = scratch("vocled") + "/st"
     VocabLedgerStream.maintain(wave0.toDF("doc_id", "text"), 0L, root)
     val after0 = probed(root)
     assert(after0 === want(wave0))
@@ -44,7 +44,7 @@ class VocabLedgerStreamSpec extends SparkSpec {
   }
 
   test("replay no-op; compaction pre-sums; steady-state compact+fresh layout") {
-    val root = java.nio.file.Files.createTempDirectory("vocled-rp").toString + "/st"
+    val root = scratch("vocled-rp") + "/st"
     VocabLedgerStream.maintain(wave0.toDF("doc_id", "text"), 0L, root)
     VocabLedgerStream.maintain(wave1.toDF("doc_id", "text"), 1L, root)
     val before = probed(root)
@@ -66,8 +66,8 @@ class VocabLedgerStreamSpec extends SparkSpec {
   test("streamed document batches converge to the batch recompute") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("vocled-st").toString + "/st"
-    val ckpt = java.nio.file.Files.createTempDirectory("vocled-ck").toString
+    val root = scratch("vocled-st") + "/st"
+    val ckpt = scratch("vocled-ck")
     val input = MemoryStream[(Long, String)]
     val q = VocabLedgerStream.attach(
       input.toDF().toDF("doc_id", "text"), root, ckpt).start()
@@ -81,7 +81,7 @@ class VocabLedgerStreamSpec extends SparkSpec {
   }
 
   test("empty batches are no-ops") {
-    val root = java.nio.file.Files.createTempDirectory("vocled-e").toString + "/st"
+    val root = scratch("vocled-e") + "/st"
     VocabLedgerStream.maintain(Seq((1L, "")).toDF("doc_id", "text"), 0L, root)
     assert(SegmentStore.committed(spark, root, "batch=").isEmpty)
   }
