@@ -32,19 +32,19 @@ object Bench {
     // that would report an engine regression as a bench improvement.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // One-time-per-corpus builds (IVF train, CC ledger, incremental
-    // staging) run inside whichever query touches them first; Build.times
-    // records them, and subtracting the delta here keeps each query's
-    // number a QUERY cost — builds are itemized in their own JSON field.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val b0 = Build.total
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name: $e")
-        failed += name
-      }
-      math.max(0.0, (System.nanoTime() - t0) / 1e9 - (Build.total - b0))
-    }
+    // staging) run inside whichever query touches them first; the span
+    // record carries the Build.times they added, and subtracting those
+    // keeps each query's number a QUERY cost — builds are itemized in
+    // their own JSON field.
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Obs.Record =
+      Obs.measure(spark, name) {
+        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name: $e")
+          failed += name
+        }
+      }._2
+    def secs(r: Obs.Record): Double = math.max(0.0, r.wallS - r.builds.values.sum)
 
     // per query: one cold run (includes this query's planning/codegen) plus
     // the median of `warmRuns` repeats — host noise on a shared box is ~2×
@@ -53,11 +53,11 @@ object Bench {
     // earlier rounds' single-run numbers
     val results = SparkEntry.queries.filterNot(q => skip(q._1)).map { case (name, fn) =>
       val cold = once(name, fn)
-      val warms = Seq.fill(warmRuns)(once(name, fn)).sorted
+      val warms = Seq.fill(warmRuns)(once(name, fn)).sortBy(secs)
       val median = if (warms.isEmpty) cold else warms(warms.size / 2)
-      name -> ((cold, median))
+      name -> ((secs(cold), secs(median), median))
     }.filter { case (name, _) => !failed.contains(name) }
-    def obj(f: ((Double, Double)) => Double) = results
+    def obj(f: ((Double, Double, Obs.Record)) => Double) = results
       .map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val total = results.values.map(_._1).sum
     val warmTotal = results.values.map(_._2).sum
@@ -94,7 +94,7 @@ object Bench {
     val topNames = results.toSeq.sortBy(-_._2._2).take(10).map(_._1)
     val isoNames = (topNames ++ pinned.filter(results.contains)).distinct
     val isolated = isoNames.flatMap { name =>
-      val reps = Seq.fill(isolatedRuns)(once(name, SparkEntry.queries(name))).sorted
+      val reps = Seq.fill(isolatedRuns)(secs(once(name, SparkEntry.queries(name)))).sorted
       if (failed.contains(name)) None else Some(name -> reps(reps.size / 2))
     }
     val isoObj = isolated.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
@@ -120,22 +120,30 @@ object Bench {
       Build.get(name).flatMap { build =>
         var ok = true
         val reps = Seq.fill(buildIsoRuns) {
-          val t0 = System.nanoTime()
-          try build.rebuild(spark, sfDir)
-          catch { case e: Throwable =>
-            ok = false
-            System.err.println(s"[bench] rebuild $name: $e")
-          }
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
+          Obs.measure(spark, s"build:$name") {
+            try build.rebuild(spark, sfDir)
+            catch { case e: Throwable =>
+              ok = false
+              System.err.println(s"[bench] rebuild $name: $e")
+            }
+          }._2
+        }.sortBy(_.wallS)
         if (ok) Some(name -> reps(reps.size / 2))
         else { failed += s"build:$name"; None }
       }
     }
-    val buildsIsoObj = buildsIso.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val buildsIsoObj = buildsIso.map { case (k, v) => s"\"$k\":${v.wallS}" }.mkString("{", ",", "}")
+    // the median rep's span counters, per entry and per isolated build
+    val obs = (results.toSeq.map { case (k, v) => k -> v._3 } ++
+        buildsIso.map { case (k, v) => s"build:$k" -> v })
+      .map { case (k, r) =>
+        val c = r.counters.toMap
+        Seq("jobs", "task_s", "gc_s", "shuffle_bytes", "storage_left_bytes")
+          .map(f => s"\"$f\":${c(f)}").mkString(s"\"$k\":{", ",", "}")
+      }.mkString("{", ",", "}")
     // rendered AFTER the isolated blocks so their failures are included
     val errs = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._1)},"warm_total":$warmTotal,"warm_queries":${obj(_._2)},"warm_runs":$warmRuns,"isolated":$isoObj,"isolated_runs":$isolatedRuns,"builds":$builds,"builds_total":$buildsTotal,"builds_isolated":$buildsIsoObj,"build_iso_runs":$buildIsoRuns,"errors":$errs,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._1)},"warm_total":$warmTotal,"warm_queries":${obj(_._2)},"warm_runs":$warmRuns,"isolated":$isoObj,"isolated_runs":$isolatedRuns,"builds":$builds,"builds_total":$buildsTotal,"builds_isolated":$buildsIsoObj,"build_iso_runs":$buildIsoRuns,"errors":$errs,"obs":$obs,"sf":"$sfDir"}"""
     println(fullLine)
     // full record also lands in a sidecar file — the stdout line above
     // outgrew the driver's tail capture once the registry passed ~150
@@ -149,7 +157,7 @@ object Bench {
     // lives on the full line / sidecar
     def r3(d: Double) = math.rint(d * 1000) / 1000
     val topObj = isolated.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
-    val topBuilds = buildsIso.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
+    val topBuilds = buildsIso.map { case (k, v) => s"\"$k\":${r3(v.wallS)}" }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$topObj,"n_queries":${results.size},"warm_total":${r3(warmTotal)},"builds_total":${r3(buildsTotal)},"builds_isolated":$topBuilds,"errors":$errs,"summary_of":"top-10 isolated medians; full per-query record in $sidecar","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    frames it pinned, and forces the build again. Dependencies stay
   *    cached, so a rebuild measures the same exclusive cost the time
   *    accounting records; Bench's `builds_isolated` block and
-  *    [[graft.tools.BuildBench]] re-measure builds this way.
+  *    [[graft.tools.Decompose]] re-measure builds this way.
   *  - Storage: a value owns exactly the frames `pinned` names, pinned or
   *    checkpointed, under the [[Materialize]] rule. A rebuild frees each
   *    through [[Materialize.release]], so a checkpoint's blocks go too,

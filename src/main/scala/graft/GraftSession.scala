@@ -23,13 +23,4 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // Round-16 evaluation knobs (r15 verdict item 5), parameterised with
-      // the SPARK DEFAULTS as defaults so the driver's bench is unchanged:
-      // measured at sf0.1 and sf1 (OPTIMIZATION_r16.md "Config pair") —
-      // neither flip won on this workload's shuffle volumes, so both stay
-      // at stock values; a cluster deployment overrides via env/conf.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64MB"))
 }

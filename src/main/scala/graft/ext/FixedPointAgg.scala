@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * result is bit-identical to the decimal form whenever the certificate
   * holds; equality is pinned in LinearProbeSpec/IrlsSpec and the consumers'
   * DuckDB oracles (which mirror the DECIMAL form verbatim) hash-pin it
-  * cross-engine at every gate scale. Measured ×5.4 on x_probe_moments
-  * (MomentsProbe: the decimal aggregation was ~80% of the entry).
+  * cross-engine at every gate scale. Measured ×5.4 on x_probe_moments (the
+  * decimal aggregation was ~80% of the entry; OPTIMIZATION_r15.md, ch. 3).
   */
 object FixedPointAgg {
 

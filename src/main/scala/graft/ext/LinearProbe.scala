@@ -74,7 +74,7 @@ object LinearProbe {
     * [[momentsViaDecimal]] — `round(sum(cast(p as decimal(28,10))), 6)`,
     * what the DuckDB oracle mirrors — but Spark's decimal aggregation was
     * ~80% of the entry (per-row string-based BigDecimal cast + 16-byte
-    * buffer writes + BigDecimal adds; MomentsProbe decomposition). The
+    * buffer writes + BigDecimal adds; OPTIMIZATION_r15.md, change 3). The
     * shipped plan sums the SAME scale-10 digits as plain longs
     * ([[graft.functions.FixedPoint.unscaled10]] — identical per-row
     * rounding by construction) and re-applies the half-up-at-6 + cast in

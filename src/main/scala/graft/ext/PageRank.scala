@@ -77,8 +77,8 @@ object PageRank {
     * a persisted relation keeps its partitioning visible but embeds the
     * whole cached build plan into every round's query — the driver
     * re-plans that tree per round, measured 2× the per-round cost at bench
-    * scale (PrDecomp) — while a plain checkpoint loses the layout
-    * (`LogicalRDD` records UnknownPartitioning under AQE) and re-exchanges
+    * scale (OPTIMIZATION_r16.md, change 1) — while a plain checkpoint loses
+    * the layout (`LogicalRDD` records UnknownPartitioning under AQE) and re-exchanges
     * the EDGE table every round, which is the dominant per-round shuffle
     * at web scale. `checkpointHashPartitioned` (repartition(n, key) →
     * checkpoint → declare hash(key, n)) gives both: leaf-sized round

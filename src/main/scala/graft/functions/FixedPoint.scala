@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * BigDecimal, a `setScale`, a 16-byte UnsafeRow decimal write, and a
   * BigDecimal add in the aggregation buffer (precision 38 > the compact-long
   * cutoff of 18). Measured on the moments entry this was ~80% of the whole
-  * query (MomentsProbe, round 15).
+  * query (OPTIMIZATION_r15.md, change 3).
   *
   * `unscaled10(d)` instead emits the decimal's UNSCALED value as a plain
   * long: exactly `cast(d as decimal(x,10))`'s digits — BigDecimal.valueOf

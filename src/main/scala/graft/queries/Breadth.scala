@@ -192,7 +192,7 @@ object Breadth {
     // CC adds over pairwise matching — and each entity cluster collapsed
     // to a canonical record (min-node member, min_by). Every stage is
     // keyed; the oracle recomputes the closure with a recursive CTE.
-    // CC VARIANT CHOICE (round-15 measurement, tools/ErCcProbe): the
+    // CC VARIANT CHOICE (round-15 measurement, BENCH.md "CC variant decision"): the
     // match graph is diameter ≤ 2 by construction (dirty twin ↔ clean ↔
     // other dirty twin), so label propagation converges in ~3 rounds of
     // one join + one agg each and beats the large/small-star scheme's

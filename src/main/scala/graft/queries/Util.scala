@@ -38,8 +38,8 @@ object Util {
     * a string-based BigDecimal cast, a 16-byte buffer write and a
     * BigDecimal add PER ROW (the sum buffer's precision 38 is past the
     * compact-long cutoff) — measured ~80% of the whole moments entry and
-    * the dominant share of every dsum-heavy query (MomentsProbe /
-    * DsumProbe, BENCH.md round 15). [[dsumFx]] sums the SAME scale-10
+    * the dominant share of every dsum-heavy query (OPTIMIZATION_r15.md,
+    * change 3; BENCH.md round 15). [[dsumFx]] sums the SAME scale-10
     * digits as two plain-long sums (quotient/remainder by 1e9), rebuilds
     * the exact decimal total per GROUP, and applies the identical
     * `round(·, 2).cast(double)` tail — bit-identical by construction

@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
   * the hash layout the join needs. Persisting instead of checkpointing
   * keeps the partitioning visible but embeds the whole cached plan in
   * every round's query (driver re-planning cost per round) — measured 2×
-  * slower per round at bench scale (r16 PrDecomp).
+  * slower per round at bench scale (OPTIMIZATION_r16.md, change 1).
   *
   * CALLER CONTRACT (unchecked beyond partition count): the frame MUST be
   * an eager localCheckpoint of a plan whose final operator was

@@ -59,7 +59,7 @@ class SkewSpec extends SparkSpec {
   }
 
   test("compact budgets files per partition: a skewed partition no longer collapses to one file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-skewcompact").toString + "/t"
+    val dir = scratch("skewcompact") + "/t"
     val rows = (1 to 10000).map(i => (i, "hot", s"v$i")) ++ (1 to 10).map(i => (-i, "cold", "w"))
     rows.toDF("k", "p", "v").repartition(20)
       .write.partitionBy("p").parquet(dir)

@@ -2,25 +2,20 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (sessions are expensive;
-  * suites must not stop it).
+  * suites must not stop it). Its warehouse sits under the per-JVM build
+  * root, which is deleted at exit.
   */
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.builder("4")
     .appName("graft-test")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir", Build.scratch("graft-warehouse"))
     .getOrCreate()
 }
 
@@ -56,52 +51,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graftDirsBefore = graftDirs
   }
 
-  /** Deletes the scratch root. A suite that writes through [[scratch]]
-    * must leave no other `graft-*` directory behind in the temp dir.
+  /** Deletes the scratch root. A suite must leave no other `graft-*`
+    * directory behind in the temp dir; the per-JVM build root
+    * (`graft-builds…`, deleted at exit) is the one exemption.
     */
   override protected def afterAll(): Unit =
     try super.afterAll()
-    finally scratchRoot.foreach { r =>
-      FileUtils.deleteDirectory(r.toFile)
-      val left = graftDirs -- graftDirsBefore
+    finally {
+      scratchRoot.foreach(r => FileUtils.deleteDirectory(r.toFile))
+      val left = (graftDirs -- graftDirsBefore).filterNot(_.startsWith("graft-builds"))
       assert(left.isEmpty, s"${getClass.getSimpleName} left temp dirs behind: ${left.mkString(", ")}")
     }
 
-  private val JobTag = "graft.test.jobs-during"
-
-  /** `body`'s result and the number of Spark jobs it submitted; waits for
-    * the listener bus to deliver them by running one marker job after it.
-    * Only jobs whose SQL execution's call site (e.g. "count at
-    * X.scala:12"; empty outside any execution) passes `callSite` count.
+  /** `body`'s result and the number of Spark jobs it submitted whose call
+    * site (an [[Obs.Job]] label, e.g. "count at X.scala:12") passes
+    * `callSite`.
     */
   protected def jobsDuring[T](body: => T, callSite: String => Boolean = _ => true): (T, Int) = {
-    val sc = spark.sparkContext
-    val inBody = new AtomicInteger
-    val markers = new AtomicInteger
-    val sites = new ConcurrentHashMap[String, String] // SQL execution id -> call site
-    def counted(e: SparkListenerJobStart) = callSite(
-      Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY)).flatMap(id => Option(sites.get(id))).getOrElse(""))
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => sites.put(s.executionId.toString, s.description)
-        case _ => ()
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(JobTag))) match {
-          case Some("body") if counted(e) => inBody.incrementAndGet()
-          case Some("marker") => markers.incrementAndGet()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(JobTag, "body")
-      val r = try body finally sc.setLocalProperty(JobTag, "marker")
-      try spark.range(1).count() finally sc.setLocalProperty(JobTag, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (markers.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markers.get > 0, "listener bus did not deliver the marker job")
-      (r, inBody.get)
-    } finally sc.removeSparkListener(l)
+    val (r, rec) = Obs.measure(spark, "jobs-during")(body)
+    (r, rec.jobRows.count(j => callSite(j.site)))
   }
 }

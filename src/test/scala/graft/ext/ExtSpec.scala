@@ -509,7 +509,7 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.filter($"vec_id" < 3)
     val model = Similarity.ivfTrain(emb, nlist = 8, iters = 1)
     val assigned = Similarity.ivfAssign(emb, model)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/layout"
+    val dir = scratch("ivf") + "/layout"
     Similarity.ivfWriteAssignment(assigned, dir)
     assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("cid=")))
     val fromLayout = Similarity.ivfProbeFromLayout(spark, dir, model, q, k = 5, nprobe = 2)

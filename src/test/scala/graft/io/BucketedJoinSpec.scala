@@ -17,7 +17,7 @@ class BucketedJoinSpec extends SparkSpec {
   test("bucketed-bucketed join plans with zero Exchange; result equals the plain join") {
     val orders = graft.Tables.orders(spark, dir)
     val lineitem = graft.Tables.lineitem(spark, dir)
-    val root = java.nio.file.Files.createTempDirectory("bktspec").toString
+    val root = scratch("bktspec")
     Sinks.writeBucketed(orders, "bktspec_orders", s"$root/o",
       "o_orderkey", nBuckets = 4, sortCols = Seq("o_orderkey"))
     Sinks.writeBucketed(lineitem, "bktspec_lineitem", s"$root/l",
@@ -48,7 +48,7 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed-vs-unbucketed join shuffles ONLY the unbucketed side") {
     val orders = graft.Tables.orders(spark, dir)
-    val root = java.nio.file.Files.createTempDirectory("bktspec2").toString
+    val root = scratch("bktspec2")
     Sinks.writeBucketed(orders, "bktspec2_orders", s"$root/o",
       "o_orderkey", nBuckets = 4)
     try {

@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -19,7 +18,7 @@ class CrashRecoverySpec extends SparkSpec {
     spark.read.parquet(dir).as[(Int, String)].collect().sorted.toSeq
 
   test("compact re-run after a kill between delete and rename restores from staging") {
-    val dir = Files.createTempDirectory("graft-crash").toString + "/t"
+    val dir = scratch("crash") + "/t"
     val data = (1 to 100).map(i => (i, s"v$i"))
     data.toDF("k", "v").repartition(10).write.parquet(dir)
     // crash state: staged copy fully written, swap marker committed (the
@@ -41,7 +40,7 @@ class CrashRecoverySpec extends SparkSpec {
     // the reviewed hole: recursive delete is non-atomic, so a kill can
     // leave a PARTIAL original that still 'exists' — the swap marker, not
     // the dir's existence, must decide
-    val dir = Files.createTempDirectory("graft-crash").toString + "/t"
+    val dir = scratch("crash") + "/t"
     val data = (1 to 100).map(i => (i, s"v$i"))
     data.toDF("k", "v").repartition(10).write.parquet(dir)
     val staged = s"$dir.graft-compact-staging"
@@ -57,7 +56,7 @@ class CrashRecoverySpec extends SparkSpec {
   }
 
   test("compact re-run discards a PARTIAL staging dir (no _SUCCESS) and keeps the original") {
-    val dir = Files.createTempDirectory("graft-crash").toString + "/t"
+    val dir = scratch("crash") + "/t"
     val data = (1 to 40).map(i => (i, s"v$i"))
     data.toDF("k", "v").repartition(8).write.parquet(dir)
     // crash state: kill mid-staging-write — junk files, no _SUCCESS marker
@@ -71,7 +70,7 @@ class CrashRecoverySpec extends SparkSpec {
   }
 
   test("upsert recovery replays a mid-commit kill from staging (incl. emptied partition)") {
-    val root = Files.createTempDirectory("graft-crash").toString
+    val root = scratch("crash")
     val dir = s"$root/t"
     // target: partition a {1,2}, partition b {3}, partition c {4}
     Seq((1, "a", "x1"), (2, "a", "x2"), (3, "b", "x3"), (4, "c", "x4"))
@@ -103,7 +102,7 @@ class CrashRecoverySpec extends SparkSpec {
     // (_SUCCESS) and the manifest write must NOT replay — the overwrite
     // never started, and replaying without a manifest would leave a moved
     // key duplicated across partitions
-    val root = Files.createTempDirectory("graft-crash").toString
+    val root = scratch("crash")
     val dir = s"$root/t"
     Seq((1, "a", "x1"), (3, "b", "x3")).toDF("k", "p", "v")
       .write.partitionBy("p").parquet(dir)
@@ -119,7 +118,7 @@ class CrashRecoverySpec extends SparkSpec {
   }
 
   test("upsert entry discards partial staging (no _SUCCESS): target untouched") {
-    val root = Files.createTempDirectory("graft-crash").toString
+    val root = scratch("crash")
     val dir = s"$root/t"
     Seq((1, "a", "x1"), (2, "b", "x2")).toDF("k", "p", "v")
       .write.partitionBy("p").parquet(dir)

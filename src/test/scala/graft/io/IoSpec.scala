@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
 class SourcesSpec extends SparkSpec {
 
   test("S1/S2 CSV read with enforced schema (bad cells -> null, not crash)") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = scratch("csv")
     Files.writeString(Paths.get(s"$dir/in.csv"),
       "parceiro,ano\nFrança,2010\nONU,not-a-year\n")
     val schema = StructType(Seq(
@@ -21,7 +21,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JSONL read: schema enforced, malformed lines quarantined not fatal") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = scratch("jsonl")
     Files.writeString(Paths.get(s"$dir/docs.jsonl"),
       """{"doc_id": 1, "text": "hello world"}
         |{"doc_id": 2, "text": "second doc"}
@@ -40,7 +40,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("schema evolution: merged read surfaces columns newer files added") {
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val dir = scratch("evolve") + "/t"
     import spark.implicits._
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/part1")
     Seq((2L, "b", 9.5)).toDF("id", "v", "score").write.parquet(s"$dir/part2")
@@ -60,7 +60,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC round trip: content identical, filter pushed to the ORC scan") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/orders"
+    val dir = scratch("orc") + "/orders"
     val src = graft.Tables.orders(spark, "/root/testdata/sf0.001")
     Sources.writeOrc(src, dir)
     val back = Sources.readOrc(spark, dir)
@@ -77,7 +77,7 @@ class SinksSpec2 extends SparkSpec {
   import spark.implicits._
 
   test("K1 partitioned write: layout exists and partition pruning kicks in") {
-    val out = Files.createTempDirectory("graft-part").toString + "/t"
+    val out = scratch("part") + "/t"
     val df = Seq(("a", 2010, 1.0), ("b", 2011, 2.0), ("c", 2011, 3.0)).toDF("k", "ano", "v")
     Sinks.writeParquet(df, out, partitionBy = Seq("ano"))
     assert(Files.exists(Paths.get(s"$out/ano=2010")) &&
@@ -91,7 +91,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("K1 codec choice: zstd write round-trips and marks its files") {
-    val out = Files.createTempDirectory("graft-codec").toString + "/t"
+    val out = scratch("codec") + "/t"
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
     Sinks.writeParquet(df, out, codec = "zstd")
     val files = new java.io.File(out).listFiles().map(_.getName)
@@ -100,7 +100,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("bloom-filtered write: filter present on the enabled column only; reads intact") {
-    val out = Files.createTempDirectory("graft-bloom").toString + "/t"
+    val out = scratch("bloom") + "/t"
     // unordered high-cardinality hashes — the case where min/max stats
     // cannot skip anything and the bloom filter is the only point-lookup
     // pruning available
@@ -143,7 +143,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("z-order layout: both dimensions' per-file spans shrink vs a one-key sort") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val base = scratch("zorder")
     import spark.implicits._
     // two independent uniform dims — the adversarial case for one-key sorts
     val df = (0 until 20000).map { i =>
@@ -169,7 +169,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("range-sorted layout: output files cover disjoint key ranges") {
-    val dir = Files.createTempDirectory("graft-sorted").toString + "/orders"
+    val dir = scratch("sorted") + "/orders"
     Sinks.writeSorted(graft.Tables.orders(spark, "/root/testdata/sf0.001"),
       dir, "o_orderkey", numFiles = 4)
     val ranges = spark.read.parquet(dir)
@@ -183,7 +183,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("parquet upsert rewrites ONLY partitions containing updated keys") {
-    val dir = Files.createTempDirectory("graft-lake").toString + "/t"
+    val dir = scratch("lake") + "/t"
     Seq((1L, 2010, "a"), (2L, 2010, "b"), (3L, 2011, "c"), (4L, 2012, "d"))
       .toDF("k", "ano", "v")
       .write.partitionBy("ano").parquet(dir)
@@ -223,7 +223,7 @@ class SinksSpec2 extends SparkSpec {
     // __HIVE_DEFAULT_PARTITION__; plain-equality joins never match NULL, so
     // a non-null-safe merge would rewrite that partition with ONLY the
     // update rows, silently dropping the rest
-    val dir = Files.createTempDirectory("graft-lake-null").toString + "/t"
+    val dir = scratch("lake-null") + "/t"
     Seq((1L, Some(2010), "a"), (2L, None, "b"), (3L, None, "c"))
       .toDF("k", "ano", "v")
       .write.partitionBy("ano").parquet(dir)
@@ -235,7 +235,7 @@ class SinksSpec2 extends SparkSpec {
       .sorted.toSeq
     assert(got === Seq((1L, 2010, "a"), (2L, -1, "b2"), (3L, -1, "c")))
     // and a NULL KEY row in the target must also survive an unrelated upsert
-    val dir2 = Files.createTempDirectory("graft-lake-nullkey").toString + "/t"
+    val dir2 = scratch("lake-nullkey") + "/t"
     Seq((Some(1L), 2010, "a"), (None: Option[Long], 2010, "nk")).toDF("k", "ano", "v")
       .write.partitionBy("ano").parquet(dir2)
     Sinks.upsertParquet(spark, dir2, Seq((Some(1L), 2010, "a2")).toDF("k", "ano", "v"),
@@ -245,7 +245,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("upsert past the affected-partition cap fails loudly and leaves the target intact") {
-    val dir = Files.createTempDirectory("graft-lake-cap").toString + "/t"
+    val dir = scratch("lake-cap") + "/t"
     // 20 partitions, one row each — partitioned on a (deliberately) fine column
     (0L until 20L).map(i => (i, i.toInt, s"v$i")).toDF("k", "ano", "v")
       .write.partitionBy("ano").parquet(dir)
@@ -269,7 +269,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("compaction: many small files -> few, exact count, content identical") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = scratch("compact") + "/t"
     (0L until 1000L).toDF("id").repartition(50).write.parquet(dir)
     def nFiles = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -283,7 +283,7 @@ class SinksSpec2 extends SparkSpec {
   }
 
   test("compaction preserves a Hive-partitioned layout and evolved columns") {
-    val dir = Files.createTempDirectory("graft-compact2").toString + "/t"
+    val dir = scratch("compact2") + "/t"
     // partitioned table whose ano=2011 files predate the 'extra' column
     Seq((1L, 2010, "x")).toDF("k", "ano", "extra")
       .write.partitionBy("ano").parquet(dir)

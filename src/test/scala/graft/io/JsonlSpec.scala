@@ -14,7 +14,7 @@ class JsonlSpec extends SparkSpec {
     .toDF("doc_id", "source", "lang", "text")
 
   test("write → read (FAILFAST) round-trips escaping, unicode and NULLs") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString + "/x"
+    val dir = scratch("jsonl") + "/x"
     Jsonl.write(docs, dir)
     val back = Jsonl.read(spark, dir)
       .select($"doc_id", $"source", $"lang", $"text")
@@ -24,7 +24,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("readQuarantined routes malformed lines to _corrupt_record, keeps good rows") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl-q").toString + "/x"
+    val dir = scratch("jsonl-q") + "/x"
     Jsonl.write(docs.filter($"doc_id" <= 2), dir)
     // plant a foreign malformed line beside the good files
     java.nio.file.Files.write(

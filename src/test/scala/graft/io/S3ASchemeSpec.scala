@@ -42,7 +42,7 @@ class S3ASchemeSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration
       .set("fs.s3a.impl", classOf[MockS3AFileSystem].getName)
     // object stores have no working directory; qualify everything absolute
-    val local = java.nio.file.Files.createTempDirectory("graft-s3a").toString
+    val local = scratch("s3a")
     s"s3a://graft-bucket$local"
   }
 

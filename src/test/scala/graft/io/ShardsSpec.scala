@@ -20,7 +20,7 @@ class ShardsSpec extends SparkSpec {
 
   test("manifest: spans, counts, budget, and assignment checksum") {
     val packed = packedFixture()
-    val root = java.nio.file.Files.createTempDirectory("shards").toString + "/ex"
+    val root = scratch("shards") + "/ex"
     Shards.write(packed, root, Seq(col("pos"), col("doc_id")))
     val m = Shards.readManifest(spark, root).collect()
       .map(r => r.getLong(0) -> r).toMap
@@ -38,7 +38,7 @@ class ShardsSpec extends SparkSpec {
 
   test("order preserved: files of a shard concatenate (in name order) to pos order") {
     val packed = packedFixture()
-    val root = java.nio.file.Files.createTempDirectory("shards-o").toString + "/ex"
+    val root = scratch("shards-o") + "/ex"
     Shards.write(packed, root, Seq(col("pos"), col("doc_id")))
     (0L until 5L).foreach { sid =>
       val rows = Shards.readShard(spark, root, sid)
@@ -55,7 +55,7 @@ class ShardsSpec extends SparkSpec {
 
   test("manifest attests to the WRITTEN data files, not the in-memory plan") {
     val packed = packedFixture()
-    val root = java.nio.file.Files.createTempDirectory("shards-a").toString + "/ex"
+    val root = scratch("shards-a") + "/ex"
     Shards.write(packed, root, Seq(col("pos"), col("doc_id")))
     val shardType = packed.schema("shard_id").dataType
     def fromDisk() = Shards.manifest(spark.read.parquet(s"$root/data")
@@ -79,7 +79,7 @@ class ShardsSpec extends SparkSpec {
     val packed = graft.ext.Packing.packBinsBy(docs, Seq(col("pos"), col("doc_id")),
         "n_tokens", budget = 20L, numPartitions = 8)
       .withColumn("shard_id", expr("seq_id div 4"))
-    val root = java.nio.file.Files.createTempDirectory("shards-v").toString + "/ex"
+    val root = scratch("shards-v") + "/ex"
     // AQE coalesces the tiny range shuffle to one partition (one file per
     // shard); hold it off so shards straddle task boundaries as at scale
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -109,7 +109,7 @@ class ShardsSpec extends SparkSpec {
 
   test("crash window: missing either _SUCCESS marker refuses the read") {
     val packed = packedFixture()
-    val root = java.nio.file.Files.createTempDirectory("shards-c").toString + "/ex"
+    val root = scratch("shards-c") + "/ex"
     Shards.write(packed, root, Seq(col("pos"), col("doc_id")))
     // crash BETWEEN the data job and the manifest job
     val mMark = new java.io.File(s"$root/manifest/_SUCCESS")

@@ -40,7 +40,7 @@ class WarcSpec extends SparkSpec {
   test("archive write/read round trip through real files and the binaryFile source") {
     val docs = Seq((1L, "alpha"), (2L, "beta\r\n\r\ngamma"), (3L, "π-text"))
       .toDF("doc_id", "text").repartition(2)
-    val dir = java.nio.file.Files.createTempDirectory("warc-test").toString
+    val dir = scratch("warc-test")
     Warc.writeArchives(docs, dir)
     val back = Warc.readArchives(spark, dir)
       .as[(String, Long, String)].collect().sortBy(_._1)

@@ -13,7 +13,7 @@ class DataPrepSpec extends SparkSpec {
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   test("stage invariants: gate filters, dedup removes all exact dups, splits partition") {
-    val out = java.nio.file.Files.createTempDirectory("graft-prep").toString + "/corpus"
+    val out = scratch("prep") + "/corpus"
     val total = docs.count()
     val gated = DataPrep.qualityGate(docs, minScore = 3)
     assert(gated.count() <= total && gated.count() > 0)
@@ -40,8 +40,8 @@ class DataPrepSpec extends SparkSpec {
   }
 
   test("pipeline is deterministic end to end: rerun -> identical corpus") {
-    val out1 = java.nio.file.Files.createTempDirectory("graft-prep").toString + "/c1"
-    val out2 = java.nio.file.Files.createTempDirectory("graft-prep").toString + "/c2"
+    val out1 = scratch("prep") + "/c1"
+    val out2 = scratch("prep") + "/c2"
     val a = DataPrep.run(spark, docs, out1).select("doc_id", "split")
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted
     val b = DataPrep.run(spark, docs, out2).select("doc_id", "split")

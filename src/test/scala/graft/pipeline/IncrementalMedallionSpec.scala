@@ -29,7 +29,7 @@ class IncrementalMedallionSpec extends SparkSpec {
     "solares", "memorando", "05/06/2028", "http://c")
 
   test("incremental runs: restart skips seen files, dedup state crosses runs, twin == batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft-incr-spec").toString
+    val root = scratch("incr-spec")
     val dirs = IncrementalMedallion.Dirs(root)
 
     // wave 1: França twice (exact dup) + ONU
@@ -85,7 +85,7 @@ class IncrementalMedallionSpec extends SparkSpec {
     // re-runs it with the SAME batch id. The per-batch overwrite dirs make
     // that replay idempotent; this constructs exactly that state by
     // deleting the commit marker and restarting.
-    val root = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val root = scratch("replay")
     val landing = s"$root/landing"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     raw(Seq(franca, onu)).write.mode("append").parquet(landing)
     def run(): Unit = IncrementalMedallion.runFanOut(
