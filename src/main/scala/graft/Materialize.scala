@@ -37,14 +37,16 @@ object Materialize {
 
   /** Persist `df` for the length of `body`, then drop that cache entry,
     * also when `body` throws. Only the cache entry: a checkpoint `df`
-    * reads belongs to its maker, even if `body` released `df` early.
-    * `body` must not return a lazy plan over `df`: its blocks are gone
-    * once this returns.
+    * reads belongs to its maker, even if `body` released `df` early. A
+    * `df` whose plan is already cached on entry is run as it is, and that
+    * entry is left to whoever made it. `body` must not return a lazy plan
+    * over `df`: its blocks may be gone once this returns.
     */
   def using[T, R](df: Dataset[T])(body: Dataset[T] => R): R = {
-    df.persist()
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist()
     try body(df)
-    finally df.unpersist(): Unit
+    finally if (owned) df.unpersist(): Unit
   }
 
   /** Free the storage `df` holds. A persisted frame drops its cache entry

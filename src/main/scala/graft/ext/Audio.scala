@@ -467,14 +467,12 @@ object Audio {
       maxDist, idCol = "media_id")
       .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"), col("hamming"))
 
-  /** Audio dedup GROUPS — hash-first, the same quotient-graph argument as
-    * [[Multimodal.imageDedupGroups]]: identical fingerprints collapse to a
-    * min-id representative BEFORE pairing (exact duplicates are the
-    * dominant mass; a 500-copy clip is one rep row, not 125k pairs),
-    * banded near-dup search + connected components run over
-    * representatives, labels expand back through keyed joins. Membership
-    * matches pairwise CC: a clip appears iff its fingerprint group has
-    * ≥ 2 members or its rep matched another fingerprint within maxDist.
+  /** Audio dedup GROUPS — hash-first, [[SimHash.dedupGroupsFromSigs]]
+    * over the fingerprints: identical fingerprints collapse to a min-id
+    * representative BEFORE pairing (exact duplicates are the dominant
+    * mass; a 500-copy clip is one rep row, not 125k pairs), banded near-dup
+    * search + connected components run over representatives, labels
+    * expand back through keyed joins.
     */
   def audioDedupGroups(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
     Materialize.using(fingerprints(media))(audioDedupGroupsFromSigs(_, maxDist))
@@ -483,26 +481,12 @@ object Audio {
   /** [[audioDedupGroups]] from an already-fingerprinted `(media_id, afp)`
     * table — the decode-once boundary; caller owns the input's storage.
     * Returns a checkpoint, as [[Multimodal.imageDedupGroupsFromSigs]].
+    *
+    * Star CC, not propagation: an audio near-dup graph can chain through
+    * long paths (clips A~B~C… at hamming ≤ 3 each), and star converges in
+    * O(log n) rounds on ANY diameter where propagation's round bound
+    * assumes compact clusters.
     */
-  def audioDedupGroupsFromSigs(sigs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val grp = sigs.groupBy(col("afp"))
-      .agg(min(col("media_id")).as("rep"), count(lit(1)).as("grp_n"))
-    // star CC, not propagation: an audio near-dup graph can chain through
-    // long paths (clips A~B~C… at hamming ≤ 3 each), and star converges in
-    // O(log n) rounds on ANY diameter where propagation's round bound
-    // assumes compact clusters
-    val cc = Materialize.using(
-        grp.select(col("rep").as("media_id"), col("afp").as("simhash"))) { reps =>
-      Components.connectedComponentsStar(
-        SimHash.nearDuplicatesFromSigs(reps, maxDist, idCol = "media_id")
-          .select(col("doc_a"), col("doc_b")))
-    }
-    val out = sigs.join(grp, Seq("afp"))
-      .join(cc.select(col("doc_id").as("rep"), col("component")), Seq("rep"), "left")
-      .filter(col("grp_n") >= 2 || col("component").isNotNull)
-      .select(col("media_id"), coalesce(col("component"), col("rep")).as("component"))
-      .localCheckpoint(true)
-    Materialize.release(cc)
-    out
-  }
+  def audioDedupGroupsFromSigs(sigs: DataFrame, maxDist: Int = 3): DataFrame =
+    SimHash.dedupGroupsFromSigs(sigs, "afp", maxDist)(Components.connectedComponentsStar(_))
 }

@@ -14,8 +14,8 @@ import graft.Materialize
   * over the WORD-FREQUENCY VOCABULARY (distinct words + counts), which is
   * vocabulary-sized (≪ corpus; the one corpus-sized job is the initial
   * word count, a single keyed aggregation). Each merge round is one
-  * map-over-vocab + one pair-count aggregation; the argmax pair is a
-  * bounded single-row collect (count desc, then lexicographic — fully
+  * map-over-vocab + one pair-count aggregation; the round's top pairs are
+  * a bounded collect (count desc, then lexicographic — fully
   * deterministic), and the merge list itself is the model: `numMerges`
   * driver-side entries, the same bounded-model-state class as the IVF
   * centroids. Rounds localCheckpoint the vocab like the CC loop — an
@@ -87,84 +87,70 @@ object Bpe {
 
   /** Train `numMerges` merges. Returns them in rank order with the pair's
     * count at merge time. Stops early when no pair reaches `minCount`.
+    *
+    * `batch` compresses rounds for REAL merge counts: one round per merge
+    * is fine at 10 merges, but a 50k-merge production tokenizer would mean
+    * 50k driver-round jobs. Per round, take the top `batch`
+    * NON-CONFLICTING pairs (greedy down the (cnt desc, sym_a, sym_b)
+    * order, skipping any pair sharing a symbol with one already picked
+    * this round) and apply them IN RANK ORDER in one vocab map pass. A
+    * merge cannot destroy occurrences of a pair it shares no symbol with,
+    * so each picked pair's recorded count is its true count at its merge
+    * time; it CAN create occurrences (when its merged symbol string-equals
+    * a later pick's component), which the fixed rank-order application
+    * resolves deterministically. The job count drops from `numMerges` to
+    * ~`numMerges/batch`; the trade (the standard one) is that pairs
+    * CREATED by this round's merges can't be picked until next round, so
+    * the merge LIST may order differently than `batch = 1`, where ranks
+    * interleave.
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
-            minCount: Long = 2L): Seq[(String, String, Long)] =
-    trainOverVocab(symbolized(docs, textCol), numMerges, minCount)
+            minCount: Long = 2L, batch: Int = 1): Seq[(String, String, Long)] =
+    trainByCount(symbolized(docs, textCol), numMerges, minCount, batch)
 
-  /** The merge-round loop over ANY symbolized vocab — shared by the
+  /** Count-ranked merges over ANY symbolized vocab — shared by the
     * code-point trainer above and [[ByteBpe]]'s byte trainer (the symbol
     * alphabet is the only difference between the two tokenizers).
     */
-  private[ext] def trainOverVocab(symVocab: Dataset[(Seq[String], Long)],
-                                  numMerges: Int,
-                                  minCount: Long): Seq[(String, String, Long)] = {
-    require(numMerges >= 1, s"train: numMerges >= 1, got $numMerges")
+  private[ext] def trainByCount(symVocab: Dataset[(Seq[String], Long)], numMerges: Int,
+                                minCount: Long, batch: Int): Seq[(String, String, Long)] =
+    mergeRounds(symVocab, numMerges, batch)(
+      (vocab, n) => pairCounts(vocab)
+        .filter(col("cnt") >= minCount)
+        .orderBy(col("cnt").desc, col("sym_a"), col("sym_b"))
+        .limit(n).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)(
+      m => (m._1, m._2), mergeWord)
+
+  /** The merge-round loop of every merge-trained tokenizer ([[Bpe]],
+    * [[ByteBpe]], [[WordPiece]]). Each round asks `ranked` for the top
+    * `4·m` candidate rows of the current vocab (best first; `m` the merges
+    * still wanted this round, at most `batch`), greedily picks up to `m`
+    * whose pairs (`pair`) share no symbol, and applies them in rank order
+    * with `merge` in one vocab map pass. Stops when no candidate is left.
+    * The vocab is localCheckpointed per round (an iterative map otherwise
+    * stacks lineage per round) and the superseded round's blocks are
+    * released at once; none is left when this returns.
+    */
+  private[ext] def mergeRounds[R](symVocab: Dataset[(Seq[String], Long)], numMerges: Int,
+                                  batch: Int)(
+      ranked: (Dataset[(Seq[String], Long)], Int) => Seq[R])(
+      pair: R => (String, String),
+      merge: (Seq[String], String, String) => Seq[String]): Seq[R] = {
+    require(numMerges >= 1 && batch >= 1,
+      s"train: numMerges=$numMerges batch=$batch must be >= 1")
     val spark = symVocab.sparkSession
     import spark.implicits._
     var vocab: Dataset[(Seq[String], Long)] = symVocab.localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var round = 0
-    var done = false
-    while (round < numMerges && !done) {
-      val top = pairCounts(vocab)
-        .orderBy(col("cnt").desc, col("sym_a"), col("sym_b"))
-        .limit(1).collect() // bounded: one row (the argmax pair)
-      if (top.isEmpty || top(0).getLong(2) < minCount) done = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((a, b, c))
-        val prev = vocab
-        vocab = vocab.map { case (syms, f) => (mergeWord(syms, a, b), f) }
-          .localCheckpoint(true)
-        // without this, every round's vocab snapshot stays pinned in
-        // executor storage for the job
-        Materialize.release(prev)
-      }
-      round += 1
-    }
-    Materialize.release(vocab)
-    merges.toSeq
-  }
-
-  /** Batched training for REAL merge counts: [[train]] runs one
-    * distributed job per merge — fine at 10 merges, but a 50k-merge
-    * production tokenizer would mean 50k driver-round jobs. Per round,
-    * take the top `batch` NON-CONFLICTING pairs (greedy down the
-    * (cnt desc, sym_a, sym_b) order, skipping any pair sharing a symbol
-    * with one already picked this round) and apply them IN RANK ORDER in
-    * one vocab map pass. A merge cannot destroy occurrences of a pair it
-    * shares no symbol with, so each picked pair's recorded count is its
-    * true count at its merge time; it CAN create occurrences (when its
-    * merged symbol string-equals a later pick's component), which the
-    * fixed rank-order application resolves deterministically. The job
-    * count drops from `numMerges` to ~`numMerges/batch`; the trade (the
-    * standard one) is that pairs CREATED by this round's merges can't be
-    * picked until next round, so the merge LIST may order differently
-    * than strictly-sequential training where ranks interleave.
-    * `batch = 1` is exactly [[train]] (pinned in BpeSpec).
-    */
-  def trainBatched(docs: DataFrame, textCol: String, numMerges: Int,
-                   batch: Int = 16, minCount: Long = 2L): Seq[(String, String, Long)] = {
-    require(numMerges >= 1 && batch >= 1,
-      s"trainBatched: numMerges=$numMerges batch=$batch must be >= 1")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab: Dataset[(Seq[String], Long)] = symbolized(docs, textCol)
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+    val merges = scala.collection.mutable.ArrayBuffer.empty[R]
     var done = false
     while (merges.size < numMerges && !done) {
       val m = math.min(batch, numMerges - merges.size)
       // bounded collect: 4m candidate rows (model-state-sized) is plenty —
       // the greedy skip rate is < 2 symbols blocked per pick
-      val cand = pairCounts(vocab)
-        .filter(col("cnt") >= minCount)
-        .orderBy(col("cnt").desc, col("sym_a"), col("sym_b"))
-        .limit(4 * m).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       val used = scala.collection.mutable.HashSet.empty[String]
-      val picked = cand.iterator.filter { case (a, b, _) =>
+      val picked = ranked(vocab, 4 * m).iterator.filter { c =>
+        val (a, b) = pair(c)
         if (used(a) || used(b)) false
         else { used += a; used += b; true }
       }.take(m).toSeq
@@ -172,10 +158,12 @@ object Bpe {
       else {
         merges ++= picked
         val prev = vocab
-        val ps = picked.map(p => (p._1, p._2))
+        val ps = picked.map(pair)
         vocab = vocab.map { case (syms, f) =>
-          (ps.foldLeft(syms) { case (s, (a, b)) => mergeWord(s, a, b) }, f)
+          (ps.foldLeft(syms) { case (s, (a, b)) => merge(s, a, b) }, f)
         }.localCheckpoint(true)
+        // without this, every round's vocab snapshot stays pinned in
+        // executor storage for the job
         Materialize.release(prev)
       }
     }
@@ -186,8 +174,15 @@ object Bpe {
   /** Encode one word with a trained merge list (greedy lowest-rank-first —
     * the standard BPE encode loop). `ranks` maps pair → merge rank.
     */
-  private[ext] def encodeWord(word: String, ranks: Map[(String, String), Int]): Seq[String] = {
-    var syms = toSymbols(word)
+  private[ext] def encodeWord(word: String, ranks: Map[(String, String), Int]): Seq[String] =
+    encodeSymbols(toSymbols(word), ranks)
+
+  /** The greedy lowest-rank-first merge loop over a word's initial
+    * symbols — shared with [[ByteBpe]], whose symbols are bytes.
+    */
+  private[ext] def encodeSymbols(symbols: Seq[String],
+                                 ranks: Map[(String, String), Int]): Seq[String] = {
+    var syms = symbols
     var continue = true
     while (continue && syms.size >= 2) {
       val best = syms.sliding(2)

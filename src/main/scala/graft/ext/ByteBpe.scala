@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * Everything else — the merge-round loop, the pair-count aggregation,
   * the greedy lowest-rank-first encode, the vocab-not-corpus scale shape —
-  * is [[Bpe]]'s machinery, shared directly ([[Bpe.trainOverVocab]],
-  * [[Bpe.pairCounts]], [[Bpe.mergeWord]], [[Bpe.encodeWord]]).
+  * is [[Bpe]]'s machinery, shared directly ([[Bpe.trainByCount]],
+  * [[Bpe.pairCounts]], [[Bpe.mergeWord]], [[Bpe.encodeSymbols]]).
   */
 object ByteBpe {
 
@@ -67,37 +67,22 @@ object ByteBpe {
       .map { case (w, f) => (toByteSymbols(w), f) }
   }
 
-  /** Train `numMerges` byte merges — [[Bpe.trainOverVocab]] over the byte
-    * vocab; same determinism (count desc, lexicographic pair tiebreak —
-    * now over hex strings) and the same vocab-sized rounds.
+  /** Train `numMerges` byte merges — [[Bpe.trainByCount]] over the byte
+    * vocab, one merge per round; same determinism (count desc,
+    * lexicographic pair tiebreak — now over hex strings) and the same
+    * vocab-sized rounds.
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
             minCount: Long = 2L): Seq[(String, String, Long)] =
-    Bpe.trainOverVocab(symbolized(docs, textCol), numMerges, minCount)
+    Bpe.trainByCount(symbolized(docs, textCol), numMerges, minCount, batch = 1)
 
   /** Encode one word: byte symbols + the shared greedy lowest-rank-first
     * merge loop. Never throws — every base byte is its own symbol.
     */
   private[ext] def encodeWord(word: String,
-                              ranks: Map[(String, String), Int]): Seq[String] = {
-    var syms = toByteSymbols(word)
-    var continue = true
-    while (continue && syms.size >= 2) {
-      val best = syms.sliding(2)
-        .flatMap(p => ranks.get((p(0), p(1))).map(r => ((p(0), p(1)), r)))
-        .reduceOption((x, y) => if (y._2 < x._2) y else x)
-      best match {
-        case Some(((a, b), _)) => syms = Bpe.mergeWord(syms, a, b)
-        case None => continue = false
-      }
-    }
-    syms
-  }
+                              ranks: Map[(String, String), Int]): Seq[String] =
+    Bpe.encodeSymbols(toByteSymbols(word), ranks)
 
-  /** Tokenize a corpus with a trained byte-merge list — the [[Bpe.tokenize]]
-    * shape (id, word count, token count, first word's tokens as hex
-    * symbols joined "|"), same per-partition memo discipline.
-    */
   /** Per-document byte-FALLBACK stats under frozen merges — the tokenizer
     * staleness signal (the [[graft.streaming.VectorIndexStream]] drift
     * gate's analog for the tokenizer family): a token that is a single
@@ -134,6 +119,10 @@ object ByteBpe {
       .toDF(idCol, "n_tokens", "n_fallback")
   }
 
+  /** Tokenize a corpus with a trained byte-merge list — the [[Bpe.tokenize]]
+    * shape (id, word count, token count, first word's tokens as hex
+    * symbols joined "|"), same per-partition memo discipline.
+    */
   def tokenize(docs: DataFrame, idCol: String, textCol: String,
                merges: Seq[(String, String, Long)]): DataFrame = {
     val spark = docs.sparkSession

@@ -61,10 +61,7 @@ object Components {
     // loop over a fuzzy-join pair graph, measured 2.78 → 3.10 s with it;
     // cc_ledger flat). A deployment running high-diameter graphs at scale
     // should lay `sym` out once like PageRank.loopInputs does.
-    val sym = edges
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(edges.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .localCheckpoint(true)
+    val sym = symmetricEdges(edges, aCol, bCol).localCheckpoint(true)
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(true)
@@ -119,6 +116,13 @@ object Components {
         s"$caller: $c must be an integral id column, got $dt " +
           "(hash non-numeric ids to 64-bit first, e.g. xxhash64)")
     }
+
+  /** Both directions of every `(aCol, bCol)` edge as long `(src, dst)`
+    * rows — the undirected graph as a directed edge list.
+    */
+  private[ext] def symmetricEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .union(edges.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond") — same output

@@ -38,8 +38,7 @@ import graft.Materialize
   * caller's `vocabDf` plan included) for the duration of the call and
   * return the pair-sized / vocabulary-sized result pinned
   * ([[graft.Materialize]]) — nothing vocabulary-shaped is computed twice.
-  * Callers passing an already-persisted `vocabDf` should know the call
-  * unpersists that exact plan on return.
+  * A `vocabDf` the caller already persisted stays cached.
   */
 object EditDist {
 
@@ -223,8 +222,7 @@ object EditDist {
   def typoCanonical(vocabDf: DataFrame, maxDist: Int = 1): DataFrame = {
     // vocabDf is referenced three times (neighborhood keys, the self
     // union, the count join) and is typically a corpus aggregation —
-    // persist it for the call (NOTE: the caller's plan is unpersisted on
-    // return; see the object scaladoc)
+    // persist it for the call
     Materialize.using(vocabDf) { v =>
       Materialize.using(neighborhoodKeys(v, maxDist)) { keys =>
         val pairs = nearPairsOn(keys, maxDist).select(col("word_a"), col("word_b"))

@@ -39,34 +39,17 @@ object KCore {
             bCol: String = "doc_b", maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     Components.requireIntegralIds("kCore", edges, Seq(aCol, bCol))
-    var sym = edges
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(edges.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .distinct() // a multigraph would double-count parallel edges
-      .localCheckpoint(true)
+    var sym = simpleEdges(edges, aCol, bCol)
     var prev = sym.count() // directed edge count; strictly decreases
     var it = 0
     var done = prev == 0L
     while (!done) {
       require(it < maxIter, s"kCore: no fixpoint after $maxIter rounds")
       it += 1
-      // survivors of this round: degree >= k over the CURRENT edge set;
-      // both endpoints must survive for an edge to survive
-      val keep = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-      val next = sym
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      val n = next.count() // the round's ONE job: count + materialize
-      // drop the superseded round's checkpoint blocks NOW: waiting for the
-      // ContextCleaner pins up to maxIter copies of the edge table in
-      // executor storage, squeezing the session's shared persisted state
-      Materialize.release(sym)
+      sym = peel(sym, k)
+      val n = sym.count() // the round's ONE job: count + materialize
       done = n == prev || n == 0L
       prev = n
-      sym = next
     }
     degrees(sym)
   }
@@ -80,23 +63,32 @@ object KCore {
                   aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
     require(k >= 1 && rounds >= 0, s"kCoreRounds: k=$k rounds=$rounds")
     Components.requireIntegralIds("kCoreRounds", edges, Seq(aCol, bCol))
-    var sym = edges
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(edges.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .distinct()
+    degrees((0 until rounds).foldLeft(simpleEdges(edges, aCol, bCol))((sym, _) => peel(sym, k)))
+  }
+
+  /** The symmetric edge set without parallel edges, checkpointed — a
+    * multigraph would double-count them in the degrees.
+    */
+  private def simpleEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    Components.symmetricEdges(edges, aCol, bCol).distinct().localCheckpoint(true)
+
+  /** One peel round: drop every node of degree < k over the CURRENT edge
+    * set, and every edge that loses an endpoint (both must survive). The
+    * surviving edges come back checkpointed (eager, so `sym` has no
+    * consumers left) and `sym`'s blocks are released now: waiting for the
+    * ContextCleaner pins up to maxIter copies of the edge table in
+    * executor storage, squeezing the session's shared persisted state.
+    */
+  private def peel(sym: DataFrame, k: Int): DataFrame = {
+    val keep = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k).select(col("src").as("node"))
+    val next = sym
+      .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+      .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src"), col("dst"))
       .localCheckpoint(true)
-    (0 until rounds).foreach { _ =>
-      val keep = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-      val next = sym
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true) // eager — materialized here, so the input
-      Materialize.release(sym) // round's blocks have no consumers left
-      sym = next
-    }
-    degrees(sym)
+    Materialize.release(sym)
+    next
   }
 
   /** The node-sized `(node, degree)` result, checkpointed so the last

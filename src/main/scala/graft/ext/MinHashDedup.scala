@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Materialize
 
@@ -125,6 +125,78 @@ object MinHashDedup {
         .select(col("doc_a"), col("doc_b"), col("jaccard")))
     }
 
+  /** The native sketch's band key: a 32-bit hash of the band index and
+    * the band's sub-signature (the index keeps buckets of different bands
+    * apart). The hash decides the candidate set, so this expression is
+    * part of the operator's output contract.
+    */
+  private def hashKey(r: Int): String = s"hash(b, slice(sig, b * $r + 1, $r))"
+
+  /** The md5 twin's band key: band index + the band's sub-signature,
+    * serialized — the string the DuckDB oracle builds verbatim.
+    */
+  private def stringKey(r: Int): String =
+    s"concat(b, ':', array_join(transform(slice(sigs, b * $r + 1, $r), v -> cast(v as string)), ','))"
+
+  /** `(idCol, band_key)`: one row per band of each signature, `key` the
+    * band encoding over the band index `b`. CRITICAL scale property: only
+    * these rows flow through the LSH shuffle — never the shingle arrays
+    * (shipping payloads through the explode+join is what turns LSH into a
+    * data explosion at scale).
+    */
+  private def bandKeys(sigs: DataFrame, idCol: String, bands: Int, key: String): DataFrame =
+    sigs.select(col(idCol),
+      explode(expr(s"transform(sequence(0, ${bands - 1}), b -> $key)")).as("band_key"))
+
+  /** Banded candidate pairs `(doc_a, doc_b)`, `doc_a < doc_b`, over one
+    * band-key frame — the ONE candidate rule of the pair searches, so the
+    * estimator calibration sees the identical candidate population as the
+    * dedup it calibrates.
+    */
+  private def pairCandidates(banded: DataFrame): DataFrame =
+    banded.toDF("doc_a", "band_key")
+      .join(banded.toDF("doc_b", "band_key"), Seq("band_key"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b")
+      .dropDuplicates("doc_a", "doc_b")
+
+  /** Exact shingle Jaccard of a candidate's `sh_a` and `sh_b` sets — the
+    * one verify of every banded search here.
+    */
+  private def jaccard: Column =
+    size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+      size(array_union(col("sh_a"), col("sh_b")))
+
+  /** Candidates verified: `(doc_a, doc_b, jaccard)` with jaccard ≥
+    * `minJaccard`. Shingle sets join in for candidates only.
+    */
+  private def verifiedPairs(sigs: DataFrame, idCol: String, bands: Int, key: String,
+                            minJaccard: Double): DataFrame =
+    pairCandidates(bandKeys(sigs, idCol, bands, key))
+      .join(sigs.select(col(idCol).as("doc_a"), col("shingles").as("sh_a")), "doc_a")
+      .join(sigs.select(col(idCol).as("doc_b"), col("shingles").as("sh_b")), "doc_b")
+      .withColumn("jaccard", jaccard)
+      .filter(col("jaccard") >= minJaccard)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+
+  /** The ids of `batchIds` that near-duplicate nothing in `cs`, as a lazy
+    * plan: the ONE batch×corpus candidate rule (a band-key collision
+    * between `bs` and `cs`), then the Jaccard verify. An id with no
+    * signature in `bs` comes back novel.
+    */
+  private def novelIds(batchIds: DataFrame, bs: DataFrame, cs: DataFrame, idCol: String,
+                       bands: Int, key: String, minJaccard: Double): DataFrame = {
+    val matched = bandKeys(bs, idCol, bands, key).toDF("batch_id", "band_key")
+      .join(bandKeys(cs, idCol, bands, key).toDF("corpus_id", "band_key"), Seq("band_key"))
+      .select("batch_id", "corpus_id")
+      .dropDuplicates("batch_id", "corpus_id")
+      .join(bs.select(col(idCol).as("batch_id"), col("shingles").as("sh_a")), "batch_id")
+      .join(cs.select(col(idCol).as("corpus_id"), col("shingles").as("sh_b")), "corpus_id")
+      .filter(jaccard >= minJaccard)
+      .select(col("batch_id").as(idCol)).distinct()
+    batchIds.select(col(idCol)).join(matched, Seq(idCol), "left_anti")
+  }
+
   /** LSH banding + exact-Jaccard verify over [[signaturesMd5]] output —
     * the twin's pair search. Same scale shape as [[nearDuplicates]]: ONE
     * shuffle on the band key (band index + the band's sub-signature,
@@ -134,41 +206,11 @@ object MinHashDedup {
     * all pairs, then exact Jaccard), so banding + verify are pinned
     * cross-engine end to end.
     */
-  /** Banded candidate pairs `(doc_a, doc_b)` over a [[signaturesMd5]]
-    * frame — the ONE place the band-key encoding and candidate rule live,
-    * shared by the pair search and the estimator calibration so both see
-    * the identical candidate population (a divergence here would make the
-    * calibration measure a different threshold population than the dedup
-    * it calibrates).
-    */
-  private def bandedCandidatesMd5(sigs: DataFrame, idCol: String,
-                                  h: Int, bands: Int): DataFrame = {
-    val r = h / bands
-    val banded = sigs
-      .select(col(idCol),
-        explode(expr(s"""transform(sequence(0, ${bands - 1}),
-          b -> concat(b, ':', array_join(transform(slice(sigs, b * $r + 1, $r),
-            v -> cast(v as string)), ',')))""")).as("band_key"))
-    banded.toDF("doc_a", "band_key")
-      .join(banded.toDF("doc_b", "band_key"), Seq("band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-  }
-
   def nearDuplicatesMd5(docs: DataFrame, minJaccard: Double = 0.5,
                         idCol: String = "doc_id", textCol: String = "text",
-                        h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame = {
-    val sigs = signaturesMd5(docs, idCol, textCol, h, k).persist()
-    bandedCandidatesMd5(sigs, idCol, h, bands)
-      .join(sigs.select(col(idCol).as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-      .join(sigs.select(col(idCol).as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+                        h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame =
+    verifiedPairs(signaturesMd5(docs, idCol, textCol, h, k).persist(), idCol, bands,
+      stringKey(h / bands), minJaccard)
 
   /** MinHash ESTIMATOR CALIBRATION over the md5 twin (round 14): for every
     * banded candidate pair, the sketch's Jaccard estimate — the fraction
@@ -181,8 +223,8 @@ object MinHashDedup {
     * production threshold sees. est = matches/h is one exact small-int
     * divide by a power of two — bit-identical cross-engine; the exact
     * Jaccard is the [[exactPairsMd5]] expression. Same scale shape as
-    * [[nearDuplicatesMd5]] (the SAME [[bandedCandidatesMd5]] population):
-    * one band-key shuffle, arrays join in for candidates only.
+    * [[nearDuplicatesMd5]] (the SAME candidate population): one band-key
+    * shuffle, arrays join in for candidates only.
     *
     * Returns the candidate-pair-sized result pinned; the signature frame
     * is cached only for the call.
@@ -191,7 +233,7 @@ object MinHashDedup {
                          textCol: String = "text",
                          h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame =
     Materialize.using(signaturesMd5(docs, idCol, textCol, h, k)) { sigs =>
-      Materialize.pin(bandedCandidatesMd5(sigs, idCol, h, bands)
+      Materialize.pin(pairCandidates(bandKeys(sigs, idCol, bands, stringKey(h / bands)))
         .join(sigs.select(col(idCol).as("doc_a"),
           col("shingles").as("sh_a"), col("sigs").as("sg_a")), "doc_a")
         .join(sigs.select(col(idCol).as("doc_b"),
@@ -200,8 +242,7 @@ object MinHashDedup {
           (expr("""aggregate(zip_with(sg_a, sg_b,
                (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, v) -> acc + v)""")
             .cast("double") / lit(h.toDouble)).as("est"),
-          (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b")))).as("jaccard")))
+          jaccard.as("jaccard")))
     }
 
   /** The incremental md5-twin core, over two [[signaturesMd5]]-shaped
@@ -234,28 +275,12 @@ object MinHashDedup {
     require(bands >= 1 && h % bands == 0,
       s"minhash: h must be divisible by bands (h=$h, bands=$bands) — a " +
         "ragged band slice would band on short/empty sub-signatures")
-    val r = h / bands
     // each side feeds banding AND verify — persist for the call
     // (measured: the unpersisted form re-ran the md5 sketch per consumer,
     // 14.3 s warm vs 0.5 s for the persisted pairs twin at sf0.1)
     val bs = if (materialize) batchSigs.persist() else batchSigs
     val cs = if (materialize) corpusSigs.persist() else corpusSigs
-    def banded(sigs: DataFrame, as: String) = sigs
-      .select(col(idCol).as(as),
-        explode(expr(s"""transform(sequence(0, ${bands - 1}),
-          b -> concat(b, ':', array_join(transform(slice(sigs, b * $r + 1, $r),
-            v -> cast(v as string)), ',')))""")).as("band_key"))
-    val candidates = banded(bs, "batch_id")
-      .join(banded(cs, "corpus_id"), Seq("band_key"))
-      .select("batch_id", "corpus_id")
-      .dropDuplicates("batch_id", "corpus_id")
-    val matched = candidates
-      .join(bs.select(col(idCol).as("batch_id"), col("shingles").as("sh_a")), "batch_id")
-      .join(cs.select(col(idCol).as("corpus_id"), col("shingles").as("sh_b")), "corpus_id")
-      .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))) >= minJaccard)
-      .select(col("batch_id").as(idCol)).distinct()
-    val novel = batchIds.select(col(idCol)).join(matched, Seq(idCol), "left_anti")
+    val novel = novelIds(batchIds, bs, cs, idCol, bands, stringKey(h / bands), minJaccard)
     if (!materialize) novel
     else {
       // pin BEFORE releasing the sig frames: the result is computed from them
@@ -287,7 +312,6 @@ object MinHashDedup {
   def nearDuplicates(docs: DataFrame, minJaccard: Double = 0.7,
                      idCol: String = "doc_id", textCol: String = "text",
                      h: Int = 128, bands: Int = 32): DataFrame = {
-    val r = h / bands
     // shingle sets are used three times (banding + both sides of the
     // verification join) — persist beats recomputation even with the cheap
     // native sketch expressions (measured: 1.2s warm cached vs 7.5s
@@ -295,34 +319,7 @@ object MinHashDedup {
     // until `Materialize.release` or `clearCache`, and calls with the same
     // plan share the one entry, so repeat callers never stack copies.
     val sigs = signatures(docs, idCol, textCol, h).persist()
-
-    // band key: hash of the band's sub-signature (+ band index so buckets
-    // of different bands never collide). CRITICAL scale property: only
-    // (band_key, doc_id) pairs flow through the LSH shuffle — never the
-    // shingle arrays (shipping payloads through the explode+join is what
-    // turns LSH into a data explosion at scale).
-    val banded = sigs
-      .select(col(idCol),
-        expr(s"""transform(sequence(0, ${bands - 1}),
-          b -> hash(b, slice(sig, b * $r + 1, $r)))""").as("band_keys"))
-      .select(col(idCol), explode(col("band_keys")).as("band_key"))
-
-    val candidates = banded.toDF("doc_a", "band_key")
-      .join(banded.toDF("doc_b", "band_key"), Seq("band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-
-    // verification: join the (small) candidate set back to shingle sets
-    val withSets = candidates
-      .join(sigs.select(col(idCol).as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-      .join(sigs.select(col(idCol).as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-
-    withSets
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= minJaccard)
+    verifiedPairs(sigs, idCol, bands, hashKey(h / bands), minJaccard)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
@@ -349,26 +346,10 @@ object MinHashDedup {
   def newAgainstCorpus(batch: DataFrame, corpus: DataFrame,
                        minJaccard: Double = 0.7,
                        idCol: String = "doc_id", textCol: String = "text",
-                       h: Int = 128, bands: Int = 32): DataFrame = {
-    val r = h / bands
-    def banded(sigs: DataFrame, as: String) = sigs
-      .select(col(idCol).as(as),
-        explode(expr(s"""transform(sequence(0, ${bands - 1}),
-          b -> hash(b, slice(sig, b * $r + 1, $r)))""")).as("band_key"))
+                       h: Int = 128, bands: Int = 32): DataFrame =
     // each side's sketch feeds banding AND verify — persist, the same
     // session cache as nearDuplicates
-    val bs = signatures(batch, idCol, textCol, h).persist()
-    val cs = signatures(corpus, idCol, textCol, h).persist()
-    val candidates = banded(bs, "batch_id")
-      .join(banded(cs, "corpus_id"), Seq("band_key"))
-      .select("batch_id", "corpus_id")
-      .dropDuplicates("batch_id", "corpus_id")
-    val matched = candidates
-      .join(bs.select(col(idCol).as("batch_id"), col("shingles").as("sh_a")), "batch_id")
-      .join(cs.select(col(idCol).as("corpus_id"), col("shingles").as("sh_b")), "corpus_id")
-      .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))) >= minJaccard)
-      .select(col("batch_id").as(idCol)).distinct()
-    batch.select(col(idCol)).join(matched, Seq(idCol), "left_anti")
-  }
+    novelIds(batch, signatures(batch, idCol, textCol, h).persist(),
+      signatures(corpus, idCol, textCol, h).persist(), idCol, bands, hashKey(h / bands),
+      minJaccard)
 }

@@ -659,22 +659,11 @@ object Multimodal {
   }
 
   /** Image dedup GROUPS — (media_id, component), component = min reachable
-    * media_id under the hamming-≤-maxDist relation — computed HASH-FIRST:
-    * identical-hash images collapse to one representative (min id per
-    * distinct dHash) BEFORE any pairing, banded near-dup search + connected
-    * components run over representatives only, and labels expand back
-    * through two keyed joins. Running CC over the fully-expanded pair
-    * graph instead blows up quadratically in the duplicate-group size —
-    * exact duplicates are the DOMINANT mass in a web image corpus (a
-    * 500-copy image is 125k pairs expanded, ONE rep row here; the expanded
-    * form OOM'd at sf1 in round 8, which is why this exists). Correctness
-    * is unchanged because adjacency depends only on the hashes: members of
-    * the same hash are mutually hamming-0, so the quotient graph on
-    * distinct hashes has exactly the original connectivity, and min-rep =
-    * min-member per hash makes the quotient's min-label the global one.
-    * Membership rule matches pairwise CC: a node appears iff it has ≥ 1
-    * pair — its hash group has ≥ 2 members, or its rep matched another
-    * hash within maxDist.
+    * media_id under the hamming-≤-maxDist relation — computed HASH-FIRST
+    * by [[SimHash.dedupGroupsFromSigs]] over the dHashes. Running CC over
+    * the fully-expanded pair graph instead blows up quadratically in the
+    * duplicate-group size (the expanded form OOM'd at sf1 in round 8,
+    * which is why the hash-first form exists).
     */
   def imageDedupGroups(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
     Materialize.using(perceptualHashes(media).select(col("media_id"), col("dhash")))(
@@ -683,28 +672,10 @@ object Multimodal {
 
   /** [[imageDedupGroups]] from an already-hashed `(media_id, dhash)`
     * table — the decode-once boundary, as [[imageNearDuplicatesFromSigs]].
-    * The caller owns the input's storage. Returns a checkpoint: the
-    * representatives' component labels it reads are freed before return.
+    * The caller owns the input's storage. Returns a checkpoint.
     */
-  def imageDedupGroupsFromSigs(sigs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val grp = sigs.groupBy(col("dhash"))
-      .agg(min(col("media_id")).as("rep"), count(lit(1)).as("grp_n"))
-    // cached here for the CC loop: nearDuplicatesFromSigs leaves an input
-    // that is already cached to its caller, so this call frees it
-    val cc = Materialize.using(
-        grp.select(col("rep").as("media_id"), col("dhash").as("simhash"))) { reps =>
-      Components.connectedComponents(
-        SimHash.nearDuplicatesFromSigs(reps, maxDist, idCol = "media_id")
-          .select(col("doc_a"), col("doc_b")))
-    }
-    val out = sigs.join(grp, Seq("dhash"))
-      .join(cc.select(col("doc_id").as("rep"), col("component")), Seq("rep"), "left")
-      .filter(col("grp_n") >= 2 || col("component").isNotNull)
-      .select(col("media_id"), coalesce(col("component"), col("rep")).as("component"))
-      .localCheckpoint(true)
-    Materialize.release(cc)
-    out
-  }
+  def imageDedupGroupsFromSigs(sigs: DataFrame, maxDist: Int = 3): DataFrame =
+    SimHash.dedupGroupsFromSigs(sigs, "dhash", maxDist)(Components.connectedComponents(_))
 
   /** DUP-RATE-CONSTANT class modulus for the media/audio dedup fixtures
     * (round-12 verdict item 2): `101 · max(1, n/5000)` — identical to the

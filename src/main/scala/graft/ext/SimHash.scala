@@ -164,4 +164,45 @@ object SimHash {
       .filter(col("hamming") <= maxDist)
       .select("doc_a", "doc_b", "hamming")
   }
+
+  /** Media dedup GROUPS `(media_id, component)` over an `(media_id,
+    * sigCol)` table, computed HASH-FIRST: identical signatures collapse to
+    * one representative (min id per distinct signature) BEFORE any
+    * pairing, the banded near-dup search ([[nearDuplicatesFromSigs]]) and
+    * `components` run over representatives only, and labels expand back
+    * through two keyed joins. Exact duplicates are the dominant mass of a
+    * web media corpus (a 500-copy image is 125k pairs expanded, ONE rep
+    * row here). Correctness is unchanged because adjacency depends only
+    * on the signatures: members of one signature are mutually hamming-0,
+    * so the quotient graph on distinct signatures has exactly the original
+    * connectivity, and min-rep = min-member per signature makes the
+    * quotient's min label the global one. Membership matches pairwise CC:
+    * a node appears iff its signature group has ≥ 2 members or its rep
+    * matched another signature within `maxDist`.
+    *
+    * `components` maps `(doc_a, doc_b)` pairs to `(doc_id, component)`
+    * labels ([[Components.connectedComponents]] or
+    * [[Components.connectedComponentsStar]]). The caller owns the input's
+    * storage. Returns a checkpoint: the representatives' component labels
+    * it reads are freed before return.
+    */
+  private[ext] def dedupGroupsFromSigs(sigs: DataFrame, sigCol: String, maxDist: Int)(
+      components: DataFrame => DataFrame): DataFrame = {
+    val grp = sigs.groupBy(col(sigCol))
+      .agg(min(col("media_id")).as("rep"), count(lit(1)).as("grp_n"))
+    // cached here for the CC loop: nearDuplicatesFromSigs leaves an input
+    // that is already cached to its caller, so this call frees it
+    val cc = Materialize.using(
+        grp.select(col("rep").as("media_id"), col(sigCol).as("simhash"))) { reps =>
+      components(nearDuplicatesFromSigs(reps, maxDist, idCol = "media_id")
+        .select(col("doc_a"), col("doc_b")))
+    }
+    val out = sigs.join(grp, Seq(sigCol))
+      .join(cc.select(col("doc_id").as("rep"), col("component")), Seq("rep"), "left")
+      .filter(col("grp_n") >= 2 || col("component").isNotNull)
+      .select(col("media_id"), coalesce(col("component"), col("rep")).as("component"))
+      .localCheckpoint(true)
+    Materialize.release(cc)
+    out
+  }
 }

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.Materialize
 
 /** WordPiece tokenizer TRAINING and encoding on Spark — the BERT-class
   * member of the tokenizer family beside [[Bpe]] (char merges),
@@ -20,9 +19,10 @@ import graft.Materialize
   * VOCABULARY, never the corpus — per round one pair-count aggregation,
   * one symbol-count aggregation (the score's denominator, re-counted each
   * round because merges change symbol occurrences), one broadcast-sized
-  * argmax collect. The trained model is `numMerges` driver-side rows; the
-  * serving vocabulary adds the corpus alphabet (alphabet-sized, the same
-  * bounded-model-state class as the IVF centroids).
+  * collect of the round's top pairs. The trained model is `numMerges`
+  * driver-side rows; the serving vocabulary adds the corpus alphabet
+  * (alphabet-sized, the same bounded-model-state class as the IVF
+  * centroids).
   *
   * Cross-engine exactness (the repo's no-libm rule): the score is the
   * one place a ratio is unavoidable, and it is computed as ONE correctly-
@@ -113,110 +113,37 @@ object WordPiece {
     * `(sym_a, sym_b, cnt, ca, cb)` — the pair's count and the two symbol
     * counts at merge time (the score `cnt/(ca·cb)` is derived, never
     * stored: the model stays all-integer). Stops early when the vocab
-    * runs out of pairs.
-    */
-  def train(docs: DataFrame, textCol: String,
-            numMerges: Int): Seq[(String, String, Long, Long, Long)] = {
-    require(numMerges >= 1, s"wordpiece: numMerges >= 1, got $numMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab: Dataset[(Seq[String], Long)] =
-      symbolized(docs, textCol).localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long, Long, Long)]
-    var done = false
-    while (merges.size < numMerges && !done) {
-      val sc = symbolCounts(vocab)
-      val top = Bpe.pairCounts(vocab)
-        .join(sc.select(col("sym").as("sym_a"), col("c").as("ca")), Seq("sym_a"))
-        .join(sc.select(col("sym").as("sym_b"), col("c").as("cb")), Seq("sym_b"))
-        // ONE correctly-rounded IEEE divide on exact integers — identical
-        // bits on both engines (see the object doc); the double is only
-        // ever a sort key
-        .orderBy((col("cnt").cast("double") / (col("ca") * col("cb")).cast("double")).desc,
-          col("sym_a"), col("sym_b"))
-        .select(col("sym_a"), col("sym_b"), col("cnt"), col("ca"), col("cb"))
-        .limit(1).collect() // bounded: one row (the argmax pair)
-      if (top.isEmpty) done = true
-      else {
-        val r = top(0)
-        val (a, b) = (r.getString(0), r.getString(1))
-        merges += ((a, b, r.getLong(2), r.getLong(3), r.getLong(4)))
-        val prev = vocab
-        vocab = vocab.map { case (syms, f) => (mergeWord(syms, a, b), f) }
-          .localCheckpoint(true)
-        Materialize.release(prev)
-      }
-    }
-    Materialize.release(vocab)
-    merges.toSeq
-  }
-
-  /** Batched training for REAL vocab sizes — [[Bpe.trainBatched]]'s
-    * round-compression ported to the likelihood score (round-13 verdict:
-    * [[train]] is one distributed round per merge, so a production
-    * 30k-merge vocabulary would be 30k Spark jobs). Per round, rank pairs
-    * by `cnt/(ca·cb)` (the same one-IEEE-divide sort key as [[train]]),
-    * then greedily take the top `batch` NON-CONFLICTING pairs — skipping
-    * any pair sharing a symbol with one already picked this round — and
-    * apply them IN RANK ORDER in one vocab map pass.
+    * runs out of pairs. The loop is [[Bpe.mergeRounds]], ranked by score.
     *
-    * Why the recorded `(cnt, ca, cb)` stay true at each pick's merge time:
-    * a merge only touches occurrences of its own two symbols, and
-    * non-conflicting picks share none — so neither a later pick's pair
-    * count nor its two symbol counts (the score's denominator — the
-    * WordPiece-specific part of the argument) can be changed by an
-    * earlier pick this round. A merge CAN create occurrences (its joined
-    * symbol may string-equal a later pick's component), which the fixed
-    * rank-order application resolves deterministically — the same trade
-    * as [[Bpe.trainBatched]]: pairs CREATED this round wait for the next
-    * round's count, so the merge LIST may order differently than
-    * strictly-sequential training. `batch = 1` is exactly [[train]]
-    * (pinned in WordPieceSpec).
+    * `batch` is [[Bpe.train]]'s round compression ported to the
+    * likelihood score (round-13 verdict: one distributed round per merge
+    * makes a production 30k-merge vocabulary 30k Spark jobs). Why the
+    * recorded `(cnt, ca, cb)` stay true at each pick's merge time: a merge
+    * only touches occurrences of its own two symbols, and non-conflicting
+    * picks share none — so neither a later pick's pair count nor its two
+    * symbol counts (the score's denominator — the WordPiece-specific part
+    * of the argument) can be changed by an earlier pick this round. Pairs
+    * CREATED this round wait for the next round's count, so the merge
+    * LIST may order differently than `batch = 1`.
     */
-  def trainBatched(docs: DataFrame, textCol: String, numMerges: Int,
-                   batch: Int = 16): Seq[(String, String, Long, Long, Long)] = {
-    require(numMerges >= 1 && batch >= 1,
-      s"wordpiece trainBatched: numMerges=$numMerges batch=$batch must be >= 1")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab: Dataset[(Seq[String], Long)] =
-      symbolized(docs, textCol).localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long, Long, Long)]
-    var done = false
-    while (merges.size < numMerges && !done) {
-      val m = math.min(batch, numMerges - merges.size)
-      val sc = symbolCounts(vocab)
-      // bounded collect: 4m candidate rows (model-state-sized); the greedy
-      // skip rate is < 2 symbols blocked per pick, as in Bpe.trainBatched
-      val cand = Bpe.pairCounts(vocab)
-        .join(sc.select(col("sym").as("sym_a"), col("c").as("ca")), Seq("sym_a"))
-        .join(sc.select(col("sym").as("sym_b"), col("c").as("cb")), Seq("sym_b"))
-        .orderBy((col("cnt").cast("double") / (col("ca") * col("cb")).cast("double")).desc,
-          col("sym_a"), col("sym_b"))
-        .select(col("sym_a"), col("sym_b"), col("cnt"), col("ca"), col("cb"))
-        .limit(4 * m).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      val used = scala.collection.mutable.HashSet.empty[String]
-      val picked = cand.iterator.filter { case (a, b, _, _, _) =>
-        if (used(a) || used(b)) false
-        else { used += a; used += b; true }
-      }.take(m).toSeq
-      if (picked.isEmpty) done = true
-      else {
-        merges ++= picked
-        val prev = vocab
-        val ps = picked.map(p => (p._1, p._2))
-        vocab = vocab.map { case (syms, f) =>
-          (ps.foldLeft(syms) { case (s, (a, b)) => mergeWord(s, a, b) }, f)
-        }.localCheckpoint(true)
-        Materialize.release(prev)
-      }
-    }
-    Materialize.release(vocab)
-    merges.toSeq
-  }
+  def train(docs: DataFrame, textCol: String, numMerges: Int,
+            batch: Int = 1): Seq[(String, String, Long, Long, Long)] =
+    Bpe.mergeRounds(symbolized(docs, textCol), numMerges, batch)(
+      (vocab, n) => {
+        val sc = symbolCounts(vocab)
+        Bpe.pairCounts(vocab)
+          .join(sc.select(col("sym").as("sym_a"), col("c").as("ca")), Seq("sym_a"))
+          .join(sc.select(col("sym").as("sym_b"), col("c").as("cb")), Seq("sym_b"))
+          // ONE correctly-rounded IEEE divide on exact integers — identical
+          // bits on both engines (see the object doc); the double is only
+          // ever a sort key
+          .orderBy((col("cnt").cast("double") / (col("ca") * col("cb")).cast("double")).desc,
+            col("sym_a"), col("sym_b"))
+          .select(col("sym_a"), col("sym_b"), col("cnt"), col("ca"), col("cb"))
+          .limit(n).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          .toSeq
+      })(m => (m._1, m._2), mergeWord)
 
   /** Serving vocabulary: every symbol of the UNMERGED corpus (the
     * alphabet — word-initial and `##`-marked forms count separately, as

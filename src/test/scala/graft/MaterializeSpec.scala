@@ -64,4 +64,12 @@ class MaterializeSpec extends SparkSpec {
     assert(e.getMessage == "boom")
     assert(df.storageLevel == StorageLevel.NONE)
   }
+
+  test("using over a plan the caller already cached leaves that entry") {
+    def frame = spark.range(15).toDF("id").selectExpr("id * 3 AS t")
+    val pinned = Materialize.pin(frame)
+    assert(Materialize.using(frame)(_.count()) == 15)
+    assert(pinned.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    Materialize.release(pinned, blocking = true)
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.{Audio, CosineJoin, JaccardDedup, KCore, Multimodal, Packing, PageRank}
+import graft.ext.{Audio, Bpe, ByteBpe, CosineJoin, JaccardDedup, KCore, Multimodal, Packing,
+  PageRank, WordPiece}
 
 /** The [[Materialize]] ownership rule, one case per function that returns
   * a materialized frame: once the caller releases the result, the session
@@ -20,6 +21,16 @@ class StorageContractSpec extends SparkSpec {
       Materialize.release(out, blocking = true)
       val left = cached -- before
       assert(left.isEmpty, s"$name left RDDs ${left.toSeq.sorted.mkString(", ")} cached")
+    }
+
+  /** For a function that returns no frame: it leaves the session's
+    * storage as it found it.
+    */
+  private def leavesNoStorage(name: String)(call: => Any): Unit =
+    test(s"$name: leaves no storage behind") {
+      val before = cached
+      call
+      assert(cached == before, s"$name changed the cached RDDs")
     }
 
   // 40 docs over a 12-word vocabulary: near-duplicate families so every
@@ -64,4 +75,11 @@ class StorageContractSpec extends SparkSpec {
   ownsOnlyResult("Packing.packBinsBy")(Packing.packBinsBy(
     docs.select(col("doc_id"), length(col("text")).cast("long").as("n_tokens")),
     Seq(col("doc_id")), "n_tokens", budget = 512L))
+  // the merge loop checkpoints the vocab every round
+  leavesNoStorage("Bpe.train")(Bpe.train(docs, "text", numMerges = 4))
+  leavesNoStorage("Bpe.train(batch = 4)")(Bpe.train(docs, "text", numMerges = 8, batch = 4))
+  leavesNoStorage("ByteBpe.train")(ByteBpe.train(docs, "text", numMerges = 4))
+  leavesNoStorage("WordPiece.train")(WordPiece.train(docs, "text", numMerges = 4))
+  leavesNoStorage("WordPiece.train(batch = 4)")(
+    WordPiece.train(docs, "text", numMerges = 8, batch = 4))
 }

@@ -61,9 +61,10 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.encodeWord("lower", ranks).mkString.stripSuffix(Bpe.Eow) === "lower")
   }
 
-  test("trainBatched: batch=1 equals sequential train exactly") {
-    assert(Bpe.trainBatched(corpus, "text", numMerges = 4, batch = 1)
-      === Bpe.train(corpus, "text", numMerges = 4))
+  test("train batch=1 reproduces the one-merge-per-round merge list") {
+    // one merge per round: every rank sees the previous merge's counts
+    assert(Bpe.train(corpus, "text", numMerges = 4, batch = 1) === Seq(
+      ("e", "s", 9L), ("es", "t", 9L), ("est", Bpe.Eow, 9L), ("l", "o", 7L)))
   }
 
   test("trainBatched: one round picks top non-conflicting pairs, symbol-disjoint") {
@@ -72,7 +73,7 @@ class BpeSpec extends SparkSpec {
     // (w,</w>)=5, …, (d,e)=3, (i,d)=3 — greedy skips every pair sharing a
     // symbol with an earlier pick: (s,t)/(w,e)/(o,w)/(n,e)/(e,w)/(w,</w>)
     // and (d,e) all conflict, so one batch-4 round picks
-    val b4 = Bpe.trainBatched(corpus, "text", numMerges = 4, batch = 4)
+    val b4 = Bpe.train(corpus, "text", numMerges = 4, batch = 4)
     assert(b4 === Seq(("e", "s", 9L), ("t", Bpe.Eow, 9L),
       ("l", "o", 7L), ("i", "d", 3L)))
     // the round's picks are symbol-disjoint by construction

@@ -89,6 +89,35 @@ class MinHashDedupSpec extends SparkSpec {
     assert(lzy.as[Long].collect().toSet === Set(9L))
     assert(lzy.storageLevel === none && bs.storageLevel === none)
   }
+
+  test("pair search and novelty agree: one banding, one verify, both flavours") {
+    // 30 corpus docs of 30 words over a 200-word vocabulary; the batch
+    // holds novel docs and copies of corpus docs with 0–9 words replaced,
+    // so the planted pairs span Jaccard ~0.3–1.0 around the threshold
+    val rnd = new scala.util.Random(5)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(200)}")
+    val corpusWords = (0 until 30).map(_ => words(30))
+    val corpus = corpusWords.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
+    val batch = (0 until 30).map { j =>
+      val ws = if (j % 3 == 0) words(30)
+        else corpusWords(j).zipWithIndex.map { case (w, i) => if (i % 3 == 0 && i / 3 < j % 10) s"x$j$i" else w }
+      (100L + j, ws.mkString(" "))
+    } :+ ((200L, "too short"))
+    val (b, c) = (batch.toDF("doc_id", "text"), corpus.toDF("doc_id", "text"))
+    val batchIds = batch.map(_._1).toSet
+    def pairedWithCorpus(pairs: org.apache.spark.sql.DataFrame): Set[Long] =
+      pairs.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
+        .flatMap { case (x, y) => Seq(x -> y, y -> x) }
+        .collect { case (x, y) if batchIds(x) && !batchIds(y) => x }.toSet
+    def nonNovel(novel: org.apache.spark.sql.DataFrame): Set[Long] =
+      batchIds -- novel.as[Long].collect()
+    val native = pairedWithCorpus(MinHashDedup.nearDuplicates(b.union(c), minJaccard = 0.5))
+    assert(native.nonEmpty && native.size < batchIds.size)
+    assert(nonNovel(MinHashDedup.newAgainstCorpus(b, c, minJaccard = 0.5)) === native)
+    val md5 = pairedWithCorpus(MinHashDedup.nearDuplicatesMd5(b.union(c), minJaccard = 0.5))
+    assert(md5.nonEmpty && md5.size < batchIds.size)
+    assert(nonNovel(MinHashDedup.newAgainstCorpusMd5(b, c, minJaccard = 0.5)) === md5)
+  }
 }
 
 class SimHashSpec extends SparkSpec {

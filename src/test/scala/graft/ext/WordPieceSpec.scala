@@ -35,9 +35,10 @@ class WordPieceSpec extends SparkSpec {
     assert(WordPiece.mergeWord(Seq("x", "##y"), "x", "##y") === Seq("xy"))
   }
 
-  test("trainBatched: batch=1 equals sequential train exactly") {
-    assert(WordPiece.trainBatched(corpus, "text", numMerges = 3, batch = 1)
-      === WordPiece.train(corpus, "text", numMerges = 3))
+  test("train batch=1 reproduces the one-merge-per-round merge list") {
+    // one merge per round: every rank sees the previous merge's counts
+    assert(WordPiece.train(corpus, "text", numMerges = 3, batch = 1) === Seq(
+      ("x", "##y", 1L, 1L, 1L), ("##b", "##c", 2L, 10L, 2L), ("a", "##b", 8L, 10L, 8L)))
   }
 
   test("trainBatched: one round picks top non-conflicting pairs by SCORE") {
@@ -49,7 +50,7 @@ class WordPieceSpec extends SparkSpec {
     // Round 2 then merges the unblocked remainder: (a,##b) now cnt=8
     // ('abc' holds [a,##bc]), score 8/(10·8) beating (a,##bc)=2/(10·2)
     // on the sym_b tie-break
-    val b = WordPiece.trainBatched(corpus, "text", numMerges = 3, batch = 3)
+    val b = WordPiece.train(corpus, "text", numMerges = 3, batch = 3)
     assert(b === Seq(("x", "##y", 1L, 1L, 1L), ("##b", "##c", 2L, 10L, 2L),
       ("a", "##b", 8L, 10L, 8L)))
     val round1 = b.take(2).flatMap(p => Seq(p._1, p._2))
