@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one storage idiom. Two kinds of materialized frame exist: a PINNED
   * frame (persisted at the default level and counted, [[pin]]) and a
-  * CHECKPOINT (`localCheckpoint(true)`, which also cuts the lineage).
+  * CHECKPOINT ([[checkpoint]], which also cuts the lineage). The rounds
+  * of an iterative operator are checkpoints made by [[rounds]].
   *
   * Ownership rule, for every function in the engine:
   *  - A function returns either a lazy plan with no storage side effects,
@@ -68,5 +69,95 @@ object Materialize {
     case lr: LogicalRDD => Some(lr.rdd)
     case Project(_, child) => checkpointOf(child)
     case _ => None
+  }
+
+  /** Checkpoint `df` eagerly: run one job to materialize it, and cut its
+    * lineage.
+    */
+  def checkpoint[T](df: Dataset[T]): Dataset[T] = df.localCheckpoint(true)
+
+  /** The one round loop of the iterative operators. Round 0 is `init`;
+    * round `r` is `step(state of round r - 1, r)`. Each round's new frames
+    * are checkpointed here, which keeps every round's plan one step over
+    * materialized tables: an iterative plan otherwise embeds every earlier
+    * round, and Spark re-plans that growing tree each round. A frame
+    * `step` passes on unchanged is carried over, not checkpointed again.
+    *
+    * Storage: once a round is made and `stop` has read it, the frames of the
+    * round it replaces are released, except those the new state still
+    * holds; a state that holds its earlier rounds (a round ledger) keeps
+    * them that way. The caller owns the returned state's frames. If `step`
+    * or `stop` throws, including on an exhausted [[Until]] budget, every
+    * frame this loop made and still holds is released first.
+    */
+  def rounds[S](init: S)(step: (S, Int) => S)(stop: Stop[S])(implicit frames: Frames[S]): S = {
+    var held = Seq.empty[Dataset[_]] // made here and not yet released
+    def cut(s: S): S = frames.map(s, new Cut {
+      def apply[T](d: Dataset[T]): Dataset[T] =
+        if (held.contains(d)) d else { val c = checkpoint(d); held :+= c; c }
+    })
+    def stopped(prev: Option[S], s: S, round: Int): Boolean = stop match {
+      case After(n) => round >= n
+      case u: Until[S @unchecked] =>
+        val done = u.done(prev, s)
+        if (!done && round >= u.max) throw u.exhausted()
+        done
+    }
+    try {
+      var s = cut(init)
+      var round = 0
+      var done = stopped(None, s, round)
+      while (!done) {
+        round += 1
+        val next = cut(step(s, round))
+        done = stopped(Some(s), next, round)
+        val kept = framesOf(next)
+        held.filterNot(kept.contains).foreach(release(_))
+        held = kept
+        s = next
+      }
+      s
+    } catch { case t: Throwable => held.foreach(release(_)); throw t }
+  }
+
+  /** When [[rounds]] stops. */
+  sealed trait Stop[-S]
+
+  /** After exactly `n` rounds. */
+  final case class After(n: Int) extends Stop[Any]
+
+  /** At the first round `done(previous state, state)` accepts; round 0 is
+    * tested too, with no previous state. Throws `exhausted()` when round
+    * `max` is made and not accepted: a fail-loud loop never returns a
+    * partial answer.
+    */
+  final case class Until[S](max: Int, exhausted: () => Throwable)(
+      val done: (Option[S], S) => Boolean) extends Stop[S]
+
+  /** Maps a frame to a frame of the same type. */
+  trait Cut { def apply[T](d: Dataset[T]): Dataset[T] }
+
+  /** How [[rounds]] reaches the frames of a state: a frame, a sequence of
+    * states, or a pair of states.
+    */
+  trait Frames[S] { def map(s: S, f: Cut): S }
+
+  object Frames {
+    implicit def frame[T]: Frames[Dataset[T]] = new Frames[Dataset[T]] {
+      def map(d: Dataset[T], f: Cut): Dataset[T] = f(d)
+    }
+    implicit def seq[A](implicit a: Frames[A]): Frames[Seq[A]] = new Frames[Seq[A]] {
+      def map(s: Seq[A], f: Cut): Seq[A] = s.map(a.map(_, f))
+    }
+    implicit def pair[A, B](implicit a: Frames[A], b: Frames[B]): Frames[(A, B)] =
+      new Frames[(A, B)] {
+        def map(s: (A, B), f: Cut): (A, B) = (a.map(s._1, f), b.map(s._2, f))
+      }
+  }
+
+  private def framesOf[S](s: S)(implicit frames: Frames[S]): Seq[Dataset[_]] = {
+    var out = Seq.empty[Dataset[_]]
+    frames.map(s, new Cut { def apply[T](d: Dataset[T]): Dataset[T] = { out :+= d; d } })
+    out
   }
 }

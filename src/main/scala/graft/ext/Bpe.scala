@@ -18,8 +18,9 @@ import graft.Materialize
   * a bounded collect (count desc, then lexicographic — fully
   * deterministic), and the merge list itself is the model: `numMerges`
   * driver-side entries, the same bounded-model-state class as the IVF
-  * centroids. Rounds localCheckpoint the vocab like the CC loop — an
-  * iterative map otherwise stacks lineage per round.
+  * centroids. The rounds run in [[graft.Materialize.rounds]], which
+  * checkpoints the vocab each round — an iterative map otherwise stacks
+  * lineage per round.
   *
   * Character handling: symbols are Unicode CODE POINTS on both sides —
   * the JVM splitter walks `codePointAt`/`charCount` so an astral-plane
@@ -128,9 +129,8 @@ object Bpe {
     * still wanted this round, at most `batch`), greedily picks up to `m`
     * whose pairs (`pair`) share no symbol, and applies them in rank order
     * with `merge` in one vocab map pass. Stops when no candidate is left.
-    * The vocab is localCheckpointed per round (an iterative map otherwise
-    * stacks lineage per round) and the superseded round's blocks are
-    * released at once; none is left when this returns.
+    * The rounds are [[graft.Materialize.rounds]], one pick and merge pass
+    * each. No vocab is left checkpointed when this returns.
     */
   private[ext] def mergeRounds[R](symVocab: Dataset[(Seq[String], Long)], numMerges: Int,
                                   batch: Int)(
@@ -141,10 +141,8 @@ object Bpe {
       s"train: numMerges=$numMerges batch=$batch must be >= 1")
     val spark = symVocab.sparkSession
     import spark.implicits._
-    var vocab: Dataset[(Seq[String], Long)] = symVocab.localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[R]
-    var done = false
-    while (merges.size < numMerges && !done) {
+    val vocab = Materialize.rounds(symVocab) { (vocab, _) =>
       val m = math.min(batch, numMerges - merges.size)
       // bounded collect: 4m candidate rows (model-state-sized) is plenty —
       // the greedy skip rate is < 2 symbols blocked per pick
@@ -154,19 +152,18 @@ object Bpe {
         if (used(a) || used(b)) false
         else { used += a; used += b; true }
       }.take(m).toSeq
-      if (picked.isEmpty) done = true
-      else {
-        merges ++= picked
-        val prev = vocab
-        val ps = picked.map(pair)
-        vocab = vocab.map { case (syms, f) =>
-          (ps.foldLeft(syms) { case (s, (a, b)) => merge(s, a, b) }, f)
-        }.localCheckpoint(true)
-        // without this, every round's vocab snapshot stays pinned in
-        // executor storage for the job
-        Materialize.release(prev)
+      merges ++= picked
+      val ps = picked.map(pair)
+      if (ps.isEmpty) vocab // carried over: the stop test below ends the loop
+      else vocab.map { case (syms, f) =>
+        (ps.foldLeft(syms) { case (s, (a, b)) => merge(s, a, b) }, f)
       }
-    }
+    }(Materialize.Until(numMerges, () => new IllegalStateException(
+        s"train: $numMerges rounds made fewer than $numMerges merges")) {
+      // a round either adds a merge or carries the vocab over and stops,
+      // so round numMerges always stops here
+      (prev, vocab) => merges.size >= numMerges || prev.contains(vocab)
+    })
     Materialize.release(vocab)
     merges.toSeq
   }

@@ -18,7 +18,10 @@ import graft.Materialize
   * labels; converged when no label changes. Rounds = graph diameter, which
   * for near-dup clusters is small (duplicates of a document are duplicates
   * of each other — clusters are near-cliques). Each round is one keyed
-  * shuffle of (node, label) pairs — 16 B/row, payload-free. For general
+  * shuffle of (node, label) pairs — 16 B/row, payload-free. Both loops
+  * here run in [[graft.Materialize.rounds]]: one checkpoint per round, the
+  * replaced round released, and everything the loop made released before
+  * its fail-loud throw. For general
   * graphs with long chains at 100 TB scale, the alternating
   * large-star/small-star algorithm (Kiveris et al.) converges in O(log n)
   * rounds with the same join primitive; the propagation loop here is the
@@ -29,11 +32,11 @@ import graft.Materialize
   * unique regardless of execution order, so the result is oracle-checkable
   * (DuckDB recursive CTE computes the same fixpoint in `x_dedup_cc`).
   *
-  * Fault-tolerance note: `localCheckpoint` blocks are not replayable — an
-  * executor loss mid-loop fails the job (rerun, it's deterministic). A
-  * cluster deployment that must survive executor churn should use reliable
-  * `checkpoint()` with a checkpoint dir instead; the trade is HDFS writes
-  * per round.
+  * Fault-tolerance note: the rounds' checkpoints are `localCheckpoint`s,
+  * whose blocks are not replayable — an executor loss mid-loop fails the
+  * job (rerun, it's deterministic). A cluster deployment that must survive
+  * executor churn should use reliable `checkpoint()` with a checkpoint dir
+  * instead; the trade is HDFS writes per round.
   */
 object Components {
 
@@ -47,12 +50,11 @@ object Components {
     // NULL every node, converge instantly, and report "no duplicates" —
     // the worst possible failure mode for a dedup. Fail at entry instead.
     requireIntegralIds("connectedComponents", edges, Seq(aCol, bCol))
-    // localCheckpoint (eager), NOT persist: an iterative join grows the
-    // LOGICAL plan exponentially (every round's plan embeds the previous
-    // round's whole lineage — persist caches data but never truncates the
-    // plan), and the driver dies re-optimizing/codegen-ing the tree long
-    // before the data is large. Checkpointing cuts the lineage at each
-    // round, so round N's plan is one join over a materialized table.
+    // checkpointed (eager), NOT persisted, like every round below: an
+    // iterative join grows the LOGICAL plan exponentially (every round's
+    // plan embeds the previous round's whole lineage — persist caches data
+    // but never truncates the plan), and re-optimizing/codegen-ing that
+    // tree runs out of memory long before the data is large.
     // NOT pre-laid-out by hash(dst) (round-16 measurement): the PageRank
     // loop's checkpointHashPartitioned treatment was tried here too — it
     // removes the per-round edge-side exchange, but the up-front
@@ -61,19 +63,15 @@ object Components {
     // loop over a fuzzy-join pair graph, measured 2.78 → 3.10 s with it;
     // cc_ledger flat). A deployment running high-diameter graphs at scale
     // should lay `sym` out once like PageRank.loopInputs does.
-    val sym = symmetricEdges(edges, aCol, bCol).localCheckpoint(true)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    val sym = Materialize.checkpoint(symmetricEdges(edges, aCol, bCol))
+    val labels = try Materialize.rounds(sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))) { (labels, _) =>
       // neighbor labels flow along edges; a node's new label is the min of
       // its own and everything that arrived. The self branch is TAGGED so
       // the aggregation emits the node's previous label alongside the new
-      // one (each node has exactly one self row) — the convergence check
-      // below then reads the checkpointed rows directly instead of paying
-      // a node-table-wide join back to the previous round (round 15: one
+      // one (each node has exactly one self row) — the convergence test
+      // then reads the checkpointed rows directly instead of paying a
+      // node-table-wide join back to the previous round (round 15: one
       // shuffle per round removed; fixpoint and iterates are unchanged —
       // the min is over the identical multiset).
       // shuffle_hash on the label side: without the hint the planner
@@ -81,29 +79,19 @@ object Components {
       // every round; hashing the per-partition label slice is the keyed,
       // broadcast-free form that holds at web scale (the PageRank round's
       // argument)
-      val next = sym.join(
-          labels.withColumnRenamed("node", "dst").hint("shuffle_hash"), Seq("dst"))
+      sym.join(labels.select(col("node").as("dst"), col("label")).hint("shuffle_hash"), Seq("dst"))
         .select(col("src").as("node"), col("label"), lit(false).as("self"))
-        .union(labels.withColumn("self", lit(true)))
+        .union(labels.select(col("node"), col("label"), lit(true).as("self")))
         .groupBy(col("node"))
         .agg(min(col("label")).as("label"),
           max(when(col("self"), col("label"))).as("old"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("label") < col("old")).count()
-      // drop the superseded round's checkpoint blocks NOW — waiting for the
-      // ContextCleaner would pin up to maxIter copies of the label table in
-      // executor storage
-      Materialize.release(labels)
-      labels = next.select(col("node"), col("label"))
-      converged = changed == 0
-      iter += 1
-    }
-    Materialize.release(sym)
-    if (!converged)
-      throw new IllegalStateException(
+    }(Materialize.Until(maxIter, () => new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds — " +
           "graph diameter exceeds the dedup-cluster assumption; raise maxIter " +
-          "or use connectedComponentsStar (O(log n) rounds on any diameter)")
+          "or use connectedComponentsStar (O(log n) rounds on any diameter)")) {
+      (prev, labels) => prev.nonEmpty && labels.filter(col("label") < col("old")).count() == 0
+    })
+    finally Materialize.release(sym)
     labels.select(col("node").as("doc_id"), col("label").as("component"))
   }
 
@@ -143,8 +131,9 @@ object Components {
     * original (paper, Lemmas 1-2); the fixpoint of their composition is a
     * star forest whose centers are the component minima. Each round is two
     * keyed aggregations + a join over (long, long) edges — 16 B/row
-    * shuffles, payload-free, same discipline as propagation. Lineage is
-    * localCheckpoint-truncated per round for the same driver-OOM reason.
+    * shuffles, payload-free, same discipline as propagation: the rounds
+    * run in [[graft.Materialize.rounds]], which checkpoints each one for
+    * the same plan-growth reason.
     */
   def connectedComponentsStar(edges: DataFrame, aCol: String = "doc_a",
                               bCol: String = "doc_b", maxIter: Int = 50): DataFrame = {
@@ -153,15 +142,13 @@ object Components {
     // every node of the INPUT graph — taken before self-loops are dropped,
     // so a node appearing only as (x, x) still labels itself in the output
     // (same contract as propagation, whose symmetric edge set keeps it)
-    val originalNodes = edges.select(col(aCol).cast("long").as("node"))
-      .union(edges.select(col(bCol).cast("long").as("node"))).distinct()
-      .localCheckpoint(true)
+    val originalNodes = Materialize.checkpoint(edges.select(col(aCol).cast("long").as("node"))
+      .union(edges.select(col(bCol).cast("long").as("node"))).distinct())
     // canonical directed edges u > v, self-loops dropped, deduped
     val canon = edges.select(
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("u"),
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
 
     // for each center: min over its (symmetric) neighborhood and itself,
     // then re-link larger neighbors to that min
@@ -186,44 +173,33 @@ object Components {
       relinked.union(self).distinct()
     }
 
-    var e = canon
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      // both sides are distinct canonical sets, so tagging rows ±1 and
-      // summing per edge gives 0 everywhere <=> identical sets; one keyed
-      // aggregation + take(1) — ONE job per round where the previous
-      // count()+except().isEmpty form paid three (r8 bench flagged the
-      // loop's per-round overhead at 20+ rounds on chain-heavy graphs)
-      converged = e.select(col("u"), col("v"), lit(1).as("tag"))
-        .union(next.select(col("u"), col("v"), lit(-1).as("tag")))
-        .groupBy(col("u"), col("v")).agg(sum(col("tag")).as("d"))
-        .filter(col("d") =!= 0).isEmpty
-      Materialize.release(e) // superseded round: no consumers remain
-      e = next
-      iter += 1
-    }
-    if (!converged) {
-      Materialize.release(e)
-      Materialize.release(originalNodes)
-      throw new IllegalStateException(
-        s"connectedComponentsStar: no fixpoint after $maxIter rounds — " +
-          "raise maxIter (rounds grow O(log n), so this indicates a bug or " +
-          "an adversarial id distribution, not normal data)")
-    }
-    // fixpoint = star forest: every non-center has exactly one edge to its
-    // component min; centers label themselves. Materialize BEFORE freeing
-    // the inputs the plan reads from — their lineage is truncated and
-    // cannot recompute.
-    val out = originalNodes
-      .join(e.withColumnRenamed("u", "node"), Seq("node"), "left")
-      .select(col("node").as("doc_id"),
-        coalesce(col("v"), col("node")).as("component"))
-      .localCheckpoint(true)
-    Materialize.release(e)
-    Materialize.release(originalNodes)
-    out
+    try {
+      val star = Materialize.rounds(canon)((e, _) => smallStar(largeStar(e)))(
+        Materialize.Until(maxIter, () => new IllegalStateException(
+          s"connectedComponentsStar: no fixpoint after $maxIter rounds — " +
+            "raise maxIter (rounds grow O(log n), so this indicates a bug or " +
+            "an adversarial id distribution, not normal data)")) { (prev, next) =>
+          // both sides are distinct canonical sets, so tagging rows ±1 and
+          // summing per edge gives 0 everywhere <=> identical sets; one keyed
+          // aggregation + take(1) — ONE job per round where the previous
+          // count()+except().isEmpty form paid three (r8 bench flagged the
+          // loop's per-round overhead at 20+ rounds on chain-heavy graphs)
+          prev.exists(_.select(col("u"), col("v"), lit(1).as("tag"))
+            .union(next.select(col("u"), col("v"), lit(-1).as("tag")))
+            .groupBy(col("u"), col("v")).agg(sum(col("tag")).as("d"))
+            .filter(col("d") =!= 0).isEmpty)
+        })
+      // fixpoint = star forest: every non-center has exactly one edge to its
+      // component min; centers label themselves. Materialize BEFORE freeing
+      // the inputs the plan reads from — their lineage is truncated and
+      // cannot recompute.
+      val out = Materialize.checkpoint(originalNodes
+        .join(star.withColumnRenamed("u", "node"), Seq("node"), "left")
+        .select(col("node").as("doc_id"),
+          coalesce(col("v"), col("node")).as("component")))
+      Materialize.release(star)
+      out
+    } finally Materialize.release(originalNodes)
   }
 
   /** Incremental ledger maintenance — the operational form at 100 TB,
@@ -250,6 +226,9 @@ object Components {
     * fixpoint. The registry entry's oracle is the SAME recursive-CTE
     * fixpoint as `x_dedup_cc`, making "incremental == recompute" the
     * checked contract itself.
+    *
+    * Storage: the local union-find path returns a lazy plan; the
+    * distributed path returns a checkpoint, which the caller releases.
     */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame,
                             aCol: String = "doc_a", bCol: String = "doc_b",
@@ -265,13 +244,12 @@ object Components {
     val e = newEdges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
     // materialized ONCE: the size certificate below and whichever CC path
     // wins both read these blocks — the contract joins never re-run
-    val contracted = e
+    val contracted = Materialize.checkpoint(e
       .join(lab.select(col("node").as("a"), col("label").as("la")), Seq("a"), "left")
       .join(lab.select(col("node").as("b"), col("label").as("lb")), Seq("b"), "left")
       .select(coalesce(col("la"), col("a")).as("doc_a"),
         coalesce(col("lb"), col("b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .localCheckpoint(true)
+      .filter(col("doc_a") =!= col("doc_b")))
     // CERTIFIED size gate, not an estimate: the contracted graph is
     // batch-sized by construction, and when its exact edge count fits the
     // driver bound, a local union-find replaces ~diameter rounds of
@@ -284,8 +262,12 @@ object Components {
     // each other across the bound in ComponentsSpec, and the registry
     // entry's recursive-CTE oracle checks the merged result either way.
     val nEdges = contracted.count()
-    val merged =
-      if (edgeBound > 0L && nEdges <= edgeBound) {
+    val fast = edgeBound > 0L && nEdges <= edgeBound
+    // either path materializes everything it reads from the contracted
+    // blocks (UF collects them; the loop's labels are checkpointed), so the
+    // checkpoint can be dropped before the lazy remap below is consumed
+    val merged = try {
+      if (fast) {
         val rows = contracted.collect()
         val pairs = new Array[Long](rows.length * 2)
         var i = 0
@@ -302,10 +284,7 @@ object Components {
             org.apache.spark.sql.types.StructField("component",
               org.apache.spark.sql.types.LongType, nullable = false))))
       } else connectedComponents(contracted, maxIter = maxIter)
-    // either path has materialized everything it read from the contracted
-    // blocks (UF collected them; the loop's labels are checkpointed), so
-    // the checkpoint can be dropped before the lazy remap below is consumed
-    Materialize.release(contracted)
+    } finally Materialize.release(contracted)
     // old components whose root was pulled into a bigger merge
     val rootMap = merged.select(col("doc_id").as("label"), col("component").as("newlab"))
     val updatedOld = lab.join(rootMap, Seq("label"), "left")
@@ -320,7 +299,14 @@ object Components {
       .join(merged.select(col("doc_id").as("node"), col("component")), Seq("node"), "left")
       .select(col("node").as("doc_id"),
         coalesce(col("component"), col("node")).as("component"))
-    updatedOld.union(newLabeled)
+    if (fast) updatedOld.union(newLabeled)
+    else {
+      // the loop's labels are a checkpoint made here: the result over them
+      // is checkpointed before they are freed
+      val out = Materialize.checkpoint(updatedOld.union(newLabeled))
+      Materialize.release(merged)
+      out
+    }
   }
 
   /** Driver bound for [[incrementalComponents]]'s union-find fast path, in

@@ -23,10 +23,12 @@ import graft.Materialize
   * a pinned round budget makes both engines compute the identical object
   * (fail-loud if the budget is ever too small, never a partial answer).
   *
-  * Same loop discipline as [[Components.connectedComponents]]:
-  * localCheckpoint each round to cut lineage, convergence tested with ONE
-  * job per round (count of survivors, monotone decreasing), ids required
-  * integral at entry.
+  * Both peels run in [[graft.Materialize.rounds]], like
+  * [[Components.connectedComponents]]: one checkpoint per round to cut
+  * lineage, the replaced round released at once (waiting for the
+  * ContextCleaner pins up to maxIter copies of the edge table in executor
+  * storage), convergence tested with ONE job per round (count of
+  * survivors, monotone decreasing), ids required integral at entry.
   */
 object KCore {
 
@@ -39,19 +41,15 @@ object KCore {
             bCol: String = "doc_b", maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     Components.requireIntegralIds("kCore", edges, Seq(aCol, bCol))
-    var sym = simpleEdges(edges, aCol, bCol)
-    var prev = sym.count() // directed edge count; strictly decreases
-    var it = 0
-    var done = prev == 0L
-    while (!done) {
-      require(it < maxIter, s"kCore: no fixpoint after $maxIter rounds")
-      it += 1
-      sym = peel(sym, k)
-      val n = sym.count() // the round's ONE job: count + materialize
-      done = n == prev || n == 0L
-      prev = n
-    }
-    degrees(sym)
+    var prev = -1L // the previous round's directed edge count; strictly decreases
+    degrees(Materialize.rounds(simpleEdges(edges, aCol, bCol))((sym, _) => peel(sym, k))(
+      Materialize.Until(maxIter, () => new IllegalArgumentException(
+        s"requirement failed: kCore: no fixpoint after $maxIter rounds")) { (_, sym) =>
+        val n = sym.count() // the round's ONE job
+        val done = n == prev || n == 0L
+        prev = n
+        done
+      }))
   }
 
   /** Peel exactly `rounds` rounds (no convergence test) — the bounded twin
@@ -63,40 +61,34 @@ object KCore {
                   aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
     require(k >= 1 && rounds >= 0, s"kCoreRounds: k=$k rounds=$rounds")
     Components.requireIntegralIds("kCoreRounds", edges, Seq(aCol, bCol))
-    degrees((0 until rounds).foldLeft(simpleEdges(edges, aCol, bCol))((sym, _) => peel(sym, k)))
+    degrees(Materialize.rounds(simpleEdges(edges, aCol, bCol))((sym, _) => peel(sym, k))(
+      Materialize.After(rounds)))
   }
 
-  /** The symmetric edge set without parallel edges, checkpointed — a
-    * multigraph would double-count them in the degrees.
+  /** The symmetric edge set without parallel edges — a multigraph would
+    * double-count them in the degrees.
     */
   private def simpleEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
-    Components.symmetricEdges(edges, aCol, bCol).distinct().localCheckpoint(true)
+    Components.symmetricEdges(edges, aCol, bCol).distinct()
 
   /** One peel round: drop every node of degree < k over the CURRENT edge
-    * set, and every edge that loses an endpoint (both must survive). The
-    * surviving edges come back checkpointed (eager, so `sym` has no
-    * consumers left) and `sym`'s blocks are released now: waiting for the
-    * ContextCleaner pins up to maxIter copies of the edge table in
-    * executor storage, squeezing the session's shared persisted state.
+    * set, and every edge that loses an endpoint (both must survive).
     */
   private def peel(sym: DataFrame, k: Int): DataFrame = {
     val keep = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k).select(col("src").as("node"))
-    val next = sym
+    sym
       .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .select(col("src"), col("dst"))
-      .localCheckpoint(true)
-    Materialize.release(sym)
-    next
   }
 
   /** The node-sized `(node, degree)` result, checkpointed so the last
     * round's edge checkpoint can be freed here (the Triangles shape).
     */
   private def degrees(sym: DataFrame): DataFrame = {
-    val out = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
+    val out = Materialize.checkpoint(
+      sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree")))
     Materialize.release(sym)
     out
   }

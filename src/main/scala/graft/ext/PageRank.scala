@@ -22,10 +22,11 @@ import graft.Materialize
   *
   * Scale shape: each round is one keyed join (edge src → score) and one
   * keyed aggregation (sum by dst) — the standard message-passing round,
-  * 16 B rows, shuffled on node keys; rounds localCheckpoint like the
-  * [[Components]] fixpoint so lineage stays flat. Iteration count is
-  * FIXED (default 10), not convergence-tested: a deterministic round
-  * count is what lets the oracle unroll, and 10 rounds at damping 0.85
+  * 16 B rows, shuffled on node keys; every loop here runs in
+  * [[graft.Materialize.rounds]], which checkpoints each round so lineage
+  * stays flat. Iteration count is FIXED (default 10), not
+  * convergence-tested: a deterministic round count is what lets the
+  * oracle unroll, and 10 rounds at damping 0.85
   * bounds the un-propagated tail to 0.85¹⁰ ≈ 20% of one hop — ranking-
   * stable on real graphs. Sink nodes (no out-edges) absorb and leak mass
   * (the "leaky" PageRank variant — documented, mirrored in the oracle);
@@ -66,10 +67,6 @@ object PageRank {
       .unionByName(nodes.select(col("node"), lit(0L).as("c")))
       .groupBy(col("node")).agg((lit(base) + sum(col("c"))).as("score"))
 
-  /** `(node, score)` after `iters` rounds over `edges` (`src`, `dst`
-    * string columns; parallel edges are deliberate multi-edges — dedup
-    * upstream if that is not the graph you mean).
-    */
   /** The loop-invariant relations every round reads, prepared ONCE:
     * `(src, dst, deg)` hash-laid-out on the per-round join key and the
     * node table likewise — both as eager localCheckpoints with their TRUE
@@ -87,7 +84,7 @@ object PageRank {
   private[graft] def loopInputs(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // the caller's edge expression can be arbitrarily expensive (a join
     // pipeline); it feeds BOTH the degree build and the node set, so pin it
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val e = Materialize.checkpoint(edges.select(col("src"), col("dst")))
     val ed = org.apache.spark.sql.GraftPartitioningBridge.checkpointHashPartitioned(
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
         .select(col("src"), col("dst"), col("deg")), Seq("src"))
@@ -97,30 +94,32 @@ object PageRank {
     (e, ed, nodes)
   }
 
+  /** `(node, score)` after `iters` rounds over `edges` (`src`, `dst`
+    * string columns; parallel edges are deliberate multi-edges — dedup
+    * upstream if that is not the graph you mean).
+    */
   def pagerankInt(edges: DataFrame, iters: Int = 10,
                   scale: Long = 1000000000000L,
-                  dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
+                  dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
+    scoreRounds(edges, iters, scale, dampNum, dampDen, keep = false).last
+
+  /** The `(node, score)` checkpoints of rounds 0..`iters` when `keep`, else
+    * of round `iters` alone; the caller owns them.
+    */
+  private def scoreRounds(edges: DataFrame, iters: Int, scale: Long,
+                          dampNum: Long, dampDen: Long, keep: Boolean): Seq[DataFrame] = {
     val base = checkParams(iters, scale, dampNum, dampDen)
     val (e, ed, nodes) = loopInputs(edges)
-    var scores = nodes.withColumn("score", lit(scale)).localCheckpoint(true)
-    var round = 0
-    while (round < iters) {
-      // shuffle_hash, not merge (inside roundNext): the checkpointed score
-      // frame carries no stats, so the planner would sort-merge — re-SORTING
-      // the edge side every round. Hashing the per-partition score slice is
-      // the keyed, broadcast-free form that also holds at web scale (a
-      // node-sized build side never fits one broadcast, but a partition's
-      // slice does).
-      val next = roundNext(ed, nodes, scores, base, dampNum, dampDen)
-        .localCheckpoint(true)
-      Materialize.release(scores)
-      scores = next
-      round += 1
-    }
-    Materialize.release(e)
-    Materialize.release(ed)
-    Materialize.release(nodes)
-    scores
+    // shuffle_hash, not merge (inside roundNext): the checkpointed score
+    // frame carries no stats, so the planner would sort-merge — re-SORTING
+    // the edge side every round. Hashing the per-partition score slice is
+    // the keyed, broadcast-free form that also holds at web scale (a
+    // node-sized build side never fits one broadcast, but a partition's
+    // slice does).
+    try Materialize.rounds(Seq(nodes.withColumn("score", lit(scale)))) { (rounds, _) =>
+      (if (keep) rounds else Nil) :+ roundNext(ed, nodes, rounds.last, base, dampNum, dampDen)
+    }(Materialize.After(iters))
+    finally Seq(e, ed, nodes).foreach(Materialize.release(_))
   }
 
   /** The ROUND LEDGER: `(round, node, score)` for every round 0..`iters` —
@@ -141,22 +140,14 @@ object PageRank {
   def pagerankRounds(edges: DataFrame, iters: Int = 10,
                      scale: Long = 1000000000000L,
                      dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
-    val base = checkParams(iters, scale, dampNum, dampDen)
-    val (e, ed, nodes) = loopInputs(edges)
-    val rounds = scala.collection.mutable.ArrayBuffer[DataFrame](
-      nodes.withColumn("score", lit(scale)).localCheckpoint(true))
-    (1 to iters).foreach { _ =>
-      rounds += roundNext(ed, nodes, rounds.last, base, dampNum, dampDen)
-        .localCheckpoint(true)
-    }
+    val rounds = scoreRounds(edges, iters, scale, dampNum, dampDen, keep = true)
     // the ledger is checkpointed ONCE as a whole, so the per-round
-    // checkpoints it was built from can be freed with the loop inputs
-    val ledger = rounds.zipWithIndex
+    // checkpoints it was built from can be freed
+    val ledger = Materialize.checkpoint(rounds.zipWithIndex
       .map { case (scores, r) => scores.withColumn("round", lit(r)) }
       .reduce(_.unionByName(_))
-      .select(col("round"), col("node"), col("score"))
-      .localCheckpoint(true)
-    (rounds ++ Seq(e, ed, nodes)).foreach(Materialize.release(_))
+      .select(col("round"), col("node"), col("score")))
+    rounds.foreach(Materialize.release(_))
     ledger
   }
 
@@ -271,62 +262,14 @@ object PageRank {
     // ingest (keyed, map-side combined), joined only onto frontier edges
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
     // D: sources whose out-degree/out-edge set changed this batch
-    val d = dLazy.localCheckpoint(true)
+    val d = Materialize.checkpoint(dLazy)
     // N: endpoints the old graph never saw (need scores at every round)
-    val n = nLazy.localCheckpoint(true)
+    val n = Materialize.checkpoint(nLazy)
     // round 0 is uniform (= scale) for old AND new nodes, so no old score
     // changes at round 0; the frontier starts from D's out-neighbors.
-    var affected = e.join(d.withColumnRenamed("src", "s"), col("src") === col("s"), "left_semi")
+    val affected1 = e.join(d.withColumnRenamed("src", "s"), col("src") === col("s"), "left_semi")
       .select(col("dst").as("node")).distinct()
-      .union(n).distinct().localCheckpoint(true)
-    var newScores: DataFrame = null // A_k rows only: (node, score)
-    // ledger form: the per-round frontier scores, retained for the merge
-    val roundScores = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 1
-    while (round <= iters) {
-      statsOut.foreach(_ += affected.count())
-      // in-edges of the affected set (keyed semi-restriction, frontier-sized)
-      val inE = e.join(affected.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      // sources feeding those edges, with their round-(k-1) scores: the new
-      // frontier value when the source was affected, the ledger otherwise
-      // (round 1 reads the uniform init — no lookup needed)
-      val srcScores =
-        if (round == 1)
-          inE.select(col("src")).distinct().withColumn("score", lit(scale))
-        else {
-          val prevLedger = ledger.filter(col("round") === round - 1)
-            .select(col("node").as("src"), col("score").as("old_s"))
-          inE.select(col("src")).distinct()
-            .join(newScores.select(col("node").as("src"), col("score").as("new_s")), Seq("src"), "left")
-            .join(prevLedger, Seq("src"), "left")
-            .select(col("src"), coalesce(col("new_s"), col("old_s")).as("score"))
-        }
-      // same union-into-the-aggregation re-base as roundNext, with the
-      // affected set playing the node table (contribution dsts ⊆ affected
-      // by inE's semi-restriction, so the group keys are exactly A_k)
-      val nextScores = inE
-        .join(srcScores.hint("shuffle_hash"), "src")
-        .join(deg, "src")
-        .select(col("dst").as("node"),
-          expr(s"((score DIV deg) * $dampNum) DIV $dampDen").as("c"))
-        .unionByName(affected.select(col("node"), lit(0L).as("c")))
-        .groupBy(col("node")).agg((lit(base) + sum(col("c"))).as("score"))
-        .localCheckpoint(true)
-      if (newScores != null && !wantLedger) Materialize.release(newScores)
-      newScores = nextScores
-      if (wantLedger) roundScores += newScores
-      if (round < iters) {
-        // A_{k+1} = outNbrs(A_k ∪ D) ∪ N — grown BEFORE scores are needed
-        val nextAffected = e
-          .join(affected.union(d.withColumnRenamed("src", "node")).distinct()
-            .withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .select(col("dst").as("node")).distinct()
-          .union(n).distinct().localCheckpoint(true)
-        Materialize.release(affected)
-        affected = nextAffected
-      }
-      round += 1
-    }
+      .union(n).distinct()
     // merge: affected nodes take the recomputed score, everything else
     // keeps its ledger score verbatim
     def mergeRound(r: Int, fresh: DataFrame): DataFrame =
@@ -334,21 +277,64 @@ object PageRank {
         .select(col("node"), col("score").as("old_s"))
         .join(fresh.withColumnRenamed("score", "new_s"), Seq("node"), "full")
         .select(col("node"), coalesce(col("new_s"), col("old_s")).as("score"))
-    val out =
-      if (!wantLedger) mergeRound(iters, newScores).localCheckpoint(true)
-      else {
-        // round 0 is uniform for everyone — new nodes just join at scale
-        val r0 = mergeRound(0, n.withColumn("score", lit(scale)))
-          .withColumn("round", lit(0))
-        (1 to iters).map(r =>
-            mergeRound(r, roundScores(r - 1)).withColumn("round", lit(r)))
-          .foldLeft(r0)(_.unionByName(_))
-          .select(col("round"), col("node"), col("score"))
-          .localCheckpoint(true)
-      }
-    if (wantLedger) roundScores.foreach(Materialize.release(_))
-    else Materialize.release(newScores)
-    Seq(affected, d, n, e, deg).foreach(Materialize.release(_))
-    out
+    // round k's state: the frontier scores (A_k rows only: (node, score)) —
+    // every round's in the ledger form, retained for the merge, else round
+    // k's alone — and the affected set A_{k+1} (A_k after the last round)
+    try {
+      val (roundScores, lastAffected) = Materialize.rounds((Seq.empty[DataFrame], affected1)) {
+          (state, round) =>
+        val (prevScores, affected) = state
+        statsOut.foreach(_ += affected.count())
+        // in-edges of the affected set (keyed semi-restriction, frontier-sized)
+        val inE = e.join(affected.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+        // sources feeding those edges, with their round-(k-1) scores: the new
+        // frontier value when the source was affected, the ledger otherwise
+        // (round 1 reads the uniform init — no lookup needed)
+        val srcScores =
+          if (round == 1)
+            inE.select(col("src")).distinct().withColumn("score", lit(scale))
+          else {
+            val prevLedger = ledger.filter(col("round") === round - 1)
+              .select(col("node").as("src"), col("score").as("old_s"))
+            inE.select(col("src")).distinct()
+              .join(prevScores.last.select(col("node").as("src"), col("score").as("new_s")),
+                Seq("src"), "left")
+              .join(prevLedger, Seq("src"), "left")
+              .select(col("src"), coalesce(col("new_s"), col("old_s")).as("score"))
+          }
+        // same union-into-the-aggregation re-base as roundNext, with the
+        // affected set playing the node table (contribution dsts ⊆ affected
+        // by inE's semi-restriction, so the group keys are exactly A_k)
+        val nextScores = inE
+          .join(srcScores.hint("shuffle_hash"), "src")
+          .join(deg, "src")
+          .select(col("dst").as("node"),
+            expr(s"((score DIV deg) * $dampNum) DIV $dampDen").as("c"))
+          .unionByName(affected.select(col("node"), lit(0L).as("c")))
+          .groupBy(col("node")).agg((lit(base) + sum(col("c"))).as("score"))
+        // A_{k+1} = outNbrs(A_k ∪ D) ∪ N — grown BEFORE scores are needed
+        val nextAffected =
+          if (round == iters) affected
+          else e
+            .join(affected.union(d.withColumnRenamed("src", "node")).distinct()
+              .withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+            .select(col("dst").as("node")).distinct()
+            .union(n).distinct()
+        ((if (wantLedger) prevScores else Nil) :+ nextScores, nextAffected)
+      }(Materialize.After(iters))
+      val out =
+        if (!wantLedger) Materialize.checkpoint(mergeRound(iters, roundScores.last))
+        else {
+          // round 0 is uniform for everyone — new nodes just join at scale
+          val r0 = mergeRound(0, n.withColumn("score", lit(scale)))
+            .withColumn("round", lit(0))
+          Materialize.checkpoint((1 to iters).map(r =>
+              mergeRound(r, roundScores(r - 1)).withColumn("round", lit(r)))
+            .foldLeft(r0)(_.unionByName(_))
+            .select(col("round"), col("node"), col("score")))
+        }
+      (roundScores :+ lastAffected).foreach(Materialize.release(_))
+      out
+    } finally Seq(d, n, e, deg).foreach(Materialize.release(_))
   }
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   *    `to_date` with the CORRECTED parser returns NULL on malformed input,
   *    matching `coerce`; `try_to_date` is used as the belt-and-braces form so
   *    a future strict-parser session config can never turn this into a throw.
-  *  - F8 year extraction: `df['ano'] = col.dt.year`,
-  *    `airflow/dags/tasks/silver.py:69`.
+  *
+  * F8 year extraction (`df['ano'] = col.dt.year`, `silver.py:69`) is one
+  * `year(...)` column inline in [[graft.pipeline.Silver.transform]].
   */
 object Dates {
   val BrazilianFormat = "dd/MM/yyyy"
@@ -23,8 +24,4 @@ object Dates {
 
   def parseDateCols(df: DataFrame, cols: Seq[String], fmt: String = BrazilianFormat): DataFrame =
     df.withColumns(cols.map(c => c -> parseDate(col(c), fmt)).toMap)
-
-  /** F8 — derive an integer year column. */
-  def withYear(df: DataFrame, from: String, as: String = "ano"): DataFrame =
-    df.withColumn(as, year(col(from)))
 }

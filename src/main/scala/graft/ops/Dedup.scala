@@ -21,8 +21,4 @@ object Dedup {
 
   /** P5 — distinct over all columns. */
   def distinctAll(df: DataFrame): DataFrame = df.dropDuplicates()
-
-  /** Keyed dedup: one surviving row per key set (arbitrary survivor). */
-  def dedupByKey(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
 }

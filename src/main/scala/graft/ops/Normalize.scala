@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *  - F4 title-case: pandas `.str.title()`, `silver.py:56-65`. Spark's
   *    `initcap` only capitalizes after whitespace while pandas capitalizes
   *    after ANY non-letter ("d'água" → "D'Água"); exact parity is provided by
-  *    the codegen'd [[graft.functions.PandasTitle]] expression. Both variants
-  *    are exposed; pipelines use the parity one.
+  *    the codegen'd [[graft.functions.PandasTitle]] expression, which
+  *    [[graft.pipeline.Silver.transform]] applies; [[cleanText]] is the
+  *    `initcap` variant.
   *
   * All helpers are single-`select` (or `withColumns`) so Catalyst's
   * `CollapseProject` + whole-stage codegen fuse them into one pass over the
@@ -36,19 +37,6 @@ object Normalize {
   /** F3 — truncate the given string columns to `n` chars (reference: 255). */
   def truncateCols(df: DataFrame, cols: Seq[String], n: Int = 255): DataFrame =
     df.withColumns(cols.map(c => c -> substring(col(c), 1, n)).toMap)
-
-  /** F4 (Spark-idiomatic) — `initcap` title-case; capitalizes only after
-    * whitespace. Preferred when pandas-exact semantics are not required
-    * because it stays inside whole-stage codegen with zero custom code.
-    */
-  def titleCaseCols(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.withColumns(cols.map(c => c -> initcap(col(c))).toMap)
-
-  /** F4 (pandas-exact) — capitalize after any non-letter, lowercase the rest,
-    * via the custom codegen'd expression [[graft.functions.PandasTitle]].
-    */
-  def pandasTitleCols(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.withColumns(cols.map(c => c -> graft.functions.GraftFunctions.pandas_title(col(c))).toMap)
 
   /** F2+F4 fused (the silver layer's per-column chain, one projection). */
   def cleanText(c: Column): Column = initcap(trim(c))

@@ -6,8 +6,6 @@ import org.apache.spark.storage.StorageLevel
 
 class MaterializeSpec extends SparkSpec {
 
-  private def cached: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-
   private def checkpointRdd(df: DataFrame): Int = df.queryExecution.logical match {
     case lr: LogicalRDD => lr.rdd.id
     case other => fail(s"not a checkpoint: ${other.nodeName}")

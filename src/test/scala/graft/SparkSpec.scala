@@ -63,6 +63,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(left.isEmpty, s"${getClass.getSimpleName} left temp dirs behind: ${left.mkString(", ")}")
     }
 
+  /** The ids of the RDDs the session holds persisted or checkpointed. */
+  protected def cached: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** `body`'s result and the number of Spark jobs it submitted whose call
     * site (an [[Obs.Job]] label, e.g. "count at X.scala:12") passes
     * `callSite`.

@@ -2,16 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.{Audio, Bpe, ByteBpe, CosineJoin, JaccardDedup, KCore, Multimodal, Packing,
-  PageRank, WordPiece}
+import graft.ext.{Audio, Bpe, ByteBpe, Components, CosineJoin, JaccardDedup, KCore, Multimodal,
+  Packing, PageRank, WordPiece}
 
 /** The [[Materialize]] ownership rule, one case per function that returns
   * a materialized frame: once the caller releases the result, the session
   * caches exactly what it cached before the call.
   */
 class StorageContractSpec extends SparkSpec {
-
-  private def cached: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   private def ownsOnlyResult(name: String)(call: => DataFrame): Unit =
     test(s"$name: releasing the result leaves no storage behind") {
@@ -50,6 +48,21 @@ class StorageContractSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
   }
 
+  private def links =
+    edges.select(col("doc_a").cast("string").as("src"), col("doc_b").cast("string").as("dst"))
+
+  private def newLinks = {
+    import spark.implicits._
+    Seq(("8", "9")).toDF("src", "dst")
+  }
+
+  // the pre-batch round ledger, held as local rows: it owns no storage
+  private lazy val prLedger = {
+    val ledger = PageRank.pagerankRounds(links, iters = 3)
+    try spark.createDataFrame(java.util.Arrays.asList(ledger.collect(): _*), ledger.schema)
+    finally Materialize.release(ledger, blocking = true)
+  }
+
   // near-identical signatures: two hash groups with several members and
   // one rep within hamming 1 of another, so banding, CC and expansion run
   private def sigs(col: String) = {
@@ -65,9 +78,28 @@ class StorageContractSpec extends SparkSpec {
     CosineJoin.similarPairs(docs, 0.4, maxDf = 100L, ngram = 3))
   ownsOnlyResult("KCore.kCore")(KCore.kCore(edges, k = 2))
   ownsOnlyResult("KCore.kCoreRounds")(KCore.kCoreRounds(edges, k = 2, rounds = 3))
-  ownsOnlyResult("PageRank.pagerankRounds")(PageRank.pagerankRounds(
-    edges.select(col("doc_a").cast("string").as("src"), col("doc_b").cast("string").as("dst")),
-    iters = 3))
+  ownsOnlyResult("PageRank.pagerankRounds")(PageRank.pagerankRounds(links, iters = 3))
+  ownsOnlyResult("PageRank.pagerankInt")(PageRank.pagerankInt(links, iters = 3))
+  // the batch's seed is 2 of 9 nodes: a fallback fraction above that keeps
+  // the frontier rounds, one below it falls back to the full recompute
+  for ((path, fraction) <- Seq("frontier" -> 0.9, "fallback" -> 0.05)) {
+    ownsOnlyResult(s"PageRank.incrementalInt ($path)") {
+      val stats = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val out = PageRank.incrementalInt(prLedger, links.union(newLinks), newLinks, iters = 3,
+        statsOut = Some(stats), fallbackFraction = fraction)
+      assert(stats.nonEmpty == (path == "frontier"), s"took the other path: $stats")
+      out
+    }
+    ownsOnlyResult(s"PageRank.incrementalLedger ($path)")(PageRank.incrementalLedger(
+      prLedger, links.union(newLinks), newLinks, iters = 3, fallbackFraction = fraction))
+  }
+  ownsOnlyResult("Components.connectedComponents")(Components.connectedComponents(edges))
+  ownsOnlyResult("Components.connectedComponentsStar")(Components.connectedComponentsStar(edges))
+  ownsOnlyResult("Components.incrementalComponents(smallGraphEdges = 0)") {
+    import spark.implicits._
+    val labels = Seq((1L, 1L), (2L, 1L), (7L, 7L), (8L, 7L)).toDF("doc_id", "component")
+    Components.incrementalComponents(labels, edges, smallGraphEdges = 0L)
+  }
   ownsOnlyResult("Multimodal.imageDedupGroupsFromSigs")(
     Multimodal.imageDedupGroupsFromSigs(sigs("dhash"), maxDist = 3))
   ownsOnlyResult("Audio.audioDedupGroupsFromSigs")(

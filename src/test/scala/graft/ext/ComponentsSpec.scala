@@ -69,9 +69,11 @@ class ComponentsSpec extends SparkSpec {
 
   test("chain longer than maxIter rounds fails loudly instead of mislabeling") {
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = cached
     intercept[IllegalStateException] {
       Components.connectedComponents(chain, maxIter = 2)
     }
+    assert(cached === before, "the failed loop left checkpoints behind")
   }
 
   test("non-integral id columns are rejected, not silently nulled") {
@@ -92,6 +94,11 @@ class ComponentsSpec extends SparkSpec {
     val got = Components.connectedComponentsStar(chain, maxIter = 10)
       .as[(Long, Long)].collect().sorted.toSeq
     assert(got === (1L to 40L).map(i => (i, 1L)))
+    val before = cached
+    intercept[IllegalStateException] {
+      Components.connectedComponentsStar(chain, maxIter = 1)
+    }
+    assert(cached === before, "the failed loop left checkpoints behind")
   }
 
   test("star contraction matches propagation on chain/star/disjoint shapes") {

@@ -51,8 +51,10 @@ class KCoreSpec extends SparkSpec {
     // a long chain needs ~n/2 cascade rounds; maxIter=2 must throw, not
     // return a partially peeled graph
     val chain = (1L until 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = cached
     intercept[IllegalArgumentException] {
       KCore.kCore(chain, k = 2, maxIter = 2)
     }
+    assert(cached === before, "the failed loop left checkpoints behind")
   }
 }
