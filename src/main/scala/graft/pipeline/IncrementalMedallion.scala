@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -29,9 +28,10 @@ import org.apache.spark.sql.types.StructType
   *    `ref_incremental_silver` registry entry). State is unbounded by
   *    design — it IS the distinct set; for high-cardinality keys with an
   *    event-time column, `dropDuplicatesWithinWatermark` bounds it.
-  *  - gold: stateless again (silver's output is already globally distinct,
-  *    so the reference's redundant gold-side distinct is the identity) —
-  *    one [[runFanOut]] pass derives once and writes all four outputs.
+  *  - gold: stateless again. One [[runFanOut]] pass derives each
+  *    micro-batch once ([[Gold.derive]]) and writes it through the same
+  *    [[Gold.sinks]] list the batch [[Medallion.run]] writes. Silver's
+  *    output is already globally distinct, so no sink repeats the distinct.
   */
 object IncrementalMedallion {
 
@@ -101,29 +101,17 @@ object IncrementalMedallion {
   }
 
   /** One end-to-end incremental run of the acordos medallion: new landing
-    * files → bronze → silver → four gold outputs. Call again after more
-    * files land — each layer continues from its checkpoint.
+    * files → bronze → silver → the four [[Gold.sinks]], each under
+    * `dirs.gold(name)`. Call again after more files land — each layer
+    * continues from its checkpoint.
     */
   def runAcordos(spark: SparkSession, dirs: Dirs, rawSchema: StructType): Unit = {
     runLayer(spark, dirs.landing, rawSchema, Bronze.transform,
       dirs.bronze, dirs.ckpt("bronze"))
-    val bronzeSchema = Bronze.transform(
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), rawSchema)).schema
-    runLayer(spark, dirs.bronze, bronzeSchema, Silver.transform,
+    runLayer(spark, dirs.bronze, Schemas.bronze, Silver.transform,
       dirs.silver, dirs.ckpt("silver"))
-    val silverSchema = Silver.transform(
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), bronzeSchema)).schema
-    val twoCols = Seq(col("local_completo"), col("acordo_recurso"))
-    val silverCols = silverSchema.fieldNames.map(col).toSeq
-    // derive runs ONCE per batch (prepare), each sink projects/filters it
-    runFanOut(spark, dirs.silver, silverSchema, Seq(
-      ((h: DataFrame) => h.select(silverCols: _*), dirs.gold("acordos")),
-      ((h: DataFrame) => h.select(twoCols: _*), dirs.gold("hier")),
-      ((h: DataFrame) => h.filter(col("tipo_de_parceiro") === "País")
-        .select(twoCols: _*), dirs.gold("pais")),
-      ((h: DataFrame) => h.filter(col("tipo_de_parceiro") === "Organização")
-        .select(twoCols: _*), dirs.gold("org"))),
-      dirs.ckpt("gold"),
-      prepare = Gold.derive)
+    runFanOut(spark, dirs.silver, Schemas.silver,
+      Gold.sinks.map { case (name, f) => (f, dirs.gold(name)) },
+      dirs.ckpt("gold"), prepare = Gold.derive)
   }
 }

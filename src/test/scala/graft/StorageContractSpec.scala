@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{Audio, Bpe, ByteBpe, Components, CosineJoin, JaccardDedup, KCore, Multimodal,
   Packing, PageRank, WordPiece}
+import graft.io.Sinks
+import graft.pipeline.{Bronze, Gold, Medallion, Schemas, Silver}
 
 /** The [[Materialize]] ownership rule, one case per function that returns
   * a materialized frame: once the caller releases the result, the session
@@ -63,6 +65,17 @@ class StorageContractSpec extends SparkSpec {
     finally Materialize.release(ledger, blocking = true)
   }
 
+  // raw acordos rows, one exact copy and both partner types, so gold's
+  // filters and silver's distinct all have rows to work on
+  private def acordos = {
+    import spark.implicits._
+    val fr = ("01/02/2010", "frança", "País", "Europa", "Europa Ocidental", "Paris",
+      "bilateral", "acordo d'água", "cooperação", "hídricos", "memorando", "01/02/2020", "l")
+    val onu = ("03/04/2015", "ONU", "Organização", "-", "", "Genebra", "multilateral",
+      "tratado", "-", "", "tratado", "", "")
+    Seq(fr, fr, onu).toDF(Schemas.rawHeaders: _*)
+  }
+
   // near-identical signatures: two hash groups with several members and
   // one rep within hamming 1 of another, so banding, CC and expansion run
   private def sigs(col: String) = {
@@ -114,4 +127,16 @@ class StorageContractSpec extends SparkSpec {
   leavesNoStorage("WordPiece.train")(WordPiece.train(docs, "text", numMerges = 4))
   leavesNoStorage("WordPiece.train(batch = 4)")(
     WordPiece.train(docs, "text", numMerges = 8, batch = 4))
+  leavesNoStorage("Medallion.run") {
+    val root = scratch("medallion")
+    acordos.write.parquet(s"$root/landing")
+    Medallion.run(spark, s"$root/landing", s"$root/out")
+  }
+  leavesNoStorage("Gold.transform, its four outputs written") {
+    val g = Gold.transform(Silver.transform(Bronze.transform(acordos)))
+    val root = scratch("gold")
+    for ((name, out) <- Seq("acordos" -> g.acordos, "hier" -> g.hier, "pais" -> g.pais,
+        "org" -> g.org))
+      Sinks.writeParquet(out, s"$root/$name")
+  }
 }

@@ -73,14 +73,6 @@ class OpsSpec extends SparkSpec {
     assert(got(1).isNullAt(0)) // concat_ws would have yielded "a > c"
   }
 
-  test("F3 truncate + F2 trim") {
-    val long = "x" * 300
-    val df = Seq(s"  $long  ").toDF("s")
-    val got = Normalize.truncateCols(Normalize.trimCols(df, Seq("s")), Seq("s"))
-      .as[String].head()
-    assert(got.length === 255 && got.forall(_ == 'x'))
-  }
-
   test("P5 dropDuplicates on all columns is exact and idempotent") {
     val df = Seq(("a", 1), ("a", 1), ("b", 2)).toDF("k", "v")
     val once = Dedup.distinctAll(df)

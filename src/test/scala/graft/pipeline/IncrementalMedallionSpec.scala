@@ -66,17 +66,17 @@ class IncrementalMedallionSpec extends SparkSpec {
       df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     assert(key(incr) === key(batch))
 
-    // gold fan-out: acordos output == silver (globally distinct passthrough);
-    // pais/org filters partition the derived rows
-    val acordos = IncrementalMedallion.readFanOut(spark, dirs.gold("acordos"))
-    assert(key(acordos) === key(incr))
-    val pais = IncrementalMedallion.readFanOut(spark, dirs.gold("pais"))
-    val org  = IncrementalMedallion.readFanOut(spark, dirs.gold("org"))
-    val hier = IncrementalMedallion.readFanOut(spark, dirs.gold("hier"))
-    assert(hier.count() === 3)
-    assert(pais.count() === 2 && org.count() === 1)
-    val batchGold = Gold.transform(batch, persist = false)
-    assert(key(pais) === key(batchGold.pais) && key(org) === key(batchGold.org))
+    // gold fan-out: every sink equals the batch gold over the same silver
+    // by row (acordos is the globally distinct silver passed through;
+    // pais/org filters partition the derived rows)
+    val batchGold = Gold.transform(batch)
+    for ((name, want) <- Seq("acordos" -> batchGold.acordos, "hier" -> batchGold.hier,
+        "pais" -> batchGold.pais, "org" -> batchGold.org))
+      assert(key(IncrementalMedallion.readFanOut(spark, dirs.gold(name))) === key(want),
+        s"gold_$name differs from the batch gold")
+    assert(key(batchGold.acordos) === key(incr))
+    assert(batchGold.hier.count() === 3)
+    assert(batchGold.pais.count() === 2 && batchGold.org.count() === 1)
   }
 
   test("fan-out replays an uncommitted batch onto the same dir — no duplicates") {

@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end bronze→silver→gold on acordos-domain fixtures (FIXTURES.md §A):
   * duplicates, '-' placeholders, malformed dates, nulls, >255-char título,
@@ -29,19 +32,28 @@ class PipelineSpec extends SparkSpec {
      "multilateral", longTitle, "-", null, "tratado", null, null),
   ).toDF(Schemas.rawHeaders.map(h => h.toUpperCase): _*) // scrambled casing
 
+  private def typed(schema: StructType) = schema.map(f => (f.name, f.dataType))
+
+  private def key(df: DataFrame) =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
   test("bronze: normalize names, parse dates (coerce), truncate título") {
     val b = Bronze.transform(rawDf)
-    assert(b.columns.toSeq === Schemas.bronze.fieldNames.toSeq)
+    assert(typed(b.schema) === typed(Schemas.bronze))
     val rows = b.select("data_de_celebração", "vigência", "título").collect()
     assert(rows(0).getDate(0).toString === "2010-02-01")
     assert(rows(2).isNullAt(1))        // 99/99/9999 -> NULL
     assert(rows(3).isNullAt(0))        // bogus-date -> NULL
     assert(rows(3).getString(2).length === 255)
+    // F2 trim before F3 truncate: the leading spaces do not count
+    val padded = Bronze.transform(rawDf.limit(1).select(rawDf.columns.toSeq.map(c =>
+      if (c == "TÍTULO") lit("  " + "x" * 300).as(c) else col(c)): _*))
+    assert(padded.select("título").as[String].head() === "x" * 255)
   }
 
   test("silver: fill/replace, trim+title, ano, project+dedup") {
     val s = Silver.transform(Bronze.transform(rawDf))
-    assert(s.columns.toSeq === Schemas.silver.fieldNames.toSeq)
+    assert(typed(s.schema) === typed(Schemas.silver))
     // 4 raw rows -> dup collapses AND the vigência/link-only variant collapses
     assert(s.count() === 2)
     val fr = s.filter($"parceiro" === "França").head()
@@ -77,7 +89,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("gold: derived dims, país/org splits, null-propagating hierarchy") {
-    val g = Gold.transform(Silver.transform(Bronze.transform(rawDf)), persist = false)
+    val g = Gold.transform(Silver.transform(Bronze.transform(rawDf)))
     assert(g.hier.columns.toSeq === Seq("local_completo", "acordo_recurso"))
     val hier = g.hier.collect().map(r => Option(r.getString(0))).toSet
     assert(hier.contains(Some("Europa > Europa Ocidental > Paris")))
@@ -86,5 +98,25 @@ class PipelineSpec extends SparkSpec {
     // all levels informative for ONU row (filled at silver) -> concat non-null
     val orgRow = g.org.head()
     assert(orgRow.getString(0) === "Não Informado > Não Informado > Genebra")
+  }
+
+  test("Medallion.run: six directories, gold equal to Gold.transform over the silver") {
+    val root = scratch("medallion")
+    val landing = s"$root/landing"; val out = s"$root/out"
+    rawDf.write.parquet(landing)
+    Medallion.run(spark, landing, out)
+    for (d <- Seq("bronze", "silver", "gld_acordos", "gld_hier", "gld_pais", "gld_org"))
+      assert(new java.io.File(s"$out/$d/_SUCCESS").isFile, s"$d not written")
+    assert(new java.io.File(s"$out/gld_acordos").list().exists(_.startsWith("ano=")))
+    val silver = spark.read.schema(Schemas.silver).parquet(s"$out/silver")
+    assert(key(silver) === key(Silver.transform(Bronze.transform(rawDf))))
+    val g = Gold.transform(silver)
+    for ((name, want) <- Seq("acordos" -> g.acordos, "hier" -> g.hier, "pais" -> g.pais,
+        "org" -> g.org))
+      assert(key(spark.read.parquet(s"$out/gld_$name")) === key(want), s"gld_$name")
+    // silver is distinct by construction: gold over its parquet adds no
+    // second distinct
+    val aggs = g.acordos.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+    assert(aggs.isEmpty, s"acordos over parquet silver aggregates: $aggs")
   }
 }
