@@ -45,15 +45,15 @@ object MinHashDedup {
         graft.functions.GraftFunctions.minhash_signature(col("shingles"), h))
 
   /** Pure-SQL md5-surrogate signatures: the oracle-expressible executable
-    * spec twin of [[signatures]]. Shingle identity is the 3-gram STRING;
-    * its two base hashes come from disjoint md5 hex ranges (chars 1–15 and
-    * 16–30, each a 60-bit int parseable identically by Spark's `conv` and
-    * DuckDB's `'0x…'::BIGINT`), reduced mod 2^31−1 so the double-hashing
-    * combine `(h1 + i·h2) mod p` never overflows a BIGINT in either engine
-    * (DuckDB errors on overflow where the JVM wraps — the modulus is what
-    * makes the twin cross-engine exact). Returns
-    * `(idCol, shingles array<string>, sigs array<bigint> length h)`; docs
-    * with < k words have no shingles and are excluded, mirroring
+    * spec twin of [[signatures]]. Shingle identity is the 3-gram STRING
+    * ([[shinglesOf]]); its two base hashes come from disjoint md5 hex
+    * ranges (chars 1–15 and 16–30, each a 60-bit int parseable identically
+    * by Spark's `conv` and DuckDB's `'0x…'::BIGINT`), reduced mod 2^31−1 so
+    * the double-hashing combine `(h1 + i·h2) mod p` never overflows a
+    * BIGINT in either engine (DuckDB errors on overflow where the JVM
+    * wraps — the modulus is what makes the twin cross-engine exact).
+    * Returns `(idCol, shingles array<string>, sigs array<bigint> length h)`;
+    * docs with < k words have no shingles and are excluded, mirroring
     * [[signatures]]' empty filter. Production stays on the native one-pass
     * kernels; this twin exists so the banding+verify machinery gets a
     * hash-matched DuckDB oracle instead of rows-only evidence.
@@ -70,25 +70,49 @@ object MinHashDedup {
     // value-identical — pinned in Md5TwinKernelSpec): the hex-string round
     // trip (md5 → hex → substr → conv) plus the per-row struct array and
     // per-seed array_min allocations measured ~2× the whole signature scan
-    shingleSetsMd5(docs, idCol, textCol, k)
-      .select(col(idCol), col("shingles"),
-        graft.functions.GraftFunctions.md5_minhash_sigs(col("shingles"), h).as("sigs"))
+    shingled(docs, textCol, k).select(col(idCol), col("shingles"), sigsMd5(h))
+
+  /** [[signaturesMd5]] with the document text in place of its shingle
+    * set: `(idCol, textCol, sigs)`, the row of the MinHash ledger
+    * ([[graft.streaming.MinHashLedgerStream]]). The text holds each word
+    * once where the k-gram strings hold it k times; [[shinglesOf]]
+    * rebuilds the set from it, for band-collided candidates only.
+    */
+  def textSignaturesMd5(docs: DataFrame, idCol: String = "doc_id",
+                        textCol: String = "text", h: Int = 16, k: Int = 3): DataFrame =
+    shingled(docs, textCol, k).select(col(idCol), col(textCol), sigsMd5(h))
+
+  private def sigsMd5(h: Int): Column =
+    graft.functions.GraftFunctions.md5_minhash_sigs(col("shingles"), h).as("sigs")
+
+  /** The md5 twin's ONE shingle definition: the distinct lowercase word
+    * k-gram STRINGS of `text`, through the native `word_ngrams` kernel
+    * (one split per row; the `transform(sequence…)`/`slice` lambda it
+    * replaces re-split the text once per shingle once Catalyst inlined
+    * the token alias). Tokens are `split(lower(text), ' ')`, so doubled,
+    * leading and trailing spaces yield empty tokens that count as words.
+    * Empty for < k words, NULL for NULL text.
+    */
+  def shinglesOf(text: Column, k: Int = 3): Column =
+    array_distinct(graft.functions.GraftFunctions.word_ngrams(split(lower(text), " "), k))
+
+  /** `docs` with a `shingles` column ([[shinglesOf]]), docs with NULL text
+    * or < k words dropped.
+    */
+  private def shingled(docs: DataFrame, textCol: String, k: Int): DataFrame =
+    docs.filter(col(textCol).isNotNull)
+      .withColumn("shingles", shinglesOf(col(textCol), k))
+      .filter(size(col("shingles")) > 0)
 
   /** The md5 twin's shingle universe on its own: `(idCol, shingles)` with
-    * shingles the distinct lowercase word k-gram STRINGS; docs with NULL
-    * text or < k words are excluded (mirroring [[signatures]]' empty
-    * filter). Shared by [[signaturesMd5]] and [[exactPairsMd5]] so sketch
-    * and ground truth are definitionally over the same sets.
+    * shingles [[shinglesOf]] the text; docs with NULL text or < k words
+    * are excluded (mirroring [[signatures]]' empty filter). The sets
+    * [[signaturesMd5]] sketches, so sketch and the [[exactPairsMd5]]
+    * ground truth are definitionally over the same sets.
     */
   def shingleSetsMd5(docs: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text", k: Int = 3): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
-        expr(s"split(lower($textCol), ' ')").as("ws"))
-      .filter(size(col("ws")) >= k)
-      .select(col(idCol),
-        expr(s"""array_distinct(transform(sequence(0, size(ws) - $k),
-          i -> concat_ws(' ', slice(ws, i + 1, $k))))""").as("shingles"))
+    shingled(docs, textCol, k).select(col(idCol), col("shingles"))
 
   /** Exact-Jaccard ground truth over [[shingleSetsMd5]]'s universe —
     * ALL pairs with true Jaccard ≥ `minJaccard`, computed without the
@@ -138,15 +162,15 @@ object MinHashDedup {
   private def stringKey(r: Int): String =
     s"concat(b, ':', array_join(transform(slice(sigs, b * $r + 1, $r), v -> cast(v as string)), ','))"
 
-  /** `(idCol, band_key)`: one row per band of each signature, `key` the
+  /** `(keep…, band_key)`: one row per band of each signature, `key` the
     * band encoding over the band index `b`. CRITICAL scale property: only
-    * these rows flow through the LSH shuffle — never the shingle arrays
-    * (shipping payloads through the explode+join is what turns LSH into a
-    * data explosion at scale).
+    * `(id, band_key)` rows flow through the LSH shuffle of the pair
+    * searches — never the shingle arrays (shipping payloads through the
+    * explode+join is what turns LSH into a data explosion at scale).
     */
-  private def bandKeys(sigs: DataFrame, idCol: String, bands: Int, key: String): DataFrame =
-    sigs.select(col(idCol),
-      explode(expr(s"transform(sequence(0, ${bands - 1}), b -> $key)")).as("band_key"))
+  private def bandKeys(sigs: DataFrame, bands: Int, key: String, keep: Column*): DataFrame =
+    sigs.select(keep :+
+      explode(expr(s"transform(sequence(0, ${bands - 1}), b -> $key)")).as("band_key"): _*)
 
   /** Banded candidate pairs `(doc_a, doc_b)`, `doc_a < doc_b`, over one
     * band-key frame — the ONE candidate rule of the pair searches, so the
@@ -172,7 +196,7 @@ object MinHashDedup {
     */
   private def verifiedPairs(sigs: DataFrame, idCol: String, bands: Int, key: String,
                             minJaccard: Double): DataFrame =
-    pairCandidates(bandKeys(sigs, idCol, bands, key))
+    pairCandidates(bandKeys(sigs, bands, key, col(idCol)))
       .join(sigs.select(col(idCol).as("doc_a"), col("shingles").as("sh_a")), "doc_a")
       .join(sigs.select(col(idCol).as("doc_b"), col("shingles").as("sh_b")), "doc_b")
       .withColumn("jaccard", jaccard)
@@ -182,19 +206,27 @@ object MinHashDedup {
   /** The ids of `batchIds` that near-duplicate nothing in `cs`, as a lazy
     * plan: the ONE batch×corpus candidate rule (a band-key collision
     * between `bs` and `cs`), then the Jaccard verify. An id with no
-    * signature in `bs` comes back novel.
+    * signature in `bs` comes back novel. `corpusSets` is the corpus
+    * side's shingle set, an expression over `cs`'s columns.
+    *
+    * The batch is the build side: its `(batch_id, sh_a, band_key)` rows
+    * (each batch set once per band) are broadcast. The corpus is read once,
+    * in one narrow pass: each row's band keys probe that hash table, and
+    * `corpusSets` is evaluated on the joined rows only. The matched batch
+    * ids, at most one per joined row, are broadcast into the anti join.
+    * Nothing corpus-sized is persisted, broadcast or shuffled, and each
+    * side is read once.
     */
-  private def novelIds(batchIds: DataFrame, bs: DataFrame, cs: DataFrame, idCol: String,
-                       bands: Int, key: String, minJaccard: Double): DataFrame = {
-    val matched = bandKeys(bs, idCol, bands, key).toDF("batch_id", "band_key")
-      .join(bandKeys(cs, idCol, bands, key).toDF("corpus_id", "band_key"), Seq("band_key"))
-      .select("batch_id", "corpus_id")
-      .dropDuplicates("batch_id", "corpus_id")
-      .join(bs.select(col(idCol).as("batch_id"), col("shingles").as("sh_a")), "batch_id")
-      .join(cs.select(col(idCol).as("corpus_id"), col("shingles").as("sh_b")), "corpus_id")
+  private def novelIds(batchIds: DataFrame, bs: DataFrame, cs: DataFrame, corpusSets: Column,
+                       idCol: String, bands: Int, key: String,
+                       minJaccard: Double): DataFrame = {
+    val batchKeys = bandKeys(bs, bands, key, col(idCol).as("batch_id"), col("shingles").as("sh_a"))
+    val matched = bandKeys(cs, bands, key, cs.columns.map(col): _*)
+      .join(broadcast(batchKeys), "band_key")
+      .withColumn("sh_b", corpusSets)
       .filter(jaccard >= minJaccard)
-      .select(col("batch_id").as(idCol)).distinct()
-    batchIds.select(col(idCol)).join(matched, Seq(idCol), "left_anti")
+      .select(col("batch_id").as(idCol))
+    batchIds.select(col(idCol)).join(broadcast(matched), Seq(idCol), "left_anti")
   }
 
   /** LSH banding + exact-Jaccard verify over [[signaturesMd5]] output —
@@ -233,7 +265,7 @@ object MinHashDedup {
                          textCol: String = "text",
                          h: Int = 16, bands: Int = 4, k: Int = 3): DataFrame =
     Materialize.using(signaturesMd5(docs, idCol, textCol, h, k)) { sigs =>
-      Materialize.pin(pairCandidates(bandKeys(sigs, idCol, bands, stringKey(h / bands)))
+      Materialize.pin(pairCandidates(bandKeys(sigs, bands, stringKey(h / bands), col(idCol)))
         .join(sigs.select(col(idCol).as("doc_a"),
           col("shingles").as("sh_a"), col("sigs").as("sg_a")), "doc_a")
         .join(sigs.select(col(idCol).as("doc_b"),
@@ -245,50 +277,42 @@ object MinHashDedup {
           jaccard.as("jaccard")))
     }
 
-  /** The incremental md5-twin core, over two [[signaturesMd5]]-shaped
-    * frames (`idCol`, shingles, sigs): batch ids near-duplicating NOTHING
+  /** The incremental md5-twin core: batch ids near-duplicating NOTHING
     * in `corpusSigs` (any-band sub-signature collision, then exact shingle
-    * Jaccard ≥ `minJaccard`). `batchIds` is the FULL batch id set — batch
-    * docs too short to shingle carry no near-dup evidence and come back
-    * novel, the [[newAgainstCorpus]] contract. Taking sig frames (not
-    * documents) is what makes the corpus side SERVABLE FROM STATE: the
-    * maintained signature ledger
+    * Jaccard ≥ `minJaccard`). `batchSigs` is [[signaturesMd5]]-shaped
+    * (`idCol`, shingles, sigs). `corpusSigs` has `sigs` and whatever
+    * `corpusSets`, its shingle-set expression, reads: by default a
+    * [[signaturesMd5]] frame's `shingles`; for the MinHash ledger's
+    * [[textSignaturesMd5]] rows, [[shinglesOf]] the text, which then runs
+    * for band-collided rows only. `batchIds` is the FULL batch id set —
+    * batch docs too short to shingle carry no near-dup evidence and come
+    * back novel, the [[newAgainstCorpus]] contract. Taking sig frames
+    * (not documents) is what makes the corpus side SERVABLE FROM STATE:
+    * the maintained signature ledger
     * ([[graft.streaming.MinHashLedgerStream]]) plugs in directly, so the
     * steady-state flow the [[newAgainstCorpus]] doc promises — corpus
-    * sketched once, per-ingest cost = batch sketch + one keyed band join —
-    * is this function over stored state. Scale shape unchanged: only
-    * `(band_key, id)` rows cross the LSH shuffle, shingle arrays join in
-    * for candidates only.
+    * sketched once, per-ingest cost = batch sketch + one read of the
+    * stored signatures — is this function over stored state. Shape: the
+    * batch is the broadcast build side and each sig frame is read once
+    * (see `novelIds`), so neither is cached.
     *
-    * With `materialize = true` (the default) both sig frames are cached
-    * only for the call and the batch-id-sized result comes back pinned,
-    * so a per-micro-batch probe loop never accumulates corpus-sized
-    * blocks. `materialize = false` returns the lazy plan, for a caller
-    * that passes sig frames it already caches and owns; shared with
-    * [[SimHash.novelAgainstSigs]].
+    * With `materialize = true` (the default) the batch-id-sized result
+    * comes back pinned and the call leaves nothing else cached, so a
+    * per-micro-batch probe loop never accumulates blocks.
+    * `materialize = false` returns the lazy plan.
     */
   def novelAgainstSigsMd5(batchIds: DataFrame, batchSigs: DataFrame,
                           corpusSigs: DataFrame, minJaccard: Double = 0.5,
                           h: Int = 16, bands: Int = 4,
                           idCol: String = "doc_id",
-                          materialize: Boolean = true): DataFrame = {
+                          materialize: Boolean = true,
+                          corpusSets: Column = col("shingles")): DataFrame = {
     require(bands >= 1 && h % bands == 0,
       s"minhash: h must be divisible by bands (h=$h, bands=$bands) — a " +
         "ragged band slice would band on short/empty sub-signatures")
-    // each side feeds banding AND verify — persist for the call
-    // (measured: the unpersisted form re-ran the md5 sketch per consumer,
-    // 14.3 s warm vs 0.5 s for the persisted pairs twin at sf0.1)
-    val bs = if (materialize) batchSigs.persist() else batchSigs
-    val cs = if (materialize) corpusSigs.persist() else corpusSigs
-    val novel = novelIds(batchIds, bs, cs, idCol, bands, stringKey(h / bands), minJaccard)
-    if (!materialize) novel
-    else {
-      // pin BEFORE releasing the sig frames: the result is computed from them
-      Materialize.pin(novel)
-      Materialize.release(bs)
-      Materialize.release(cs)
-      novel
-    }
+    val novel = novelIds(batchIds, batchSigs, corpusSigs, corpusSets, idCol, bands,
+      stringKey(h / bands), minJaccard)
+    if (materialize) Materialize.pin(novel) else novel
   }
 
   /** md5-twin of [[newAgainstCorpus]] — both sides sketched via
@@ -332,12 +356,12 @@ object MinHashDedup {
     * [[nearDuplicates]] for that half).
     *
     * Shape: both sides sketch independently (narrow, fused with their
-    * scans); ONE keyed shuffle joins batch band keys against corpus band
-    * keys — `(band_key, id)` rows only, never shingle arrays — and only
-    * band-collided candidates fetch shingle sets for the exact-Jaccard
-    * verify. At steady state the corpus re-sketch is replaced by
-    * precomputed tables ([[signatures]] output written once, band keys
-    * bucketed by `band_key`) with the batch-side plan unchanged. A true
+    * scans); the batch's band keys and shingle sets are broadcast, and the
+    * corpus streams its band keys past them once — no shuffle, no cache —
+    * with the exact-Jaccard verify on band-collided rows only. At steady
+    * state the corpus re-sketch is replaced by stored signatures
+    * ([[graft.streaming.MinHashLedgerStream]] over the md5 twin) with the
+    * batch-side plan unchanged. A true
     * near-dup that LSH banding misses stays "novel" — recall is the
     * banding curve (see the object doc), which is the operator's contract.
     * Batch docs too short to shingle (< k words) carry no near-dup
@@ -347,9 +371,6 @@ object MinHashDedup {
                        minJaccard: Double = 0.7,
                        idCol: String = "doc_id", textCol: String = "text",
                        h: Int = 128, bands: Int = 32): DataFrame =
-    // each side's sketch feeds banding AND verify — persist, the same
-    // session cache as nearDuplicates
-    novelIds(batch, signatures(batch, idCol, textCol, h).persist(),
-      signatures(corpus, idCol, textCol, h).persist(), idCol, bands, hashKey(h / bands),
-      minJaccard)
+    novelIds(batch, signatures(batch, idCol, textCol, h), signatures(corpus, idCol, textCol, h),
+      col("shingles"), idCol, bands, hashKey(h / bands), minJaccard)
 }

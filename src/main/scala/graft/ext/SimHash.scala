@@ -84,10 +84,9 @@ object SimHash {
     * operator whose contract is NOVELTY that is a wrong answer, not a
     * recall trade, so it fails loudly (round-12 ADVICE).
     *
-    * `materialize` as in [[MinHashDedup.novelAgainstSigsMd5]]: `true`
-    * caches both sig frames for the call and returns the batch-id-sized
-    * result pinned; `false` returns the lazy plan over sig frames the
-    * caller already caches and owns.
+    * `materialize = true` caches both sig frames for the call and returns
+    * the batch-id-sized result pinned; `false` returns the lazy plan over
+    * sig frames the caller already caches and owns.
     */
   def novelAgainstSigs(batchIds: DataFrame, batchSigs: DataFrame,
                        corpusSigs: DataFrame, maxDist: Int = 3,

@@ -34,7 +34,7 @@ class CheckpointSitesSpec extends AnyFunSuite {
     "ext/CosineJoin.scala" -> "the weighted corpus, its norms and the prefix rows, each read twice",
     "ext/Decontaminate.scala" -> "the eval n-gram set, a session cache shared across batches",
     "ext/JaccardDedup.scala" -> "n-gram sets and prefix rows read by both join sides",
-    "ext/MinHashDedup.scala" -> "signatures read by banding and verify, and its session caches",
+    "ext/MinHashDedup.scala" -> "the pair searches' signatures, session caches read by banding and verify",
     "ext/PageRank.scala" -> "the edge view and out-degrees of the frontier path",
     "ext/SimHash.scala" -> "signature frames read by the chunk explode and the verify join")
 

@@ -6,6 +6,7 @@ import graft.ext.{Audio, Bpe, ByteBpe, Components, CosineJoin, JaccardDedup, KCo
   Packing, PageRank, WordPiece}
 import graft.io.Sinks
 import graft.pipeline.{Bronze, Gold, Medallion, Schemas, Silver}
+import graft.streaming.MinHashLedgerStream
 
 /** The [[Materialize]] ownership rule, one case per function that returns
   * a materialized frame: once the caller releases the result, the session
@@ -120,6 +121,13 @@ class StorageContractSpec extends SparkSpec {
   ownsOnlyResult("Packing.packBinsBy")(Packing.packBinsBy(
     docs.select(col("doc_id"), length(col("text")).cast("long").as("n_tokens")),
     Seq(col("doc_id")), "n_tokens", budget = 512L))
+  // the probe's novel-id frame is the caller's; nothing else stays cached
+  ownsOnlyResult("MinHashLedgerStream.probe") {
+    val root = scratch("mhled") + "/st"
+    MinHashLedgerStream.maintain(docs.filter(col("doc_id") < 20), 0L, root)
+    MinHashLedgerStream.maintain(docs.filter(col("doc_id").between(20, 29)), 1L, root)
+    MinHashLedgerStream.probe(spark, root, docs.filter(col("doc_id") >= 30))
+  }
   // the merge loop checkpoints the vocab every round
   leavesNoStorage("Bpe.train")(Bpe.train(docs, "text", numMerges = 4))
   leavesNoStorage("Bpe.train(batch = 4)")(Bpe.train(docs, "text", numMerges = 8, batch = 4))

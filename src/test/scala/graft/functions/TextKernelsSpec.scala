@@ -83,6 +83,28 @@ class TextKernelsSpec extends SparkSpec {
         .as[(Seq[String], Seq[String])].collect()
       got.foreach { case (k, r) => assert(k === r, s"n=$n") }
     }
+    // texts through the MinHash twin's tokenizer, split(lower(text), ' '):
+    // its shingle sets (MinHashDedup.shinglesOf) == the distinct
+    // transform/slice form they replaced, kept to >= k words as it was
+    val texts = Seq(
+      "  leading and trailing  ", "doubled  spaces   inside", "exactly three words",
+      "two words", "UPPER Case MiXeD words", "Ünïcödé ÀND naïve café words", "",
+      "a  b")
+      .toDF("t").withColumn("ws", split(lower(col("t")), " "))
+    for (k <- Seq(2, 3)) {
+      val lambda = when(size(col("ws")) >= k, array_distinct(
+        transform(sequence(lit(0), size(col("ws")) - lit(k)),
+          i => concat_ws(" ", slice(col("ws"), i + 1, lit(k))))))
+        .otherwise(array().cast("array<string>"))
+      val got = texts.select(graft.ext.MinHashDedup.shinglesOf(col("t"), k).as("k"),
+        lambda.as("r"), GraftFunctions.word_ngrams(col("ws"), k).as("g"), ref(k).as("gr"))
+        .as[(Seq[String], Seq[String], Seq[String], Seq[String])].collect()
+      got.foreach { case (kk, r, g, gr) =>
+        assert(kk === r, s"k=$k")
+        assert(g === gr, s"k=$k")
+      }
+      assert(got.exists(_._1.nonEmpty) && got.exists(_._1.isEmpty)) // both branches ran
+    }
   }
 
   test("word_ngrams: NULL token array propagates to NULL (not [] like the old when-form)") {

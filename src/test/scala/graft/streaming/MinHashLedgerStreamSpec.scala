@@ -73,6 +73,64 @@ class MinHashLedgerStreamSpec extends SparkSpec {
     }
     assert(kErr.getMessage.contains("refusing to probe"))
     assert(probed(root) === want(corpus)) // matching params still serve
+    // a store in the earlier (doc_id, shingles, sigs) layout, pinned by h
+    // and k only: read with today's schema it would serve text = NULL and
+    // every batch doc would come back novel, so both calls refuse it
+    val old = scratch("mhled-old") + "/st"
+    graft.ext.MinHashDedup.signaturesMd5(corpus.toDF("doc_id", "text"))
+      .write.parquet(s"$old/batch=0")
+    SegmentStore.pinParams(spark, old, Seq("h" -> 16L, "k" -> 3L))
+    val oldFold = intercept[IllegalArgumentException] {
+      MinHashLedgerStream.maintain(batch.toDF("doc_id", "text"), 1L, old)
+    }
+    assert(oldFold.getMessage.contains("refusing"))
+    val oldProbe = intercept[IllegalArgumentException] {
+      MinHashLedgerStream.probe(spark, old, batch.toDF("doc_id", "text"))
+    }
+    assert(oldProbe.getMessage.contains("refusing to probe"))
+  }
+
+  test("mixed-case and multi-space texts: probe == batch recompute") {
+    val root = scratch("mhled-case") + "/st"
+    val seen = Seq(
+      (1L, "The Quick  Brown fox JUMPS over the lazy dog"),
+      (2L, "  leading spaces and   doubled   spaces here  "),
+      (3L, "Ünïcödé wörds ÀND Ascii words mixed in a line"),
+      (4L, "one two"))
+    val probes = Seq(
+      (10L, "the quick brown fox jumps over THE LAZY DOG"), // case, one space fewer
+      (11L, "the quick  brown fox jumps over the lazy dog"), // case only: a match
+      (12L, "leading spaces and doubled spaces here"),       // spacing differs
+      (13L, "  LEADING SPACES AND   DOUBLED   SPACES HERE  "),
+      (14L, "ünïcödé WÖRDS ànd ascii words mixed in a line"),
+      (15L, "One Two"))
+    MinHashLedgerStream.maintain(seen.take(2).toDF("doc_id", "text"), 0L, root)
+    MinHashLedgerStream.maintain(seen.drop(2).toDF("doc_id", "text"), 1L, root)
+    val b = probes.toDF("doc_id", "text")
+    val got = MinHashLedgerStream.probe(spark, root, b).collect().map(_.getLong(0)).toSet
+    val ref = graft.ext.MinHashDedup.newAgainstCorpusMd5(b, seen.toDF("doc_id", "text"))
+      .collect().map(_.getLong(0)).toSet
+    assert(got === ref)
+    assert(!got(11L) && !got(13L) && !got(14L)) // case folds; identical spacing matches
+    assert(got(15L))                              // too short to shingle: novel
+  }
+
+  test("the probe reads the ledger once: at most 6 jobs over three live segments") {
+    val root = scratch("mhled-jobs") + "/st"
+    corpus.zipWithIndex.foreach { case (d, i) =>
+      MinHashLedgerStream.maintain(Seq(d).toDF("doc_id", "text"), i.toLong, root)
+      if (i == 1) MinHashLedgerStream.compact(spark, root)
+    }
+    MinHashLedgerStream.maintain(batch.take(1).map { case (_, t) => (20L, t) }
+      .toDF("doc_id", "text"), 3L, root)
+    assert(SegmentStore.live(spark, root).size === 3)
+    val (novel, rec) = graft.Obs.measure(spark, "probe") {
+      MinHashLedgerStream.probe(spark, root, batch.toDF("doc_id", "text"))
+    }
+    try {
+      assert(novel.collect().map(_.getLong(0)).toSet === Set(11L, 12L))
+      assert(rec.jobs <= 6, rec.jobRows.map(_.site).mkString("; "))
+    } finally graft.Materialize.release(novel, blocking = true)
   }
 
   test("crash leftovers (no _SUCCESS) and non-numeric segment names are ignored") {

@@ -7,16 +7,20 @@ Usage:
 A and B are span files that `e2ebench/run.py --trace 1` keeps under
 `.bench_work/traces/`. For every span name, the tool prints the mean over
 that span's runs in traced timed steps (step >= 0; the warm-up is left out)
-of dur_s, jobs, task_s, bytes_read and shuffle_bytes, for A and for B, and
-the delta B - A. A mean is per run of the span, so a span that runs only in
-compaction steps is averaged over those steps. `n` is the number of runs.
-Standard library only.
+of dur_s, jobs, task_s, bytes_read, shuffle_bytes, bytes_written and
+storage_left_bytes, for A and for B, and the delta B - A. bytes_written is
+what the span's jobs wrote (a ledger fold or a compaction); storage_left_bytes
+is what the session still held cached when the span closed, so a span that
+leaves a frame cached every step shows here. A mean is per run of the span,
+so a span that runs only in compaction steps is averaged over those steps.
+`n` is the number of runs. Standard library only.
 """
 import json
 import os
 import sys
 
-FIELDS = ("dur_s", "jobs", "task_s", "bytes_read", "shuffle_bytes")
+FIELDS = ("dur_s", "jobs", "task_s", "bytes_read", "shuffle_bytes", "bytes_written",
+          "storage_left_bytes")
 
 
 def span_means(path):
